@@ -251,8 +251,8 @@ def main() -> None:
         # is shared, so later passes of the same query run with warm
         # cached signatures — min-of-N measures STEADY-STATE performance
         # (deliberate: every prior round's recorded bench measured the
-        # same way, so totals stay comparable; tools/scale_probe.py
-        # clears the cache instead because it isolates cold runs).
+        # same way, so totals stay comparable; the scaling runs recorded
+        # in SCALE.md cleared the cache instead to isolate cold runs).
         print(f"  {tag} {name}: {dt}s", file=sys.stderr, flush=True)
         pass_times.setdefault(name, []).append(dt)
         if name not in times or dt < times[name]:

@@ -380,8 +380,8 @@ def compact_index_cells(spark: SparkSession, index_dir: str, keep_from: str) -> 
     retrained accumulates one date dir × n_cells subdirs per batch, and
     the probe's file-index build grows with that directory count even
     though it reads only n_probe cells' ROWS (the r9/r10 listing-term
-    economics, measured for this store by store_econ_probe's ann_age
-    mode). Retrain cadence bounds it only if you retrain; the fold
+    economics; SCALE.md records this store's probe wall against
+    ledger age). Retrain cadence bounds it only if you retrain; the fold
     bounds it unconditionally.
 
     The fold is exact by construction — each vector lives in exactly one

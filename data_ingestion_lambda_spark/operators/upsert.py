@@ -4,14 +4,15 @@ Reference: per-row ``INSERT … ON CONFLICT (date, client_id) DO UPDATE``
 over a single psycopg2 connection (src/db_operations.py:56-106) — one SQL
 round-trip per row, sequential.
 
-Here: a partition-pruned last-writer-wins MERGE over a parquet table
-partitioned by the key's date component.
+Here: a last-writer-wins MERGE over a parquet table partitioned by the
+key's date component.
 
 Scale design (the part that must survive 100 TB):
-- The target is date-partitioned. A batch only ever touches the partitions
-  for dates it contains, so the merge reads+rewrites ONLY those partitions
-  (dynamic partition overwrite), never the whole table. Daily ingest over
-  years of history rewrites one day, not 100 TB.
+- The target is date-partitioned. A batch reads and rewrites the rows of
+  ONLY the dates it contains, never the whole table: daily ingest over
+  years of history rewrites one day, not 100 TB. The read still discovers
+  every stored date and merges every footer's schema before it filters,
+  so that part of its cost grows with the table's history.
 - Within affected partitions the winner per key is picked with one window
   (`row_number` over key, newest first) — a single shuffle on the upsert
   key, map-side combinable nowhere but linear in partition size.
@@ -25,6 +26,7 @@ Scale design (the part that must survive 100 TB):
 from __future__ import annotations
 
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -42,11 +44,6 @@ def _hadoop_fs(spark: SparkSession, path: str):
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     path_cls = jvm.org.apache.hadoop.fs.Path
     return path_cls(path).getFileSystem(hconf), path_cls
-
-
-def _target_exists(spark: SparkSession, path: str) -> bool:
-    fs, path_cls = _hadoop_fs(spark, path)
-    return fs.exists(path_cls(path))
 
 
 def merge_last_writer_wins(
@@ -163,27 +160,20 @@ def _align_schemas(existing: DataFrame, batch: DataFrame):
     return existing, batch
 
 
-def upsert_into_parquet(
+def _merge_and_swap(
     spark: SparkSession,
     target_dir: str,
     batch: DataFrame,
-    keys: list[str] = UPSERT_KEYS,
-    order_cols: list[str] | None = None,
+    keys: list[str],
+    order_cols: list[str] | None,
+    before_swap: Callable[[DataFrame | None, DataFrame], None] | None = None,
 ) -> list:
-    """MERGE ``batch`` into the date-partitioned parquet table at
-    ``target_dir``, touching only the partitions present in the batch.
-    Returns the list of date values written (empty for an empty batch).
-
-    Commit protocol: the merged result is fully materialized into a hidden
-    staging directory first (dot-prefixed → invisible to readers), then
-    each touched date partition is swapped in with a delete+rename. The
-    full-job failure mode (crash during the merge write) therefore leaves
-    the target untouched; the remaining non-atomic window is the instant
-    between one partition's delete and its rename — a crash exactly there
-    requires re-running the batch for that date (the merge is idempotent,
-    so the re-run converges). Per-file, the reference has the same shape
-    via DB transactions (src/db_operations.py:29)."""
+    """The merge core of both public upserts: cache ``batch``, collect its
+    dates, read the stored rows of those dates aligned to the batch's
+    schema, merge, run ``before_swap(existing, merged)`` if given, then
+    swap the merged partitions in. Returns the dates written."""
     batch = batch.cache()
+    held = [batch]
     try:
         batch_dates = [r[0] for r in batch.select(PARTITION_COL).distinct().collect()]
         if not batch_dates:
@@ -197,8 +187,7 @@ def upsert_into_parquet(
         # every subsequent ingest run.
         existing = None
         if list_partition_dates(spark, target_dir):
-            # Partition pruning: read only the dates this batch touches.
-            # mergeSchema: partitions written before an additive schema
+            # Schema merge: partitions written before an additive schema
             # evolution carry the narrower schema; the union read widens
             # them with NULLs.
             existing = (
@@ -211,10 +200,42 @@ def upsert_into_parquet(
         merged = merge_last_writer_wins(existing, batch, keys=keys, order_cols=order_cols)
         # (No extra repartition: the merge window already shuffled by key,
         # and AQE coalesces output partitions.)
+        if before_swap is not None:
+            # Persisted: the step and the swap both consume it. The step
+            # must MATERIALIZE what it needs before the swap — `existing`
+            # lazily reads the very files the swap deletes.
+            merged = merged.persist()
+            held.append(merged)
+            before_swap(existing, merged)
         replace_partitions(spark, target_dir, merged, batch_dates)
         return batch_dates
     finally:
-        batch.unpersist()
+        for df in held:
+            df.unpersist()
+
+
+def upsert_into_parquet(
+    spark: SparkSession,
+    target_dir: str,
+    batch: DataFrame,
+    keys: list[str] = UPSERT_KEYS,
+    order_cols: list[str] | None = None,
+) -> list:
+    """MERGE ``batch`` into the date-partitioned parquet table at
+    ``target_dir``, rewriting only the partitions present in the batch.
+    Returns the list of date values written (empty for an empty batch).
+
+    Commit protocol: the merged result is fully materialized into a hidden
+    staging directory first (dot-prefixed → invisible to readers), then
+    each touched date partition is swapped in with a delete+rename. The
+    full-job failure mode (crash during the merge write) therefore leaves
+    the target untouched; the remaining non-atomic window is the instant
+    between one partition's delete and its rename. A crash exactly there
+    leaves that date's rows, stored ones included, only in the stranded
+    ``.staging-<uuid>/date=D``, which a re-run never reads: recover by
+    moving that directory back to ``date=D``. Per-file, the reference has
+    the same shape via DB transactions (src/db_operations.py:29)."""
+    return _merge_and_swap(spark, target_dir, batch, keys, order_cols)
 
 
 _NULL_DIGEST = "-" * 32  # fixed-width, not hex: unreachable by md5
@@ -280,71 +301,51 @@ def upsert_into_parquet_with_cdc(
 
     Plan cost over the plain upsert: the merged result is persisted and
     compared against the pre-merge rows of the touched partitions with
-    ONE keys-equi left join of row DIGESTS (never payload) — partition-
-    pruned exactly like the merge read itself."""
-    batch = batch.cache()
-    try:
-        batch_dates = [r[0] for r in batch.select(PARTITION_COL).distinct().collect()]
-        if not batch_dates:
-            return {"dates": [], "inserts": 0, "updates": 0}
+    ONE keys-equi left join of row DIGESTS (never payload), over the
+    same filtered read as the merge itself."""
+    feed_dir = changes_dir or f"{target_dir}/_changes"
+    counts: dict = {}
 
-        existing = None
-        if list_partition_dates(spark, target_dir):
-            existing = (
-                spark.read.option("mergeSchema", "true")
-                .parquet(target_dir)
-                .filter(F.col(PARTITION_COL).isin(batch_dates))
-            )
-            existing, batch_aligned = _align_schemas(existing, batch)
+    def write_feed(existing: DataFrame | None, merged: DataFrame) -> None:
+        if existing is None:
+            cdc = merged.withColumn("_op", F.lit("insert"))
         else:
-            batch_aligned = batch
-
-        merged = merge_last_writer_wins(
-            existing, batch_aligned, keys=keys, order_cols=order_cols
-        ).persist()
-        try:
-            # The CDC rows must be MATERIALIZED before the partition swap:
-            # `existing` lazily reads the very files the swap deletes.
-            if existing is None:
-                cdc = merged.withColumn("_op", F.lit("insert"))
-            else:
-                pre = _row_digest(existing, keys, "_pre_digest", ignore=ignore_cols)
-                post = _row_digest(merged, keys, "_post_digest", ignore=ignore_cols)
-                changed = (
-                    post.join(pre, keys, "left")
-                    .filter(
-                        F.col("_pre_digest").isNull()
-                        | (F.col("_post_digest") != F.col("_pre_digest"))
-                    )
-                    .select(
-                        *keys,
-                        F.when(F.col("_pre_digest").isNull(), "insert")
-                        .otherwise("update")
-                        .alias("_op"),
-                    )
+            pre = _row_digest(existing, keys, "_pre_digest", ignore=ignore_cols)
+            post = _row_digest(merged, keys, "_post_digest", ignore=ignore_cols)
+            changed = (
+                post.join(pre, keys, "left")
+                .filter(
+                    F.col("_pre_digest").isNull()
+                    | (F.col("_post_digest") != F.col("_pre_digest"))
                 )
-                cdc = merged.join(changed, keys)
-            feed_dir = changes_dir or f"{target_dir}/_changes"
-            # Persisted: the digest comparison reads the pre-merge
-            # partitions and hashes both sides — without the cache, the
-            # emptiness probe and the feed write would each pay that
-            # pipeline in full.
-            feed = (
-                cdc.select(
-                    F.col("_op").alias("op"),
-                    *[c for c in merged.columns if c != PARTITION_COL],
-                    # pinned to string: the merged frame's date type differs
-                    # between the first batch (no existing table — the
-                    # batch's own string) and later ones (the union coerces
-                    # toward the stored partition column's DATE), and a
-                    # feed whose partitions disagree on row_date's physical
-                    # type breaks every multi-partition read (erasure,
-                    # subscribers reading a batch range)
-                    F.col(PARTITION_COL).cast("string").alias("row_date"),
+                .select(
+                    *keys,
+                    F.when(F.col("_pre_digest").isNull(), "insert")
+                    .otherwise("update")
+                    .alias("_op"),
                 )
-                .withColumn(PARTITION_COL, F.lit(change_key))
-                .persist()
             )
+            cdc = merged.join(changed, keys)
+        # Persisted: the digest comparison reads the pre-merge partitions
+        # and hashes both sides — without the cache, the emptiness probe
+        # and the feed write would each pay that pipeline in full.
+        feed = (
+            cdc.select(
+                F.col("_op").alias("op"),
+                *[c for c in merged.columns if c != PARTITION_COL],
+                # pinned to string: the merged frame's date type differs
+                # between the first batch (no existing table — the batch's
+                # own string) and later ones (the union coerces toward the
+                # stored partition column's DATE), and a feed whose
+                # partitions disagree on row_date's physical type breaks
+                # every multi-partition read (erasure, subscribers reading
+                # a batch range)
+                F.col(PARTITION_COL).cast("string").alias("row_date"),
+            )
+            .withColumn(PARTITION_COL, F.lit(change_key))
+            .persist()
+        )
+        try:
             if feed.limit(1).count() == 0:
                 # Nothing changed. Either this logical batch genuinely had
                 # no effect (every row lost last-writer-wins or re-sent
@@ -353,35 +354,27 @@ def upsert_into_parquet_with_cdc(
                 # already applied: the recompute against the post-apply
                 # state is empty, and overwriting the feed with it would
                 # destroy the logical batch's recorded effect. Keep any
-                # existing partition; the table swap below still re-merges
+                # existing partition; the table swap still re-merges
                 # (idempotent either way).
-                counts = {}
-            else:
-                replace_partitions(spark, feed_dir, feed, [change_key])
-                counts = {
-                    r["op"]: r["n"]
-                    for r in spark.read.parquet(
-                        f"{feed_dir}/{PARTITION_COL}={change_key}"
-                    )
-                    .groupBy("op")
-                    .agg(F.count("*").alias("n"))
-                    .collect()
-                }
-            replace_partitions(spark, target_dir, merged, batch_dates)
+                return
+            replace_partitions(spark, feed_dir, feed, [change_key])
+            counts.update(
+                (r["op"], r["n"])
+                for r in spark.read.parquet(f"{feed_dir}/{PARTITION_COL}={change_key}")
+                .groupBy("op")
+                .agg(F.count("*").alias("n"))
+                .collect()
+            )
         finally:
-            merged.unpersist()
-            try:
-                feed.unpersist()
-            except NameError:
-                pass  # existing is None path never built a feed frame
-        return {
-            "dates": batch_dates,
-            "inserts": counts.get("insert", 0),
-            "updates": counts.get("update", 0),
-            "changes_dir": feed_dir,
-        }
-    finally:
-        batch.unpersist()
+            feed.unpersist()
+
+    dates = _merge_and_swap(spark, target_dir, batch, keys, order_cols, write_feed)
+    return {
+        "dates": dates,
+        "inserts": counts.get("insert", 0),
+        "updates": counts.get("update", 0),
+        "changes_dir": feed_dir,
+    }
 
 
 def replace_partitions(
@@ -456,6 +449,3 @@ def replace_partitions(
     # readers never see it.)
     fs.delete(path_cls(staging_dir), True)
 
-
-def read_consumptions(spark: SparkSession, target_dir: str) -> DataFrame:
-    return spark.read.parquet(target_dir)

@@ -17,13 +17,18 @@ What each reference mechanism becomes:
 - JSON audit twin (src/s3_processor.py:147-154)
     → an append-only parquet ingestion log written per batch
 
+The parquet and JDBC sinks share the source and the micro-batch body
+(``_process_batch``); only the merge step differs.
+
 Scale notes: ``maxFilesPerTrigger`` bounds batch size (the pacing the
 reference accidentally got from MaxKeys=10, SURVEY §1.4.5, minus the data
-loss); the upsert itself is partition-pruned (operators/upsert.py).
+loss); the parquet merge rewrites only the batch's date partitions, but
+its read still discovers every stored date (operators/upsert.py).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -35,9 +40,21 @@ from data_ingestion_lambda_spark.operators.upsert import (
     upsert_into_parquet,
     upsert_into_parquet_with_cdc,
 )
-from data_ingestion_lambda_spark.schemas import CONSUMPTION_RAW_SCHEMA, CORRUPT_COL
+from data_ingestion_lambda_spark.sources.csv_source import consumption_csv
 
 QUARANTINE_PART_COL = "_batch_id"
+
+# Last-writer-wins order: the reference processes files sequentially in
+# date order (src/s3_processor.py:78), and date-partitioned drop paths
+# sort lexicographically by date, so ranking by path reproduces "later
+# file wins". Within one file the split's byte offset restores
+# cross-split order (monotonically_increasing_id alone does not follow
+# file offset when a file spans several splits), and _ingest_seq
+# (monotonic within a split) breaks ties inside one split.
+ORDER_COLS = ["_source_file", "_block_start", "_ingest_seq"]
+
+# Merges one micro-batch's good rows; True when there were any.
+Sink = Callable[[DataFrame, int], bool]
 
 
 def _write_quarantine(
@@ -64,7 +81,9 @@ class IngestPaths:
     source_dir: str  # root of date-partitioned CSV drops
     target_dir: str  # parquet consumptions table (partitioned by date)
     checkpoint_dir: str  # streaming offset/commit log
-    quarantine_dir: str | None = None  # bad rows, append-only
+    # bad rows, one _batch_id=<id> partition per micro-batch (a replay
+    # replaces its own partition)
+    quarantine_dir: str | None = None
     log_dir: str | None = None  # ingestion log (audit twin)
     # change feed (upsert_into_parquet_with_cdc): each micro-batch's
     # insert/update rows land in their own batch-id partition here —
@@ -75,25 +94,15 @@ class IngestPaths:
 
 def _process_batch(
     spark: SparkSession,
-    paths: IngestPaths,
     batch: DataFrame,
     batch_id: int,
-    processed_dates: set | None = None,
+    sink: Sink,
+    quarantine_dir: str | None,
+    log_dir: str | None,
 ) -> None:
-    # Last-writer-wins order = (_source_file, _block_start, _ingest_seq):
-    # the reference processes files sequentially in date order
-    # (src/s3_processor.py:78), and date-partitioned drop paths sort
-    # lexicographically by date, so ranking by path reproduces "later file
-    # wins". Within one file, Spark packs splits largest-first, so
-    # monotonically_increasing_id alone does NOT follow file offset when a
-    # file spans several splits — the split's byte offset
-    # (_metadata.file_block_start) restores cross-split order, and
-    # _ingest_seq (monotonic within a split) breaks ties inside one split.
+    """The micro-batch body of every sink: order the rows, normalize them,
+    merge the good ones through ``sink``, keep the bad ones, log."""
     batch = batch.withColumn("_ingest_seq", F.monotonically_increasing_id())
-    if "_block_start" not in batch.columns:
-        # Batch handed in without file-source metadata (tests, ad-hoc
-        # frames): single-split semantics, offset 0.
-        batch = batch.withColumn("_block_start", F.lit(0).cast("long"))
     good, quarantined = normalize_consumption(batch)
     # Audit counts ride the upsert's own jobs via the Observation API —
     # metrics accumulate while the MERGE materializes `good`, so the log
@@ -101,51 +110,62 @@ def _process_batch(
     # normalize pipeline per batch: its plan differed from the upsert's
     # cached one, so the cache never hit).
     obs = Observation(f"ingest_batch_{batch_id}")
-    if paths.log_dir is not None:
+    if log_dir is not None:
         good = good.observe(
             obs,
             F.count(F.lit(1)).alias("rows_upserted"),
             F.max("date").alias("max_date"),
         )
-    if paths.changes_dir is not None:
-        rep = upsert_into_parquet_with_cdc(
-            spark,
-            paths.target_dir,
-            good.withColumnRenamed("_source_file", "_file_seq"),
-            change_key=f"b{batch_id:09d}",
-            changes_dir=paths.changes_dir,
-            order_cols=["_file_seq", "_block_start", "_ingest_seq"],
-            # audit timestamps refresh on every winning re-send; the feed
-            # should capture PAYLOAD changes, not ingest-time churn
-            ignore_cols=("updated_at", "created_at"),
-        )
-        written = rep["dates"]
-    else:
-        written = upsert_into_parquet(
-            spark,
-            paths.target_dir,
-            good.withColumnRenamed("_source_file", "_file_seq"),
-            order_cols=["_file_seq", "_block_start", "_ingest_seq"],
-        )
-    if processed_dates is not None:
-        processed_dates.update(written)
-
-    if paths.quarantine_dir is not None:
-        _write_quarantine(spark, paths.quarantine_dir, quarantined, batch_id)
-    if paths.log_dir is not None:
+    merged = sink(good, batch_id)
+    # Merge first, quarantine second. The order carries no safety: both
+    # writes run before the checkpoint commits this batch, so a crash
+    # between or after them replays the whole batch, and both converge
+    # under replay (the merge on its key, the quarantine write on its
+    # _batch_id partition).
+    if quarantine_dir is not None:
+        _write_quarantine(spark, quarantine_dir, quarantined, batch_id)
+    if log_dir is not None:
         # The audit twin (src/s3_processor.py:147-154) as an append-only
         # table, from the observed metrics. An empty batch short-circuits
         # the upsert before any job touches the observed plan (metrics
-        # never materialize — obs.get would raise), and `written` is empty
-        # exactly in that case: log the explicit zero row instead.
-        m = obs.get if written else {"rows_upserted": 0, "max_date": None}
+        # never materialize — obs.get would raise), and the sink merged
+        # nothing exactly in that case: log the explicit zero row instead.
+        m = obs.get if merged else {"rows_upserted": 0, "max_date": None}
         log = spark.range(1).select(
             F.lit(batch_id).alias("batch_id"),
             F.lit(m["rows_upserted"]).cast("long").alias("rows_upserted"),
             F.lit(m["max_date"]).cast("date").alias("max_date"),
             F.current_timestamp().alias("logged_at"),
         )
-        log.write.mode("append").parquet(paths.log_dir)
+        log.write.mode("append").parquet(log_dir)
+
+
+def _drain(
+    spark: SparkSession,
+    source_dir: str,
+    checkpoint_dir: str,
+    sink: Sink,
+    quarantine_dir: str | None,
+    log_dir: str | None,
+    max_files_per_trigger: int | None,
+    path_glob: str,
+) -> None:
+    """One availableNow run of the file source through ``_process_batch``."""
+    reader = spark.readStream
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    query = (
+        consumption_csv(reader, source_dir, path_glob)
+        .writeStream.foreachBatch(
+            lambda batch, batch_id: _process_batch(
+                spark, batch, batch_id, sink, quarantine_dir, log_dir
+            )
+        )
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
 
 
 def run_ingest_to_jdbc_available_now(
@@ -181,61 +201,32 @@ def run_ingest_to_jdbc_available_now(
     raises 21000), so the batch is reduced to one winning row per key
     with the parquet sink's own (file, block, seq) order.
 
-    Returns the number of micro-batches applied."""
+    Returns the number of micro-batches that merged rows."""
     from data_ingestion_lambda_spark.operators.jdbc_upsert import (
         upsert_via_jdbc,
     )
     from data_ingestion_lambda_spark.schemas import UPSERT_KEYS
 
-    reader = (
-        spark.readStream.schema(CONSUMPTION_RAW_SCHEMA)
-        .option("header", True)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("recursiveFileLookup", True)
-        .option("pathGlobFilter", path_glob)
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = (
-        reader.csv(source_dir)
-        .withColumn("_source_file", F.input_file_name())
-        .withColumn("_block_start", F.col("_metadata.file_block_start"))
-    )
     n_batches = 0
 
-    def _apply(batch: DataFrame, batch_id: int) -> None:
+    def merge(good: DataFrame, batch_id: int) -> bool:
         nonlocal n_batches
-        if batch.isEmpty():
-            return
-        batch = batch.withColumn("_ingest_seq", F.monotonically_increasing_id())
-        good, quarantined = normalize_consumption(batch)
-        # Quarantined rows must not vanish: persist them keyed by batch
-        # (the parquet lane's discipline) BEFORE the MERGE, so a crash
-        # after the checkpoint commit can never lose the evidence.
-        if quarantine_dir is not None:
-            _write_quarantine(spark, quarantine_dir, quarantined, batch_id)
-        # one winning row per MERGE key, same order as the parquet sink
-        order = F.struct("_source_file", "_block_start", "_ingest_seq")
-        payload = [c for c in good.columns if not c.startswith("_")]
+        if good.isEmpty():
+            return False
+        value_cols = [
+            c for c in good.columns if not c.startswith("_") and c not in UPSERT_KEYS
+        ]
         winners = (
-            good.withColumn("_o", order)
+            good.withColumn("_o", F.struct(*ORDER_COLS))
             .groupBy(*UPSERT_KEYS)
-            .agg(
-                *[
-                    F.max_by(c, F.col("_o")).alias(c)
-                    for c in payload
-                    if c not in UPSERT_KEYS
-                ]
-            )
+            .agg(*[F.max_by(c, F.col("_o")).alias(c) for c in value_cols])
+            # The reference stamps NOW() as created_at on insert and keeps
+            # it on update (src/db_operations.py) — stage the batch's
+            # ingest timestamp as created_at and list it in the INSERT set
+            # only, so new rows are born with it and existing rows never
+            # have theirs touched.
+            .withColumn("created_at", F.col("updated_at"))
         )
-        value_cols = [c for c in payload if c not in UPSERT_KEYS]
-        # The reference stamps NOW() as created_at on insert and keeps it
-        # on update (src/db_operations.py) — stage the batch's ingest
-        # timestamp as created_at and list it in the INSERT set only, so
-        # new rows are born with it and existing rows never have theirs
-        # touched.
-        winners = winners.withColumn("created_at", F.col("updated_at"))
         upsert_via_jdbc(
             winners,
             jdbc_url,
@@ -248,14 +239,12 @@ def run_ingest_to_jdbc_available_now(
             properties=properties,
         )
         n_batches += 1
+        return True
 
-    q = (
-        raw.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        spark, source_dir, checkpoint_dir, merge, quarantine_dir, None,
+        max_files_per_trigger, path_glob,
     )
-    q.awaitTermination()
     return n_batches
 
 
@@ -274,37 +263,30 @@ def run_ingest_available_now(
     OLD dates (late backfill) — because discovery is by file, not by a
     monotonic date checkpoint. This is the semantic fix for SURVEY §1.4.2/6.
     """
-    reader = (
-        spark.readStream.schema(CONSUMPTION_RAW_SCHEMA)
-        .option("header", True)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("recursiveFileLookup", True)
-        .option("pathGlobFilter", path_glob)
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = (
-        reader.csv(paths.source_dir)
-        .withColumn("_source_file", F.input_file_name())
-        # Split offset within the file: Spark packs file splits
-        # largest-first, so monotonically_increasing_id alone does NOT
-        # follow file offset when one file spans several splits. The
-        # hidden file-source metadata column carries each split's byte
-        # offset; ordering by it restores true within-file row order.
-        .withColumn("_block_start", F.col("_metadata.file_block_start"))
-    )
-
     processed_dates: set = set()
-    query = (
-        raw.writeStream.foreachBatch(
-            lambda batch, batch_id: _process_batch(
-                spark, paths, batch, batch_id, processed_dates
+
+    def merge(good: DataFrame, batch_id: int) -> bool:
+        if paths.changes_dir is None:
+            written = upsert_into_parquet(
+                spark, paths.target_dir, good, order_cols=ORDER_COLS
             )
-        )
-        .option("checkpointLocation", paths.checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        else:
+            written = upsert_into_parquet_with_cdc(
+                spark,
+                paths.target_dir,
+                good,
+                change_key=f"b{batch_id:09d}",
+                changes_dir=paths.changes_dir,
+                order_cols=ORDER_COLS,
+                # audit timestamps refresh on every winning re-send; the
+                # feed should capture PAYLOAD changes, not ingest-time churn
+                ignore_cols=("updated_at", "created_at"),
+            )["dates"]
+        processed_dates.update(written)
+        return bool(written)
+
+    _drain(
+        spark, paths.source_dir, paths.checkpoint_dir, merge,
+        paths.quarantine_dir, paths.log_dir, max_files_per_trigger, path_glob,
     )
-    query.awaitTermination()
     return sorted(str(d) for d in processed_dates)

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from data_ingestion_lambda_spark.functions.dates import parse_date_multi
 from data_ingestion_lambda_spark.functions.normalize import normalize_consumption
 from data_ingestion_lambda_spark.operators.upsert import upsert_into_parquet
-from data_ingestion_lambda_spark.sources.csv_source import read_consumption_csv
+from data_ingestion_lambda_spark.sources.csv_source import consumption_csv, read_consumption_csv
 from data_ingestion_lambda_spark.streaming.ingest import IngestPaths, run_ingest_available_now
 
 HEADER = "date,client_id,client_name,service_name,total_consumed_tokens"
@@ -175,12 +175,31 @@ class TestBatchCsvSource:
 
         df = read_consumption_csv(spark, src)
         assert df.count() == 3
-        files = {r["_source_file"].rsplit("/", 1)[-1] for r in df.select("_source_file").distinct().collect()}
-        assert files == {
+        want = {
             "consumption_2025_05_01.csv",
             "consumption_2025_05_01_b.csv",
             "consumption_2025_05_02.csv",
         }
+        files = {r["_source_file"].rsplit("/", 1)[-1] for r in df.select("_source_file").distinct().collect()}
+        assert files == want
+
+        # the streaming ingest's frame (its default glob) is the same
+        # reader: identical columns and types, the same files
+        stream = consumption_csv(spark.readStream, src, "*.csv")
+        assert stream.schema == df.schema
+        assert "_block_start" in df.columns
+        q = (
+            stream.writeStream.format("memory")
+            .queryName("csv_source_parity")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        streamed = spark.table("csv_source_parity")
+        assert streamed.count() == 3
+        assert {r["_source_file"].rsplit("/", 1)[-1] for r in streamed.collect()} == want
+        spark.catalog.dropTempView("csv_source_parity")
 
 
 class TestStreamingIngest:

@@ -255,6 +255,19 @@ def test_streamed_ingest_to_jdbc_merge_end_to_end(spark, tmp_path):
     assert created2["c1"] == created["c1"]  # MERGE update set excludes it
     assert created2["c3"] is not None
 
+    # drop 3: a header-only file is an empty micro-batch — nothing is
+    # merged or counted, and no quarantine row appears
+    _write_csv(src, "d3.csv", [])
+    n = run_ingest_to_jdbc_available_now(
+        spark, src, ckpt, url, "consumptions",
+        staging_table="stream_staging",
+        ident_quote='"', staging_column_types=_STREAM_STAGING_TYPES,
+        quarantine_dir=quarantine,
+    )
+    assert n == 0
+    assert _rows_no_ts(spark, url) == want
+    assert spark.read.parquet(quarantine).count() == 1
+
     # same checkpoint, no new files: the offset log makes it a no-op
     n = run_ingest_to_jdbc_available_now(
         spark, src, ckpt, url, "consumptions",

@@ -16,14 +16,12 @@ session lives for hours). The discipline:
    catches plain .persist()/.cache() sneaking in anywhere in a lane's
    build path (operators called by lanes release their own caches in
    ``finally`` blocks; this pin proves it stays true).
+
+The lanes are built once per session by conftest's ``lane_plans``, which
+the r9 window gate reads too.
 """
 
 from __future__ import annotations
-
-from data_ingestion_lambda_spark.plans import all_specs
-from data_ingestion_lambda_spark.plans.registry import release_pinned
-
-from .conftest import SF_SMOKE
 
 # Lane -> what is pinned and why that is acceptable at scale. "corpus-
 # sized" pins are the reuse-twice-or-more intermediates (tokenized tf
@@ -90,25 +88,14 @@ CACHE_ALLOWLIST = {
 }
 
 
-def test_lane_cache_pins_are_allowlisted_and_released(spark):
-    release_pinned()
-    spark.catalog.clearCache()
-    cache_manager = spark._jsparkSession.sharedState().cacheManager()
-    offenders: dict[str, int] = {}
-    unreleased: list[str] = []
-    seen_imr: set[str] = set()
-    for name, spec in sorted(all_specs().items()):
-        df = spec.builder(spark, SF_SMOKE)
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        n = plan.count("InMemoryRelation")
-        if n:
-            seen_imr.add(name)
-            if name not in CACHE_ALLOWLIST:
-                offenders[name] = n
-        release_pinned()
-        if not cache_manager.isEmpty():
-            unreleased.append(name)
-            spark.catalog.clearCache()  # restore attribution for later lanes
+def test_lane_cache_pins_are_allowlisted_and_released(lane_plans):
+    offenders = {
+        name: p.cached_relations
+        for name, p in lane_plans.items()
+        if p.cached_relations and name not in CACHE_ALLOWLIST
+    }
+    unreleased = [name for name, p in lane_plans.items() if not p.released]
+    seen_imr = {name for name, p in lane_plans.items() if p.cached_relations}
     assert not offenders, (
         "lanes with NEW un-allowlisted InMemoryRelations — route the "
         "persist through plans.registry.pin and justify the cache here "

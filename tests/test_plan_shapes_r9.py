@@ -96,12 +96,10 @@ def unpartitioned_windows(plan: str) -> list[str]:
     return out
 
 
-def test_no_lane_adds_an_unallowlisted_global_window(spark):
+def test_no_lane_adds_an_unallowlisted_global_window(lane_plans):
     offenders: dict[str, list[str]] = {}
-    for name, spec in all_specs().items():
-        df = spec.builder(spark, SF_SMOKE)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        hits = unpartitioned_windows(plan)
+    for name, p in lane_plans.items():
+        hits = unpartitioned_windows(p.executed)
         if hits:
             offenders[name] = hits
     unexpected = {
