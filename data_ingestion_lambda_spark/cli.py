@@ -2048,31 +2048,23 @@ def main(argv: list[str] | None = None) -> int:
         report: dict = {}
         # layout detection: a stream-driven ledger holds ingest_batch=
         # partitions, the daily form date= partitions — never both
-        # (enforced below); reads route accordingly. FS-agnostic: the
-        # listing goes through the Hadoop FS API like every ledger op.
-        from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
+        # (ledger_keying refuses a mix); reads route accordingly.
+        from data_ingestion_lambda_spark.operators.layout import (
+            hadoop_fs,
+            ledger_keying,
+        )
 
         def _index_exists() -> bool:
-            fs, path_cls = _hadoop_fs(spark, args.index)
+            fs, path_cls = hadoop_fs(spark, args.index)
             return fs.exists(path_cls(args.index))
 
         def _is_stream_ledger() -> bool:
-            fs, path_cls = _hadoop_fs(spark, args.index)
-            if not fs.exists(path_cls(args.index)):
+            if not _index_exists():
                 return args.stream_source is not None
-            names = [
-                st.getPath().getName()
-                for st in fs.listStatus(path_cls(args.index))
-                if st.isDirectory()
-            ]
-            has_b = any(n.startswith("ingest_batch=") for n in names)
-            has_d = any(n.startswith("date=") for n in names)
-            if has_b and has_d:
-                raise SystemExit(
-                    f"feature-store: {args.index} mixes date= and "
-                    "ingest_batch= partitions — one index dir, one driver"
-                )
-            return has_b
+            try:
+                return ledger_keying(spark, args.index) == "ingest_batch"
+            except ValueError as e:
+                raise SystemExit(f"feature-store: {e}") from None
         if args.stream_source is not None:
             if _index_exists() and not _is_stream_ledger():
                 raise SystemExit(

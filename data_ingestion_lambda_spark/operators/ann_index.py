@@ -50,8 +50,10 @@ from data_ingestion_lambda_spark.operators.base_fold import (
     base_fold,
     check_not_below_horizon,
 )
-from data_ingestion_lambda_spark.operators.upsert import (
+from data_ingestion_lambda_spark.operators.layout import (
     PARTITION_COL,
+    hadoop_fs,
+    partition_values,
     replace_partitions,
 )
 from data_ingestion_lambda_spark.plans.similarity import (
@@ -83,29 +85,22 @@ def _check_sizing_marker(
     directory and mismatched access REFUSES — retraining at a new size
     lands a NEW index dir (``retrain_index``). Legacy marker-less
     directories are the original 16-cell layout."""
-    from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
-
     want = f"_sizing=c{n_cells}"
-    fs, path_cls = _hadoop_fs(spark, index_dir)
-    if fs.exists(path_cls(index_dir)):
-        found = [
-            st.getPath().getName()
-            for st in fs.listStatus(path_cls(index_dir))
-            if st.isDirectory() and st.getPath().getName().startswith("_sizing=")
-        ]
-        recorded = found[0] if found else (
-            f"_sizing=c{_N_CENTROIDS}"
-            if fs.exists(path_cls(f"{index_dir}/centroids"))
-            else None
+    fs, path_cls = hadoop_fs(spark, index_dir)
+    found = [f"_sizing={v}" for v in partition_values(spark, index_dir, "_sizing")]
+    recorded = found[0] if found else (
+        f"_sizing=c{_N_CENTROIDS}"
+        if fs.exists(path_cls(f"{index_dir}/centroids"))
+        else None
+    )
+    if recorded is not None and recorded != want:
+        raise ValueError(
+            f"ann index at {index_dir} is sized {recorded!r}; refusing "
+            f"{want!r} access — one directory, one quantizer sizing "
+            "(retrain into a NEW directory: retrain_index)"
         )
-        if recorded is not None and recorded != want:
-            raise ValueError(
-                f"ann index at {index_dir} is sized {recorded!r}; refusing "
-                f"{want!r} access — one directory, one quantizer sizing "
-                "(retrain into a NEW directory: retrain_index)"
-            )
-        if found:
-            return
+    if found:
+        return
     if create:
         fs.mkdirs(path_cls(f"{index_dir}/{want}"))
 
@@ -113,14 +108,9 @@ def _check_sizing_marker(
 def read_sizing(spark: SparkSession, index_dir: str) -> int:
     """Cell count recorded in the index's sizing marker; indexes written
     before the marker existed are the original 16-cell layout."""
-    from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
-
-    fs, path_cls = _hadoop_fs(spark, index_dir)
-    if fs.exists(path_cls(index_dir)):
-        for st in fs.listStatus(path_cls(index_dir)):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith("_sizing=c"):
-                return int(name.removeprefix("_sizing=c"))
+    for v in partition_values(spark, index_dir, "_sizing"):
+        if v.startswith("c"):
+            return int(v.removeprefix("c"))
     return _N_CENTROIDS
 
 
@@ -146,9 +136,7 @@ def train_index(
     # keeps the collapse cleanup below safe — it only ever runs on a
     # directory without assignments, so deleting marker+centroids cannot
     # strand stale cells behind a fresh marker).
-    from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
-
-    fs, path_cls = _hadoop_fs(spark, index_dir)
+    fs, path_cls = hadoop_fs(spark, index_dir)
     if fs.exists(path_cls(f"{index_dir}/cells")):
         raise ValueError(
             f"train_index: {index_dir} already holds cell assignments — "

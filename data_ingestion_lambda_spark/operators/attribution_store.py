@@ -70,13 +70,10 @@ import datetime as _dt
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_ingestion_lambda_spark.operators.base_fold import (
-    base_fold,
-    dir_has_parquet,
-    fold_horizon,
-)
-from data_ingestion_lambda_spark.operators.upsert import (
-    _hadoop_fs,
+from data_ingestion_lambda_spark.operators.base_fold import base_fold, fold_horizon
+from data_ingestion_lambda_spark.operators.layout import (
+    hadoop_fs,
+    partition_values,
     replace_partitions,
 )
 from data_ingestion_lambda_spark.plans.events_queries import (
@@ -88,18 +85,13 @@ from data_ingestion_lambda_spark.plans.events_queries import (
 _LOOKBACK_DAYS = 7  # matches _ATTR_WINDOW_US = 7 days
 
 
-def _has_partitions(fs, path_cls, path: str) -> bool:
+def _has_partitions(spark: SparkSession, path: str) -> bool:
     """True iff the ledger sub-table holds at least one ``date=``
     partition. A purchase-only day legitimately writes NO click rows,
     leaving the click-side directory empty (replace_partitions mkdirs
     the target even when nothing swaps in) — reading an empty parquet
     dir would fail schema inference, so reads treat it as absent."""
-    p = path_cls(path)
-    if not fs.exists(p):
-        return False
-    return any(
-        s.getPath().getName().startswith("date=") for s in fs.listStatus(p)
-    )
+    return bool(partition_values(spark, path, "date"))
 
 
 def apply_attribution_batch(
@@ -219,13 +211,13 @@ def read_attribution(spark: SparkSession, index_dir: str) -> DataFrame:
     last-click rows only (user-bounded, partition-pruned to the
     lookback window per purchase date read-side via the date
     inequality)."""
-    fs, path_cls = _hadoop_fs(spark, index_dir)
+    fs, path_cls = hadoop_fs(spark, index_dir)
     if not fs.exists(path_cls(f"{index_dir}/purchases")):
         raise ValueError(f"read_attribution: no purchases ledger at {index_dir}")
     p = spark.read.parquet(f"{index_dir}/purchases").withColumn(
         "pdate", F.col("date").cast("date")
     )
-    have_clicks = _has_partitions(fs, path_cls, f"{index_dir}/last_clicks")
+    have_clicks = _has_partitions(spark, f"{index_dir}/last_clicks")
     if have_clicks:
         c = spark.read.parquet(f"{index_dir}/last_clicks").select(
             "user_id",
@@ -294,7 +286,7 @@ def read_attribution_linear(spark: SparkSession, index_dir: str) -> DataFrame:
     prior-day clicks inside the 7-day microsecond window, read from the
     store's (user_id, cts) click rows with a date-pruned, user-keyed
     join. One guarded division for the per-click credit."""
-    fs, path_cls = _hadoop_fs(spark, index_dir)
+    fs, path_cls = hadoop_fs(spark, index_dir)
     if not fs.exists(path_cls(f"{index_dir}/purchases")):
         raise ValueError(
             f"read_attribution_linear: no purchases ledger at {index_dir}"
@@ -302,7 +294,7 @@ def read_attribution_linear(spark: SparkSession, index_dir: str) -> DataFrame:
     p = spark.read.parquet(f"{index_dir}/purchases").withColumn(
         "pdate", F.col("date").cast("date")
     )
-    if _has_partitions(fs, path_cls, f"{index_dir}/clicks"):
+    if _has_partitions(spark, f"{index_dir}/clicks"):
         c = spark.read.parquet(f"{index_dir}/clicks").select(
             "user_id", "cts", F.col("date").cast("date").alias("cdate")
         )
@@ -369,7 +361,7 @@ def read_attribution_position(spark: SparkSession, index_dir: str) -> DataFrame:
     hundredth-cents splits. Economics: same profile as the linear read
     plus one single-partition boundary join — never a re-sort of
     history."""
-    fs, path_cls = _hadoop_fs(spark, index_dir)
+    fs, path_cls = hadoop_fs(spark, index_dir)
     if not fs.exists(path_cls(f"{index_dir}/purchases")):
         raise ValueError(
             f"read_attribution_position: no purchases ledger at {index_dir}"
@@ -388,7 +380,7 @@ def read_attribution_position(spark: SparkSession, index_dir: str) -> DataFrame:
     ]
     start = p["ts_us"] - F.lit(_ATTR_WINDOW_US)
     parts = []
-    if _has_partitions(fs, path_cls, f"{index_dir}/last_clicks"):
+    if _has_partitions(spark, f"{index_dir}/last_clicks"):
         lc = spark.read.parquet(f"{index_dir}/last_clicks").select(
             F.col("user_id").alias("c_user"),
             "cts",
@@ -512,22 +504,16 @@ def expire_attribution(
         )
     cutoff = _dt.date.fromisoformat(as_of) - _dt.timedelta(days=keep_days)
     dropped: list[str] = []
-    fs, path_cls = _hadoop_fs(spark, index_dir)
+    fs, path_cls = hadoop_fs(spark, index_dir)
     for sub in ("clicks", "last_clicks"):
-        base = path_cls(f"{index_dir}/{sub}")
-        if not fs.exists(base):
-            continue
-        for status in fs.listStatus(base):
-            name = status.getPath().getName()
-            if not name.startswith("date="):
-                continue
+        for d in partition_values(spark, f"{index_dir}/{sub}", "date"):
             try:
-                pdate = _dt.date.fromisoformat(name[len("date=") :])
+                pdate = _dt.date.fromisoformat(d)
             except ValueError:
                 continue
             if pdate < cutoff:
-                fs.delete(status.getPath(), True)
-                dropped.append(f"{sub}/{name}")
+                fs.delete(path_cls(f"{index_dir}/{sub}/date={d}"), True)
+                dropped.append(f"{sub}/date={d}")
     return {
         "index": index_dir,
         "cutoff": cutoff.isoformat(),
@@ -572,8 +558,7 @@ def land_attribution_batch(
             f"land_attribution_batch: {batch_key!r} is the reserved "
             "compaction base partition"
         )
-    fs, path_cls = _hadoop_fs(spark, index_dir)
-    horizon = _ledger_horizon(fs, path_cls, index_dir)
+    horizon = fold_horizon(spark, index_dir)
     if horizon is not None and batch_key < horizon:
         raise ValueError(
             f"land_attribution_batch: batch key {batch_key!r} is below "
@@ -805,7 +790,7 @@ def read_attribution_time_decay(spark: SparkSession, index_dir: str) -> DataFram
     outright; prior-day clicks get their exact whole-day age from the
     (user_id, cts) click rows the linear read already joins — same
     date-pruned join, one more integer column."""
-    fs, path_cls = _hadoop_fs(spark, index_dir)
+    fs, path_cls = hadoop_fs(spark, index_dir)
     if not fs.exists(path_cls(f"{index_dir}/purchases")):
         raise ValueError(
             f"read_attribution_time_decay: no purchases ledger at {index_dir}"
@@ -813,7 +798,7 @@ def read_attribution_time_decay(spark: SparkSession, index_dir: str) -> DataFram
     p = spark.read.parquet(f"{index_dir}/purchases").withColumn(
         "pdate", F.col("date").cast("date")
     )
-    if _has_partitions(fs, path_cls, f"{index_dir}/clicks"):
+    if _has_partitions(spark, f"{index_dir}/clicks"):
         c = spark.read.parquet(f"{index_dir}/clicks").select(
             F.col("user_id").alias("c_user"),
             "cts",
@@ -906,13 +891,6 @@ def read_attribution_time_decay_stream(
 
 LEDGER_BASE_KEY = "0000-base"  # reserved fold target; sorts below b<id> keys
 _LEDGER_SUBTABLES = ("stream_purchases", "stream_clicks")
-
-
-# Shared base-fold discipline (review r10: per-store copies collapsed
-# into operators/base_fold.py — the empty-partition guard now protects
-# every store, not just this one).
-_ledger_horizon = fold_horizon
-_dir_has_parquet = dir_has_parquet
 
 
 def compact_attribution_ledger(

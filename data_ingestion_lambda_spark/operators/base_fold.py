@@ -14,8 +14,9 @@ the feature store's ledger discipline (operators/feature_store.py:
 1. the ``_horizon=<key>`` marker advances FIRST (MAX rule across
    coexisting markers — a too-high horizon after a crash only refuses
    lands it could have accepted, never double-counts one);
-2. each sub-table stages its full merged base in a dot-prefixed dir,
-   drops its folded partition dirs, then renames staging into place;
+2. each sub-table swaps in its full merged base through
+   ``layout.fold_swap``: stage in a dot-prefixed dir, drop the folded
+   partition dirs, rename staging into place;
 3. a stranded staging dir makes the next run REFUSE with the manual
    recovery path rather than recompact a partially-dropped table;
 4. partition dirs holding no parquet footer (a batch with zero rows
@@ -36,7 +37,16 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
+from data_ingestion_lambda_spark.operators.layout import (
+    committed_front,
+    dir_has_parquet,
+    fold_swap,
+    hadoop_fs,
+    ledger_keying,
+    partition_values,
+    read_partitions,
+    refuse_stranded_fold,
+)
 
 # Reserved base-partition key, shared by every folded store. Sorts
 # strictly below both ledger keying schemes (ISO dates and the
@@ -46,36 +56,11 @@ from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
 BASE_KEY = "0000-00-00"
 
 
-def fold_horizon(fs, path_cls, index_dir: str) -> str | None:
+def fold_horizon(spark: SparkSession, index_dir: str) -> str | None:
     """MAX over ``_horizon=`` markers at the store root (the feature
     store's rule: the crash window where old+new markers coexist, and
     a re-run with an earlier keep_from, both resolve to the later)."""
-    if not fs.exists(path_cls(index_dir)):
-        return None
-    hs = [
-        st.getPath().getName().split("=", 1)[1]
-        for st in fs.listStatus(path_cls(index_dir))
-        if st.isDirectory() and st.getPath().getName().startswith("_horizon=")
-    ]
-    return max(hs) if hs else None
-
-
-def dir_has_parquet(fs, path_cls, path: str) -> bool:
-    """Does any .parquet file live under ``path`` (one level of
-    partition subdirs)? Empty partition dirs are deleted outright
-    instead of read — see module docstring point 4."""
-    root = path_cls(path)
-    if not fs.exists(root):
-        return False
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isFile() and name.endswith(".parquet"):
-            return True
-        if st.isDirectory() and not name.startswith((".", "_")):
-            for kid in fs.listStatus(st.getPath()):
-                if kid.isFile() and kid.getPath().getName().endswith(".parquet"):
-                    return True
-    return False
+    return max(partition_values(spark, index_dir, "_horizon"), default=None)
 
 
 def check_not_below_horizon(
@@ -95,8 +80,7 @@ def check_not_below_horizon(
             f"{op_name}: batch key {batch_key!r} is reserved for (or sorts "
             f"below) the compaction base partition {BASE_KEY!r}"
         )
-    fs, path_cls = _hadoop_fs(spark, index_dir)
-    horizon = fold_horizon(fs, path_cls, index_dir)
+    horizon = fold_horizon(spark, index_dir)
     if horizon is not None and batch_key < horizon:
         raise ValueError(
             f"{op_name}: batch key {batch_key} is below the compaction "
@@ -104,30 +88,6 @@ def check_not_below_horizon(
             "partition and its replay key is spent; re-deliver under a "
             "current key or rebuild the store"
         )
-
-
-def resolve_part_key(
-    spark: SparkSession, index_dir: str, default: str = "date"
-) -> str:
-    """The store's ledger partition column, for compaction of a
-    dual-keyed store (CLI ``date=`` vs streaming ``ingest_batch=``):
-    the ``_keyed_by=`` marker when present (cms_store idiom), else
-    inferred from the partition dirs, else ``default``."""
-    fs, path_cls = _hadoop_fs(spark, index_dir)
-    if not fs.exists(path_cls(index_dir)):
-        return default
-    names = [
-        st.getPath().getName()
-        for st in fs.listStatus(path_cls(index_dir))
-        if st.isDirectory()
-    ]
-    marked = [n.split("=", 1)[1] for n in names if n.startswith("_keyed_by=")]
-    if marked:
-        return marked[0]
-    for key in ("date", "ingest_batch"):
-        if any(n.startswith(f"{key}=") for n in names):
-            return key
-    return default
 
 
 def streaming_committed_front_key(
@@ -142,9 +102,7 @@ def streaming_committed_front_key(
     batch folded early double-counts on replay, and the b-keyed stores'
     ``check_not_below_horizon`` refusal would otherwise wedge the stream
     permanently). None when the checkpoint has no commits yet."""
-    from data_ingestion_lambda_spark.streaming.events import _committed_front
-
-    front = _committed_front(spark, checkpoint_dir)
+    front = committed_front(spark, checkpoint_dir)
     return None if front is None else f"b{front + 1:09d}"
 
 
@@ -171,7 +129,7 @@ def auto_keep_from(
 
     ``cap`` bounds the returned key (for b-keyed streamed stores pass
     ``streaming_committed_front_key`` so an uncommitted land is never
-    folded); ``part_key`` defaults to the store's ``resolve_part_key``;
+    folded); ``part_key`` defaults to the store's ``ledger_keying``;
     ``base_key`` matters only for stores with a non-default reserved
     base (the attribution ledger's ``0000-base``).
     The caller passes the result to its own ``compact_*`` entry point,
@@ -180,17 +138,8 @@ def auto_keep_from(
     if max_dirs < 1:
         raise ValueError(f"auto_keep_from: max_dirs must be >= 1, got {max_dirs}")
     if part_key is None:
-        part_key = resolve_part_key(spark, ledger_dir)
-    fs, path_cls = _hadoop_fs(spark, ledger_dir)
-    if not fs.exists(path_cls(ledger_dir)):
-        return None
-    keys = sorted(
-        n.split("=", 1)[1]
-        for st in fs.listStatus(path_cls(ledger_dir))
-        if st.isDirectory()
-        for n in [st.getPath().getName()]
-        if n.startswith(f"{part_key}=") and n.split("=", 1)[1] != base_key
-    )
+        part_key = ledger_keying(spark, ledger_dir, "date")
+    keys = [k for k in partition_values(spark, ledger_dir, part_key) if k != base_key]
     if len(keys) <= max_dirs:
         return None
     keep_recent = keep_recent if keep_recent is not None else max(1, max_dirs // 2)
@@ -292,25 +241,16 @@ def base_fold(
     """
     if not keep_from or "/" in keep_from or "=" in keep_from:
         raise ValueError(f"{op_name}: bad keep_from key {keep_from!r}")
-    fs, path_cls = _hadoop_fs(spark, index_dir)
+    fs, path_cls = hadoop_fs(spark, index_dir)
 
     def _sub_dir(sub: str) -> str:
         return f"{index_dir}/{sub}" if sub else index_dir
 
     for sub in subtables:
-        staging = path_cls(f"{_sub_dir(sub)}/.compact-staging")
-        if fs.exists(staging):
-            raise RuntimeError(
-                f"{op_name}: stranded {staging} from a crashed compaction "
-                "— it holds that sub-table's full pre-crash base; remove "
-                f"any leftover folded {part_key}=* dirs under "
-                f"{_sub_dir(sub)} and rename it to {part_key}={base_key}. "
-                "The _horizon marker was advanced before staging, so "
-                "land-refusal stays safe throughout"
-            )
+        refuse_stranded_fold(spark, _sub_dir(sub), op_name, part_key, base_key)
 
     # Horizon first (the understatement-proof order — feature store r9).
-    prior = fold_horizon(fs, path_cls, index_dir)
+    prior = fold_horizon(spark, index_dir)
     new_horizon = max(prior or "", keep_from)
     if not fs.mkdirs(path_cls(f"{index_dir}/_horizon={new_horizon}")):
         raise IOError(
@@ -329,64 +269,33 @@ def base_fold(
     folded: dict[str, int] = {}
     for sub, merge in subtables.items():
         sub_dir = _sub_dir(sub)
-        if not fs.exists(path_cls(sub_dir)):
-            folded[sub] = 0
-            continue
-        parts = [
-            st.getPath().getName()
-            for st in fs.listStatus(path_cls(sub_dir))
-            if st.isDirectory()
-            and st.getPath().getName().startswith(f"{part_key}=")
-        ]
         fold = [
-            p
-            for p in parts
-            if p == f"{part_key}={base_key}" or p.split("=", 1)[1] < keep_from
+            v
+            for v in partition_values(spark, sub_dir, part_key)
+            if v == base_key or v < keep_from
         ]
-        if not fold or fold == [f"{part_key}={base_key}"]:
+        if not fold or fold == [base_key]:
             folded[sub] = 0
             continue
         nonempty = [
-            p for p in fold if dir_has_parquet(fs, path_cls, f"{sub_dir}/{p}")
+            v for v in fold if dir_has_parquet(spark, f"{sub_dir}/{part_key}={v}")
         ]
+        base, part_cols = None, []
         if nonempty:
             # mergeSchema: a day-preserving store's base partition
             # carries an extra ``day`` data column the un-folded
             # partitions lack (markov/drift folds) — the union read
             # must surface the superset schema, not one file's.
-            src = (
-                spark.read.option("basePath", sub_dir)
-                .option("mergeSchema", "true")
-                .parquet(*[f"{sub_dir}/{p}" for p in nonempty])
-            )
-            base, part_cols = merge(src)
-            writer = base.write.mode("overwrite")
-            if part_cols:
-                writer = writer.partitionBy(*part_cols)
-            writer.parquet(f"{sub_dir}/.compact-staging")
-        for p in fold:
-            full = path_cls(f"{sub_dir}/{p}")
-            if fs.exists(full) and not fs.delete(full, True):
-                raise IOError(
-                    f"{op_name}: delete of {full} returned false; "
-                    + (
-                        f"full compacted base preserved at {sub_dir}/"
-                        ".compact-staging — finish by removing remaining "
-                        f"folded {part_key}=* dirs and renaming it to "
-                        f"{part_key}={base_key}"
-                        if nonempty
-                        else "the folded dirs were empty; remove manually"
-                    )
-                )
-        if nonempty and not fs.rename(
-            path_cls(f"{sub_dir}/.compact-staging"),
-            path_cls(f"{sub_dir}/{part_key}={base_key}"),
-        ):
-            raise IOError(
-                f"{op_name}: rename .compact-staging -> "
-                f"{part_key}={base_key} under {sub_dir} returned false; "
-                "the compacted base is intact in staging — rename it "
-                "manually to finish"
-            )
+            base, part_cols = merge(read_partitions(spark, sub_dir, part_key, nonempty))
+        fold_swap(
+            spark,
+            sub_dir,
+            fold,
+            base,
+            op_name=op_name,
+            part_key=part_key,
+            base_key=base_key,
+            partition_by=part_cols,
+        )
         folded[sub] = len(fold)
     return {"horizon": new_horizon, "folded": folded}

@@ -36,10 +36,15 @@ from data_ingestion_lambda_spark.operators.base_fold import (
     BASE_KEY,
     base_fold,
     check_not_below_horizon,
-    resolve_part_key,
 )
 from data_ingestion_lambda_spark.operators.cms_store import check_keying_marker
-from data_ingestion_lambda_spark.operators.upsert import replace_partitions
+from data_ingestion_lambda_spark.operators.layout import (
+    KEYINGS,
+    hadoop_fs,
+    ledger_keying,
+    partition_values,
+    replace_partitions,
+)
 from data_ingestion_lambda_spark.plans.llm_ops import (
     _BLOOM_K,
     _BLOOM_M,
@@ -64,57 +69,38 @@ def _check_sizing_marker(
     sizing is recorded as an empty ``_sizing=m<m>-k<k>`` marker
     directory (the vocab ``_order=`` / dsir ``_target=`` idiom) and
     checked on every apply. VERDICT r9 #2."""
-    from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
-
     want = f"_sizing=m{m}-k{k}"
-    fs, path_cls = _hadoop_fs(spark, index_dir)
-    if fs.exists(path_cls(index_dir)):
-        found = [
-            st.getPath().getName()
-            for st in fs.listStatus(path_cls(index_dir))
-            if st.isDirectory() and st.getPath().getName().startswith("_sizing=")
-        ]
-        if found and found[0] != want:
-            raise ValueError(
-                f"bloom store at {index_dir} is sized {found[0]!r}; "
-                f"refusing a {want!r} apply — folding words of mismatched "
-                "sizings silently corrupts the filter"
-            )
-        if found:
-            return
-        # No marker but existing data partitions: a legacy (pre-marker)
-        # store is implicitly (4096, 3) — read_sizing documents exactly
-        # that — so stamping ANY other sizing onto it would land
-        # mixed-m words the marker exists to forbid (review r10).
-        has_data = any(
-            st.isDirectory()
-            and (
-                st.getPath().getName().startswith("date=")
-                or st.getPath().getName().startswith("ingest_batch=")
-            )
-            for st in fs.listStatus(path_cls(index_dir))
+    found = [f"_sizing={v}" for v in partition_values(spark, index_dir, "_sizing")]
+    if found and found[0] != want:
+        raise ValueError(
+            f"bloom store at {index_dir} is sized {found[0]!r}; "
+            f"refusing a {want!r} apply — folding words of mismatched "
+            "sizings silently corrupts the filter"
         )
-        if has_data and (m, k) != (_BLOOM_M, _BLOOM_K):
-            raise ValueError(
-                f"bloom store at {index_dir} predates the sizing marker "
-                f"and is implicitly sized m{_BLOOM_M}-k{_BLOOM_K}; "
-                f"refusing a {want!r} apply — rebuild the store to resize"
-            )
+    if found:
+        return
+    # No marker but existing data partitions: a legacy (pre-marker)
+    # store is implicitly (4096, 3) — read_sizing documents exactly
+    # that — so stamping ANY other sizing onto it would land
+    # mixed-m words the marker exists to forbid (review r10).
+    has_data = any(partition_values(spark, index_dir, key) for key in KEYINGS)
+    if has_data and (m, k) != (_BLOOM_M, _BLOOM_K):
+        raise ValueError(
+            f"bloom store at {index_dir} predates the sizing marker "
+            f"and is implicitly sized m{_BLOOM_M}-k{_BLOOM_K}; "
+            f"refusing a {want!r} apply — rebuild the store to resize"
+        )
+    fs, path_cls = hadoop_fs(spark, index_dir)
     fs.mkdirs(path_cls(f"{index_dir}/{want}"))
 
 
 def read_sizing(spark: SparkSession, index_dir: str) -> tuple[int, int]:
     """(m, k) recorded in the store's sizing marker; stores written
     before the marker existed default to the original (4096, 3)."""
-    from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
-
-    fs, path_cls = _hadoop_fs(spark, index_dir)
-    if fs.exists(path_cls(index_dir)):
-        for st in fs.listStatus(path_cls(index_dir)):
-            name = st.getPath().getName()
-            if st.isDirectory() and name.startswith("_sizing=m"):
-                m_part, k_part = name.removeprefix("_sizing=m").split("-k", 1)
-                return int(m_part), int(k_part)
+    for v in partition_values(spark, index_dir, "_sizing"):
+        if v.startswith("m"):
+            m_part, k_part = v.removeprefix("m").split("-k", 1)
+            return int(m_part), int(k_part)
     return _BLOOM_M, _BLOOM_K
 
 
@@ -155,7 +141,7 @@ def compact_bloom_store(
         index_dir,
         keep_from,
         op_name="compact_bloom_store",
-        part_key=resolve_part_key(spark, index_dir),
+        part_key=ledger_keying(spark, index_dir, "date"),
         base_key=BASE_KEY,
         subtables={
             "": lambda src: (

@@ -38,15 +38,14 @@ from data_ingestion_lambda_spark.operators.base_fold import (
     BASE_KEY,
     base_fold,
     check_not_below_horizon,
-    resolve_part_key,
 )
-from data_ingestion_lambda_spark.operators.upsert import (
-    _hadoop_fs,
+from data_ingestion_lambda_spark.operators.layout import (
+    KEYINGS,
+    hadoop_fs,
+    ledger_keying,
     replace_partitions,
 )
 from data_ingestion_lambda_spark.plans.profiling import cms_counters, cms_estimate
-
-_KEYINGS = ("date", "ingest_batch")
 
 
 def check_keying_marker(spark: SparkSession, index_dir: str, keying: str) -> None:
@@ -60,41 +59,19 @@ def check_keying_marker(spark: SparkSession, index_dir: str, keying: str) -> Non
     the underscore prefix hides it from the file index) and every
     writer checks it up front; legacy marker-less directories infer
     theirs from the existing partition dirs."""
-    if keying not in _KEYINGS:
+    if keying not in KEYINGS:
         raise ValueError(f"check_keying_marker: unknown keying {keying!r}")
-    fs, path_cls = _hadoop_fs(spark, index_dir)
-    recorded = None
-    if fs.exists(path_cls(index_dir)):
-        names = [
-            st.getPath().getName()
-            for st in fs.listStatus(path_cls(index_dir))
-            if st.isDirectory()
-        ]
-        marked = [
-            n.split("=", 1)[1] for n in names if n.startswith("_keyed_by=")
-        ]
-        if marked:
-            recorded = marked[0]
-        else:  # legacy: infer from the partition dirs already present
-            present = {k for k in _KEYINGS for n in names if n.startswith(f"{k}=")}
-            if len(present) > 1:
-                raise ValueError(
-                    f"index at {index_dir} already mixes "
-                    f"{sorted(present)} partitions — reads are broken; "
-                    "split the ledgers into separate --index dirs"
-                )
-            if present:
-                recorded = present.pop()
+    recorded = ledger_keying(spark, index_dir)  # refuses a mixed dir
     if recorded is not None and recorded != keying:
         raise ValueError(
             f"index at {index_dir} is keyed by {recorded}=; refusing a "
             f"{keying}=-keyed apply — one directory, one keying (use a "
             "separate --index for the other ingestion path)"
         )
-    if recorded is None or not fs.exists(
-        path_cls(f"{index_dir}/_keyed_by={keying}")
-    ):
-        fs.mkdirs(path_cls(f"{index_dir}/_keyed_by={keying}"))
+    fs, path_cls = hadoop_fs(spark, index_dir)
+    marker = path_cls(f"{index_dir}/_keyed_by={keying}")
+    if not fs.exists(marker):
+        fs.mkdirs(marker)
 
 
 def apply_cms_batch(
@@ -124,7 +101,7 @@ def compact_cms_store(spark: SparkSession, index_dir: str, keep_from: str) -> di
         index_dir,
         keep_from,
         op_name="compact_cms_store",
-        part_key=resolve_part_key(spark, index_dir),
+        part_key=ledger_keying(spark, index_dir, "date"),
         base_key=BASE_KEY,
         subtables={
             "": lambda src: (

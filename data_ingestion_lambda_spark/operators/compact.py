@@ -8,7 +8,7 @@ a scan bounded by IO and one bounded by NameNode/S3 LIST round-trips).
 
 ``compact_partitions`` rewrites chosen date partitions into
 ~``target_file_bytes`` files each, committing through the same staged
-per-partition swap as the upsert sink (operators/upsert.py), so readers
+per-partition swap as the upsert sink (operators/layout.py), so readers
 never observe a half-written partition and a crash mid-compact leaves at
 most one partition to re-compact. Contents are byte-identical rows — the
 operator never interprets payload columns, so it is safe to run
@@ -23,10 +23,10 @@ from datetime import date
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_ingestion_lambda_spark.operators.upsert import (
+from data_ingestion_lambda_spark.operators.layout import (
     PARTITION_COL,
-    _hadoop_fs,
-    list_partition_dates,
+    hadoop_fs,
+    partition_values,
     replace_partitions,
 )
 
@@ -50,8 +50,8 @@ def expire_partitions(
     wrongly against zero-padded partition names and mass-delete months it
     should keep."""
     keep_from = date.fromisoformat(keep_from).isoformat()
-    fs, path_cls = _hadoop_fs(spark, target_dir)
-    expired = [d for d in list_partition_dates(spark, target_dir) if d < keep_from]
+    fs, path_cls = hadoop_fs(spark, target_dir)
+    expired = [d for d in partition_values(spark, target_dir, PARTITION_COL) if d < keep_from]
     for d in expired:
         fs.delete(path_cls(f"{target_dir}/{PARTITION_COL}={d}"), True)
     return expired
@@ -66,9 +66,9 @@ def compact_partitions(
     """Rewrite each date partition into ``ceil(bytes/target_file_bytes)``
     files. Returns {date: actual_output_file_count}. Partitions already at
     or below one target-file of data compact to exactly one file."""
-    fs, path_cls = _hadoop_fs(spark, target_dir)
+    fs, path_cls = hadoop_fs(spark, target_dir)
     if dates is None:
-        dates = list_partition_dates(spark, target_dir)
+        dates = partition_values(spark, target_dir, PARTITION_COL)
 
     result: dict[str, int] = {}
     for d in dates:
@@ -185,9 +185,9 @@ def cluster_partitions(
     ranges on EVERY clustered column — the right layout when two
     independent filter columns matter (the Delta OPTIMIZE ZORDER idea,
     implemented here as plain column arithmetic + the same staged swap)."""
-    fs, path_cls = _hadoop_fs(spark, target_dir)
+    fs, path_cls = hadoop_fs(spark, target_dir)
     if dates is None:
-        dates = list_partition_dates(spark, target_dir)
+        dates = partition_values(spark, target_dir, PARTITION_COL)
 
     result: dict[str, int] = {}
     for d in dates:

@@ -56,9 +56,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_lambda_spark.operators.dedup_gate import apply_batch
-from data_ingestion_lambda_spark.operators.upsert import (
+from data_ingestion_lambda_spark.operators.layout import (
     PARTITION_COL,
-    list_partition_dates,
+    partition_values,
     replace_partitions,
 )
 from data_ingestion_lambda_spark.plans.corpus_build import (
@@ -133,7 +133,7 @@ def _read_store_typed(
     """Accumulated store rows (partition column dropped); typed empty frame
     when no day has written yet."""
     path = _store(work_dir, name)
-    if list_partition_dates(spark, path):
+    if partition_values(spark, path, PARTITION_COL):
         return spark.read.parquet(path).drop(PARTITION_COL)
     return spark.createDataFrame([], schema=schema)
 
@@ -272,7 +272,7 @@ def gate_and_ledger_batch(
     # A day with zero flags writes no matches partition (replace_partitions
     # of an empty frame is a no-op) — treat absence as the empty flag set.
     em = _store(work_dir, EXACT_MATCHES)
-    if date in list_partition_dates(spark, em):
+    if date in partition_values(spark, em, PARTITION_COL):
         flagged = (
             spark.read.parquet(em)
             .filter(F.col(PARTITION_COL) == date)
@@ -402,7 +402,7 @@ def finalize_disposition(spark: SparkSession, work_dir: str) -> DataFrame:
     # the exact index is the one store finalize cannot fake an empty twin
     # for (its rows drive canonicalization), so an un-ingested work dir
     # refuses cleanly instead of dying in schema inference (ADVICE r13).
-    if not list_partition_dates(spark, _store(work_dir, EXACT_INDEX)):
+    if not partition_values(spark, _store(work_dir, EXACT_INDEX), PARTITION_COL):
         raise ValueError(
             f"finalize_disposition: no day has been ingested into work dir "
             f"{work_dir} yet (the exact gate index is empty) — run the "

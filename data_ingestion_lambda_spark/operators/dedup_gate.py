@@ -30,7 +30,7 @@ piece that stays either way, because it is what makes appends atomic and
 re-runs idempotent.
 
 Commit protocol: each accepted batch's signatures land via
-``replace_partitions`` (operators/upsert.py) under its OWN
+``replace_partitions`` (operators/layout.py) under its OWN
 ``date=<batch_date>`` partition — the batch-id-keyed sink idiom: a
 replayed batch overwrites only itself, so the gate is idempotent by
 construction (pinned in tests/test_dedup_gate.py).
@@ -54,9 +54,9 @@ from data_ingestion_lambda_spark.operators.base_fold import (
     base_fold,
     check_not_below_horizon,
 )
-from data_ingestion_lambda_spark.operators.upsert import (
+from data_ingestion_lambda_spark.operators.layout import (
     PARTITION_COL,
-    list_partition_dates,
+    partition_values,
     replace_partitions,
 )
 from data_ingestion_lambda_spark.plans.llm_ops import (
@@ -132,7 +132,7 @@ def read_index(
     OLD day then probes the index state that day originally saw, not one
     polluted by later days' signatures (the corpus-build runner's replay
     idempotence depends on this)."""
-    if list_partition_dates(spark, index_dir):
+    if partition_values(spark, index_dir, PARTITION_COL):
         idx = spark.read.parquet(index_dir)
         if exclude_date is not None:
             idx = idx.filter(F.col(PARTITION_COL) != exclude_date)

@@ -42,8 +42,9 @@ from data_ingestion_lambda_spark.operators.base_fold import (
     base_fold,
     check_not_below_horizon,
 )
-from data_ingestion_lambda_spark.operators.upsert import (
+from data_ingestion_lambda_spark.operators.layout import (
     PARTITION_COL,
+    hadoop_fs,
     replace_partitions,
 )
 from data_ingestion_lambda_spark.plans.events_queries import (
@@ -102,9 +103,7 @@ def apply_histogram_batch(
         # read a nonexistent path and raise, and (b) a replay-as-empty
         # would leave a prior non-empty partition stale. Drop any existing
         # partition explicitly and report zero.
-        from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
-
-        fs, path_cls = _hadoop_fs(spark, index_dir)
+        fs, path_cls = hadoop_fs(spark, index_dir)
         dst = path_cls(f"{index_dir}/{PARTITION_COL}={batch_date}")
         if fs.exists(dst) and not fs.delete(dst, True):
             raise IOError(

@@ -36,10 +36,14 @@ from data_ingestion_lambda_spark.operators.base_fold import (
     BASE_KEY,
     base_fold,
     check_not_below_horizon,
-    resolve_part_key,
 )
 from data_ingestion_lambda_spark.operators.cms_store import check_keying_marker
-from data_ingestion_lambda_spark.operators.upsert import replace_partitions
+from data_ingestion_lambda_spark.operators.layout import (
+    hadoop_fs,
+    ledger_keying,
+    partition_values,
+    replace_partitions,
+)
 from data_ingestion_lambda_spark.plans.llm_ops import (
     dsir_bits,
     dsir_features,
@@ -61,23 +65,16 @@ def _check_target_marker(
     counted against different targets sum into a meaningless mixture,
     so the target is recorded as an empty ``_target=<lang>`` marker
     directory (the vocab ``_order`` idiom) and checked on every apply."""
-    from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
-
-    fs, path_cls = _hadoop_fs(spark, index_dir)
-    if fs.exists(path_cls(index_dir)):
-        found = [
-            st.getPath().getName().split("=", 1)[1]
-            for st in fs.listStatus(path_cls(index_dir))
-            if st.isDirectory() and st.getPath().getName().startswith("_target=")
-        ]
-        if found and found[0] != target_lang:
-            raise ValueError(
-                f"dsir store at {index_dir} models target {found[0]!r}; "
-                f"refusing a {target_lang!r}-targeted apply — one "
-                "directory, one target"
-            )
-        if found:
-            return
+    found = partition_values(spark, index_dir, "_target")
+    if found and found[0] != target_lang:
+        raise ValueError(
+            f"dsir store at {index_dir} models target {found[0]!r}; "
+            f"refusing a {target_lang!r}-targeted apply — one "
+            "directory, one target"
+        )
+    if found:
+        return
+    fs, path_cls = hadoop_fs(spark, index_dir)
     fs.mkdirs(path_cls(f"{index_dir}/_target={target_lang}"))
 
 
@@ -116,7 +113,7 @@ def compact_dsir_store(
         index_dir,
         keep_from,
         op_name="compact_dsir_store",
-        part_key=resolve_part_key(spark, index_dir),
+        part_key=ledger_keying(spark, index_dir, "date"),
         base_key=BASE_KEY,
         subtables={
             "": lambda src: (

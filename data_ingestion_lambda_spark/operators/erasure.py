@@ -35,9 +35,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_ingestion_lambda_spark.operators.upsert import (
+from data_ingestion_lambda_spark.operators.layout import (
     PARTITION_COL,
-    _hadoop_fs,
+    hadoop_fs,
+    partition_values,
     replace_partitions,
 )
 
@@ -54,7 +55,7 @@ def _refuse_unpartitioned(
     report SUCCESS while every subject row survives — the worst shape
     for a compliance API. The SCD2 history's whole-table-swap layout is
     exactly this; it has its own eraser (``scd2.erase_scd2``)."""
-    fs, path_cls = _hadoop_fs(spark, table_dir)
+    fs, path_cls = hadoop_fs(spark, table_dir)
     if not fs.exists(path_cls(table_dir)):
         return
     prefix = f"{part_col}="
@@ -101,15 +102,11 @@ def erase_keys(
     if not request_id:
         raise ValueError("erase_keys: request_id is required (audit key)")
     keyset = keys.select(F.col(key_col)).distinct()
-    fs, path_cls = _hadoop_fs(spark, table_dir)
     _refuse_unpartitioned(
         spark, table_dir, part_col=part_col, ignore_loose=ignore_loose
     )
-    has_data = fs.exists(path_cls(table_dir)) and any(
-        st.getPath().getName().startswith(f"{part_col}=")
-        for st in fs.listStatus(path_cls(table_dir))
-    )
-    if not has_data:  # a fully-erased (or empty) table: nothing to scan
+    if not partition_values(spark, table_dir, part_col):
+        # a fully-erased (or empty) table: nothing to scan
         _land_tombstones(
             keyset, key_col, 0, table_dir, tombstone_dir, request_id,
             rows_erased=0,
@@ -163,6 +160,7 @@ def erase_keys(
                 rewrite,
                 part_col=part_col,
             )
+        fs, path_cls = hadoop_fs(spark, table_dir)
         for d in drop:  # fully-erased days: no rows to stage, delete outright
             fs.delete(path_cls(f"{table_dir}/{part_col}={d}"), True)
         kept.unpersist()
@@ -198,7 +196,7 @@ def _land_tombstones(
     tomb = tombstone_dir or f"{table_dir}/_tombstones"
     target = f"{tomb}/request_id={request_id}"
     spark = keyset.sparkSession
-    fs, path_cls = _hadoop_fs(spark, tomb)
+    fs, path_cls = hadoop_fs(spark, tomb)
     if rows_erased == 0 and fs.exists(path_cls(target)):
         return  # replay after success: keep the original audit record
     (
@@ -231,11 +229,7 @@ def verify_erasure(
     _refuse_unpartitioned(
         spark, table_dir, part_col=part_col, ignore_loose=ignore_loose
     )
-    fs, path_cls = _hadoop_fs(spark, table_dir)
-    if not fs.exists(path_cls(table_dir)) or not any(
-        st.getPath().getName().startswith(f"{part_col}=")
-        for st in fs.listStatus(path_cls(table_dir))
-    ):
+    if not partition_values(spark, table_dir, part_col):
         return 0
     keyset = keys.select(F.col(key_col)).distinct()
     return (

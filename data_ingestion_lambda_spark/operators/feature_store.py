@@ -47,8 +47,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_lambda_spark.operators.base_fold import base_fold, fold_horizon
-from data_ingestion_lambda_spark.operators.upsert import (
-    _hadoop_fs,
+from data_ingestion_lambda_spark.operators.layout import (
+    partition_values,
+    refuse_stranded_fold,
     replace_partitions,
 )
 
@@ -285,16 +286,6 @@ def read_user_features(
     )
 
 
-# The compaction horizon: dates strictly below it have been folded into
-# the base partition and are no longer separable for as-of reads.
-# Recorded as an empty ``_horizon=<date>`` marker DIRECTORY (a mkdir is
-# atomic on every Hadoop FS and needs no stream I/O to read back; the
-# underscore prefix hides it from Spark's file index). Shared base-fold
-# discipline (review r10: three per-store copies collapsed into
-# operators/base_fold.py).
-_fold_horizon = fold_horizon
-
-
 def read_user_features_asof(
     spark: SparkSession, index_dir: str, as_of: str
 ) -> DataFrame:
@@ -312,14 +303,12 @@ def read_user_features_asof(
     compaction policy as "fold only dates older than any training
     lookback you still need"."""
     _dt.date.fromisoformat(as_of)
-    fs, path_cls = _hadoop_fs(spark, index_dir)
-    parts = [
-        st.getPath().getName()
-        for st in fs.listStatus(path_cls(index_dir))
-        if st.isDirectory() and st.getPath().getName().startswith("date=")
-    ]
-    if f"date={BASE_DATE}" in parts:
-        horizon = _fold_horizon(fs, path_cls, index_dir)
+    dates = partition_values(spark, index_dir, "date")
+    if BASE_DATE in dates:
+        # The compaction horizon (a ``_horizon=<date>`` marker): dates
+        # strictly below it were folded into the base and are no longer
+        # separable for as-of reads.
+        horizon = fold_horizon(spark, index_dir)
         if horizon is None:
             raise ValueError(
                 f"read_user_features_asof: {index_dir} has a compacted base "
@@ -336,11 +325,7 @@ def read_user_features_asof(
                 f"compaction horizon {horizon} — those dates were folded "
                 "into the base and are no longer separable"
             )
-    selected = [
-        p
-        for p in parts
-        if p == f"date={BASE_DATE}" or p.split("=", 1)[1] <= as_of
-    ]
+    selected = [d for d in dates if d == BASE_DATE or d <= as_of]
     if not selected:
         raise ValueError(
             f"read_user_features_asof: no ledger partition at or before "
@@ -349,7 +334,7 @@ def read_user_features_asof(
     return derive_user_vector(
         merge_moments(
             spark.read.option("mergeSchema", "true").parquet(
-                *[f"{index_dir}/{p}" for p in selected]
+                *[f"{index_dir}/date={d}" for d in selected]
             )
         )
     )
@@ -364,35 +349,19 @@ def compact_feature_ledger(spark: SparkSession, index_dir: str, keep_from: str) 
     the folded dates: a later apply for such a date would double-count,
     so fold only dates past the re-delivery policy.
 
-    Crash-safe via the ledger discipline (compact_gap_ledger): the full
-    merged base lands in a dot-prefixed staging dir FIRST; a crash
+    Crash-safe via the one fold swap (operators/layout.py::fold_swap):
+    the full merged base lands in a dot-prefixed staging dir FIRST; a crash
     between the partition drops and the final rename leaves staging as
     the only complete copy, and the next entry REFUSES loudly with the
-    recovery path instead of recompacting a partial table. FS-agnostic:
-    every directory op goes through the Hadoop FS API, and Hadoop's
-    returns-false failure contract raises on every path."""
+    recovery path instead of recompacting a partial table."""
     _dt.date.fromisoformat(keep_from)
-    fs, path_cls = _hadoop_fs(spark, index_dir)
-    staging = f"{index_dir}/.compact-staging"
-    if fs.exists(path_cls(staging)):
-        raise RuntimeError(
-            f"compact_feature_ledger: stranded {staging} from a crashed "
-            "compaction — it holds the full pre-crash base; remove any "
-            f"leftover folded date=* dirs and rename it to date={BASE_DATE}. "
-            "The _horizon marker was already advanced BEFORE staging was "
-            "written, so as-of reads stay safe throughout recovery"
-        )
-    parts = [
-        st.getPath().getName()
-        for st in fs.listStatus(path_cls(index_dir))
-        if st.isDirectory() and st.getPath().getName().startswith("date=")
-    ]
+    refuse_stranded_fold(spark, index_dir, "compact_feature_ledger", "date", BASE_DATE)
     fold = [
-        p
-        for p in parts
-        if p == f"date={BASE_DATE}" or p.split("=", 1)[1] < keep_from
+        d
+        for d in partition_values(spark, index_dir, "date")
+        if d == BASE_DATE or d < keep_from
     ]
-    if len(fold) < 2 and f"date={BASE_DATE}" in fold:
+    if len(fold) < 2 and BASE_DATE in fold:
         # Only the base itself — nothing to fold. A base WITHOUT a
         # _horizon marker cannot arise from any crash window anymore
         # (the marker is written FIRST, below, before staging or drops,
@@ -404,7 +373,7 @@ def compact_feature_ledger(spark: SparkSession, index_dir: str, keep_from: str) 
         # keep_from than the original fold understated the horizon and
         # served as-of reads between the two dates from already-folded
         # base state.
-        if _fold_horizon(fs, path_cls, index_dir) is None:
+        if fold_horizon(spark, index_dir) is None:
             raise ValueError(
                 f"compact_feature_ledger: {index_dir} has a folded base "
                 "but no _horizon= marker, and the original fold point "
@@ -456,14 +425,8 @@ def read_user_decayed_activity(
     )
 
     _dt.date.fromisoformat(as_of)
-    fs, path_cls = _hadoop_fs(spark, index_dir)
-    parts = [
-        st.getPath().getName()
-        for st in fs.listStatus(path_cls(index_dir))
-        if st.isDirectory() and st.getPath().getName().startswith("date=")
-    ]
-    if f"date={BASE_DATE}" in parts:
-        horizon = _fold_horizon(fs, path_cls, index_dir)
+    if BASE_DATE in partition_values(spark, index_dir, "date"):
+        horizon = fold_horizon(spark, index_dir)
         cutoff = (
             _dt.date.fromisoformat(as_of) - _dt.timedelta(weeks=_DECAY_WMAX)
         ).isoformat()

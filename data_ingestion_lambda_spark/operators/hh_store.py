@@ -38,9 +38,11 @@ from data_ingestion_lambda_spark.operators.base_fold import (
     BASE_KEY,
     base_fold,
     check_not_below_horizon,
-    resolve_part_key,
 )
-from data_ingestion_lambda_spark.operators.upsert import replace_partitions
+from data_ingestion_lambda_spark.operators.layout import (
+    ledger_keying,
+    replace_partitions,
+)
 from data_ingestion_lambda_spark.plans.profiling import _HH_K, mg_sketch
 
 N_ROW = "__n__"  # reserved item carrying the batch's total count
@@ -80,7 +82,7 @@ def compact_hh_store(spark: SparkSession, index_dir: str, keep_from: str) -> dic
         index_dir,
         keep_from,
         op_name="compact_hh_store",
-        part_key=resolve_part_key(spark, index_dir),
+        part_key=ledger_keying(spark, index_dir, "date"),
         base_key=BASE_KEY,
         subtables={
             "": lambda src: (

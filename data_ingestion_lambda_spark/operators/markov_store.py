@@ -50,7 +50,7 @@ from data_ingestion_lambda_spark.operators.base_fold import (
     check_not_below_horizon,
 )
 from data_ingestion_lambda_spark.operators.cms_store import check_keying_marker
-from data_ingestion_lambda_spark.operators.upsert import replace_partitions
+from data_ingestion_lambda_spark.operators.layout import replace_partitions
 
 _TOUCH_STATE = (
     "CASE event_type WHEN 'view' THEN 1 WHEN 'click' THEN 2 ELSE 3 END"

@@ -62,9 +62,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_ingestion_lambda_spark.operators.base_fold import base_fold, fold_horizon
-from data_ingestion_lambda_spark.operators.upsert import (
+from data_ingestion_lambda_spark.operators.layout import (
     PARTITION_COL,
-    _hadoop_fs,
+    hadoop_fs,
     replace_partitions,
 )
 from data_ingestion_lambda_spark.plans.llm_ops import tokens
@@ -81,11 +81,6 @@ _SUBTABLES = ("postings", "doclen", "stats")
 
 def _bucket(tok_col) -> Column:
     return F.pmod(F.xxhash64(tok_col), F.lit(N_BUCKETS)).cast("int")
-
-
-# MAX over _horizon= markers — shared base-fold discipline (review r10:
-# three per-store copies collapsed into operators/base_fold.py).
-_fold_horizon = fold_horizon
 
 
 def _tf_dl(batch_docs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -113,8 +108,7 @@ def update_postings(
     compare needs; one index sticks to one scheme."""
     if not batch_date or "/" in batch_date or "=" in batch_date:
         raise ValueError(f"update_postings: bad batch key {batch_date!r}")
-    fs, path_cls = _hadoop_fs(spark, index_dir)
-    horizon = _fold_horizon(fs, path_cls, index_dir)
+    horizon = fold_horizon(spark, index_dir)
     if horizon is not None and batch_date < horizon:
         raise ValueError(
             f"update_postings: batch_date {batch_date} is below the "
@@ -223,7 +217,7 @@ def count_partition_dirs(spark: SparkSession, index_dir: str) -> int:
     """Total leaf partition directories across the three sub-tables —
     the LIST-cost number compaction exists to collapse (bucket dirs
     count individually under postings)."""
-    fs, path_cls = _hadoop_fs(spark, index_dir)
+    fs, path_cls = hadoop_fs(spark, index_dir)
     total = 0
     for sub in _SUBTABLES:
         root = path_cls(f"{index_dir}/{sub}")

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
+from data_ingestion_lambda_spark.operators.layout import hadoop_fs
 
 SCD2_COLUMNS = ("user_id", "segment", "valid_from", "valid_to", "is_current")
 
@@ -70,7 +70,7 @@ def apply_scd2(spark: SparkSession, target_dir: str, batch: DataFrame) -> None:
     event_type) into the stored SCD2 table at ``target_dir``.
 
     Swap protocol (FS-agnostic via the Hadoop FS API, same as
-    operators/upsert.py — works on file://, hdfs://, s3a://):
+    operators/layout.py — works on file://, hdfs://, s3a://):
 
     1. entry guard — a stranded ``.old`` or ``.staging`` sibling means a
        previous swap crashed mid-flight; REFUSE to run (the stranded dir
@@ -83,7 +83,7 @@ def apply_scd2(spark: SparkSession, target_dir: str, batch: DataFrame) -> None:
     A crash between the two renames leaves the history intact in ``.old``
     and the next run fails loudly at step 1 instead of silently
     rebuilding from one batch."""
-    fs, path_cls = _hadoop_fs(spark, target_dir)
+    fs, path_cls = hadoop_fs(spark, target_dir)
     base = target_dir.rstrip("/")
     live = path_cls(base)
     _guard_stranded_swap(fs, path_cls, base, "apply_scd2")
@@ -204,7 +204,7 @@ def erase_scd2(
     after any replayed apply; the tombstone records what to re-run."""
     if not request_id:
         raise ValueError("erase_scd2: request_id is required (audit key)")
-    fs, path_cls = _hadoop_fs(spark, target_dir)
+    fs, path_cls = hadoop_fs(spark, target_dir)
     base = target_dir.rstrip("/")
     _guard_stranded_swap(fs, path_cls, base, "erase_scd2")
     keyset = keys.select(F.col(key_col)).distinct()
@@ -235,7 +235,7 @@ def _land_scd2_tombstones(
     exists) keeps the original evidence."""
     spark = keyset.sparkSession
     target = f"{base}.tombstones/request_id={request_id}"
-    fs, path_cls = _hadoop_fs(spark, target)
+    fs, path_cls = hadoop_fs(spark, target)
     if report["rows_erased"] == 0 and fs.exists(path_cls(target)):
         return
     (
@@ -258,7 +258,7 @@ def verify_scd2_erasure(
 ) -> int:
     """Zero-residual verifier: surviving version rows for the subject
     keys — must be 0 after ``erase_scd2``; runnable standalone."""
-    fs, path_cls = _hadoop_fs(spark, target_dir)
+    fs, path_cls = hadoop_fs(spark, target_dir)
     if not fs.exists(path_cls(target_dir.rstrip("/"))):
         return 0
     keyset = keys.select(F.col(key_col)).distinct()

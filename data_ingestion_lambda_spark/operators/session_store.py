@@ -51,7 +51,7 @@ from data_ingestion_lambda_spark.operators.base_fold import (
     base_fold,
     check_not_below_horizon,
 )
-from data_ingestion_lambda_spark.operators.upsert import replace_partitions
+from data_ingestion_lambda_spark.operators.layout import replace_partitions
 
 GAP_US = 30 * 60 * 1_000_000  # the events_sessionize threshold
 

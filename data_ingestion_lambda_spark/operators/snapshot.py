@@ -2,7 +2,7 @@
 
 Training-data reproducibility ("exactly which rows trained model X") needs
 the table AS OF a version, but the staged-swap MERGE
-(operators/upsert.py::replace_partitions) rewrites whole date partitions
+(operators/layout.py::replace_partitions) rewrites whole date partitions
 in place. A snapshot freezes the current table state under
 ``<target>/.snapshots/v<N>/`` — dot-prefixed, so live readers never see
 it — with a JSON manifest of every data file and its size.
@@ -14,7 +14,7 @@ files, so a hardlinked snapshot keeps the old blocks alive.
 
 FS-agnostic: every function accepts an optional ``spark``; when given,
 ALL directory/manifest I/O goes through the Hadoop FS API
-(operators/upsert.py::_hadoop_fs), so the same code runs against
+(operators/layout.py::hadoop_fs), so the same code runs against
 hdfs:// / s3a:// / abfss:// targets. Materialization on a non-local FS
 falls back to ``FileUtil.copy`` per file — a BYTE COPY, not a link:
 object stores and HDFS have no hardlink, so freezing costs one read+write
@@ -42,7 +42,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
+from data_ingestion_lambda_spark.operators.layout import hadoop_fs
 
 _SNAP_ROOT = ".snapshots"
 _MANIFEST = "manifest.json"
@@ -145,7 +145,7 @@ def list_snapshots(target_dir: str, spark: SparkSession | None = None) -> list[d
     root = _snap_root(target_dir)
     snaps = []
     if spark is not None:
-        fs, path_cls = _hadoop_fs(spark, target_dir)
+        fs, path_cls = hadoop_fs(spark, target_dir)
         if not fs.exists(path_cls(root)):
             return []
         for st in fs.listStatus(path_cls(root)):
@@ -178,7 +178,7 @@ def snapshot_table(
     version = (existing[-1]["version"] + 1) if existing else 1
     snap_dir = f"{_snap_root(target_dir)}/v{version}"
     if spark is not None:
-        fs, path_cls = _hadoop_fs(spark, target_dir)
+        fs, path_cls = hadoop_fs(spark, target_dir)
         files = _fs_walk_data_files(fs, path_cls, target_dir)
         sizes = {}
         for rel in files:
@@ -206,7 +206,7 @@ def snapshot_table(
         "files": sizes,
     }
     if spark is not None:
-        fs, path_cls = _hadoop_fs(spark, target_dir)
+        fs, path_cls = hadoop_fs(spark, target_dir)
         fs.mkdirs(path_cls(snap_dir))
         _fs_write_json_atomic(
             fs, path_cls, f"{snap_dir}/.{_MANIFEST}.tmp", f"{snap_dir}/{_MANIFEST}",
@@ -225,7 +225,7 @@ def read_snapshot(spark: SparkSession, target_dir: str, version: int) -> DataFra
     """The table AS OF ``version`` — partition discovery works unchanged
     because the snapshot preserves the date=... layout."""
     snap_dir = f"{_snap_root(target_dir)}/v{version}"
-    fs, path_cls = _hadoop_fs(spark, target_dir)
+    fs, path_cls = hadoop_fs(spark, target_dir)
     if not fs.exists(path_cls(f"{snap_dir}/{_MANIFEST}")):
         raise FileNotFoundError(f"no snapshot v{version} under {target_dir}")
     return spark.read.parquet(snap_dir)
@@ -242,7 +242,7 @@ def expire_snapshots(
     for s in snaps[: max(0, len(snaps) - keep_last)]:
         snap_dir = f"{_snap_root(target_dir)}/v{s['version']}"
         if spark is not None:
-            fs, path_cls = _hadoop_fs(spark, target_dir)
+            fs, path_cls = hadoop_fs(spark, target_dir)
             if not fs.delete(path_cls(snap_dir), True):
                 raise IOError(f"expire_snapshots: delete {snap_dir} returned false")
         else:
@@ -289,7 +289,7 @@ def erase_snapshot_versions(
 
     snaps = list_snapshots(target_dir, spark=spark)
     report: dict = {"request_id": request_id, "rows_erased": 0, "versions": {}}
-    fs, path_cls = _hadoop_fs(spark, target_dir)
+    fs, path_cls = hadoop_fs(spark, target_dir)
     for s in snaps:
         version = s["version"]
         snap_dir = f"{_snap_root(target_dir)}/v{version}"

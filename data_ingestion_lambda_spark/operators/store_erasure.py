@@ -70,9 +70,11 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_ingestion_lambda_spark.operators.base_fold import resolve_part_key
-from data_ingestion_lambda_spark.operators.upsert import (
-    _hadoop_fs,
+from data_ingestion_lambda_spark.operators.layout import (
+    hadoop_fs,
+    ledger_keying,
+    partition_values,
+    read_partitions,
     replace_partitions,
 )
 
@@ -181,33 +183,6 @@ def _rebuild_remedy(store: str) -> str:
     )
 
 
-def _list_part_values(fs, path_cls, sub_dir: str, part_key: str) -> list[str]:
-    if not fs.exists(path_cls(sub_dir)):
-        return []
-    return sorted(
-        n.split("=", 1)[1]
-        for st in fs.listStatus(path_cls(sub_dir))
-        if st.isDirectory()
-        for n in [st.getPath().getName()]
-        if n.startswith(f"{part_key}=")
-    )
-
-
-def _read_parts(
-    spark: SparkSession, sub_dir: str, part_key: str, values: list[str]
-) -> DataFrame:
-    """basePath read of exactly the named partitions. mergeSchema
-    surfaces the superset schema when live partitions evolved; a column
-    absent from an old partition reads (and is rewritten) as NULL —
-    every store's merge treats NULL as the column's semigroup identity,
-    so read semantics are unchanged."""
-    return (
-        spark.read.option("basePath", sub_dir)
-        .option("mergeSchema", "true")
-        .parquet(*[f"{sub_dir}/{part_key}={v}" for v in values])
-    )
-
-
 def _match_join(
     table: DataFrame, keyset: DataFrame, key_col: str,
     match_cols: tuple[str, ...], how: str,
@@ -240,18 +215,17 @@ def _erase_sub(
     rewrite in their own pass so a base-only column never bleeds a NULL
     twin into the live partitions' files."""
     match_cols = match_cols or (key_col,)
-    fs, path_cls = _hadoop_fs(spark, sub_dir)
     out: dict = {
         "rows_erased": 0,
         "partitions_rewritten": 0,
         "partitions_deleted": 0,
         "affected": [],
     }
-    live = _list_part_values(fs, path_cls, sub_dir, part_key)
+    live = partition_values(spark, sub_dir, part_key)
     if not live:
         return out
     # pass 1: affected partitions from a key+partition-only scan
-    table = _read_parts(spark, sub_dir, part_key, live)
+    table = read_partitions(spark, sub_dir, part_key, live)
     missing_cols = [c for c in match_cols if c not in table.columns]
     if missing_cols:
         raise ValueError(
@@ -280,7 +254,7 @@ def _erase_sub(
         # persisted: the erased-row count and the staged rewrite would
         # otherwise each re-read and re-broadcast-join the whole group
         # (review r13 — two scans per group on the erasure hot path)
-        slice_ = _read_parts(spark, sub_dir, part_key, group).withColumn(
+        slice_ = read_partitions(spark, sub_dir, part_key, group).withColumn(
             part_key, F.col(part_key).cast("string")
         ).persist()
         try:
@@ -301,7 +275,7 @@ def _erase_sub(
             )
         finally:
             slice_.unpersist()
-        survived = set(_list_part_values(fs, path_cls, sub_dir, part_key))
+        survived = set(partition_values(spark, sub_dir, part_key))
         out["partitions_rewritten"] += sum(1 for v in group if v in survived)
         out["partitions_deleted"] += sum(1 for v in group if v not in survived)
     return out
@@ -316,14 +290,11 @@ def _recompute_postings_stats(
     from the SURVIVING doclen rows of those same partitions. N and T
     then read exactly as if the erased docs were never ingested (the
     property update_postings' additive-stats contract rests on)."""
-    fs, path_cls = _hadoop_fs(spark, f"{index_dir}/doclen")
-    survived = set(
-        _list_part_values(fs, path_cls, f"{index_dir}/doclen", part_key)
-    )
+    survived = set(partition_values(spark, f"{index_dir}/doclen", part_key))
     todo = [v for v in affected if v in survived]
     if todo:
         stats = (
-            _read_parts(spark, f"{index_dir}/doclen", part_key, todo)
+            read_partitions(spark, f"{index_dir}/doclen", part_key, todo)
             .withColumn(part_key, F.col(part_key).cast("string"))
             .groupBy(part_key)
             .agg(
@@ -387,7 +358,7 @@ def erase_store(
     doclen_part_key = "date"
     for s in spec.subs:
         sub_dir = f"{index_dir}/{s.sub}" if s.sub else index_dir
-        part_key = resolve_part_key(spark, sub_dir)
+        part_key = ledger_keying(spark, sub_dir, "date")
         if s.sub == "doclen":
             doclen_part_key = part_key
         sub_report = _erase_sub(
@@ -420,7 +391,7 @@ def _land_store_tombstones(
     spark = keyset.sparkSession
     tomb = f"{index_dir}/_tombstones"
     target = f"{tomb}/request_id={request_id}"
-    fs, path_cls = _hadoop_fs(spark, tomb)
+    fs, path_cls = hadoop_fs(spark, tomb)
     if report["rows_erased"] == 0 and fs.exists(path_cls(target)):
         return
     (
@@ -463,13 +434,12 @@ def verify_store_erasure(
     residual = 0
     for s in spec.subs:
         sub_dir = f"{index_dir}/{s.sub}" if s.sub else index_dir
-        part_key = resolve_part_key(spark, sub_dir)
-        fs, path_cls = _hadoop_fs(spark, sub_dir)
-        live = _list_part_values(fs, path_cls, sub_dir, part_key)
+        part_key = ledger_keying(spark, sub_dir, "date")
+        live = partition_values(spark, sub_dir, part_key)
         if not live:
             continue
         residual += _match_join(
-            _read_parts(spark, sub_dir, part_key, live),
+            read_partitions(spark, sub_dir, part_key, live),
             keyset,
             key_col,
             s.key_cols or (key_col,),

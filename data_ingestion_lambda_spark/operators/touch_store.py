@@ -31,10 +31,12 @@ from data_ingestion_lambda_spark.operators.base_fold import (
     BASE_KEY,
     base_fold,
     check_not_below_horizon,
-    resolve_part_key,
 )
 from data_ingestion_lambda_spark.operators.cms_store import check_keying_marker
-from data_ingestion_lambda_spark.operators.upsert import replace_partitions
+from data_ingestion_lambda_spark.operators.layout import (
+    ledger_keying,
+    replace_partitions,
+)
 
 _PPB = 10**9
 
@@ -79,7 +81,7 @@ def compact_touch_store(
         index_dir,
         keep_from,
         op_name="compact_touch_store",
-        part_key=resolve_part_key(spark, index_dir),
+        part_key=ledger_keying(spark, index_dir, "date"),
         base_key=BASE_KEY,
         subtables={
             "": lambda src: (

@@ -25,25 +25,17 @@ Scale design (the part that must survive 100 TB):
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_ingestion_lambda_spark.operators.layout import (
+    PARTITION_COL,
+    partition_values,
+    replace_partitions,
+)
 from data_ingestion_lambda_spark.schemas import UPSERT_KEYS
-
-PARTITION_COL = "date"
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path-class) for ``path``'s own scheme
-    (s3a/hdfs/file/...) via the JVM Hadoop FS API — the FS-agnostic
-    replacement for os.path operations."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    path_cls = jvm.org.apache.hadoop.fs.Path
-    return path_cls(path).getFileSystem(hconf), path_cls
 
 
 def merge_last_writer_wins(
@@ -113,21 +105,6 @@ def merge_last_writer_wins(
     )
 
 
-def list_partition_dates(spark: SparkSession, target_dir: str) -> list[str]:
-    """Date values present in ``target_dir`` (from partition directory
-    names — one LIST, no file reads)."""
-    fs, path_cls = _hadoop_fs(spark, target_dir)
-    root = path_cls(target_dir)
-    if not fs.exists(root):
-        return []
-    out = []
-    for status in fs.listStatus(root):
-        name = status.getPath().getName()
-        if status.isDirectory() and name.startswith(f"{PARTITION_COL}="):
-            out.append(name.split("=", 1)[1])
-    return sorted(out)
-
-
 def _align_schemas(existing: DataFrame, batch: DataFrame):
     """Additive schema evolution for the upsert target: a NEW batch column
     widens the stored table (old rows read as NULL); a column the batch
@@ -186,7 +163,7 @@ def _merge_and_swap(
         # a bare spark.read.parquet on an empty dir throws and would wedge
         # every subsequent ingest run.
         existing = None
-        if list_partition_dates(spark, target_dir):
+        if partition_values(spark, target_dir, PARTITION_COL):
             # Schema merge: partitions written before an additive schema
             # evolution carry the narrower schema; the union read widens
             # them with NULLs.
@@ -375,77 +352,3 @@ def upsert_into_parquet_with_cdc(
         "updates": counts.get("update", 0),
         "changes_dir": feed_dir,
     }
-
-
-def replace_partitions(
-    spark: SparkSession,
-    target_dir: str,
-    df: DataFrame,
-    dates,
-    extra_partition_cols: tuple[str, ...] = (),
-    part_col: str = PARTITION_COL,
-) -> None:
-    """Staged per-partition commit: materialize ``df`` into a hidden
-    staging directory (dot-prefixed → invisible to readers), then swap
-    each listed date partition in with delete+rename.
-
-    ``extra_partition_cols`` adds secondary Hive partition levels UNDER
-    the date (e.g. ``date=D/cell=C/``) so readers can partition-prune on
-    them; the commit protocol is unchanged — the swap still moves whole
-    ``date=D`` directories (sub-partitions ride along atomically), so the
-    idempotence and failure contracts below hold regardless.
-
-    Empty partitions REPLACE too (ADVICE r9): a listed date for which
-    ``df`` stages no rows means "this partition's new content is
-    empty" — the old partition is deleted outright, mirroring the
-    fully-erased-partition handling in ``erasure.erase_keys``. Without
-    this, re-applying a corrected store batch that now produces zero
-    rows would silently leave the stale partition in place. (Callers
-    that want "empty recompute keeps the old partition" — the CDC
-    feed's replay guard — must skip the call, as that caller does.)
-
-    Stage 1 fully consumes any snapshot reads of the live partitions
-    before stage 2 touches them; rename is atomic on HDFS-like stores, so
-    the non-atomic window is one partition's delete→rename instant.
-    Failure safety: Hadoop rename reports most failures by RETURNING
-    FALSE, not raising — a failed or crashed swap raises and PRESERVES the
-    staging directory (it holds the only copy of that partition's merged
-    data, including pre-existing rows); the error names the path for
-    manual recovery or a re-run."""
-    staging_dir = f"{target_dir}/.staging-{uuid.uuid4().hex}"
-    df.write.mode("overwrite").partitionBy(
-        part_col, *extra_partition_cols
-    ).parquet(staging_dir)
-
-    fs, path_cls = _hadoop_fs(spark, target_dir)
-    fs.mkdirs(path_cls(target_dir))
-    for d in dates:
-        part = f"{part_col}={d}"
-        src = path_cls(f"{staging_dir}/{part}")
-        dst = path_cls(f"{target_dir}/{part}")
-        if fs.exists(src):
-            if fs.exists(dst) and not fs.delete(dst, True):
-                raise IOError(
-                    f"partition swap failed: delete {dst} returned false; "
-                    f"staged data preserved under {staging_dir}"
-                )
-            if not fs.rename(src, dst):
-                raise IOError(
-                    f"partition swap failed: rename {src} -> {dst} returned false; "
-                    f"staged data preserved under {staging_dir}"
-                )
-        elif fs.exists(dst):
-            # df staged nothing for this listed date: its new content is
-            # empty — replace means delete, not keep (ADVICE r9). Hadoop
-            # FS reports most failures by RETURNING FALSE, not raising —
-            # a swallowed false here would keep serving the stale rows
-            # this branch exists to remove (review r10).
-            if not fs.delete(dst, True):
-                raise IOError(
-                    f"empty-partition replace failed: delete {dst} returned false"
-                )
-    # All swaps succeeded — only now discard staging. (On failure the
-    # staging dir is deliberately left in place; it is dot-prefixed, so
-    # readers never see it.)
-    fs.delete(path_cls(staging_dir), True)
-

@@ -52,10 +52,10 @@ from data_ingestion_lambda_spark.operators.base_fold import (
     check_not_below_horizon,
     fold_horizon,
 )
-from data_ingestion_lambda_spark.operators.upsert import (
+from data_ingestion_lambda_spark.operators.layout import (
     PARTITION_COL,
-    _hadoop_fs,
-    list_partition_dates,
+    hadoop_fs,
+    partition_values,
     replace_partitions,
 )
 from data_ingestion_lambda_spark.plans.llm_ops import tokens
@@ -101,24 +101,18 @@ def _check_order_marker(spark: SparkSession, vocab_dir: str, order: int, create:
     ``_order=<n>`` marker directory (the feature store's _horizon idiom)
     and checked on every update/score. Legacy marker-less directories
     are unigram models (order 1)."""
-    from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
-
-    fs, path_cls = _hadoop_fs(spark, vocab_dir)
-    if fs.exists(path_cls(vocab_dir)):
-        found = [
-            int(st.getPath().getName().split("=", 1)[1])
-            for st in fs.listStatus(path_cls(vocab_dir))
-            if st.isDirectory() and st.getPath().getName().startswith("_order=")
-        ]
-        recorded = found[0] if found else (1 if list_partition_dates(spark, vocab_dir) else None)
-        if recorded is not None and recorded != order:
-            raise ValueError(
-                f"vocab at {vocab_dir} is an order-{recorded} model; "
-                f"refusing order-{order} access — one directory, one order"
-            )
-        if found:
-            return
+    found = [int(v) for v in partition_values(spark, vocab_dir, "_order")]
+    legacy = 1 if partition_values(spark, vocab_dir, PARTITION_COL) else None
+    recorded = found[0] if found else legacy
+    if recorded is not None and recorded != order:
+        raise ValueError(
+            f"vocab at {vocab_dir} is an order-{recorded} model; "
+            f"refusing order-{order} access — one directory, one order"
+        )
+    if found:
+        return
     if create and order != 1:
+        fs, path_cls = hadoop_fs(spark, vocab_dir)
         fs.mkdirs(path_cls(f"{vocab_dir}/_order={order}"))
 
 
@@ -174,10 +168,9 @@ def read_vocab(
     """The model: (tok, cnt) summed across batch partitions. ``exclude_date``
     drops one batch's contribution — used by replay-safe scoring, exactly
     like the dedup gate's own-partition exclusion."""
-    dates = list_partition_dates(spark, vocab_dir)
+    dates = partition_values(spark, vocab_dir, PARTITION_COL)
     if exclude_date is not None:
-        fs, path_cls = _hadoop_fs(spark, vocab_dir)
-        horizon = fold_horizon(fs, path_cls, vocab_dir)
+        horizon = fold_horizon(spark, vocab_dir)
         if horizon is not None and exclude_date < horizon:
             raise ValueError(
                 f"read_vocab: exclude_date {exclude_date} is below the "

@@ -2347,10 +2347,13 @@ def _repetition_table_jvm(d: DataFrame) -> DataFrame:
                 if n == 1:
                     g = F.transform(w, lambda x: F.struct(F.lit(1).alias("n"), x.alias("g")))
                 else:
-                    g = F.transform(
-                        F.sequence(F.lit(1), F.greatest(F.size(w) - (n - 1), F.lit(0))),
-                        gram_lambda(w, n),
-                    )
+                    # sequence(1, 0) is DESCENDING in Spark, so a doc with
+                    # fewer than n tokens gets an empty window list instead
+                    # (no n-grams, as in the oracle's generate_series)
+                    starts = F.when(
+                        F.size(w) >= n, F.sequence(F.lit(1), F.size(w) - (n - 1))
+                    ).otherwise(F.array().cast("array<int>"))
+                    g = F.transform(starts, gram_lambda(w, n))
                 parts.append(g)
             return F.concat(*parts)
 

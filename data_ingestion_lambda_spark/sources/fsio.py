@@ -4,7 +4,7 @@ layout (the reference is an S3 pipeline: one ``get_object`` per file,
 src/s3_processor.py:87) instead of refusing every scheme'd path.
 
 Why pyarrow.fs and not the JVM Hadoop FS API the repo already wraps
-(``operators/upsert.py::_hadoop_fs``): a Python DataSource's
+(``operators/layout.py::hadoop_fs``): a Python DataSource's
 ``read(partition)`` executes in an EXECUTOR-SIDE Python worker, which
 has no py4j gateway — the JVM route only exists on the driver. pyarrow
 ships C++-native filesystems (local, s3, gcs, hdfs-via-libhdfs) that

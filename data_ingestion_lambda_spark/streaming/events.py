@@ -45,6 +45,13 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from data_ingestion_lambda_spark.operators.layout import (
+    committed_front,
+    fold_swap,
+    partition_values,
+    refuse_stranded_fold,
+)
+
 
 def stream_tumbling_counts(
     events: DataFrame, window_size: str = "1 hour", watermark: str = "2 hours"
@@ -523,25 +530,6 @@ def gap_quantiles_from_ledger(spark, target_dir: str) -> DataFrame:
     return gap_hist_quantiles(read_gap_histogram(spark, target_dir))
 
 
-def _committed_front(spark, checkpoint_dir: str) -> int | None:
-    """Highest batch id the streaming checkpoint has COMMITTED (the
-    ``commits/`` metadata log — a commit file lands only after the
-    batch's foreachBatch body returned, so ids at or below this front
-    are never replayed). None when the checkpoint has no commits yet."""
-    from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
-
-    fs, path_cls = _hadoop_fs(spark, checkpoint_dir)
-    commits = path_cls(f"{checkpoint_dir}/commits")
-    if not fs.exists(commits):
-        return None
-    ids = [
-        int(st.getPath().getName())
-        for st in fs.listStatus(commits)
-        if st.isFile() and st.getPath().getName().isdigit()
-    ]
-    return max(ids) if ids else None
-
-
 def _compact_batch_ledger(
     spark, target_dir: str, fold_df, op_name: str, checkpoint_dir: str | None = None
 ) -> int:
@@ -571,63 +559,32 @@ def _compact_batch_ledger(
     lexicographically), so there is no orderable partial horizon — the
     offline fold between triggers is the correct maintenance op,
     exactly like operators/compact.py. Read equality before/after is
-    pinned by test. The full fold lands in a dot-prefixed staging dir
-    FIRST, so every moment has a complete copy on disk; a crash between
-    the part-drop and the final rename leaves staging as that copy, and
-    the next entry REFUSES loudly with the recovery path instead of
-    recompacting a partial table (the scd2/replace_partitions
-    stranded-dir discipline). FS-AGNOSTIC: all directory ops go through
-    the Hadoop FS API (operators/upsert.py's _hadoop_fs), so the same
-    code runs on file://, hdfs://, s3a://, abfss:// targets; Hadoop's
-    returns-false failure contract raises on every path with the
-    data-preserving directory named."""
-    from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
-
-    fs, path_cls = _hadoop_fs(spark, target_dir)
-    staging = f"{target_dir}/.compact-staging"
-    if fs.exists(path_cls(staging)):
-        raise RuntimeError(
-            f"{op_name}: stranded {staging} from a crashed "
-            "compaction — it holds the full pre-crash fold; remove "
-            "any leftover ingest_batch=* dirs and rename it to "
-            "ingest_batch=-1 before re-running"
-        )
-    ids = sorted(
-        int(st.getPath().getName().split("=", 1)[1])
-        for st in fs.listStatus(path_cls(target_dir))
-        if st.isDirectory()
-        and st.getPath().getName().startswith("ingest_batch=")
-        and st.getPath().getName() != "ingest_batch=-1"
-    )
+    pinned by test. The swap is the one fold swap
+    (operators/layout.py::fold_swap): the full fold is staged FIRST, so
+    a crash between the part-drop and the final rename leaves staging
+    as the complete copy, and the next entry REFUSES loudly with the
+    recovery path instead of recompacting a partial table."""
+    refuse_stranded_fold(spark, target_dir, op_name, "ingest_batch", "-1")
+    keys = partition_values(spark, target_dir, "ingest_batch")
+    ids = sorted(int(v) for v in keys if v != "-1")
     if checkpoint_dir is not None:
-        front = _committed_front(spark, checkpoint_dir)
+        front = committed_front(spark, checkpoint_dir)
         fold_ids = [] if front is None else [i for i in ids if i <= front]
     else:
         fold_ids = ids[:-1]  # newest land may be uncommitted — keep it
     if not fold_ids:
         return 0
-    parts = [f"ingest_batch={i}" for i in fold_ids]
-    has_base = fs.exists(path_cls(f"{target_dir}/ingest_batch=-1"))
-    fold_paths = [f"{target_dir}/{p}" for p in parts] + (
-        [f"{target_dir}/ingest_batch=-1"] if has_base else []
+    fold = [str(i) for i in fold_ids] + (["-1"] if "-1" in keys else [])
+    fold_swap(
+        spark,
+        target_dir,
+        fold,
+        fold_df([f"{target_dir}/ingest_batch={v}" for v in fold]),
+        op_name=op_name,
+        part_key="ingest_batch",
+        base_key="-1",
     )
-    fold_df(fold_paths).write.mode("overwrite").parquet(staging)
-    for p in parts + ["ingest_batch=-1"]:
-        full = path_cls(f"{target_dir}/{p}")
-        if fs.exists(full) and not fs.delete(full, True):
-            raise IOError(
-                f"{op_name}: delete of {full} returned false; "
-                f"full compacted fold preserved at {staging} — "
-                "finish by removing remaining ingest_batch=* dirs and "
-                "renaming it to ingest_batch=-1"
-            )
-    if not fs.rename(path_cls(staging), path_cls(f"{target_dir}/ingest_batch=-1")):
-        raise IOError(
-            f"{op_name}: rename {staging} -> ingest_batch=-1 "
-            f"returned false; the full fold is intact at {staging} — "
-            "rename it manually to complete the compaction"
-        )
-    return len(parts)
+    return len(fold_ids)
 
 
 def batch_ledger_fold_due(spark, target_dir: str, max_dirs: int) -> bool:
@@ -647,19 +604,8 @@ def batch_ledger_fold_due(spark, target_dir: str, max_dirs: int) -> bool:
         raise ValueError(
             f"batch_ledger_fold_due: max_dirs must be >= 1, got {max_dirs}"
         )
-    from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
-
-    fs, path_cls = _hadoop_fs(spark, target_dir)
-    if not fs.exists(path_cls(target_dir)):
-        return False
-    live = sum(
-        1
-        for st in fs.listStatus(path_cls(target_dir))
-        if st.isDirectory()
-        and st.getPath().getName().startswith("ingest_batch=")
-        and st.getPath().getName() != "ingest_batch=-1"
-    )
-    return live > max_dirs
+    live = [v for v in partition_values(spark, target_dir, "ingest_batch") if v != "-1"]
+    return len(live) > max_dirs
 
 
 def compact_gap_ledger(

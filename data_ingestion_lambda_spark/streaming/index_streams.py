@@ -58,6 +58,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_ingestion_lambda_spark.operators.layout import hadoop_fs
+
 DOCS_SCHEMA = "doc_id bigint, text string"
 VECS_SCHEMA = "vec_id bigint, embedding array<float>"
 EVENTS_SCHEMA = "event_id bigint, user_id bigint, ts timestamp"
@@ -229,9 +231,8 @@ def run_ann_append_available_now(
     quantizer trained mid-stream would assign different batches with
     different models, breaking the one-shot equivalence)."""
     from data_ingestion_lambda_spark.operators.ann_index import append_batch
-    from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
 
-    fs, path_cls = _hadoop_fs(spark, index_dir)
+    fs, path_cls = hadoop_fs(spark, index_dir)
     if not fs.exists(path_cls(f"{index_dir}/centroids")):
         raise ValueError(
             f"run_ann_append_available_now: {index_dir}/centroids does not "

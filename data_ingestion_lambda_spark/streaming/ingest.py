@@ -35,8 +35,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_lambda_spark.functions.normalize import normalize_consumption
+from data_ingestion_lambda_spark.operators.layout import replace_partitions
 from data_ingestion_lambda_spark.operators.upsert import (
-    replace_partitions,
     upsert_into_parquet,
     upsert_into_parquet_with_cdc,
 )

@@ -9,10 +9,8 @@ import os
 from pyspark.sql import functions as F
 
 from data_ingestion_lambda_spark import cli
-from data_ingestion_lambda_spark.operators.compact import (
-    compact_partitions,
-    list_partition_dates,
-)
+from data_ingestion_lambda_spark.operators.compact import compact_partitions
+from data_ingestion_lambda_spark.operators.layout import partition_values
 from tests.test_ingestion import HEADER, drop_dir, write_csv
 
 
@@ -70,7 +68,7 @@ def test_compact_collapses_small_files(spark, tmp_path):
     df.repartition(8).write.partitionBy("date").mode("overwrite").parquet(target)
     assert len(_parquet_files(target, "2025-05-01")) >= 8
 
-    assert list_partition_dates(spark, target) == ["2025-05-01"]
+    assert partition_values(spark, target, "date") == ["2025-05-01"]
     before = sorted(
         (r["client_id"], r["total_consumed_tokens"])
         for r in spark.read.parquet(target).collect()
@@ -90,10 +88,10 @@ def test_expire_partitions_retention(spark, tmp_path):
     from data_ingestion_lambda_spark.operators.compact import expire_partitions
 
     target = _run_ingest(tmp_path, spark)
-    assert list_partition_dates(spark, target) == ["2025-05-01", "2025-05-02"]
+    assert partition_values(spark, target, "date") == ["2025-05-01", "2025-05-02"]
     expired = expire_partitions(spark, target, keep_from="2025-05-02")
     assert expired == ["2025-05-01"]
-    assert list_partition_dates(spark, target) == ["2025-05-02"]
+    assert partition_values(spark, target, "date") == ["2025-05-02"]
     rows = spark.read.parquet(target).collect()
     assert [str(r["date"]) for r in rows] == ["2025-05-02"]
 

@@ -478,14 +478,14 @@ def test_compact_horizon_marker_is_crashproof(spark, tmp_path):
     from data_ingestion_lambda_spark.operators.feature_store import (
         read_user_features_asof,
     )
-    from data_ingestion_lambda_spark.operators.upsert import _hadoop_fs
+    from data_ingestion_lambda_spark.operators.layout import hadoop_fs
 
     idx = str(tmp_path / "feat_idx")
     events = load_table(spark, SF, "events")
     days = _apply_daily(spark, idx, events)
     keep_from = days[-1]
     assert compact_feature_ledger(spark, idx, keep_from) > 0
-    fs, path_cls = _hadoop_fs(spark, idx)
+    fs, path_cls = hadoop_fs(spark, idx)
     assert fs.exists(path_cls(f"{idx}/_horizon={keep_from}"))
     # (b) a re-run with an EARLIER keep_from must NOT lower the marker
     assert compact_feature_ledger(spark, idx, days[0]) == 0

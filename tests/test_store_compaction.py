@@ -116,7 +116,7 @@ def test_cms_compaction_date_keyed(spark, tmp_path):
 
 def test_cms_compaction_streamed_keying(spark, tmp_path):
     """A streamed (ingest_batch=) ledger folds under its own partition
-    column — resolve_part_key reads the ``_keyed_by=`` marker — and the
+    column — ledger_keying reads the ``_keyed_by=`` marker — and the
     streaming land refuses a folded batch key."""
     from data_ingestion_lambda_spark.operators.cms_store import (
         compact_cms_store,
@@ -468,8 +468,15 @@ def test_stranded_staging_refuses(spark, tmp_path):
     apply_cms_batch(spark, str(idx), items, D1)
     apply_cms_batch(spark, str(idx), items, D2)
     (idx / ".compact-staging").mkdir()
-    with pytest.raises(RuntimeError, match="stranded"):
+    before = sorted(p.name for p in idx.iterdir())
+    with pytest.raises(RuntimeError, match="stranded") as refused:
         compact_cms_store(spark, str(idx), D3)
+    # the message names the staging dir and the base partition to rename
+    # it to, and the refused run deleted no ledger partition
+    assert str(idx / ".compact-staging") in str(refused.value)
+    assert "date=0000-00-00" in str(refused.value)
+    assert sorted(p.name for p in idx.iterdir()) == before
+    assert {f"date={D1}", f"date={D2}"} <= set(before)
 
 
 # --- CLI wiring (one store per handler shape suffices) -----------------------

@@ -297,7 +297,14 @@ def test_stranded_staging_refuses_streamed(spark, tmp_path):
     )
 
     target = tmp_path / "ledger"
-    (target / "ingest_batch=0").mkdir(parents=True)
+    for part in ("ingest_batch=-1", "ingest_batch=0", "ingest_batch=1"):
+        (target / part).mkdir(parents=True)
     (target / ".compact-staging").mkdir()
-    with pytest.raises(RuntimeError, match="stranded"):
+    before = sorted(p.name for p in target.iterdir())
+    with pytest.raises(RuntimeError, match="stranded") as refused:
         compact_value_histogram_ledger(spark, str(target))
+    # the message names the staging dir and the base partition to rename
+    # it to, and the refused run deleted no ledger partition
+    assert str(target / ".compact-staging") in str(refused.value)
+    assert "ingest_batch=-1" in str(refused.value)
+    assert sorted(p.name for p in target.iterdir()) == before
