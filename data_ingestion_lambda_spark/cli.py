@@ -36,27 +36,18 @@ from data_ingestion_lambda_spark.streaming.ingest import (
 
 def _read_event_batch(spark, path: str):
     """Read an event-batch parquet with the same ts normalization as
-    ``sources.catalog.load_table``: raw generator drops carry ts as
-    parquet TIMESTAMP(NANOS) (arrives as epoch-ns long under
-    nanosAsLong) or TIMESTAMP(MICROS, isAdjustedToUTC=false) (infers as
-    TIMESTAMP_NTZ). The drift/feature/session stores' unix_micros /
-    day-boundary expressions need a regular (UTC) TIMESTAMP — without
-    this, the same data that works through the registered lanes fails
-    the CLI apply with an analysis error."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
+    ``sources.catalog.load_table`` (``normalize_event_ts``). The
+    drift/feature/session stores' unix_micros / day-boundary expressions
+    need a regular (UTC) TIMESTAMP — without this, the same data that
+    works through the registered lanes fails the CLI apply with an
+    analysis error."""
+    from data_ingestion_lambda_spark.sources.catalog import normalize_event_ts
 
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    df = spark.read.parquet(path)
-    field = {f.name: f.dataType for f in df.schema.fields}.get("ts")
-    if isinstance(field, LongType):
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif isinstance(field, TimestampNTZType):
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return normalize_event_ts(spark.read.parquet(path))
 
 
 def _add_stream_args(sub_parser, noun: str) -> None:

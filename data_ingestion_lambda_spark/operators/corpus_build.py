@@ -355,10 +355,9 @@ def run_corpus_build_available_now(
     split in which a re-crawl lands no earlier than its original (the
     gate-in-front contract; pinned in tests/test_corpus_build.py).
     Returns the per-batch gate reports; a no-op drain returns []."""
-    from data_ingestion_lambda_spark.streaming.index_streams import (
-        _auto_compact_after_drain,
-        _drain,
-    )
+    from data_ingestion_lambda_spark.operators.base_fold import auto_compact_epilogue
+    from data_ingestion_lambda_spark.operators.dedup_gate import compact_gate_index
+    from data_ingestion_lambda_spark.streaming.index_streams import _drain
 
     reports = _drain(
         spark,
@@ -368,28 +367,22 @@ def run_corpus_build_available_now(
         lambda batch, key: gate_and_ledger_batch(spark, work_dir, batch, key),
         max_files_per_trigger,
     )
-    from data_ingestion_lambda_spark.operators.dedup_gate import compact_gate_index
-
-    for name in (EXACT_INDEX, MINHASH_INDEX):
-        ac = _auto_compact_after_drain(
+    stores = [
+        (name, _store(work_dir, name), compact_gate_index, None)
+        for name in (EXACT_INDEX, MINHASH_INDEX)
+    ]
+    stores.append(("ledgers", work_dir, compact_corpus_ledgers, _store(work_dir, DOCS)))
+    for name, ledger_dir, compact, count_dir in stores:
+        policy = auto_compact_epilogue(
             spark,
-            _store(work_dir, name),
-            checkpoint_dir,
-            auto_compact_max_dirs,
-            lambda kf, _d=_store(work_dir, name): compact_gate_index(spark, _d, kf),
+            ledger_dir,
+            max_dirs=auto_compact_max_dirs,
+            compact_fn=lambda kf, _c=compact, _d=ledger_dir: _c(spark, _d, kf),
+            checkpoint_dir=checkpoint_dir,
+            count_dir=count_dir,
         )
-        if ac is not None:
-            reports.append({name: ac})
-    ac = _auto_compact_after_drain(
-        spark,
-        work_dir,
-        checkpoint_dir,
-        auto_compact_max_dirs,
-        lambda kf: compact_corpus_ledgers(spark, work_dir, kf),
-        count_dir=_store(work_dir, DOCS),
-    )
-    if ac is not None:
-        reports.append({"ledgers": ac})
+        if policy is not None:
+            reports.append({name: {"auto_compact": policy}})
     return reports
 
 

@@ -69,20 +69,27 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             pass  # read-only conf in some deployments; the read may still work
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
-        # Normalize events.ts to a regular (UTC) TIMESTAMP whatever the
-        # generator wrote:
-        # - parquet TIMESTAMP(NANOS) + nanosAsLong arrives as epoch-nanos;
-        #   truncate to µs with integer division (ns values exceed 2^53,
-        #   so double arithmetic would corrupt them);
-        # - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) infers as
-        #   TIMESTAMP_NTZ under Spark 4's inferTimestampNTZ; cast to LTZ —
-        #   an identity relabel under the UTC session pin above, and what
-        #   time functions like unix_micros() require.
-        field = dict((f.name, f.dataType) for f in df.schema.fields).get("ts")
-        if isinstance(field, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(field, TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = normalize_event_ts(df)
+    return df
+
+
+def normalize_event_ts(df: DataFrame) -> DataFrame:
+    """Relabel an events frame's ``ts`` to a regular (UTC) TIMESTAMP,
+    whatever the generator wrote — the unix_micros / day-boundary
+    expressions downstream need one:
+    - parquet TIMESTAMP(NANOS) read under nanosAsLong arrives as
+      epoch-nanos LONG; truncate to µs with integer division (ns values
+      exceed 2^53, so double arithmetic would corrupt them);
+    - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false) infers as
+      TIMESTAMP_NTZ under Spark 4's inferTimestampNTZ; cast to LTZ — an
+      identity relabel under the UTC session pin, and what time
+      functions like unix_micros() require.
+    Any other ``ts`` (already a TIMESTAMP) passes through unchanged."""
+    field = {f.name: f.dataType for f in df.schema.fields}.get("ts")
+    if isinstance(field, LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if isinstance(field, TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

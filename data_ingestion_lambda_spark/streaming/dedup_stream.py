@@ -1,6 +1,6 @@
 """Streaming front end for the maintained dedup gate — the composition
 of the two halves of this repo's daily-loop story: Structured
-Streaming's file discovery/checkpointing (streaming/ingest.py) DRIVES
+Streaming's file discovery/checkpointing (streaming/driver.py) DRIVES
 the persisted-index gate (operators/dedup_gate.py), so "a new document
 drop landed" → "it was probed against everything already accepted and
 its signatures joined the index" is one unattended invocation.
@@ -32,12 +32,10 @@ SCALE.md), and the stream adds only file discovery on top.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
-from data_ingestion_lambda_spark.operators.dedup_gate import (
-    MODE_INPUT_COL,
-    apply_batch,
-)
+from data_ingestion_lambda_spark.operators.dedup_gate import apply_batch
+from data_ingestion_lambda_spark.streaming.index_streams import _drain
 
 _MODE_SCHEMA = {
     "minhash": "doc_id bigint, text string",
@@ -61,34 +59,13 @@ def run_dedup_gate_available_now(
     per-batch gate reports in processing order; a no-op run (nothing
     new) returns []. Re-running later picks up only files that landed
     since — the checkpoint, not a date convention, defines "new"."""
-    reader = spark.readStream.schema(_MODE_SCHEMA[mode]).option(
-        "recursiveFileLookup", True
+    return _drain(
+        spark,
+        source_dir,
+        checkpoint_dir,
+        _MODE_SCHEMA[mode],
+        lambda batch, key: apply_batch(
+            spark, index_dir, batch, key, matches_dir=matches_dir, mode=mode
+        ),
+        max_files_per_trigger,
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    docs = reader.parquet(source_dir).select("doc_id", MODE_INPUT_COL[mode])
-
-    reports: list[dict] = []
-
-    def _gate(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        reports.append(
-            apply_batch(
-                spark,
-                index_dir,
-                batch,
-                f"b{batch_id:09d}",
-                matches_dir=matches_dir,
-                mode=mode,
-            )
-        )
-
-    query = (
-        docs.writeStream.foreachBatch(_gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return reports

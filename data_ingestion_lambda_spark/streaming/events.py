@@ -4,9 +4,10 @@ The reference's only 'streaming' is scheduled file ingestion (covered by
 streaming/ingest.py). The north star needs real event-time semantics:
 watermarked window aggregation, streaming dedup, session windows, and a
 custom stateful operator. Each builder takes an unbounded DataFrame (from
-``readStream``) and returns the transformed unbounded DataFrame — callers
-attach sinks/triggers, so the same code serves availableNow micro-batch
-runs and continuous jobs.
+``readStream``) and returns the transformed unbounded DataFrame; the
+``*_to_table`` functions drain one into its table through the package's
+one availableNow driver (streaming/driver.py) and return when the run has
+processed every new file.
 
 The batch twins in plans/events_queries.py share these window/session
 semantics and are what the DuckDB oracle checks; here the same logic runs
@@ -51,6 +52,7 @@ from data_ingestion_lambda_spark.operators.layout import (
     partition_values,
     refuse_stranded_fold,
 )
+from data_ingestion_lambda_spark.streaming.driver import drain, paced_reader
 
 
 def stream_tumbling_counts(
@@ -257,7 +259,7 @@ def stream_rollup_to_table(
     checkpoint_dir: str,
     window_size: str = "1 hour",
     watermark: str = "2 hours",
-):
+) -> list[int]:
     """Continuous aggregate: the watermarked tumbling rollup MERGEd into a
     queryable date-partitioned parquet table as windows update — the
     hypertable/materialized-rollup pattern (readers always see the current
@@ -271,13 +273,13 @@ def stream_rollup_to_table(
 
     Scale: state is bounded by the watermark (stream side) and the merge
     rewrites only the date partitions present in the batch (sink side) —
-    both independent of total stream length. Returns the DataStreamWriter
-    (caller starts it)."""
+    both independent of total stream length. Runs one availableNow
+    drain; returns the ids of the micro-batches merged, in order."""
     from data_ingestion_lambda_spark.operators.upsert import upsert_into_parquet
 
     agg = stream_tumbling_counts(events, window_size, watermark)
 
-    def _merge(batch_df: DataFrame, _batch_id: int) -> None:
+    def _merge(batch_df: DataFrame, batch_id: int) -> int:
         b = batch_df.withColumn("date", F.to_date("window_start")).withColumn(
             "updated_at", F.col("window_end")
         )
@@ -288,13 +290,9 @@ def stream_rollup_to_table(
             keys=["window_start", "event_type"],
             order_cols=["n_events"],
         )
+        return batch_id
 
-    return (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return drain(agg, checkpoint_dir, _merge, output_mode="update")
 
 
 # -- custom stateful operator: incremental funnel progression -----------------
@@ -467,7 +465,7 @@ def stream_gap_histogram_to_table(
     target_dir: str,
     checkpoint_dir: str,
     watermark: str = "2 hours",
-):
+) -> list[int]:
     """The full streaming-percentile story, composed end to end: per-user
     gap extraction (stream_interarrival_gaps, one long of state per
     user) rolled up per micro-batch into second-resolution bucket counts
@@ -483,12 +481,13 @@ def stream_gap_histogram_to_table(
     (events_interarrival_hist) builds from a lag window — pinned equal
     by test. At scale the ledger compacts like any date-partitioned
     table (operators/compact.py); counts are associative, so compaction
-    is a plain re-aggregation. Returns the DataStreamWriter."""
+    is a plain re-aggregation. Runs one availableNow drain; returns the
+    ids of the micro-batches landed, in order."""
     from data_ingestion_lambda_spark.plans.events_queries import _HIST_BUCKET_US
 
     gaps = stream_interarrival_gaps(events, watermark)
 
-    def _land(batch_df: DataFrame, batch_id: int) -> None:
+    def _land(batch_df: DataFrame, batch_id: int) -> int:
         (
             batch_df.groupBy(
                 F.expr(f"gap_us div {_HIST_BUCKET_US}").alias("gap_s")
@@ -497,13 +496,9 @@ def stream_gap_histogram_to_table(
             .write.mode("overwrite")
             .parquet(f"{target_dir}/ingest_batch={batch_id}")
         )
+        return batch_id
 
-    return (
-        gaps.writeStream.outputMode("append")
-        .foreachBatch(_land)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return drain(gaps, checkpoint_dir, _land)
 
 
 def read_gap_histogram(spark, target_dir: str) -> DataFrame:
@@ -825,7 +820,7 @@ def stream_markov_transitions(events: DataFrame, watermark: str = "2 hours") -> 
 
 def stream_value_histogram_to_table(
     events: DataFrame, target_dir: str, checkpoint_dir: str
-):
+) -> list[int]:
     """Stream events into the drift monitor's input: each micro-batch's
     (event_type, day, bucket) value-histogram DELTA lands in its own
     ``ingest_batch=<id>`` partition — the additive-ledger idiom shared
@@ -835,12 +830,12 @@ def stream_value_histogram_to_table(
     sums partial days read-side). At-least-once foreachBatch replays
     overwrite their own partition — idempotent by construction. Counts
     are associative, so the ledger compacts like the gap ledger.
-    Stateless: histogram deltas need no watermark or state store.
-    Returns the DataStreamWriter."""
-
+    Stateless: histogram deltas need no watermark or state store. Runs
+    one availableNow drain; returns the ids of the micro-batches landed,
+    in order."""
     from data_ingestion_lambda_spark.plans.events_queries import value_bucket
 
-    def _land(batch_df: DataFrame, batch_id: int) -> None:
+    def _land(batch_df: DataFrame, batch_id: int) -> int:
         (
             batch_df.select("event_type", F.to_date("ts").alias("day"), value_bucket())
             .groupBy("event_type", "day", "bucket")
@@ -848,13 +843,9 @@ def stream_value_histogram_to_table(
             .write.mode("overwrite")
             .parquet(f"{target_dir}/ingest_batch={batch_id}")
         )
+        return batch_id
 
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(_land)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return drain(events, checkpoint_dir, _land)
 
 
 def read_value_histogram(spark, target_dir: str) -> DataFrame:
@@ -906,22 +897,9 @@ def drift_from_value_ledger(spark, target_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _land_moment_delta(batch_df: DataFrame, batch_id: int, target_dir: str) -> None:
-    """Land one micro-batch's per-user moment DELTA in its own
-    ``ingest_batch=<id>`` partition (shared by the raw writer and the
-    CLI's availableNow runner)."""
-    from data_ingestion_lambda_spark.operators.feature_store import user_moments
-
-    (
-        user_moments(batch_df)
-        .write.mode("overwrite")
-        .parquet(f"{target_dir}/ingest_batch={batch_id}")
-    )
-
-
 def stream_user_moments_to_table(
     events: DataFrame, target_dir: str, checkpoint_dir: str
-):
+) -> list[int]:
     """Stream events into the feature store's input: each micro-batch's
     per-user moment DELTA (operators/feature_store.py::user_moments —
     the same expression the daily form and the registered one-shot lane
@@ -933,13 +911,22 @@ def stream_user_moments_to_table(
     gets per trigger). At-least-once foreachBatch replays overwrite
     their own partition — idempotent by construction. Stateless: moment
     deltas need no watermark or state store; the state lives in the
-    ledger, not the engine. Returns the DataStreamWriter."""
-    return (
-        events.writeStream.outputMode("append")
-        .foreachBatch(lambda b, i: _land_moment_delta(b, i, target_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    ledger, not the engine. Runs one availableNow drain; returns the ids
+    of the micro-batches landed, in order (an empty micro-batch lands
+    nothing)."""
+    from data_ingestion_lambda_spark.operators.feature_store import user_moments
+
+    def _land(batch_df: DataFrame, batch_id: int) -> int | None:
+        if batch_df.isEmpty():
+            return None
+        (
+            user_moments(batch_df)
+            .write.mode("overwrite")
+            .parquet(f"{target_dir}/ingest_batch={batch_id}")
+        )
+        return batch_id
+
+    return drain(events, checkpoint_dir, _land)
 
 
 def read_moment_ledger(
@@ -1046,34 +1033,18 @@ def run_feature_store_available_now(
     for ANY file grouping (moment additivity — pinned in
     tests/test_feature_store.py), and a replayed batch overwrites only
     its own partition."""
-    reader = spark.readStream.schema(_FEATURE_EVENTS_SCHEMA).option(
-        "recursiveFileLookup", True
+    events = (
+        paced_reader(spark, max_files_per_trigger)
+        .schema(_FEATURE_EVENTS_SCHEMA)
+        .option("recursiveFileLookup", True)
+        .parquet(source_dir)
     )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    events = reader.parquet(source_dir)
-    landed = {"n": 0}
-
-    def _land(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        _land_moment_delta(batch_df, batch_id, ledger_dir)
-        landed["n"] += 1
-
-    q = (
-        events.writeStream.outputMode("append")
-        .foreachBatch(_land)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return landed["n"]
+    return len(stream_user_moments_to_table(events, ledger_dir, checkpoint_dir))
 
 
 def stream_heavy_hitters_to_table(
     items: DataFrame, target_dir: str, checkpoint_dir: str
-):
+) -> list[int]:
     """Streaming front for the maintained heavy-hitter store: each
     micro-batch's Misra-Gries summary (+ its ``__n__`` total row) lands
     in its own ``ingest_batch=<id>`` partition — the additive-ledger
@@ -1082,13 +1053,15 @@ def stream_heavy_hitters_to_table(
     the whole stream, so the read-side guarantee is trigger-split-free
     (pinned in tests/test_hh_store.py). At-least-once replays overwrite
     their own partition. Stateless — the sketch state lives in the
-    ledger, not the engine. Returns the DataStreamWriter."""
+    ledger, not the engine. Runs one availableNow drain; returns the ids
+    of the micro-batches landed, in order (an empty micro-batch lands
+    nothing)."""
     from data_ingestion_lambda_spark.operators.hh_store import N_ROW
     from data_ingestion_lambda_spark.plans.profiling import mg_sketch
 
-    def _land(batch_df: DataFrame, batch_id: int) -> None:
+    def _land(batch_df: DataFrame, batch_id: int) -> int | None:
         if batch_df.isEmpty():
-            return
+            return None
         # Same reserved-name refusal as apply_hh_batch: a real item named
         # __n__ would silently inflate n_total and the undercount bound
         # read_heavy_hitters reports. Raising inside foreachBatch fails
@@ -1107,13 +1080,9 @@ def stream_heavy_hitters_to_table(
             .write.mode("overwrite")
             .parquet(f"{target_dir}/ingest_batch={batch_id}")
         )
+        return batch_id
 
-    return (
-        items.writeStream.outputMode("append")
-        .foreachBatch(_land)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-    )
+    return drain(items, checkpoint_dir, _land)
 
 
 # --- streaming last-touch attribution ----------------------------------------

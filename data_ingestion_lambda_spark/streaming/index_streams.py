@@ -13,7 +13,8 @@ progress (src/lambda_handler.py:38-102, src/s3_processor.py:113-158);
 these lanes are that loop with each index's apply as the body and the
 stream's checkpoint as the progress record.
 
-Exactly-once shape (shared by all four): foreachBatch is at-least-once,
+Exactly-once shape (shared by every front here and by the dedup-gate and
+corpus-build fronts, which reuse ``_drain``): foreachBatch is at-least-once,
 and every apply here is idempotent PER PARTITION KEY — so the
 micro-batch id becomes the key (``b<batch_id>``): a replayed batch
 overwrites only its own partition, making the replay a bitwise no-op
@@ -58,7 +59,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_ingestion_lambda_spark.operators.base_fold import (
+    auto_compact_epilogue,
+    check_not_below_horizon,
+)
 from data_ingestion_lambda_spark.operators.layout import hadoop_fs
+from data_ingestion_lambda_spark.sources.catalog import normalize_event_ts
+from data_ingestion_lambda_spark.streaming.driver import drain, paced_reader
 
 DOCS_SCHEMA = "doc_id bigint, text string"
 VECS_SCHEMA = "vec_id bigint, embedding array<float>"
@@ -72,70 +79,46 @@ def _drain(
     schema: str,
     body,
     max_files_per_trigger: int | None,
+    auto_compact_max_dirs: int | None = None,
+    ledger_dir: str | None = None,
+    compact_fn=None,
+    **epilogue,
 ) -> list[dict]:
-    """Shared availableNow loop: drain every file not yet in the offset
-    log, run ``body(batch_df, key)`` per micro-batch, stop. Returns the
-    per-batch reports in processing order; a no-op run returns []."""
-    reader = spark.readStream.schema(schema).option("recursiveFileLookup", True)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(source_dir)
+    """Drain every parquet file not yet in the offset log through
+    ``body(batch_df, key)`` (streaming/driver.py), skipping empty
+    micro-batches; ``key`` is ``b<batch_id>``. Returns the per-batch
+    reports in processing order (a no-op run returns []), then
+    ``{"auto_compact": policy}`` when ``auto_compact_max_dirs`` opts in
+    to ``operators/base_fold.py::auto_compact_epilogue`` over
+    ``ledger_dir`` (``epilogue`` carries its count_dir/part_key/base_key).
+    The fold key is capped at the checkpoint's committed front, so the
+    land-side ``check_not_below_horizon`` refusals never wedge the
+    stream."""
+    stream = (
+        paced_reader(spark, max_files_per_trigger)
+        .schema(schema)
+        .option("recursiveFileLookup", True)
+        .parquet(source_dir)
+    )
 
-    reports: list[dict] = []
-
-    def _apply(batch: DataFrame, batch_id: int) -> None:
+    def _apply(batch: DataFrame, batch_id: int) -> dict | None:
         if batch.isEmpty():
-            return
+            return None
         out = body(batch, f"b{batch_id:09d}")
-        reports.append(out if isinstance(out, dict) else {"batch": batch_id})
+        return out if isinstance(out, dict) else {"batch": batch_id}
 
-    q = (
-        stream.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return reports
-
-
-def _auto_compact_after_drain(
-    spark: SparkSession,
-    index_dir: str,
-    checkpoint_dir: str,
-    max_dirs: int | None,
-    compact_fn,
-    *,
-    count_dir: str | None = None,
-    part_key: str | None = None,
-    base_key: str | None = None,
-) -> dict | None:
-    """The dir-count auto-compaction policy, run as the streaming
-    front's epilogue (VERDICT r11 #2) — a thin shim over the ONE shared
-    implementation, ``operators/base_fold.py::auto_compact_epilogue``
-    (VERDICT r12 #4). After a drained availableNow run every processed
-    batch is COMMITTED, and the fold key is still capped at the
-    checkpoint's committed front so a key a future replay needs can
-    never be spent — the land-side ``check_not_below_horizon`` refusals
-    therefore never wedge the stream. Returns the policy report wrapped
-    as ``{"auto_compact": {..., "compaction": <fold result>}}``
-    (appended to the runner's reports) or None when the caller didn't
-    opt in."""
-    from data_ingestion_lambda_spark.operators.base_fold import (
-        auto_compact_epilogue,
-    )
-
+    reports = drain(stream, checkpoint_dir, _apply)
     policy = auto_compact_epilogue(
         spark,
-        index_dir,
-        max_dirs=max_dirs,
+        ledger_dir,
+        max_dirs=auto_compact_max_dirs,
         compact_fn=compact_fn,
         checkpoint_dir=checkpoint_dir,
-        count_dir=count_dir,
-        part_key=part_key,
-        base_key=base_key,
+        **epilogue,
     )
-    return None if policy is None else {"auto_compact": policy}
+    if policy is not None:
+        reports.append({"auto_compact": policy})
+    return reports
 
 
 def run_vocab_update_available_now(
@@ -156,24 +139,17 @@ def run_vocab_update_available_now(
     mismatched directory fails its first trigger loudly)."""
     from data_ingestion_lambda_spark.operators.vocab import compact_vocab, update_vocab
 
-    reports = _drain(
+    return _drain(
         spark,
         source_dir,
         checkpoint_dir,
         DOCS_SCHEMA,
         lambda batch, key: update_vocab(spark, vocab_dir, batch, key, order=order),
         max_files_per_trigger,
-    )
-    ac = _auto_compact_after_drain(
-        spark,
-        vocab_dir,
-        checkpoint_dir,
         auto_compact_max_dirs,
+        vocab_dir,
         lambda kf: compact_vocab(spark, vocab_dir, kf),
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports
 
 
 def run_postings_update_available_now(
@@ -194,25 +170,18 @@ def run_postings_update_available_now(
         update_postings,
     )
 
-    reports = _drain(
+    return _drain(
         spark,
         source_dir,
         checkpoint_dir,
         DOCS_SCHEMA,
         lambda batch, key: update_postings(spark, index_dir, batch, key),
         max_files_per_trigger,
-    )
-    ac = _auto_compact_after_drain(
-        spark,
-        index_dir,
-        checkpoint_dir,
         auto_compact_max_dirs,
+        index_dir,
         lambda kf: compact_postings_index(spark, index_dir, kf),
         count_dir=f"{index_dir}/doclen",
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports
 
 
 def run_ann_append_available_now(
@@ -230,7 +199,10 @@ def run_ann_append_available_now(
     ``train_index`` must have run first; refuses loudly otherwise (a
     quantizer trained mid-stream would assign different batches with
     different models, breaking the one-shot equivalence)."""
-    from data_ingestion_lambda_spark.operators.ann_index import append_batch
+    from data_ingestion_lambda_spark.operators.ann_index import (
+        append_batch,
+        compact_index_cells,
+    )
 
     fs, path_cls = hadoop_fs(spark, index_dir)
     if not fs.exists(path_cls(f"{index_dir}/centroids")):
@@ -240,27 +212,18 @@ def run_ann_append_available_now(
             "streamed append (a mid-stream retrain would assign batches "
             "against different models)"
         )
-    reports = _drain(
+    return _drain(
         spark,
         source_dir,
         checkpoint_dir,
         VECS_SCHEMA,
         lambda batch, key: append_batch(spark, index_dir, batch, key),
         max_files_per_trigger,
-    )
-    from data_ingestion_lambda_spark.operators.ann_index import compact_index_cells
-
-    ac = _auto_compact_after_drain(
-        spark,
-        index_dir,
-        checkpoint_dir,
         auto_compact_max_dirs,
+        index_dir,
         lambda kf: compact_index_cells(spark, index_dir, kf),
         count_dir=f"{index_dir}/cells",
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports
 
 
 def run_session_update_available_now(
@@ -286,41 +249,26 @@ def run_session_update_available_now(
     ``schema="event_id bigint, user_id bigint, ts bigint"`` for such
     drops and the body applies the same epoch-ns normalization as the
     CLI's --batch path (TIMESTAMP_NTZ likewise relabels to UTC)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
-
     from data_ingestion_lambda_spark.operators.session_store import (
+        compact_session_store,
         land_session_batch,
     )
 
     def _body(batch: DataFrame, key: str) -> dict:
-        field = {f.name: f.dataType for f in batch.schema.fields}.get("ts")
-        if isinstance(field, LongType):
-            batch = batch.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        elif isinstance(field, TimestampNTZType):
-            batch = batch.withColumn("ts", F.col("ts").cast("timestamp"))
-        land_session_batch(spark, index_dir, batch, key)
+        land_session_batch(spark, index_dir, normalize_event_ts(batch), key)
         return {"key": key}
 
-    from data_ingestion_lambda_spark.operators.session_store import (
-        compact_session_store,
-    )
-
-    reports = _drain(
-        spark, source_dir, checkpoint_dir, schema, _body, max_files_per_trigger
-    )
-    ac = _auto_compact_after_drain(
+    return _drain(
         spark,
-        index_dir,
+        source_dir,
         checkpoint_dir,
+        schema,
+        _body,
+        max_files_per_trigger,
         auto_compact_max_dirs,
+        index_dir,
         lambda kf: compact_session_store(spark, index_dir, kf),
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports
 
 
 ITEMS_SCHEMA = "item string"
@@ -341,10 +289,10 @@ def run_cms_update_available_now(
     read (operators/cms_store.py::read_cms) equals the one-shot sketch
     over everything ingested, any trigger split. Replays overwrite only
     their own partition."""
-    from data_ingestion_lambda_spark.operators.base_fold import (
-        check_not_below_horizon,
+    from data_ingestion_lambda_spark.operators.cms_store import (
+        check_keying_marker,
+        compact_cms_store,
     )
-    from data_ingestion_lambda_spark.operators.cms_store import check_keying_marker
     from data_ingestion_lambda_spark.plans.profiling import cms_counters
 
     # one directory, one keying: refuse an index the CLI keys by date=
@@ -361,21 +309,17 @@ def run_cms_update_available_now(
         )
         return {"key": key}
 
-    from data_ingestion_lambda_spark.operators.cms_store import compact_cms_store
-
-    reports = _drain(
-        spark, source_dir, checkpoint_dir, ITEMS_SCHEMA, _body, max_files_per_trigger
-    )
-    ac = _auto_compact_after_drain(
+    return _drain(
         spark,
-        index_dir,
+        source_dir,
         checkpoint_dir,
+        ITEMS_SCHEMA,
+        _body,
+        max_files_per_trigger,
         auto_compact_max_dirs,
+        index_dir,
         lambda kf: compact_cms_store(spark, index_dir, kf),
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports
 
 
 ATTR_EVENTS_SCHEMA = (
@@ -408,44 +352,28 @@ def run_attribution_update_available_now(
     drops carry parquet TIMESTAMP(NANOS) (a LONG under the session's
     nanosAsLong conf) or TIMESTAMP_NTZ — pass the matching schema and
     the body converts."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, TimestampNTZType
-
-    from data_ingestion_lambda_spark.operators.attribution_store import (
-        land_attribution_batch,
-    )
-
-    def _body(batch: DataFrame, key: str) -> dict:
-        field = {f.name: f.dataType for f in batch.schema.fields}.get("ts")
-        if isinstance(field, LongType):
-            batch = batch.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        elif isinstance(field, TimestampNTZType):
-            batch = batch.withColumn("ts", F.col("ts").cast("timestamp"))
-        return land_attribution_batch(spark, index_dir, batch, key)
-
     from data_ingestion_lambda_spark.operators.attribution_store import (
         LEDGER_BASE_KEY,
         compact_attribution_ledger,
+        land_attribution_batch,
     )
 
-    reports = _drain(
-        spark, source_dir, checkpoint_dir, schema, _body, max_files_per_trigger
-    )
-    ac = _auto_compact_after_drain(
+    return _drain(
         spark,
-        index_dir,
+        source_dir,
         checkpoint_dir,
+        schema,
+        lambda batch, key: land_attribution_batch(
+            spark, index_dir, normalize_event_ts(batch), key
+        ),
+        max_files_per_trigger,
         auto_compact_max_dirs,
+        index_dir,
         lambda kf: compact_attribution_ledger(spark, index_dir, kf),
         count_dir=f"{index_dir}/stream_purchases",
         part_key="ingest_batch",
         base_key=LEDGER_BASE_KEY,
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports
 
 
 DOCS_LANG_SCHEMA = "doc_id bigint, lang string, text string"
@@ -474,6 +402,7 @@ def run_bloom_update_available_now(
     from data_ingestion_lambda_spark.operators.bloom_store import (
         _check_sizing_marker,
         _fps,
+        compact_bloom_store,
     )
     from data_ingestion_lambda_spark.operators.cms_store import check_keying_marker
     from data_ingestion_lambda_spark.plans.llm_ops import (
@@ -490,10 +419,6 @@ def run_bloom_update_available_now(
     _check_sizing_marker(spark, index_dir, m, k)
 
     def _body(batch: DataFrame, key: str) -> dict:
-        from data_ingestion_lambda_spark.operators.base_fold import (
-            check_not_below_horizon,
-        )
-
         check_not_below_horizon(spark, index_dir, key, "bloom stream land")
         (
             bloom_words(_fps(batch), m, k)
@@ -502,21 +427,17 @@ def run_bloom_update_available_now(
         )
         return {"key": key}
 
-    from data_ingestion_lambda_spark.operators.bloom_store import compact_bloom_store
-
-    reports = _drain(
-        spark, source_dir, checkpoint_dir, DOCS_SCHEMA, _body, max_files_per_trigger
-    )
-    ac = _auto_compact_after_drain(
+    return _drain(
         spark,
-        index_dir,
+        source_dir,
         checkpoint_dir,
+        DOCS_SCHEMA,
+        _body,
+        max_files_per_trigger,
         auto_compact_max_dirs,
+        index_dir,
         lambda kf: compact_bloom_store(spark, index_dir, kf),
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports
 
 
 def run_dsir_update_available_now(
@@ -538,17 +459,16 @@ def run_dsir_update_available_now(
     from pyspark.sql import functions as F
 
     from data_ingestion_lambda_spark.operators.cms_store import check_keying_marker
-    from data_ingestion_lambda_spark.operators.dsir_store import _check_target_marker
+    from data_ingestion_lambda_spark.operators.dsir_store import (
+        _check_target_marker,
+        compact_dsir_store,
+    )
     from data_ingestion_lambda_spark.plans.llm_ops import dsir_features, dsir_stats
 
     check_keying_marker(spark, index_dir, "ingest_batch")
     _check_target_marker(spark, index_dir, target_lang)
 
     def _body(batch: DataFrame, key: str) -> dict:
-        from data_ingestion_lambda_spark.operators.base_fold import (
-            check_not_below_horizon,
-        )
-
         check_not_below_horizon(spark, index_dir, key, "dsir stream land")
         stats = dsir_stats(
             dsir_features(
@@ -560,26 +480,17 @@ def run_dsir_update_available_now(
         stats.write.mode("overwrite").parquet(f"{index_dir}/ingest_batch={key}")
         return {"key": key}
 
-    from data_ingestion_lambda_spark.operators.dsir_store import compact_dsir_store
-
-    reports = _drain(
+    return _drain(
         spark,
         source_dir,
         checkpoint_dir,
         DOCS_LANG_SCHEMA,
         _body,
         max_files_per_trigger,
-    )
-    ac = _auto_compact_after_drain(
-        spark,
-        index_dir,
-        checkpoint_dir,
         auto_compact_max_dirs,
+        index_dir,
         lambda kf: compact_dsir_store(spark, index_dir, kf),
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports
 
 
 TOUCH_EVENTS_SCHEMA = "event_id bigint, user_id bigint, event_type string"
@@ -600,15 +511,14 @@ def run_touch_update_available_now(
     trigger split, even with re-delivered events. The strongest ledger
     semantics of any maintained store here."""
     from data_ingestion_lambda_spark.operators.cms_store import check_keying_marker
-    from data_ingestion_lambda_spark.operators.touch_store import _user_state
+    from data_ingestion_lambda_spark.operators.touch_store import (
+        _user_state,
+        compact_touch_store,
+    )
 
     check_keying_marker(spark, index_dir, "ingest_batch")
 
     def _body(batch: DataFrame, key: str) -> dict:
-        from data_ingestion_lambda_spark.operators.base_fold import (
-            check_not_below_horizon,
-        )
-
         check_not_below_horizon(spark, index_dir, key, "touch stream land")
         (
             _user_state(batch)
@@ -617,23 +527,14 @@ def run_touch_update_available_now(
         )
         return {"key": key}
 
-    from data_ingestion_lambda_spark.operators.touch_store import compact_touch_store
-
-    reports = _drain(
+    return _drain(
         spark,
         source_dir,
         checkpoint_dir,
         TOUCH_EVENTS_SCHEMA,
         _body,
         max_files_per_trigger,
-    )
-    ac = _auto_compact_after_drain(
-        spark,
-        index_dir,
-        checkpoint_dir,
         auto_compact_max_dirs,
+        index_dir,
         lambda kf: compact_touch_store(spark, index_dir, kf),
     )
-    if ac is not None:
-        reports.append(ac)
-    return reports

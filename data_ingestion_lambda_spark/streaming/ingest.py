@@ -12,8 +12,9 @@ What each reference mechanism becomes:
 - per-file loop + per-file commit (src/db_operations.py:8-54)
     → micro-batches with idempotent MERGE ⇒ end-to-end exactly-once
 - scheduled Lambda invocation (src/lambda_handler.py:38)
-    → ``trigger(availableNow=True)``: one invocation drains everything
-      new then stops — same operational shape, real checkpointing
+    → the availableNow run of ``streaming/driver.py::drain``: one
+      invocation drains everything new then stops — same operational
+      shape, real checkpointing
 - JSON audit twin (src/s3_processor.py:147-154)
     → an append-only parquet ingestion log written per batch
 
@@ -30,6 +31,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 from dataclasses import dataclass
+from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +43,7 @@ from data_ingestion_lambda_spark.operators.upsert import (
     upsert_into_parquet_with_cdc,
 )
 from data_ingestion_lambda_spark.sources.csv_source import consumption_csv
+from data_ingestion_lambda_spark.streaming.driver import drain, paced_reader
 
 QUARANTINE_PART_COL = "_batch_id"
 
@@ -53,8 +56,9 @@ QUARANTINE_PART_COL = "_batch_id"
 # (monotonic within a split) breaks ties inside one split.
 ORDER_COLS = ["_source_file", "_block_start", "_ingest_seq"]
 
-# Merges one micro-batch's good rows; True when there were any.
-Sink = Callable[[DataFrame, int], bool]
+# Merges one micro-batch's good rows; returns what it merged (falsy when
+# there were no rows).
+Sink = Callable[[DataFrame, int], Any]
 
 
 def _write_quarantine(
@@ -99,9 +103,10 @@ def _process_batch(
     sink: Sink,
     quarantine_dir: str | None,
     log_dir: str | None,
-) -> None:
+) -> Any:
     """The micro-batch body of every sink: order the rows, normalize them,
-    merge the good ones through ``sink``, keep the bad ones, log."""
+    merge the good ones through ``sink``, keep the bad ones, log. Returns
+    what the sink merged, or None when it merged nothing."""
     batch = batch.withColumn("_ingest_seq", F.monotonically_increasing_id())
     good, quarantined = normalize_consumption(batch)
     # Audit counts ride the upsert's own jobs via the Observation API —
@@ -138,34 +143,7 @@ def _process_batch(
             F.current_timestamp().alias("logged_at"),
         )
         log.write.mode("append").parquet(log_dir)
-
-
-def _drain(
-    spark: SparkSession,
-    source_dir: str,
-    checkpoint_dir: str,
-    sink: Sink,
-    quarantine_dir: str | None,
-    log_dir: str | None,
-    max_files_per_trigger: int | None,
-    path_glob: str,
-) -> None:
-    """One availableNow run of the file source through ``_process_batch``."""
-    reader = spark.readStream
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    query = (
-        consumption_csv(reader, source_dir, path_glob)
-        .writeStream.foreachBatch(
-            lambda batch, batch_id: _process_batch(
-                spark, batch, batch_id, sink, quarantine_dir, log_dir
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    return merged or None
 
 
 def run_ingest_to_jdbc_available_now(
@@ -207,10 +185,7 @@ def run_ingest_to_jdbc_available_now(
     )
     from data_ingestion_lambda_spark.schemas import UPSERT_KEYS
 
-    n_batches = 0
-
     def merge(good: DataFrame, batch_id: int) -> bool:
-        nonlocal n_batches
         if good.isEmpty():
             return False
         value_cols = [
@@ -238,14 +213,16 @@ def run_ingest_to_jdbc_available_now(
             staging_column_types=staging_column_types,
             properties=properties,
         )
-        n_batches += 1
         return True
 
-    _drain(
-        spark, source_dir, checkpoint_dir, merge, quarantine_dir, None,
-        max_files_per_trigger, path_glob,
+    merged = drain(
+        consumption_csv(paced_reader(spark, max_files_per_trigger), source_dir, path_glob),
+        checkpoint_dir,
+        lambda batch, batch_id: _process_batch(
+            spark, batch, batch_id, merge, quarantine_dir, None
+        ),
     )
-    return n_batches
+    return len(merged)
 
 
 def run_ingest_available_now(
@@ -263,30 +240,29 @@ def run_ingest_available_now(
     OLD dates (late backfill) — because discovery is by file, not by a
     monotonic date checkpoint. This is the semantic fix for SURVEY §1.4.2/6.
     """
-    processed_dates: set = set()
 
-    def merge(good: DataFrame, batch_id: int) -> bool:
+    def merge(good: DataFrame, batch_id: int) -> list:
         if paths.changes_dir is None:
-            written = upsert_into_parquet(
+            return upsert_into_parquet(
                 spark, paths.target_dir, good, order_cols=ORDER_COLS
             )
-        else:
-            written = upsert_into_parquet_with_cdc(
-                spark,
-                paths.target_dir,
-                good,
-                change_key=f"b{batch_id:09d}",
-                changes_dir=paths.changes_dir,
-                order_cols=ORDER_COLS,
-                # audit timestamps refresh on every winning re-send; the
-                # feed should capture PAYLOAD changes, not ingest-time churn
-                ignore_cols=("updated_at", "created_at"),
-            )["dates"]
-        processed_dates.update(written)
-        return bool(written)
+        return upsert_into_parquet_with_cdc(
+            spark,
+            paths.target_dir,
+            good,
+            change_key=f"b{batch_id:09d}",
+            changes_dir=paths.changes_dir,
+            order_cols=ORDER_COLS,
+            # audit timestamps refresh on every winning re-send; the
+            # feed should capture PAYLOAD changes, not ingest-time churn
+            ignore_cols=("updated_at", "created_at"),
+        )["dates"]
 
-    _drain(
-        spark, paths.source_dir, paths.checkpoint_dir, merge,
-        paths.quarantine_dir, paths.log_dir, max_files_per_trigger, path_glob,
+    written = drain(
+        consumption_csv(paced_reader(spark, max_files_per_trigger), paths.source_dir, path_glob),
+        paths.checkpoint_dir,
+        lambda batch, batch_id: _process_batch(
+            spark, batch, batch_id, merge, paths.quarantine_dir, paths.log_dir
+        ),
     )
-    return sorted(str(d) for d in processed_dates)
+    return sorted({str(d) for dates in written for d in dates})

@@ -1,10 +1,16 @@
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
 import pytest
 
 from data_ingestion_lambda_spark import get_spark
+
+# The session factory's default driver heap (48g) exceeds a small test
+# host's memory; pin the heap as the benchmark harness does. An explicit
+# SPARK_DRIVER_MEMORY in the environment still wins.
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "4g")
 
 
 @pytest.fixture(scope="session")

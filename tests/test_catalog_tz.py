@@ -36,3 +36,29 @@ def test_non_utc_session_gets_utc_boundaries_and_warns(spark):
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_normalize_event_ts_relabels_every_generator_encoding(spark):
+    """One rewrite serves the catalog, the CLI's --batch reads and the
+    session/attribution stream bodies: epoch-ns LONG (TIMESTAMP(NANOS)
+    under nanosAsLong) truncates to µs exactly — the value exceeds 2^53,
+    so a double round trip would move it — TIMESTAMP_NTZ relabels to a
+    UTC TIMESTAMP, and a TIMESTAMP passes through untouched."""
+    import datetime as dt
+
+    from pyspark.sql.types import TimestampType
+
+    from data_ingestion_lambda_spark.sources.catalog import normalize_event_ts
+
+    micros = 1_700_000_000_123_457
+    wall = dt.datetime(2023, 11, 14, 22, 13, 20, 123457)
+    nanos = spark.createDataFrame([(1, micros * 1000 + 999)], "event_id long, ts long")
+    ntz = spark.createDataFrame([(1, wall)], "event_id long, ts timestamp_ntz")
+    ltz = spark.createDataFrame([(1, wall)], "event_id long, ts timestamp")
+
+    assert normalize_event_ts(ltz) is ltz
+    for df in (nanos, ntz, ltz):
+        out = normalize_event_ts(df)
+        assert out.schema["ts"].dataType == TimestampType()
+        assert out.columns == ["event_id", "ts"]
+        assert out.select(F.unix_micros("ts")).first()[0] == micros

@@ -113,12 +113,9 @@ def test_stream_ledger_drift_equals_oneshot_with_midday_split(spark, tmp_path):
     spark.createDataFrame(rows[:cut], EVENTS_SCHEMA).write.mode("append").parquet(src)
 
     def run():
-        q = (
-            stream_value_histogram_to_table(
-                spark.readStream.schema(EVENTS_SCHEMA).parquet(src), ledger, ckpt
-            ).start()
+        stream_value_histogram_to_table(
+            spark.readStream.schema(EVENTS_SCHEMA).parquet(src), ledger, ckpt
         )
-        q.awaitTermination(120)
 
     run()
     spark.createDataFrame(rows[cut:], EVENTS_SCHEMA).write.mode("append").parquet(src)

@@ -194,10 +194,9 @@ def test_stream_ledger_features_equal_oneshot_with_midstream_split(spark, tmp_pa
     spark.createDataFrame(rows[:cut], EVENTS_SCHEMA).write.mode("append").parquet(src)
 
     def run():
-        q = stream_user_moments_to_table(
+        stream_user_moments_to_table(
             spark.readStream.schema(EVENTS_SCHEMA).parquet(src), ledger, ckpt
-        ).start()
-        q.awaitTermination(120)
+        )
 
     run()
     spark.createDataFrame(rows[cut:], EVENTS_SCHEMA).write.mode("append").parquet(src)

@@ -95,10 +95,9 @@ def test_stream_ledger_carries_guarantee_under_midstream_split(spark, tmp_path):
     spark.createDataFrame(rows[:cut], "item string").write.mode("append").parquet(src)
 
     def run():
-        q = stream_heavy_hitters_to_table(
+        stream_heavy_hitters_to_table(
             spark.readStream.schema("item string").parquet(src), idx, ckpt
-        ).start()
-        q.awaitTermination(120)
+        )
 
     run()
     spark.createDataFrame(rows[cut:], "item string").write.mode("append").parquet(src)
@@ -144,10 +143,9 @@ def test_stream_reserved_item_name_refused(spark, tmp_path):
     spark.createDataFrame(
         [("a",), ("__n__",), ("b",)], "item string"
     ).write.parquet(src)
-    q = stream_heavy_hitters_to_table(
-        spark.readStream.schema("item string").parquet(src),
-        str(tmp_path / "ledger"),
-        str(tmp_path / "ckpt"),
-    ).start()
     with pytest.raises(StreamingQueryException, match="reserved"):
-        q.awaitTermination(120)
+        stream_heavy_hitters_to_table(
+            spark.readStream.schema("item string").parquet(src),
+            str(tmp_path / "ledger"),
+            str(tmp_path / "ckpt"),
+        )

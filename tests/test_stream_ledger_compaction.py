@@ -77,8 +77,7 @@ def test_value_histogram_ledger_compaction(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        q = stream_value_histogram_to_table(stream, target, ckpt).start()
-        q.awaitTermination(120)
+        stream_value_histogram_to_table(stream, target, ckpt)
 
     _write(spark, src, "b1", [(1, _ts(1, 10), 1, "view", 4.2, "{}"),
                               (2, _ts(1, 11), 2, "click", 1.0, "{}")])
@@ -162,8 +161,7 @@ def test_hh_stream_ledger_compaction(spark, tmp_path):
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
         )
-        q = stream_heavy_hitters_to_table(stream, target, ckpt).start()
-        q.awaitTermination(120)
+        stream_heavy_hitters_to_table(stream, target, ckpt)
 
     run()
     assert len(_ledger_dirs(tmp_path, target)) == 2
@@ -202,8 +200,7 @@ def test_uncommitted_land_is_never_folded(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    q = stream_value_histogram_to_table(stream, target, ckpt).start()
-    q.awaitTermination(120)
+    stream_value_histogram_to_table(stream, target, ckpt)
     assert len(_ledger_dirs(tmp_path, target)) == 2
 
     # simulate the crash window: batch 9 landed, commit never written

@@ -254,8 +254,7 @@ def test_rollup_to_table_updates_in_place(spark, tmp_path):
         stream = spark.readStream.schema(EVENTS_SCHEMA).option(
             "recursiveFileLookup", "true"
         ).parquet(src)
-        q = stream_rollup_to_table(stream, out, ckpt, "1 hour", "1 hour").start()
-        q.awaitTermination(120)
+        stream_rollup_to_table(stream, out, ckpt, "1 hour", "1 hour")
 
     # run 1: two A-events in [10,11) and the 13:00 event that advances the
     # watermark; update mode emits both windows into the rollup table.
@@ -666,8 +665,7 @@ def test_gap_histogram_ledger_matches_batch_histogram(spark, tmp_path):
         stream = spark.readStream.schema(EVENTS_SCHEMA).option(
             "recursiveFileLookup", "true"
         ).parquet(src)
-        q = stream_gap_histogram_to_table(stream, target, ckpt).start()
-        q.awaitTermination(120)
+        stream_gap_histogram_to_table(stream, target, ckpt)
 
     run()
 
@@ -736,8 +734,7 @@ def test_gap_ledger_compaction_preserves_reads_and_idempotence(spark, tmp_path):
         stream = spark.readStream.schema(EVENTS_SCHEMA).option(
             "recursiveFileLookup", "true"
         ).parquet(src)
-        q = stream_gap_histogram_to_table(stream, target, ckpt).start()
-        q.awaitTermination(120)
+        stream_gap_histogram_to_table(stream, target, ckpt)
 
     run()
     before = sorted(
@@ -842,8 +839,7 @@ def test_ledger_quantiles_equal_registered_hist_operator(spark, tmp_path):
     stream = spark.readStream.schema(EVENTS_SCHEMA).option(
         "recursiveFileLookup", "true"
     ).parquet(src)
-    q = stream_gap_histogram_to_table(stream, target, ckpt).start()
-    q.awaitTermination(120)
+    stream_gap_histogram_to_table(stream, target, ckpt)
 
     want = [tuple(r) for r in events_interarrival_hist(spark, sf).collect()]
 
