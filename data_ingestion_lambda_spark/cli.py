@@ -1,11 +1,32 @@
 """Command-line entry point — the operational twin of the reference's
 ``main.py`` / ``lambda_handler.handler`` (one invocation = drain all new
-files, merge, report), plus a ``compact`` maintenance subcommand.
+files, merge, report).
 
 Reference shape (src/lambda_handler.py:38-102): a scheduled invocation
 runs the whole pipeline and returns ``{statusCode, message,
 processed_dates}``. Here the same contract prints one JSON line; progress
 tracking is the stream's checkpoint, so re-invoking is always safe.
+
+Subcommand families:
+- ``ingest``: the scheduled invocation above;
+- table maintenance: ``compact``, ``expire``, ``erase``, ``snapshot``;
+- the 14 maintained stores: ``dedup-gate``, ``vocab``, ``ann-index``,
+  ``search-index``, ``drift-monitor``, ``feature-store``, ``hh-store``,
+  ``cms-store``, ``bloom-store``, ``dsir-store``, ``touch-store``,
+  ``markov-store``, ``session-store``, ``attribution-store``;
+- ``corpus-build`` (gates and ledgers end to end) and ``query`` (one
+  registered lane).
+
+Every maintained store shares one flag set (``_store_parser``):
+``--index DIR``, ``--batch PARQUET --date KEY`` for one apply,
+``--compact-keep-from KEY`` for a manual fold and
+``--auto-compact-max-dirs N``; all but drift-monitor, hh-store and
+markov-store add ``--stream-source DIR --checkpoint DIR
+[--max-files-per-trigger N]``. The exceptions: vocab names its
+directory ``--vocab``, dedup-gate's ``--index`` is optional (it can use
+``--bucketed-table``), feature-store folds with ``--compact-before`` and
+attribution-store with ``--compact-keep-from-key``. The shared
+refusals (``_check_store_args``) run before any Spark session starts.
 
 Usage:
   python -m data_ingestion_lambda_spark ingest \
@@ -14,6 +35,9 @@ Usage:
       [--max-files-per-trigger N]
   python -m data_ingestion_lambda_spark compact --target /data/consumptions \
       [--dates 2025-05-01,2025-05-02] [--target-file-mb 128]
+  python -m data_ingestion_lambda_spark STORE --index DIR \
+      [--batch PARQUET --date KEY] [--compact-keep-from KEY] \
+      [--auto-compact-max-dirs N] [STORE-SPECIFIC FLAGS]
 """
 
 from __future__ import annotations
@@ -74,12 +98,96 @@ def _add_stream_args(sub_parser, noun: str) -> None:
     )
 
 
+_FOLD_HELP = (
+    "fold ledger partitions with keys strictly below this one into the "
+    "base partition (crash-guarded shared base_fold; spends the folded "
+    "keys — reads are unchanged)"
+)
+
+
+def _store_parser(
+    sub,
+    name: str,
+    summary: str,
+    *,
+    index: str | None,
+    batch: str,
+    date: str = "batch date (the ledger partition key)",
+    keep_from: str | None = _FOLD_HELP,
+    stream: str | None = None,
+) -> argparse.ArgumentParser:
+    """A maintained-store subcommand with the flags every store shares.
+    Each keyword is that flag's help text; ``index`` and ``keep_from``
+    are None for a store that defines its directory or its manual fold
+    its own way, and ``stream`` (what the drained files hold) adds the
+    streaming flags of ``_add_stream_args``."""
+    sp = sub.add_parser(name, help=summary)
+    if index is not None:
+        sp.add_argument("--index", required=True, help=index)
+    sp.add_argument("--batch", default=None, help=batch)
+    sp.add_argument("--date", default=None, help=date)
+    if keep_from is not None:
+        sp.add_argument("--compact-keep-from", default=None, help=keep_from)
+    sp.add_argument(
+        "--auto-compact-max-dirs",
+        type=int,
+        default=None,
+        metavar="N",
+        help="dir-count-threshold auto-compaction: when live ledger "
+        "partitions exceed N, fold the oldest into the base so about "
+        "N/2 remain (same crash discipline and refusals as the manual "
+        "fold)",
+    )
+    if stream is not None:
+        _add_stream_args(sp, stream)
+    return sp
+
+
+def _check_store_args(
+    args,
+    actions: tuple[str, ...] = (),
+    *,
+    paired: bool = True,
+    exclusive: bool = True,
+) -> None:
+    """The shared refusals of the maintained-store subcommands, raised
+    before any Spark session starts: ``--batch`` and ``--date`` go
+    together (``paired``); ``--stream-source`` requires ``--checkpoint``;
+    ``--stream-source`` and ``--batch`` are exclusive (``exclusive``:
+    one keys the ledger by batch id, the other by date); and when
+    ``actions`` (argument dests) is given, at least one of them is set.
+    A store whose rule differs turns the shared one off and raises its
+    own."""
+    stream = getattr(args, "stream_source", None)
+    if paired and (args.batch is None) != (args.date is None):
+        refusal = "--batch and --date go together"
+    elif stream is not None and args.checkpoint is None:
+        refusal = "--stream-source requires --checkpoint"
+    elif exclusive and stream is not None and args.batch is not None:
+        refusal = "--stream-source and --batch are exclusive"
+    elif actions and all(
+        getattr(args, a) is None or getattr(args, a) is False for a in actions
+    ):
+        flags = ["--" + a.replace("_", "-") for a in actions]
+        refusal = f"need {', '.join(flags[:-1])} and/or {flags[-1]}"
+    else:
+        return
+    raise SystemExit(f"{args.cmd}: {refusal}")
+
+
+def _stream_checkpoint(args) -> str | None:
+    """The checkpoint of a streamed invocation, None otherwise."""
+    if getattr(args, "stream_source", None) is None:
+        return None
+    return args.checkpoint
+
+
 def _auto_compact_step(
     spark,
     args,
     report: dict,
     ledger_dir: str,
-    compact_fn,
+    compact,
     *,
     count_dir: str | None = None,
     part_key: str | None = None,
@@ -88,7 +196,9 @@ def _auto_compact_step(
     """Shared ``--auto-compact-max-dirs`` step (the policy half of the
     compaction story: every store HAS a fold; this decides WHEN) —
     a thin arg-unpacking shim over the ONE implementation,
-    ``operators/base_fold.py::auto_compact_epilogue`` (VERDICT r12 #4).
+    ``operators/base_fold.py::auto_compact_epilogue``, which does
+    nothing when the flag is unset. ``compact`` is the store's
+    ``compact_*(spark, ledger_dir, keep_from)``.
     For a streamed invocation (--stream-source) the fold key is capped
     at the checkpoint's committed front, so a landed-but-uncommitted
     batch is never folded; the manual --compact-keep-from form leaves
@@ -99,18 +209,12 @@ def _auto_compact_step(
         auto_compact_epilogue,
     )
 
-    checkpoint = (
-        args.checkpoint
-        if getattr(args, "stream_source", None) is not None
-        and getattr(args, "checkpoint", None)
-        else None
-    )
     policy = auto_compact_epilogue(
         spark,
         ledger_dir,
         max_dirs=args.auto_compact_max_dirs,
-        compact_fn=compact_fn,
-        checkpoint_dir=checkpoint,
+        compact_fn=lambda keep_from: compact(spark, ledger_dir, keep_from),
+        checkpoint_dir=_stream_checkpoint(args),
         count_dir=count_dir,
         part_key=part_key,
         base_key=base_key,
@@ -264,34 +368,23 @@ def build_parser() -> argparse.ArgumentParser:
         help="comma-separated key columns for --diff",
     )
 
-    gate = sub.add_parser(
+    events = "parquet of the day's events"
+    day_pure = "batch date (the partition key; batch must be day-pure)"
+
+    gate = _store_parser(
+        sub,
         "dedup-gate",
-        help="probe a document batch against the persisted signature index "
+        "probe a document batch against the persisted signature index "
         "(minhash near-dup, exact digest, or embedding cosine), then append it",
-    )
-    gate.add_argument(
-        "--batch",
-        default=None,
-        help="parquet of (doc_id, text) documents — or (doc_id|vec_id, "
+        index=None,
+        batch="parquet of (doc_id, text) documents — or (doc_id|vec_id, "
         "embedding) vectors for --mode embedding",
-    )
-    gate.add_argument(
-        "--stream-source",
-        default=None,
-        help="instead of --batch: drain every document file under this "
-        "directory that the --checkpoint offset log has not seen, gating "
-        "each micro-batch (batch-id-keyed partitions; replay-idempotent)",
-    )
-    gate.add_argument(
-        "--checkpoint",
-        default=None,
-        help="streaming offset log directory (required with --stream-source)",
-    )
-    gate.add_argument(
-        "--max-files-per-trigger",
-        type=int,
-        default=None,
-        help="bound each streamed micro-batch to this many files",
+        date="batch date (the index partition key); required with --batch "
+        "(streamed batches are keyed by micro-batch id instead)",
+        keep_from="fold index date partitions strictly before this key into "
+        "the base partition (crash-guarded; spends the folded dates' replay "
+        "keys — probe flags are unchanged)",
+        stream="document",
     )
     gate.add_argument(
         "--index",
@@ -319,12 +412,6 @@ def build_parser() -> argparse.ArgumentParser:
         "metastore per process (fixed at first session build)",
     )
     gate.add_argument(
-        "--date",
-        default=None,
-        help="batch date (the index partition key); required with --batch "
-        "(streamed batches are keyed by micro-batch id instead)",
-    )
-    gate.add_argument(
         "--matches-out",
         default=None,
         help="also persist the flag table here, partitioned by batch date",
@@ -342,37 +429,19 @@ def build_parser() -> argparse.ArgumentParser:
         "content digests, or embedding sign-LSH + cosine rescore; an "
         "index directory belongs to ONE mode",
     )
-    gate.add_argument(
-        "--compact-keep-from",
-        default=None,
-        help="fold index date partitions strictly before this key into the "
-        "base partition (crash-guarded; spends the folded dates' replay "
-        "keys — probe flags are unchanged)",
-    )
 
-    voc = sub.add_parser(
+    voc = _store_parser(
+        sub,
         "vocab",
-        help="maintained corpus unigram model: extend it with a document "
+        "maintained corpus unigram model: extend it with a document "
         "batch and/or score a batch's LM-quality against the persisted "
         "model (the production form of text_unigram_surprisal)",
-    )
-    voc.add_argument(
-        "--batch", default=None, help="parquet of (doc_id, text) documents"
+        index=None,
+        batch="parquet of (doc_id, text) documents",
+        date="batch date (the vocab partition key); required unless --score-only",
+        stream="document",
     )
     voc.add_argument("--vocab", required=True, help="vocab table directory")
-    _add_stream_args(voc, "document")
-    voc.add_argument(
-        "--date",
-        default=None,
-        help="batch date (the vocab partition key); required unless --score-only",
-    )
-    voc.add_argument(
-        "--compact-keep-from",
-        default=None,
-        help="fold ledger partitions with keys strictly below this one "
-        "into the base partition (crash-guarded shared base_fold; "
-        "spends the folded keys — reads are unchanged)",
-    )
     voc.add_argument(
         "--score-out",
         default=None,
@@ -392,13 +461,21 @@ def build_parser() -> argparse.ArgumentParser:
         "mismatched access refuses",
     )
 
-    ann = sub.add_parser(
+    ann = _store_parser(
+        sub,
         "ann-index",
-        help="maintained IVF-ANN index: train the frozen coarse quantizer, "
+        "maintained IVF-ANN index: train the frozen coarse quantizer, "
         "append daily vector batches to the cell-partitioned inverted "
         "file, and/or run top-k cosine queries against it",
+        index="index directory",
+        batch="parquet of (vec_id, embedding) vectors to append",
+        date="batch date (the index partition key)",
+        keep_from="fold cells/ date partitions strictly before this key into "
+        "the base partition, re-partitioned by cell (crash-guarded; spends "
+        "the folded dates' replay keys — probe results are unchanged and "
+        "cell pruning survives)",
+        stream="vector",
     )
-    ann.add_argument("--index", required=True, help="index directory")
     ann.add_argument(
         "--train",
         default=None,
@@ -419,14 +496,6 @@ def build_parser() -> argparse.ArgumentParser:
         "on THIS index's stored vectors into the given NEW directory, "
         "re-assign everything there (--date keys the landing), and "
         "print side-by-side recall@k for both indexes",
-    )
-    ann.add_argument(
-        "--batch",
-        default=None,
-        help="parquet of (vec_id, embedding) vectors to append",
-    )
-    ann.add_argument(
-        "--date", default=None, help="batch date (the index partition key)"
     )
     ann.add_argument(
         "--query",
@@ -452,28 +521,20 @@ def build_parser() -> argparse.ArgumentParser:
         help="positive cosine ceiling for --hard-negatives (default 0.90, "
         "the shipped recall curve's near-dup tier)",
     )
-    ann.add_argument(
-        "--compact-keep-from",
-        default=None,
-        help="fold cells/ date partitions strictly before this key into the "
-        "base partition, re-partitioned by cell (crash-guarded; spends the "
-        "folded dates' replay keys — probe results are unchanged and cell "
-        "pruning survives)",
-    )
-    _add_stream_args(ann, "vector")
 
-    sidx = sub.add_parser(
+    sidx = _store_parser(
+        sub,
         "search-index",
-        help="maintained BM25 postings index: append daily document "
+        "maintained BM25 postings index: append daily document "
         "batches to the bucket-partitioned inverted file and/or run "
         "top-k lexical queries against it",
-    )
-    sidx.add_argument("--index", required=True, help="index directory")
-    sidx.add_argument(
-        "--batch", default=None, help="parquet of (doc_id, text) documents to append"
-    )
-    sidx.add_argument(
-        "--date", default=None, help="batch date (the index partition key)"
+        index="index directory",
+        batch="parquet of (doc_id, text) documents to append",
+        date="batch date (the index partition key)",
+        keep_from="fold date partitions strictly before this ISO date into "
+        "the base partition (crash-guarded; spends the folded dates' replay "
+        "keys — scores are unchanged)",
+        stream="document",
     )
     sidx.add_argument(
         "--query",
@@ -484,33 +545,17 @@ def build_parser() -> argparse.ArgumentParser:
     sidx.add_argument(
         "--out", default=None, help="persist the top-k result here (overwrite)"
     )
-    sidx.add_argument(
-        "--compact-keep-from",
-        default=None,
-        help="fold date partitions strictly before this ISO date into the "
-        "base partition (crash-guarded; spends the folded dates' replay "
-        "keys — scores are unchanged)",
-    )
-    _add_stream_args(sidx, "document")
 
-    drf = sub.add_parser(
+    drf = _store_parser(
+        sub,
         "drift-monitor",
-        help="maintained value-distribution drift gate: land a day's "
+        "maintained value-distribution drift gate: land a day's "
         "histogram partition and/or report day-over-day L1 drift from "
         "the persisted index (the production form of "
         "events_distribution_drift)",
-    )
-    drf.add_argument("--index", required=True, help="histogram table directory")
-    drf.add_argument("--batch", default=None, help="parquet of the day's events")
-    drf.add_argument(
-        "--date", default=None, help="batch date (the histogram partition key)"
-    )
-    drf.add_argument(
-        "--compact-keep-from",
-        default=None,
-        help="fold ledger partitions with keys strictly below this one "
-        "into the base partition (crash-guarded shared base_fold; "
-        "spends the folded keys — reads are unchanged)",
+        index="histogram table directory",
+        batch=events,
+        date="batch date (the histogram partition key)",
     )
     drf.add_argument(
         "--report-out",
@@ -518,17 +563,18 @@ def build_parser() -> argparse.ArgumentParser:
         help="persist the drift table here (overwrite); printed to stdout otherwise",
     )
 
-    fst = sub.add_parser(
+    fst = _store_parser(
+        sub,
         "feature-store",
-        help="maintained per-user feature store: land a batch's additive "
+        "maintained per-user feature store: land a batch's additive "
         "moment deltas, derive the trainer-facing vectors read-side, "
         "and/or fold old partitions into the base (the production form "
         "of feature_user_vectors)",
-    )
-    fst.add_argument("--index", required=True, help="moment ledger directory")
-    fst.add_argument("--batch", default=None, help="parquet of the batch's events")
-    fst.add_argument(
-        "--date", default=None, help="batch date (the ledger partition key)"
+        index="moment ledger directory (belongs to ONE driver: date-keyed "
+        "daily batches or the stream's batch-id keys — never both)",
+        batch="parquet of the batch's events",
+        keep_from=None,
+        stream="events",
     )
     fst.add_argument(
         "--vectors-out",
@@ -559,47 +605,15 @@ def build_parser() -> argparse.ArgumentParser:
         "requires --as-of and a day-pure date-keyed store (weights come "
         "from the ledger's date keys)",
     )
-    fst.add_argument(
-        "--stream-source",
-        default=None,
-        help="instead of --batch/--date: drain every events file under "
-        "this directory that the --checkpoint offset log has not seen "
-        "into a batch-id-keyed moment ledger (an index dir belongs to "
-        "ONE driver: date-keyed daily batches or the stream — never both)",
-    )
-    fst.add_argument(
-        "--checkpoint",
-        default=None,
-        help="streaming offset log directory (required with --stream-source)",
-    )
-    fst.add_argument(
-        "--max-files-per-trigger",
-        type=int,
-        default=None,
-        help="bound each streamed micro-batch to this many files",
-    )
 
-    hhs = sub.add_parser(
+    hhs = _store_parser(
+        sub,
         "hh-store",
-        help="maintained heavy-hitter store: land a batch's Misra-Gries "
+        "maintained heavy-hitter store: land a batch's Misra-Gries "
         "summary and/or read the merged sketch with its guarantee bound "
         "(the production form of profile_heavy_hitters_mg)",
-    )
-    hhs.add_argument("--index", required=True, help="sketch ledger directory")
-    hhs.add_argument(
-        "--batch",
-        default=None,
-        help="parquet with an `item` string column (the batch's stream slice)",
-    )
-    hhs.add_argument(
-        "--date", default=None, help="batch date (the ledger partition key)"
-    )
-    hhs.add_argument(
-        "--compact-keep-from",
-        default=None,
-        help="fold ledger partitions with keys strictly below this one "
-        "into the base partition (crash-guarded shared base_fold; "
-        "spends the folded keys — reads are unchanged)",
+        index="sketch ledger directory",
+        batch="parquet with an `item` string column (the batch's stream slice)",
     )
     hhs.add_argument(
         "--report-out",
@@ -608,28 +622,16 @@ def build_parser() -> argparse.ArgumentParser:
         "printed to stdout otherwise",
     )
 
-    cms = sub.add_parser(
+    cms = _store_parser(
+        sub,
         "cms-store",
-        help="maintained Count-Min sketch store: land a batch's d x w "
+        "maintained Count-Min sketch store: land a batch's d x w "
         "grid and/or point-query item frequency estimates that never "
         "undercount (the production form of profile_heavy_hitters_cms; "
         "the no-undercount dual of hh-store)",
-    )
-    cms.add_argument("--index", required=True, help="grid ledger directory")
-    cms.add_argument(
-        "--batch",
-        default=None,
-        help="parquet with an `item` string column (the batch's stream slice)",
-    )
-    cms.add_argument(
-        "--date", default=None, help="batch date (the ledger partition key)"
-    )
-    cms.add_argument(
-        "--compact-keep-from",
-        default=None,
-        help="fold ledger partitions with keys strictly below this one "
-        "into the base partition (crash-guarded shared base_fold; "
-        "spends the folded keys — reads are unchanged)",
+        index="grid ledger directory",
+        batch="parquet with an `item` string column (the batch's stream slice)",
+        stream="item",
     )
     cms.add_argument(
         "--query",
@@ -643,30 +645,17 @@ def build_parser() -> argparse.ArgumentParser:
         help="persist the (item, est) estimates here (overwrite); top "
         "rows printed otherwise",
     )
-    _add_stream_args(cms, "item")
 
-    blm = sub.add_parser(
+    blm = _store_parser(
+        sub,
         "bloom-store",
-        help="maintained Bloom-filter store: land a member batch's "
+        "maintained Bloom-filter store: land a member batch's "
         "filter words (bit_or ledger — exact under any split) and/or "
         "screen probe docs with no false negatives (the production "
         "form of dedup_bloom_screen)",
-    )
-    blm.add_argument("--index", required=True, help="filter-word ledger directory")
-    blm.add_argument(
-        "--batch",
-        default=None,
-        help="parquet with a `text` column (the member batch to hash in)",
-    )
-    blm.add_argument(
-        "--date", default=None, help="batch date (the ledger partition key)"
-    )
-    blm.add_argument(
-        "--compact-keep-from",
-        default=None,
-        help="fold ledger partitions with keys strictly below this one "
-        "into the base partition (crash-guarded shared base_fold; "
-        "spends the folded keys — reads are unchanged)",
+        index="filter-word ledger directory",
+        batch="parquet with a `text` column (the member batch to hash in)",
+        stream="member-document",
     )
     blm.add_argument(
         "--screen",
@@ -693,30 +682,17 @@ def build_parser() -> argparse.ArgumentParser:
         help="persist the (doc_id, bloom_hit) verdicts here (overwrite); "
         "summary printed otherwise",
     )
-    _add_stream_args(blm, "member-document")
 
-    dsr = sub.add_parser(
+    dsr = _store_parser(
+        sub,
         "dsir-store",
-        help="maintained DSIR model store: land a document batch's "
+        "maintained DSIR model store: land a document batch's "
         "bucket counts (additive ledger) and/or score docs under the "
         "folded source/target models (the production form of "
         "text_dsir_weights)",
-    )
-    dsr.add_argument("--index", required=True, help="bucket-stats ledger directory")
-    dsr.add_argument(
-        "--batch",
-        default=None,
-        help="parquet with (doc_id, lang, text): the batch whose counts land",
-    )
-    dsr.add_argument(
-        "--date", default=None, help="batch date (the ledger partition key)"
-    )
-    dsr.add_argument(
-        "--compact-keep-from",
-        default=None,
-        help="fold ledger partitions with keys strictly below this one "
-        "into the base partition (crash-guarded shared base_fold; "
-        "spends the folded keys — reads are unchanged)",
+        index="bucket-stats ledger directory",
+        batch="parquet with (doc_id, lang, text): the batch whose counts land",
+        stream="document",
     )
     dsr.add_argument(
         "--score",
@@ -735,56 +711,34 @@ def build_parser() -> argparse.ArgumentParser:
         default="en",
         help="target-distribution language slice (default en)",
     )
-    _add_stream_args(dsr, "document")
 
-    tch = sub.add_parser(
+    tch = _store_parser(
+        sub,
         "touch-store",
-        help="maintained user touch-state store (OR-semigroup ledger): "
+        "maintained user touch-state store (OR-semigroup ledger): "
         "land per-user coalition masks and/or read Shapley data-driven "
         "attribution from state (the production form of "
         "events_attribution_shapley)",
-    )
-    tch.add_argument("--index", required=True, help="touch-state ledger directory")
-    tch.add_argument(
-        "--batch", default=None, help="parquet of events (any split is fine)"
-    )
-    tch.add_argument(
-        "--date", default=None, help="batch date (the ledger partition key)"
-    )
-    tch.add_argument(
-        "--compact-keep-from",
-        default=None,
-        help="fold ledger partitions with keys strictly below this one "
-        "into the base partition (crash-guarded shared base_fold; "
-        "spends the folded keys — reads are unchanged)",
+        index="touch-state ledger directory",
+        batch="parquet of events (any split is fine)",
+        stream="event",
     )
     tch.add_argument(
         "--shapley",
         action="store_true",
         help="print Shapley credit per channel from the folded state",
     )
-    _add_stream_args(tch, "event")
 
-    mkv = sub.add_parser(
+    mkv = _store_parser(
+        sub,
         "markov-store",
-        help="maintained Markov-attribution store (day-decomposed journey "
+        "maintained Markov-attribution store (day-decomposed journey "
         "summaries, seam-exact reconstruction): land a day-pure batch "
         "and/or read removal-effect attribution from state (the "
         "production form of events_attribution_markov)",
-    )
-    mkv.add_argument("--index", required=True, help="journey-summary ledger directory")
-    mkv.add_argument(
-        "--batch", default=None, help="parquet of ONE day's events (day-pure)"
-    )
-    mkv.add_argument(
-        "--date", default=None, help="batch date (must own all batch events)"
-    )
-    mkv.add_argument(
-        "--compact-keep-from",
-        default=None,
-        help="fold ledger partitions with keys strictly below this one "
-        "into the base partition (crash-guarded shared base_fold; "
-        "spends the folded keys — reads are unchanged)",
+        index="journey-summary ledger directory",
+        batch="parquet of ONE day's events (day-pure)",
+        date="batch date (must own all batch events)",
     )
     mkv.add_argument(
         "--credit",
@@ -792,24 +746,17 @@ def build_parser() -> argparse.ArgumentParser:
         help="print removal-effect credit per channel from the ledger",
     )
 
-    ses = sub.add_parser(
+    ses = _store_parser(
+        sub,
         "session-store",
-        help="maintained incremental sessionization: land a day-pure "
+        "maintained incremental sessionization: land a day-pure "
         "batch's partial sessions and/or read the seam-merged session "
         "table / per-user session stats (the production form of "
         "events_sessionize + feature_user_session_stats)",
-    )
-    ses.add_argument("--index", required=True, help="partial-session table directory")
-    ses.add_argument("--batch", default=None, help="parquet of the day's events")
-    ses.add_argument(
-        "--date", default=None, help="batch date (the partition key; batch must be day-pure)"
-    )
-    ses.add_argument(
-        "--compact-keep-from",
-        default=None,
-        help="fold ledger partitions with keys strictly below this one "
-        "into the base partition (crash-guarded shared base_fold; "
-        "spends the folded keys — reads are unchanged)",
+        index="partial-session table directory",
+        batch=events,
+        date=day_pure,
+        stream="event",
     )
     ses.add_argument(
         "--sessions-out",
@@ -821,18 +768,18 @@ def build_parser() -> argparse.ArgumentParser:
         default=None,
         help="persist the per-user session stats here (overwrite)",
     )
-    _add_stream_args(ses, "event")
 
-    att = sub.add_parser(
+    att = _store_parser(
+        sub,
         "attribution-store",
-        help="maintained last-touch attribution: land a day-pure batch's "
+        "maintained last-touch attribution: land a day-pure batch's "
         "purchases + per-user last clicks, and/or read the attribution "
         "table (the production form of events_attribution_last_touch)",
-    )
-    att.add_argument("--index", required=True, help="attribution ledger directory")
-    att.add_argument("--batch", default=None, help="parquet of the day's events")
-    att.add_argument(
-        "--date", default=None, help="batch date (the partition key; batch must be day-pure)"
+        index="attribution ledger directory",
+        batch=events,
+        date=day_pure,
+        keep_from=None,
+        stream="event",
     )
     att.add_argument(
         "--out",
@@ -860,7 +807,6 @@ def build_parser() -> argparse.ArgumentParser:
         default=None,
         help="retention anchor date (required with --expire-keep-days)",
     )
-    _add_stream_args(att, "event")
     att.add_argument(
         "--stream-out",
         default=None,
@@ -875,22 +821,6 @@ def build_parser() -> argparse.ArgumentParser:
         "keys strictly below this one into the base partition "
         "(crash-guarded; spends the folded keys — reads are unchanged)",
     )
-
-    # Shared auto-compaction policy flag (VERDICT r11 #2) for every
-    # maintained store: a dir-count threshold that, once crossed, folds
-    # the ledger down to ~half the threshold via the store's own
-    # compact_* entry point (see _auto_compact_step).
-    for store in (voc, sidx, drf, fst, hhs, cms, blm, dsr, tch, mkv, ses, att, ann, gate):
-        store.add_argument(
-            "--auto-compact-max-dirs",
-            type=int,
-            default=None,
-            metavar="N",
-            help="dir-count-threshold auto-compaction: when live ledger "
-            "partitions exceed N, fold the oldest into the base so about "
-            "N/2 remain (same crash discipline and refusals as the manual "
-            "--compact-keep-from form)",
-        )
 
     cbd = sub.add_parser(
         "corpus-build",
@@ -1149,17 +1079,12 @@ def main(argv: list[str] | None = None) -> int:
         from data_ingestion_lambda_spark.operators.dedup_gate import (
             MODE_INPUT_COL,
             apply_batch,
+            compact_gate_index,
             probe_batch,
         )
         from pyspark.sql import functions as F
 
-        spark = get_spark("data-ingestion-cli", metastore_dir=args.metastore_dir)
         if args.bucketed_table is not None:
-            from data_ingestion_lambda_spark.operators.dedup_gate import (
-                apply_batch_bucketed,
-                probe_batch_bucketed,
-            )
-
             if args.mode != "minhash":
                 raise SystemExit("dedup-gate: --bucketed-table is minhash-only")
             if args.stream_source is not None:
@@ -1169,6 +1094,28 @@ def main(argv: list[str] | None = None) -> int:
                 )
             if args.batch is None or args.date is None:
                 raise SystemExit("dedup-gate: --bucketed-table needs --batch and --date")
+        elif args.index is None:
+            raise SystemExit("dedup-gate: --index is required without --bucketed-table")
+        else:
+            # a streamed run ignores --batch/--date, and a run without a
+            # batch only compacts
+            _check_store_args(
+                args,
+                ("batch", "stream_source", "compact_keep_from", "auto_compact_max_dirs"),
+                paired=False,
+                exclusive=False,
+            )
+            if args.stream_source is None and args.batch is not None and args.date is None:
+                raise SystemExit(
+                    "dedup-gate: --batch requires --date without --stream-source"
+                )
+        spark = get_spark("data-ingestion-cli", metastore_dir=args.metastore_dir)
+        if args.bucketed_table is not None:
+            from data_ingestion_lambda_spark.operators.dedup_gate import (
+                apply_batch_bucketed,
+                probe_batch_bucketed,
+            )
+
             batch = spark.read.parquet(args.batch).select("doc_id", "text")
             if args.probe_only:
                 m = probe_batch_bucketed(
@@ -1191,14 +1138,8 @@ def main(argv: list[str] | None = None) -> int:
                 )
             print(json.dumps({"statusCode": 200, **report}))
             return 0
-        if args.index is None:
-            raise SystemExit("dedup-gate: --index is required without --bucketed-table")
 
         def _gate_compaction(report: dict) -> None:
-            from data_ingestion_lambda_spark.operators.dedup_gate import (
-                compact_gate_index,
-            )
-
             if args.compact_keep_from is not None:
                 try:
                     report["compaction"] = compact_gate_index(
@@ -1206,15 +1147,9 @@ def main(argv: list[str] | None = None) -> int:
                     )
                 except (ValueError, RuntimeError) as exc:
                     raise SystemExit(f"dedup-gate: {exc}") from exc
-            if args.auto_compact_max_dirs is not None:
-                _auto_compact_step(
-                    spark, args, report, args.index,
-                    lambda kf: compact_gate_index(spark, args.index, kf),
-                )
+            _auto_compact_step(spark, args, report, args.index, compact_gate_index)
 
         if args.stream_source is not None:
-            if args.checkpoint is None:
-                raise SystemExit("dedup-gate: --stream-source requires --checkpoint")
             from data_ingestion_lambda_spark.streaming.dedup_stream import (
                 run_dedup_gate_available_now,
             )
@@ -1232,18 +1167,11 @@ def main(argv: list[str] | None = None) -> int:
             _gate_compaction(report)
             print(json.dumps({"statusCode": 200, **report}))
             return 0
-        if args.batch is None and (
-            args.compact_keep_from is not None
-            or args.auto_compact_max_dirs is not None
-        ):
+        if args.batch is None:
             report = {}
             _gate_compaction(report)
             print(json.dumps({"statusCode": 200, **report}))
             return 0
-        if args.batch is None or args.date is None:
-            raise SystemExit(
-                "dedup-gate: --batch and --date are required without --stream-source"
-            )
         raw = spark.read.parquet(args.batch)
         # Embedding batches are typically vec_id-keyed (the embeddings
         # table's own key); accept either key name.
@@ -1275,23 +1203,27 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "vocab":
         from data_ingestion_lambda_spark.operators.vocab import (
+            compact_vocab,
             score_batch,
             update_vocab,
         )
 
+        _check_store_args(
+            args, ("batch", "stream_source", "compact_keep_from"), paired=False
+        )
+        if args.stream_source is not None and (args.score_only or args.score_out):
+            raise SystemExit(
+                "vocab: --stream-source only extends the model; scoring "
+                "runs against the persisted counts via --batch --score-only"
+            )
+        if args.batch is not None and not args.score_only and args.date is None:
+            raise SystemExit("vocab: --date is required unless --score-only")
+        spark = get_spark("data-ingestion-cli")
         if args.stream_source is not None:
-            if args.checkpoint is None:
-                raise SystemExit("vocab: --stream-source requires --checkpoint")
-            if args.batch is not None or args.score_only or args.score_out:
-                raise SystemExit(
-                    "vocab: --stream-source only extends the model; scoring "
-                    "runs against the persisted counts via --batch --score-only"
-                )
             from data_ingestion_lambda_spark.streaming.index_streams import (
                 run_vocab_update_available_now,
             )
 
-            spark = get_spark("data-ingestion-cli")
             reports = run_vocab_update_available_now(
                 spark,
                 args.stream_source,
@@ -1301,24 +1233,9 @@ def main(argv: list[str] | None = None) -> int:
                 order=args.order,
             )
             report = {"batches": reports}
-            if args.auto_compact_max_dirs is not None:
-                from data_ingestion_lambda_spark.operators.vocab import (
-                    compact_vocab,
-                )
-
-                _auto_compact_step(
-                    spark, args, report, args.vocab,
-                    lambda kf: compact_vocab(spark, args.vocab, kf),
-                )
+            _auto_compact_step(spark, args, report, args.vocab, compact_vocab)
             print(json.dumps({"statusCode": 200, **report}))
             return 0
-        if args.batch is None and args.compact_keep_from is None:
-            raise SystemExit(
-                "vocab: need --batch, --stream-source and/or --compact-keep-from"
-            )
-        if args.batch is not None and not args.score_only and args.date is None:
-            raise SystemExit("vocab: --date is required unless --score-only")
-        spark = get_spark("data-ingestion-cli")
         report: dict = {}
         if args.batch is not None:
             batch = spark.read.parquet(args.batch).select("doc_id", "text")
@@ -1348,39 +1265,27 @@ def main(argv: list[str] | None = None) -> int:
                     update_vocab(spark, args.vocab, batch, args.date, order=args.order)
                 )
         if args.compact_keep_from is not None:
-            from data_ingestion_lambda_spark.operators.vocab import compact_vocab
-
             report["compaction"] = compact_vocab(
                 spark, args.vocab, args.compact_keep_from
             )
-        if args.auto_compact_max_dirs is not None:
-            from data_ingestion_lambda_spark.operators.vocab import compact_vocab
-
-            _auto_compact_step(
-                spark, args, report, args.vocab,
-                lambda kf: compact_vocab(spark, args.vocab, kf),
-            )
+        _auto_compact_step(spark, args, report, args.vocab, compact_vocab)
         print(json.dumps({"statusCode": 200, **report}))
         return 0
 
     if args.cmd == "drift-monitor":
         from data_ingestion_lambda_spark.operators.drift_monitor import (
             apply_histogram_batch,
+            compact_drift_monitor,
             read_drift,
         )
 
-        if (args.batch is None) != (args.date is None):
-            raise SystemExit("drift-monitor: --batch and --date go together")
+        _check_store_args(args)
         spark = get_spark("data-ingestion-cli")
         report: dict = {}
         if args.batch is not None:
             batch = _read_event_batch(spark, args.batch)
             report.update(apply_histogram_batch(spark, args.index, batch, args.date))
         if args.compact_keep_from is not None:
-            from data_ingestion_lambda_spark.operators.drift_monitor import (
-                compact_drift_monitor,
-            )
-
             report["compaction"] = compact_drift_monitor(
                 spark, args.index, args.compact_keep_from
             )
@@ -1393,15 +1298,7 @@ def main(argv: list[str] | None = None) -> int:
             rows = drift.orderBy("event_type", "day").collect()
             report["drift_rows"] = len(rows)
             report["max_l1_drift"] = max((r.l1_drift for r in rows), default=None)
-        if args.auto_compact_max_dirs is not None:
-            from data_ingestion_lambda_spark.operators.drift_monitor import (
-                compact_drift_monitor,
-            )
-
-            _auto_compact_step(
-                spark, args, report, args.index,
-                lambda kf: compact_drift_monitor(spark, args.index, kf),
-            )
+        _auto_compact_step(spark, args, report, args.index, compact_drift_monitor)
         print(json.dumps({"statusCode": 200, **report}))
         return 0
 
@@ -1410,21 +1307,17 @@ def main(argv: list[str] | None = None) -> int:
 
         from data_ingestion_lambda_spark.operators.hh_store import (
             apply_hh_batch,
+            compact_hh_store,
             read_heavy_hitters,
         )
 
-        if (args.batch is None) != (args.date is None):
-            raise SystemExit("hh-store: --batch and --date go together")
+        _check_store_args(args)
         spark = get_spark("data-ingestion-cli")
         report: dict = {}
         if args.batch is not None:
             batch = spark.read.parquet(args.batch).select("item")
             report.update(apply_hh_batch(spark, args.index, batch, args.date))
         if args.compact_keep_from is not None:
-            from data_ingestion_lambda_spark.operators.hh_store import (
-                compact_hh_store,
-            )
-
             report["compaction"] = compact_hh_store(
                 spark, args.index, args.compact_keep_from
             )
@@ -1442,15 +1335,7 @@ def main(argv: list[str] | None = None) -> int:
             if rows:
                 report["n_total"] = rows[0].n_total
                 report["undercount_bound"] = rows[0].undercount_bound
-        if args.auto_compact_max_dirs is not None:
-            from data_ingestion_lambda_spark.operators.hh_store import (
-                compact_hh_store,
-            )
-
-            _auto_compact_step(
-                spark, args, report, args.index,
-                lambda kf: compact_hh_store(spark, args.index, kf),
-            )
+        _auto_compact_step(spark, args, report, args.index, compact_hh_store)
         print(json.dumps({"statusCode": 200, **report}))
         return 0
 
@@ -1458,7 +1343,9 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F
 
         from data_ingestion_lambda_spark.operators.attribution_store import (
+            LEDGER_BASE_KEY,
             apply_attribution_batch,
+            compact_attribution_ledger,
             expire_attribution,
             read_attribution,
             read_attribution_linear,
@@ -1468,32 +1355,26 @@ def main(argv: list[str] | None = None) -> int:
             read_attribution_stream,
         )
 
-        if (args.batch is None) != (args.date is None):
-            raise SystemExit("attribution-store: --batch and --date go together")
+        # the calendar ledger and the any-split stream ledger live side by
+        # side under one index, so --stream-source and --batch combine
+        _check_store_args(
+            args,
+            (
+                "batch",
+                "out",
+                "expire_keep_days",
+                "stream_source",
+                "stream_out",
+                "compact_keep_from_key",
+            ),
+            exclusive=False,
+        )
+        if args.checkpoint is not None and args.stream_source is None:
+            raise SystemExit("attribution-store: --checkpoint needs --stream-source")
         if (args.expire_keep_days is None) != (args.expire_as_of is None):
             raise SystemExit(
                 "attribution-store: --expire-keep-days and --expire-as-of "
                 "go together"
-            )
-        if (args.stream_source is None) != (args.checkpoint is None):
-            raise SystemExit(
-                "attribution-store: --stream-source and --checkpoint go together"
-            )
-        if all(
-            a is None
-            for a in (
-                args.batch,
-                args.out,
-                args.expire_keep_days,
-                args.stream_source,
-                args.stream_out,
-                args.compact_keep_from_key,
-            )
-        ):
-            raise SystemExit(
-                "attribution-store: need --batch/--date, --out, "
-                "--expire-keep-days, --stream-source, --stream-out "
-                "and/or --compact-keep-from-key"
             )
         spark = get_spark("data-ingestion-cli")
         report: dict = {}
@@ -1510,10 +1391,6 @@ def main(argv: list[str] | None = None) -> int:
                 max_files_per_trigger=args.max_files_per_trigger,
             )
         if args.compact_keep_from_key is not None:
-            from data_ingestion_lambda_spark.operators.attribution_store import (
-                compact_attribution_ledger,
-            )
-
             try:
                 report.update(
                     compact_attribution_ledger(
@@ -1563,19 +1440,12 @@ def main(argv: list[str] | None = None) -> int:
             persisted = spark.read.parquet(args.out)
             report["purchases"] = persisted.count()
             report["attributed"] = persisted.filter(F.col("attributed")).count()
-        if args.auto_compact_max_dirs is not None:
-            from data_ingestion_lambda_spark.operators.attribution_store import (
-                LEDGER_BASE_KEY,
-                compact_attribution_ledger,
-            )
-
-            _auto_compact_step(
-                spark, args, report, args.index,
-                lambda kf: compact_attribution_ledger(spark, args.index, kf),
-                count_dir=f"{args.index}/stream_purchases",
-                part_key="ingest_batch",
-                base_key=LEDGER_BASE_KEY,
-            )
+        _auto_compact_step(
+            spark, args, report, args.index, compact_attribution_ledger,
+            count_dir=f"{args.index}/stream_purchases",
+            part_key="ingest_batch",
+            base_key=LEDGER_BASE_KEY,
+        )
         print(json.dumps({"statusCode": 200, **report}))
         return 0
 
@@ -1584,25 +1454,13 @@ def main(argv: list[str] | None = None) -> int:
 
         from data_ingestion_lambda_spark.operators.cms_store import (
             apply_cms_batch,
+            compact_cms_store,
             estimate_items,
         )
 
-        if (args.batch is None) != (args.date is None):
-            raise SystemExit("cms-store: --batch and --date go together")
-        if args.stream_source is not None and args.checkpoint is None:
-            raise SystemExit("cms-store: --stream-source requires --checkpoint")
-        if args.stream_source is not None and args.batch is not None:
-            raise SystemExit("cms-store: --stream-source and --batch are exclusive")
-        if (
-            args.batch is None
-            and args.stream_source is None
-            and args.query is None
-            and args.compact_keep_from is None
-        ):
-            raise SystemExit(
-                "cms-store: need --batch/--date, --stream-source, --query "
-                "and/or --compact-keep-from"
-            )
+        _check_store_args(
+            args, ("batch", "stream_source", "query", "compact_keep_from")
+        )
         spark = get_spark("data-ingestion-cli")
         report: dict = {}
         if args.stream_source is not None:
@@ -1621,10 +1479,6 @@ def main(argv: list[str] | None = None) -> int:
             batch = spark.read.parquet(args.batch).select("item")
             report.update(apply_cms_batch(spark, args.index, batch, args.date))
         if args.compact_keep_from is not None:
-            from data_ingestion_lambda_spark.operators.cms_store import (
-                compact_cms_store,
-            )
-
             report["compaction"] = compact_cms_store(
                 spark, args.index, args.compact_keep_from
             )
@@ -1642,15 +1496,7 @@ def main(argv: list[str] | None = None) -> int:
                 rows = est.orderBy(F.desc("est"), "item").collect()
                 report["estimated_items"] = len(rows)
                 report["top"] = [{"item": r.item, "est": r.est} for r in rows[:5]]
-        if args.auto_compact_max_dirs is not None:
-            from data_ingestion_lambda_spark.operators.cms_store import (
-                compact_cms_store,
-            )
-
-            _auto_compact_step(
-                spark, args, report, args.index,
-                lambda kf: compact_cms_store(spark, args.index, kf),
-            )
+        _auto_compact_step(spark, args, report, args.index, compact_cms_store)
         print(json.dumps({"statusCode": 200, **report}))
         return 0
 
@@ -1659,25 +1505,13 @@ def main(argv: list[str] | None = None) -> int:
 
         from data_ingestion_lambda_spark.operators.bloom_store import (
             apply_bloom_batch,
+            compact_bloom_store,
             screen_docs,
         )
 
-        if (args.batch is None) != (args.date is None):
-            raise SystemExit("bloom-store: --batch and --date go together")
-        if args.stream_source is not None and args.checkpoint is None:
-            raise SystemExit("bloom-store: --stream-source requires --checkpoint")
-        if args.stream_source is not None and args.batch is not None:
-            raise SystemExit("bloom-store: --stream-source and --batch are exclusive")
-        if (
-            args.batch is None
-            and args.stream_source is None
-            and args.screen is None
-            and args.compact_keep_from is None
-        ):
-            raise SystemExit(
-                "bloom-store: need --batch/--date, --stream-source, --screen "
-                "and/or --compact-keep-from"
-            )
+        _check_store_args(
+            args, ("batch", "stream_source", "screen", "compact_keep_from")
+        )
         spark = get_spark("data-ingestion-cli")
         report = {}
         if args.stream_source is not None:
@@ -1712,10 +1546,6 @@ def main(argv: list[str] | None = None) -> int:
                 )
             )
         if args.compact_keep_from is not None:
-            from data_ingestion_lambda_spark.operators.bloom_store import (
-                compact_bloom_store,
-            )
-
             report["compaction"] = compact_bloom_store(
                 spark, args.index, args.compact_keep_from
             )
@@ -1731,15 +1561,7 @@ def main(argv: list[str] | None = None) -> int:
                 verdicts = spark.read.parquet(args.verdicts_out)
             report["screened"] = verdicts.count()
             report["hits"] = verdicts.filter(F.col("bloom_hit")).count()
-        if args.auto_compact_max_dirs is not None:
-            from data_ingestion_lambda_spark.operators.bloom_store import (
-                compact_bloom_store,
-            )
-
-            _auto_compact_step(
-                spark, args, report, args.index,
-                lambda kf: compact_bloom_store(spark, args.index, kf),
-            )
+        _auto_compact_step(spark, args, report, args.index, compact_bloom_store)
         print(json.dumps({"statusCode": 200, **report}))
         return 0
 
@@ -1748,25 +1570,13 @@ def main(argv: list[str] | None = None) -> int:
 
         from data_ingestion_lambda_spark.operators.dsir_store import (
             apply_dsir_batch,
+            compact_dsir_store,
             score_docs,
         )
 
-        if (args.batch is None) != (args.date is None):
-            raise SystemExit("dsir-store: --batch and --date go together")
-        if args.stream_source is not None and args.checkpoint is None:
-            raise SystemExit("dsir-store: --stream-source requires --checkpoint")
-        if args.stream_source is not None and args.batch is not None:
-            raise SystemExit("dsir-store: --stream-source and --batch are exclusive")
-        if (
-            args.batch is None
-            and args.stream_source is None
-            and args.score is None
-            and args.compact_keep_from is None
-        ):
-            raise SystemExit(
-                "dsir-store: need --batch/--date, --stream-source, --score "
-                "and/or --compact-keep-from"
-            )
+        _check_store_args(
+            args, ("batch", "stream_source", "score", "compact_keep_from")
+        )
         spark = get_spark("data-ingestion-cli")
         report = {}
         if args.stream_source is not None:
@@ -1790,10 +1600,6 @@ def main(argv: list[str] | None = None) -> int:
                 )
             )
         if args.compact_keep_from is not None:
-            from data_ingestion_lambda_spark.operators.dsir_store import (
-                compact_dsir_store,
-            )
-
             report["compaction"] = compact_dsir_store(
                 spark, args.index, args.compact_keep_from
             )
@@ -1810,40 +1616,20 @@ def main(argv: list[str] | None = None) -> int:
                 scores = spark.read.parquet(args.scores_out)
             report["scored"] = scores.count()
             report["target_like"] = scores.filter(F.col("logw_bits") > 0).count()
-        if args.auto_compact_max_dirs is not None:
-            from data_ingestion_lambda_spark.operators.dsir_store import (
-                compact_dsir_store,
-            )
-
-            _auto_compact_step(
-                spark, args, report, args.index,
-                lambda kf: compact_dsir_store(spark, args.index, kf),
-            )
+        _auto_compact_step(spark, args, report, args.index, compact_dsir_store)
         print(json.dumps({"statusCode": 200, **report}))
         return 0
 
     if args.cmd == "touch-store":
         from data_ingestion_lambda_spark.operators.touch_store import (
             apply_touch_batch,
+            compact_touch_store,
             read_attribution_shapley,
         )
 
-        if (args.batch is None) != (args.date is None):
-            raise SystemExit("touch-store: --batch and --date go together")
-        if args.stream_source is not None and args.checkpoint is None:
-            raise SystemExit("touch-store: --stream-source requires --checkpoint")
-        if args.stream_source is not None and args.batch is not None:
-            raise SystemExit("touch-store: --stream-source and --batch are exclusive")
-        if (
-            args.batch is None
-            and args.stream_source is None
-            and not args.shapley
-            and args.compact_keep_from is None
-        ):
-            raise SystemExit(
-                "touch-store: need --batch/--date, --stream-source, --shapley "
-                "and/or --compact-keep-from"
-            )
+        _check_store_args(
+            args, ("batch", "stream_source", "shapley", "compact_keep_from")
+        )
         spark = get_spark("data-ingestion-cli")
         report = {}
         if args.stream_source is not None:
@@ -1862,10 +1648,6 @@ def main(argv: list[str] | None = None) -> int:
             batch = spark.read.parquet(args.batch)
             report.update(apply_touch_batch(spark, args.index, batch, args.date))
         if args.compact_keep_from is not None:
-            from data_ingestion_lambda_spark.operators.touch_store import (
-                compact_touch_store,
-            )
-
             report["compaction"] = compact_touch_store(
                 spark, args.index, args.compact_keep_from
             )
@@ -1875,41 +1657,24 @@ def main(argv: list[str] | None = None) -> int:
                 .orderBy("channel")
                 .collect()
             ]
-        if args.auto_compact_max_dirs is not None:
-            from data_ingestion_lambda_spark.operators.touch_store import (
-                compact_touch_store,
-            )
-
-            _auto_compact_step(
-                spark, args, report, args.index,
-                lambda kf: compact_touch_store(spark, args.index, kf),
-            )
+        _auto_compact_step(spark, args, report, args.index, compact_touch_store)
         print(json.dumps({"statusCode": 200, **report}))
         return 0
 
     if args.cmd == "markov-store":
         from data_ingestion_lambda_spark.operators.markov_store import (
             apply_markov_batch,
+            compact_markov_store,
             read_attribution_markov,
         )
 
-        if (args.batch is None) != (args.date is None):
-            raise SystemExit("markov-store: --batch and --date go together")
-        if args.batch is None and not args.credit and args.compact_keep_from is None:
-            raise SystemExit(
-                "markov-store: need --batch/--date, --credit and/or "
-                "--compact-keep-from"
-            )
+        _check_store_args(args, ("batch", "credit", "compact_keep_from"))
         spark = get_spark("data-ingestion-cli")
         report = {}
         if args.batch is not None:
             batch = spark.read.parquet(args.batch)
             report.update(apply_markov_batch(spark, args.index, batch, args.date))
         if args.compact_keep_from is not None:
-            from data_ingestion_lambda_spark.operators.markov_store import (
-                compact_markov_store,
-            )
-
             report["compaction"] = compact_markov_store(
                 spark, args.index, args.compact_keep_from
             )
@@ -1919,45 +1684,22 @@ def main(argv: list[str] | None = None) -> int:
                 .orderBy("channel")
                 .collect()
             ]
-        if args.auto_compact_max_dirs is not None:
-            from data_ingestion_lambda_spark.operators.markov_store import (
-                compact_markov_store,
-            )
-
-            _auto_compact_step(
-                spark, args, report, args.index,
-                lambda kf: compact_markov_store(spark, args.index, kf),
-            )
+        _auto_compact_step(spark, args, report, args.index, compact_markov_store)
         print(json.dumps({"statusCode": 200, **report}))
         return 0
 
     if args.cmd == "session-store":
         from data_ingestion_lambda_spark.operators.session_store import (
             apply_session_batch,
+            compact_session_store,
             read_sessions,
             read_user_session_stats,
         )
 
-        if (args.batch is None) != (args.date is None):
-            raise SystemExit("session-store: --batch and --date go together")
-        if args.stream_source is not None and args.checkpoint is None:
-            raise SystemExit("session-store: --stream-source requires --checkpoint")
-        if args.stream_source is not None and args.batch is not None:
-            raise SystemExit(
-                "session-store: --stream-source (batch-id keys) and --batch "
-                "(calendar keys) are exclusive per ledger"
-            )
-        if (
-            args.batch is None
-            and args.stream_source is None
-            and args.sessions_out is None
-            and args.stats_out is None
-            and args.compact_keep_from is None
-        ):
-            raise SystemExit(
-                "session-store: need --batch/--date, --stream-source, "
-                "--sessions-out, --stats-out and/or --compact-keep-from"
-            )
+        _check_store_args(
+            args,
+            ("batch", "stream_source", "sessions_out", "stats_out", "compact_keep_from"),
+        )
         spark = get_spark("data-ingestion-cli")
         report: dict = {}
         if args.stream_source is not None:
@@ -1976,10 +1718,6 @@ def main(argv: list[str] | None = None) -> int:
             batch = _read_event_batch(spark, args.batch)
             report.update(apply_session_batch(spark, args.index, batch, args.date))
         if args.compact_keep_from is not None:
-            from data_ingestion_lambda_spark.operators.session_store import (
-                compact_session_store,
-            )
-
             report["compaction"] = compact_session_store(
                 spark, args.index, args.compact_keep_from
             )
@@ -1995,15 +1733,7 @@ def main(argv: list[str] | None = None) -> int:
             ).parquet(args.stats_out)
             report["stats_out"] = args.stats_out
             report["users"] = spark.read.parquet(args.stats_out).count()
-        if args.auto_compact_max_dirs is not None:
-            from data_ingestion_lambda_spark.operators.session_store import (
-                compact_session_store,
-            )
-
-            _auto_compact_step(
-                spark, args, report, args.index,
-                lambda kf: compact_session_store(spark, args.index, kf),
-            )
+        _auto_compact_step(spark, args, report, args.index, compact_session_store)
         print(json.dumps({"statusCode": 200, **report}))
         return 0
 
@@ -2015,26 +1745,10 @@ def main(argv: list[str] | None = None) -> int:
             read_user_features_asof,
         )
 
-        if (args.batch is None) != (args.date is None):
-            raise SystemExit("feature-store: --batch and --date go together")
-        if args.stream_source is not None and args.checkpoint is None:
-            raise SystemExit("feature-store: --stream-source requires --checkpoint")
-        if args.stream_source is not None and args.batch is not None:
-            raise SystemExit(
-                "feature-store: --stream-source and --batch are exclusive "
-                "(an index dir belongs to one driver)"
-            )
-        if (
-            args.batch is None
-            and args.stream_source is None
-            and args.vectors_out is None
-            and args.decayed_out is None
-            and args.compact_before is None
-        ):
-            raise SystemExit(
-                "feature-store: need --batch/--date, --stream-source, "
-                "--vectors-out, --decayed-out and/or --compact-before"
-            )
+        _check_store_args(
+            args,
+            ("batch", "stream_source", "vectors_out", "decayed_out", "compact_before"),
+        )
         spark = get_spark("data-ingestion-cli")
         report: dict = {}
         # layout detection: a stream-driven ledger holds ingest_batch=
@@ -2135,15 +1849,27 @@ def main(argv: list[str] | None = None) -> int:
             vectors.write.mode("overwrite").parquet(args.vectors_out)
             report["vectors_out"] = args.vectors_out
             report["users"] = spark.read.parquet(args.vectors_out).count()
-        if args.auto_compact_max_dirs is not None:
-            from data_ingestion_lambda_spark.operators.feature_store import (
-                compact_feature_ledger,
+        if args.auto_compact_max_dirs is not None and _is_stream_ledger():
+            # batch-id keys have no date horizon: the stream ledger folds
+            # every committed batch at once (streaming/events.py), under
+            # the same {max_dirs, due, compaction} report as the policy
+            from data_ingestion_lambda_spark.streaming.events import (
+                batch_ledger_fold_due,
+                compact_moment_ledger,
             )
 
-            _auto_compact_step(
-                spark, args, report, args.index,
-                lambda kf: compact_feature_ledger(spark, args.index, kf),
-            )
+            policy = report["auto_compact"] = {
+                "max_dirs": args.auto_compact_max_dirs,
+                "due": batch_ledger_fold_due(
+                    spark, args.index, args.auto_compact_max_dirs
+                ),
+            }
+            if policy["due"]:
+                policy["compaction"] = compact_moment_ledger(
+                    spark, args.index, _stream_checkpoint(args)
+                )
+        else:
+            _auto_compact_step(spark, args, report, args.index, compact_feature_ledger)
         print(json.dumps({"statusCode": 200, **report}))
         return 0
 
@@ -2155,22 +1881,13 @@ def main(argv: list[str] | None = None) -> int:
         )
         from pyspark.sql import functions as F
 
-        if (
-            args.batch is None
-            and args.query is None
-            and args.stream_source is None
-            and args.compact_keep_from is None
-        ):
-            raise SystemExit(
-                "search-index: need --batch, --stream-source, "
-                "--compact-keep-from and/or --query"
-            )
+        _check_store_args(
+            args,
+            ("batch", "stream_source", "compact_keep_from", "query"),
+            paired=False,
+        )
         if args.batch is not None and args.date is None:
             raise SystemExit("search-index: --batch requires --date")
-        if args.stream_source is not None and args.checkpoint is None:
-            raise SystemExit("search-index: --stream-source requires --checkpoint")
-        if args.stream_source is not None and args.batch is not None:
-            raise SystemExit("search-index: --stream-source and --batch are exclusive")
         spark = get_spark("data-ingestion-cli")
         report: dict = {}
         if args.stream_source is not None:
@@ -2207,50 +1924,44 @@ def main(argv: list[str] | None = None) -> int:
                 topk.write.mode("overwrite").parquet(args.out)
                 report["out"] = args.out
             report["result_rows"] = topk.count()
-        if args.auto_compact_max_dirs is not None:
-            _auto_compact_step(
-                spark, args, report, args.index,
-                lambda kf: compact_postings_index(spark, args.index, kf),
-                count_dir=f"{args.index}/doclen",
-            )
+        _auto_compact_step(
+            spark, args, report, args.index, compact_postings_index,
+            count_dir=f"{args.index}/doclen",
+        )
         print(json.dumps({"statusCode": 200, **report}))
         return 0
 
     if args.cmd == "ann-index":
         from data_ingestion_lambda_spark.operators.ann_index import (
             append_batch,
+            compact_index_cells,
             probe_topk,
             train_index,
         )
         from pyspark.sql import functions as F
 
-        if (
-            args.train is None
-            and args.batch is None
-            and args.query is None
-            and args.stream_source is None
-            and args.retrain_to is None
-            and args.compact_keep_from is None
-            and args.auto_compact_max_dirs is None
-        ):
-            raise SystemExit(
-                "ann-index: need --train, --batch, --stream-source, "
-                "--retrain-to, --query, --compact-keep-from and/or "
-                "--auto-compact-max-dirs"
-            )
+        # ALL argument validation before ANY mutation: a fold spends
+        # replay keys irreversibly, so a flag typo must not leave the
+        # store changed by a command that then reports failure.
+        _check_store_args(
+            args,
+            (
+                "train",
+                "batch",
+                "stream_source",
+                "retrain_to",
+                "query",
+                "compact_keep_from",
+                "auto_compact_max_dirs",
+            ),
+            paired=False,
+        )
         if args.batch is not None and args.date is None:
             raise SystemExit("ann-index: --batch requires --date")
         if args.retrain_to is not None and (
             args.n_cells is None or args.date is None
         ):
             raise SystemExit("ann-index: --retrain-to requires --n-cells and --date")
-        if args.stream_source is not None and args.checkpoint is None:
-            raise SystemExit("ann-index: --stream-source requires --checkpoint")
-        if args.stream_source is not None and args.batch is not None:
-            raise SystemExit("ann-index: --stream-source and --batch are exclusive")
-        # ALL argument validation before ANY mutation: a fold spends
-        # replay keys irreversibly, so a flag typo must not leave the
-        # store changed by a command that then reports failure.
         if args.ceiling is not None and not args.hard_negatives:
             raise SystemExit("ann-index: --ceiling only applies with --hard-negatives")
         if args.hard_negatives and args.query is None:
@@ -2288,26 +1999,16 @@ def main(argv: list[str] | None = None) -> int:
             batch = spark.read.parquet(args.batch).select("vec_id", "embedding")
             report.update(append_batch(spark, args.index, batch, args.date))
         if args.compact_keep_from is not None:
-            from data_ingestion_lambda_spark.operators.ann_index import (
-                compact_index_cells,
-            )
-
             try:
                 report["compaction"] = compact_index_cells(
                     spark, args.index, args.compact_keep_from
                 )
             except (ValueError, RuntimeError) as exc:
                 raise SystemExit(f"ann-index: {exc}") from exc
-        if args.auto_compact_max_dirs is not None:
-            from data_ingestion_lambda_spark.operators.ann_index import (
-                compact_index_cells,
-            )
-
-            _auto_compact_step(
-                spark, args, report, args.index,
-                lambda kf: compact_index_cells(spark, args.index, kf),
-                count_dir=f"{args.index}/cells",
-            )
+        _auto_compact_step(
+            spark, args, report, args.index, compact_index_cells,
+            count_dir=f"{args.index}/cells",
+        )
         if args.query is not None:
             raw = spark.read.parquet(args.query)
             key = "query_id" if "query_id" in raw.columns else "vec_id"

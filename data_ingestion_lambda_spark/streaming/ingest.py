@@ -18,8 +18,9 @@ What each reference mechanism becomes:
 - JSON audit twin (src/s3_processor.py:147-154)
     → an append-only parquet ingestion log written per batch
 
-The parquet and JDBC sinks share the source and the micro-batch body
-(``_process_batch``); only the merge step differs.
+The parquet and JDBC sinks share the source, the micro-batch body
+(``_process_batch``) and the last-writer-wins reduction
+(``merge_last_writer_wins``); only the write differs.
 
 Scale notes: ``maxFilesPerTrigger`` bounds batch size (the pacing the
 reference accidentally got from MaxKeys=10, SURVEY §1.4.5, minus the data
@@ -39,6 +40,7 @@ from pyspark.sql import functions as F
 from data_ingestion_lambda_spark.functions.normalize import normalize_consumption
 from data_ingestion_lambda_spark.operators.layout import replace_partitions
 from data_ingestion_lambda_spark.operators.upsert import (
+    merge_last_writer_wins,
     upsert_into_parquet,
     upsert_into_parquet_with_cdc,
 )
@@ -183,32 +185,20 @@ def run_ingest_to_jdbc_available_now(
     from data_ingestion_lambda_spark.operators.jdbc_upsert import (
         upsert_via_jdbc,
     )
-    from data_ingestion_lambda_spark.schemas import UPSERT_KEYS
 
     def merge(good: DataFrame, batch_id: int) -> bool:
         if good.isEmpty():
             return False
-        value_cols = [
-            c for c in good.columns if not c.startswith("_") and c not in UPSERT_KEYS
-        ]
-        winners = (
-            good.withColumn("_o", F.struct(*ORDER_COLS))
-            .groupBy(*UPSERT_KEYS)
-            .agg(*[F.max_by(c, F.col("_o")).alias(c) for c in value_cols])
-            # The reference stamps NOW() as created_at on insert and keeps
-            # it on update (src/db_operations.py) — stage the batch's
-            # ingest timestamp as created_at and list it in the INSERT set
-            # only, so new rows are born with it and existing rows never
-            # have theirs touched.
-            .withColumn("created_at", F.col("updated_at"))
-        )
+        # The parquet sink's reduction with no stored side: one winner per
+        # key, created_at stamped from the batch's updated_at. The default
+        # column lists of upsert_via_jdbc then update the payload and
+        # updated_at only, so an existing row keeps its created_at (the
+        # reference stamps NOW() on insert only, src/db_operations.py).
         upsert_via_jdbc(
-            winners,
+            merge_last_writer_wins(None, good, order_cols=ORDER_COLS),
             jdbc_url,
             target_table,
             staging_table=staging_table,
-            update_cols=[c for c in value_cols if c != "is_active"],
-            insert_cols=list(UPSERT_KEYS) + value_cols + ["created_at"],
             ident_quote=ident_quote,
             staging_column_types=staging_column_types,
             properties=properties,

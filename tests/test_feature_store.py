@@ -301,6 +301,49 @@ def test_cli_stream_source_drains_and_derives(spark, tmp_path):
               "2025-01-01"])
 
 
+def test_cli_stream_auto_compaction_folds_batch_ledger(spark, tmp_path, capsys):
+    """feature-store --stream-source --auto-compact-max-dirs over a
+    batch-id-keyed ledger folds every committed batch into
+    ingest_batch=-1 (the date-keyed fold cannot parse batch ids) and
+    derives the same vectors as the same drain without the flag."""
+    import json
+
+    from data_ingestion_lambda_spark.cli import main
+    from data_ingestion_lambda_spark.operators.layout import partition_values
+
+    rows = load_table(spark, SF, "events").orderBy("ts", "event_id").collect()
+    src = str(tmp_path / "drops")
+    step = -(-len(rows) // 5)
+    for i in range(5):
+        chunk = rows[i * step:(i + 1) * step]
+        spark.createDataFrame(chunk, EVENTS_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+
+    def drain(name, *extra):
+        idx, ckpt = str(tmp_path / name), str(tmp_path / f"{name}_ckpt")
+        capsys.readouterr()
+        assert main(
+            ["feature-store", "--index", idx, "--stream-source", src,
+             "--checkpoint", ckpt, "--max-files-per-trigger", "1", *extra]
+        ) == 0
+        report = json.loads(capsys.readouterr().out)
+        vec_dir = str(tmp_path / f"{name}_vectors")
+        assert main(["feature-store", "--index", idx, "--vectors-out", vec_dir]) == 0
+        return idx, ckpt, report, _rows(spark.read.parquet(vec_dir))
+
+    idx, ckpt, report, got = drain("folded", "--auto-compact-max-dirs", "2")
+    assert report["stream_batches"] == 5
+    assert report["auto_compact"] == {"max_dirs": 2, "due": True, "compaction": 5}
+    assert partition_values(spark, idx, "ingest_batch") == ["-1"]
+    assert sorted(p.name for p in (tmp_path / "folded_ckpt" / "commits").iterdir()
+                  if not p.name.startswith(".")) == ["0", "1", "2", "3", "4"]
+
+    _, _, plain_report, want = drain("plain")
+    assert "auto_compact" not in plain_report
+    assert got == want and len(got) > 0
+
+
 def test_schema_evolution_refuses_then_from_introduction(spark, tmp_path):
     """Ledger evolution: a partition written before a moment column
     existed (simulated by rewriting one date dir without n_purchases)
