@@ -1097,18 +1097,14 @@ def main(argv: list[str] | None = None) -> int:
         elif args.index is None:
             raise SystemExit("dedup-gate: --index is required without --bucketed-table")
         else:
-            # a streamed run ignores --batch/--date, and a run without a
-            # batch only compacts
+            # a run without a batch only compacts
             _check_store_args(
                 args,
                 ("batch", "stream_source", "compact_keep_from", "auto_compact_max_dirs"),
                 paired=False,
-                exclusive=False,
             )
-            if args.stream_source is None and args.batch is not None and args.date is None:
-                raise SystemExit(
-                    "dedup-gate: --batch requires --date without --stream-source"
-                )
+            if args.batch is not None and args.date is None:
+                raise SystemExit("dedup-gate: --batch requires --date")
         spark = get_spark("data-ingestion-cli", metastore_dir=args.metastore_dir)
         if args.bucketed_table is not None:
             from data_ingestion_lambda_spark.operators.dedup_gate import (
@@ -1219,12 +1215,13 @@ def main(argv: list[str] | None = None) -> int:
         if args.batch is not None and not args.score_only and args.date is None:
             raise SystemExit("vocab: --date is required unless --score-only")
         spark = get_spark("data-ingestion-cli")
+        report: dict = {}
         if args.stream_source is not None:
             from data_ingestion_lambda_spark.streaming.index_streams import (
                 run_vocab_update_available_now,
             )
 
-            reports = run_vocab_update_available_now(
+            report["batches"] = run_vocab_update_available_now(
                 spark,
                 args.stream_source,
                 args.vocab,
@@ -1232,11 +1229,6 @@ def main(argv: list[str] | None = None) -> int:
                 max_files_per_trigger=args.max_files_per_trigger,
                 order=args.order,
             )
-            report = {"batches": reports}
-            _auto_compact_step(spark, args, report, args.vocab, compact_vocab)
-            print(json.dumps({"statusCode": 200, **report}))
-            return 0
-        report: dict = {}
         if args.batch is not None:
             batch = spark.read.parquet(args.batch).select("doc_id", "text")
             report["batch_docs"] = batch.count()
@@ -1749,6 +1741,12 @@ def main(argv: list[str] | None = None) -> int:
             args,
             ("batch", "stream_source", "vectors_out", "decayed_out", "compact_before"),
         )
+        if args.decayed_out is not None and args.as_of is None:
+            raise SystemExit("feature-store: --decayed-out needs --as-of")
+        if args.as_of is not None and args.vectors_out is None and args.decayed_out is None:
+            raise SystemExit(
+                "feature-store: --as-of needs --vectors-out or --decayed-out"
+            )
         spark = get_spark("data-ingestion-cli")
         report: dict = {}
         # layout detection: a stream-driven ledger holds ingest_batch=
@@ -1805,8 +1803,6 @@ def main(argv: list[str] | None = None) -> int:
                 spark, args.index, args.compact_before
             )
         if args.decayed_out is not None:
-            if args.as_of is None:
-                raise SystemExit("feature-store: --decayed-out needs --as-of")
             if _is_stream_ledger():
                 raise SystemExit(
                     "feature-store: --decayed-out needs the date-keyed "
@@ -1820,14 +1816,6 @@ def main(argv: list[str] | None = None) -> int:
                 spark, args.index, args.as_of
             ).write.mode("overwrite").parquet(args.decayed_out)
             report["decayed_out"] = args.decayed_out
-        if (
-            args.as_of is not None
-            and args.vectors_out is None
-            and args.decayed_out is None
-        ):
-            raise SystemExit(
-                "feature-store: --as-of needs --vectors-out or --decayed-out"
-            )
         if args.vectors_out is not None:
             if _is_stream_ledger():
                 if args.as_of is not None:

@@ -378,7 +378,7 @@ def compact_index_cells(spark: SparkSession, index_dir: str, keep_from: str) -> 
     (pinned in tests/test_ann_index.py). Folding SPENDS the folded
     dates' replay keys: append_batch refuses them (check_not_below_horizon),
     with the standard crash discipline (horizon marker first, staged
-    base, stranded-staging refusal) inherited from base_fold."""
+    base, crashed swap finished by the next run) inherited from base_fold."""
     return base_fold(
         spark,
         index_dir,

@@ -72,6 +72,7 @@ from pyspark.sql import functions as F
 
 from data_ingestion_lambda_spark.operators.base_fold import base_fold, fold_horizon
 from data_ingestion_lambda_spark.operators.layout import (
+    finish_swaps,
     hadoop_fs,
     partition_values,
     replace_partitions,
@@ -504,16 +505,19 @@ def expire_attribution(
         )
     cutoff = _dt.date.fromisoformat(as_of) - _dt.timedelta(days=keep_days)
     dropped: list[str] = []
-    fs, path_cls = hadoop_fs(spark, index_dir)
     for sub in ("clicks", "last_clicks"):
-        for d in partition_values(spark, f"{index_dir}/{sub}", "date"):
+        sub_dir = f"{index_dir}/{sub}"
+        finish_swaps(spark, sub_dir)
+        expired = []
+        for d in partition_values(spark, sub_dir, "date"):
             try:
-                pdate = _dt.date.fromisoformat(d)
+                if _dt.date.fromisoformat(d) < cutoff:
+                    expired.append(d)
             except ValueError:
                 continue
-            if pdate < cutoff:
-                fs.delete(path_cls(f"{index_dir}/{sub}/date={d}"), True)
-                dropped.append(f"{sub}/date={d}")
+        if expired:
+            replace_partitions(spark, sub_dir, None, expired)
+        dropped += [f"{sub}/date={d}" for d in expired]
     return {
         "index": index_dir,
         "cutoff": cutoff.isoformat(),
@@ -912,10 +916,9 @@ def compact_attribution_ledger(
     Discipline is the postings/feature-store base-fold: the
     ``_horizon=`` marker advances FIRST (a too-high horizon after a
     crash only refuses lands it could have accepted, never
-    double-counts one); each sub-table stages its merged base in a
-    dot-prefixed dir, drops its folded partitions, renames staging into
-    place; a stranded staging dir makes the next run REFUSE with the
-    recovery path. Folding SPENDS the folded keys:
+    double-counts one); each sub-table swaps its merged base in
+    through the one staged partition swap, and the next run finishes
+    a swap a crash interrupted. Folding SPENDS the folded keys:
     ``land_attribution_batch`` refuses keys below the horizon (keys
     compare lexicographically — the streaming front's zero-padded
     ``b<id>`` keys order correctly; replays from a checkpoint rebuilt

@@ -14,11 +14,14 @@ the feature store's ledger discipline (operators/feature_store.py:
 1. the ``_horizon=<key>`` marker advances FIRST (MAX rule across
    coexisting markers — a too-high horizon after a crash only refuses
    lands it could have accepted, never double-counts one);
-2. each sub-table swaps in its full merged base through
-   ``layout.fold_swap``: stage in a dot-prefixed dir, drop the folded
-   partition dirs, rename staging into place;
-3. a stranded staging dir makes the next run REFUSE with the manual
-   recovery path rather than recompact a partially-dropped table;
+2. each sub-table swaps its full merged base in through
+   ``layout.replace_partitions``: the base is staged as
+   ``<part_key>=<base_key>``, and the folded partitions that stage
+   nothing are deleted;
+3. a crash inside that swap is finished by the next writer of the
+   sub-table: this fold runs ``layout.finish_swaps`` before it lists or
+   reads, so it never recompacts a partially-dropped table (a legacy
+   ``.compact-staging`` still refuses, ``refuse_stranded_fold``);
 4. partition dirs holding no parquet footer (a batch with zero rows
    for one sub-table) are dropped without being read — schema
    inference over an all-empty fold set fails (review r9/r10: the
@@ -36,16 +39,18 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from data_ingestion_lambda_spark.operators.layout import (
     committed_front,
     dir_has_parquet,
-    fold_swap,
+    finish_swaps,
     hadoop_fs,
     ledger_keying,
     partition_values,
     read_partitions,
     refuse_stranded_fold,
+    replace_partitions,
 )
 
 # Reserved base-partition key, shared by every folded store. Sorts
@@ -133,7 +138,7 @@ def auto_keep_from(
     ``base_key`` matters only for stores with a non-default reserved
     base (the attribution ledger's ``0000-base``).
     The caller passes the result to its own ``compact_*`` entry point,
-    so every refusal (horizon, stranded staging) behaves exactly as a
+    so every refusal (horizon, legacy stranded staging) behaves exactly as a
     manual fold — the policy only CHOOSES the key."""
     if max_dirs < 1:
         raise ValueError(f"auto_keep_from: max_dirs must be >= 1, got {max_dirs}")
@@ -248,6 +253,7 @@ def base_fold(
 
     for sub in subtables:
         refuse_stranded_fold(spark, _sub_dir(sub), op_name, part_key, base_key)
+        finish_swaps(spark, _sub_dir(sub))
 
     # Horizon first (the understatement-proof order — feature store r9).
     prior = fold_horizon(spark, index_dir)
@@ -287,15 +293,14 @@ def base_fold(
             # partitions lack (markov/drift folds) — the union read
             # must surface the superset schema, not one file's.
             base, part_cols = merge(read_partitions(spark, sub_dir, part_key, nonempty))
-        fold_swap(
+            base = base.withColumn(part_key, F.lit(base_key))
+        replace_partitions(
             spark,
             sub_dir,
-            fold,
             base,
-            op_name=op_name,
-            part_key=part_key,
-            base_key=base_key,
-            partition_by=part_cols,
+            fold + [base_key],
+            extra_partition_cols=part_cols,
+            part_col=part_key,
         )
         folded[sub] = len(fold)
     return {"horizon": new_horizon, "folded": folded}

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from data_ingestion_lambda_spark.operators.layout import (
     PARTITION_COL,
+    finish_swaps,
     hadoop_fs,
     partition_values,
     replace_partitions,
@@ -41,8 +42,10 @@ def expire_partitions(
     """Retention: drop whole date partitions older than ``keep_from``
     (ISO date string) — the operational form of the reference's 30-day
     cutoff (F7, src/s3_processor.py:27). Partition-level deletes touch no
-    data files inside surviving dates and cost one LIST + one delete per
-    expired partition. Returns the expired dates.
+    data files inside surviving dates; they go through the staged swap
+    with nothing staged (one marker and one delete per expired
+    partition), so a delete that fails raises instead of reporting the
+    date as expired. Returns the expired dates.
 
     ``keep_from`` is validated and normalized to zero-padded ISO form
     before the lexicographic compare — this is a destructive path, and an
@@ -50,10 +53,10 @@ def expire_partitions(
     wrongly against zero-padded partition names and mass-delete months it
     should keep."""
     keep_from = date.fromisoformat(keep_from).isoformat()
-    fs, path_cls = hadoop_fs(spark, target_dir)
+    finish_swaps(spark, target_dir)
     expired = [d for d in partition_values(spark, target_dir, PARTITION_COL) if d < keep_from]
-    for d in expired:
-        fs.delete(path_cls(f"{target_dir}/{PARTITION_COL}={d}"), True)
+    if expired:
+        replace_partitions(spark, target_dir, None, expired)
     return expired
 
 
@@ -66,6 +69,7 @@ def compact_partitions(
     """Rewrite each date partition into ``ceil(bytes/target_file_bytes)``
     files. Returns {date: actual_output_file_count}. Partitions already at
     or below one target-file of data compact to exactly one file."""
+    finish_swaps(spark, target_dir)
     fs, path_cls = hadoop_fs(spark, target_dir)
     if dates is None:
         dates = partition_values(spark, target_dir, PARTITION_COL)
@@ -185,6 +189,7 @@ def cluster_partitions(
     ranges on EVERY clustered column — the right layout when two
     independent filter columns matter (the Delta OPTIMIZE ZORDER idea,
     implemented here as plain column arithmetic + the same staged swap)."""
+    finish_swaps(spark, target_dir)
     fs, path_cls = hadoop_fs(spark, target_dir)
     if dates is None:
         dates = partition_values(spark, target_dir, PARTITION_COL)

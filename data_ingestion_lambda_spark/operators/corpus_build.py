@@ -222,8 +222,8 @@ def compact_corpus_ledgers(
     replay keys — ``gate_and_ledger_batch`` refuses a batch date below
     the horizon, because its ledger writes could no longer overwrite
     only themselves. Standard base_fold crash discipline (horizon
-    marker first, staged swap per sub-table, stranded-staging
-    refusal)."""
+    marker first, staged swap per sub-table, crashed swap finished by
+    the next run)."""
     from data_ingestion_lambda_spark.operators.base_fold import (
         BASE_KEY,
         base_fold,

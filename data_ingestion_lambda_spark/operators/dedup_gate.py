@@ -56,6 +56,7 @@ from data_ingestion_lambda_spark.operators.base_fold import (
 )
 from data_ingestion_lambda_spark.operators.layout import (
     PARTITION_COL,
+    finish_swaps,
     partition_values,
     replace_partitions,
 )
@@ -334,7 +335,10 @@ def apply_batch(
     # Dates strictly below the compaction horizon are SPENT: their rows
     # were folded into the base and lost their partition identity, so a
     # re-delivery could neither overwrite itself nor exclude its own
-    # earlier write from the probe — refuse, like every folded store.
+    # earlier write from the probe — refuse, like every folded store. A
+    # fold that crashed mid-swap is finished first: the probe must see
+    # the folded signatures, not a base still in staging.
+    finish_swaps(spark, index_dir)
     check_not_below_horizon(spark, index_dir, batch_date, f"dedup-gate {mode} apply")
     matches = probe_batch(
         spark,
@@ -388,7 +392,7 @@ def compact_gate_index(spark: SparkSession, index_dir: str, keep_from: str) -> d
     Mode-agnostic: all three lanes share the (doc_id, sig) schema within
     an index directory, and an index belongs to ONE mode. Standard
     base_fold crash discipline (horizon marker first, staged swap,
-    stranded-staging refusal)."""
+    crashed swap finished by the next run)."""
     return base_fold(
         spark,
         index_dir,

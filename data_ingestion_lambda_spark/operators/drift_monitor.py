@@ -44,7 +44,6 @@ from data_ingestion_lambda_spark.operators.base_fold import (
 )
 from data_ingestion_lambda_spark.operators.layout import (
     PARTITION_COL,
-    hadoop_fs,
     replace_partitions,
 )
 from data_ingestion_lambda_spark.plans.events_queries import (
@@ -97,19 +96,11 @@ def apply_histogram_batch(
             "streaming ledger (stream_value_histogram_to_table)"
         )
     if batch_events.isEmpty():
-        # A zero-row day is a legitimate fact, but replace_partitions only
-        # swaps partitions that EXIST in staging — an empty histogram
-        # stages nothing, so (a) the committed-partition count below would
-        # read a nonexistent path and raise, and (b) a replay-as-empty
-        # would leave a prior non-empty partition stale. Drop any existing
-        # partition explicitly and report zero.
-        fs, path_cls = hadoop_fs(spark, index_dir)
-        dst = path_cls(f"{index_dir}/{PARTITION_COL}={batch_date}")
-        if fs.exists(dst) and not fs.delete(dst, True):
-            raise IOError(
-                f"drift monitor: delete of stale {dst} returned false while "
-                "landing an empty batch"
-            )
+        # A zero-row day is a legitimate fact: it stages nothing, so the
+        # swap deletes any prior partition of the day (a replay-as-empty
+        # must not leave stale counts), and there is no committed
+        # partition to count below.
+        replace_partitions(spark, index_dir, None, [batch_date])
         return {"date": batch_date, "hist_rows": 0}
     hist = _batch_histogram(batch_events).withColumn(PARTITION_COL, F.lit(batch_date))
     replace_partitions(spark, index_dir, hist, [batch_date])

@@ -12,13 +12,14 @@ cheapest possible scan shape. Pass 2 anti-join-rewrites only those
 dates through ``replace_partitions``' staged atomic swap (the upsert
 machinery — readers never see a half-erased partition); untouched
 partitions are never opened, let alone rewritten. A date whose every
-row is erased is DELETED outright (the staged-swap path would silently
-keep the old partition, since an empty frame stages no directory —
-handled explicitly).
+row is erased stages nothing, so the same swap deletes it outright.
 
 Idempotence: re-running a request finds no affected dates (the keys
 are gone) and rewrites nothing; the tombstone ledger is keyed by
 ``request_id``, so a replayed request overwrites only its own record.
+The tombstone lands BEFORE the swap: a crash inside the swap is
+finished by the re-run (``layout.finish_swaps``, run before the table
+is read), which then erases nothing and keeps the original record.
 
 The verifier (``verify_erasure``) is the PII-scrub zero-residual
 discipline applied to identity: after erase, the count of surviving
@@ -37,6 +38,7 @@ from pyspark.sql import functions as F
 
 from data_ingestion_lambda_spark.operators.layout import (
     PARTITION_COL,
+    finish_swaps,
     hadoop_fs,
     partition_values,
     replace_partitions,
@@ -105,6 +107,7 @@ def erase_keys(
     _refuse_unpartitioned(
         spark, table_dir, part_col=part_col, ignore_loose=ignore_loose
     )
+    finish_swaps(spark, table_dir)
     if not partition_values(spark, table_dir, part_col):
         # a fully-erased (or empty) table: nothing to scan
         _land_tombstones(
@@ -150,22 +153,8 @@ def erase_keys(
             str(r[part_col])
             for r in kept.select(part_col).distinct().collect()
         }
-        rewrite = [d for d in affected if d in kept_dates]
-        drop = [d for d in affected if d not in kept_dates]
-        if rewrite:
-            replace_partitions(
-                spark,
-                table_dir,
-                kept.filter(F.col(part_col).isin(rewrite)),
-                rewrite,
-                part_col=part_col,
-            )
-        fs, path_cls = hadoop_fs(spark, table_dir)
-        for d in drop:  # fully-erased days: no rows to stage, delete outright
-            fs.delete(path_cls(f"{table_dir}/{part_col}={d}"), True)
-        kept.unpersist()
-        report["partitions_rewritten"] = len(rewrite)
-        report["partitions_deleted"] = len(drop)
+        report["partitions_rewritten"] = len(kept_dates)
+        report["partitions_deleted"] = len(affected) - len(kept_dates)
 
     _land_tombstones(
         keyset,
@@ -176,6 +165,10 @@ def erase_keys(
         request_id,
         rows_erased=report["rows_erased"],
     )
+    if affected:
+        # fully-erased days stage nothing, so the swap deletes them
+        replace_partitions(spark, table_dir, kept, affected, part_col=part_col)
+        kept.unpersist()
     return report
 
 

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from data_ingestion_lambda_spark.operators.base_fold import base_fold, fold_horizon
 from data_ingestion_lambda_spark.operators.layout import (
+    finish_swaps,
     partition_values,
     refuse_stranded_fold,
     replace_partitions,
@@ -349,13 +350,14 @@ def compact_feature_ledger(spark: SparkSession, index_dir: str, keep_from: str) 
     the folded dates: a later apply for such a date would double-count,
     so fold only dates past the re-delivery policy.
 
-    Crash-safe via the one fold swap (operators/layout.py::fold_swap):
-    the full merged base lands in a dot-prefixed staging dir FIRST; a crash
-    between the partition drops and the final rename leaves staging as
-    the only complete copy, and the next entry REFUSES loudly with the
-    recovery path instead of recompacting a partial table."""
+    Crash-safe via the one staged partition swap
+    (operators/layout.py::replace_partitions): the full merged base
+    lands in a dot-prefixed staging dir FIRST, and a crash inside the
+    swap is finished by the next writer of the ledger, this entry
+    included, before it lists the partitions."""
     _dt.date.fromisoformat(keep_from)
     refuse_stranded_fold(spark, index_dir, "compact_feature_ledger", "date", BASE_DATE)
+    finish_swaps(spark, index_dir)
     fold = [
         d
         for d in partition_values(spark, index_dir, "date")
@@ -385,7 +387,7 @@ def compact_feature_ledger(spark: SparkSession, index_dir: str, keep_from: str) 
         return 0
     if not fold:
         return 0
-    # Delegate the horizon-first marker, stage→drop→rename loop and the
+    # Delegate the horizon-first marker, staged swap and the
     # empty-partition guard to the shared base_fold (operators/
     # base_fold.py, review r10 — this was the third drifted copy); the
     # feature-specific pre-checks above (marker-less-base refusal, the

@@ -9,14 +9,22 @@ the reference keeps its progress in S3 keys (src/s3_processor.py:113-210):
   ``_target=``, ``_keyed_by=`` and ``_order=``; empty dirs, because a
   mkdir is atomic on every Hadoop FS and the underscore hides them from
   Spark's file index (a marker is read like a partition, by its own key);
-- swap directories, dot-prefixed so readers never see them:
-  ``.staging-<uuid>`` (``replace_partitions``) and ``.compact-staging``
-  (``fold_swap``).
+- swap directories ``.staging-swap-<uuid>``, dot-prefixed so readers
+  never see them. ``replace_partitions`` is the one staged partition
+  swap: every upsert, store apply, fold, compaction, erasure and expiry
+  goes through it. Its staging dir records its plan and then a complete
+  mark, so one crash rule covers every caller: the next writer of the
+  directory finishes a complete staging dir and deletes an incomplete
+  one (``finish_swaps``). That rule assumes ONE writer per directory at
+  a time. Earlier versions left two other shapes, both refused when
+  they may hold the only copy of a partition: ``.compact-staging``
+  (``refuse_stranded_fold``) and a plain ``.staging-<uuid>``
+  (``finish_swaps``).
 
 All directory I/O goes through the JVM Hadoop FS API, so the same code
 runs on file://, hdfs://, s3a:// and abfss:// paths. Hadoop reports most
 failures by RETURNING FALSE, not raising; every swap step here checks it
-and raises with the directory that still holds the data.
+and raises.
 
 What a marker value MEANS (legacy defaults, refusals) stays with each
 store; this module owns only the listing, parsing and swap mechanics.
@@ -30,7 +38,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 PARTITION_COL = "date"
 KEYINGS = ("date", "ingest_batch")  # the two ledger partition columns
-FOLD_STAGING = ".compact-staging"
+STAGING_PREFIX = ".staging-"  # every swap dir, this version's and legacy
+SWAP_STAGING = ".staging-swap-"  # the ones replace_partitions writes
+FOLD_STAGING = ".compact-staging"  # legacy: see refuse_stranded_fold
 
 
 def hadoop_fs(spark: SparkSession, path: str):
@@ -136,82 +146,123 @@ def ledger_keying(
 def replace_partitions(
     spark: SparkSession,
     target_dir: str,
-    df: DataFrame,
+    df: DataFrame | None,
     dates,
     extra_partition_cols: tuple[str, ...] = (),
     part_col: str = PARTITION_COL,
 ) -> None:
-    """Staged per-partition commit: materialize ``df`` into a hidden
-    staging directory (dot-prefixed → invisible to readers), then swap
-    each listed date partition in with delete+rename.
+    """The package's one staged partition swap: the listed ``<part_col>=``
+    partitions of ``target_dir`` become what ``df`` holds for them.
 
-    ``extra_partition_cols`` adds secondary Hive partition levels UNDER
-    the date (e.g. ``date=D/cell=C/``) so readers can partition-prune on
-    them; the commit protocol is unchanged — the swap still moves whole
-    ``date=D`` directories (sub-partitions ride along atomically), so the
-    idempotence and failure contracts below hold regardless.
+    1. Finish any swap a crashed writer left (``finish_swaps``).
+    2. Write ``df`` under ``.staging-swap-<uuid>`` (dot-prefixed, so readers
+       never see it), partitioned by ``part_col`` and then
+       ``extra_partition_cols`` (secondary levels such as
+       ``date=D/cell=C/`` ride along inside each swapped directory).
+    3. Record the plan in marker dirs: ``_swap=<v>`` for each listed
+       value the write staged, ``_drop=<v>`` for each it did not, then
+       ``_complete=<part_col>`` last of all.
+    4. Carry the plan out: delete and rename each staged partition into
+       place, delete each drop-only partition, remove the staging dir.
 
-    Empty partitions REPLACE too (ADVICE r9): a listed date for which
-    ``df`` stages no rows means "this partition's new content is
-    empty" — the old partition is deleted outright, mirroring the
-    fully-erased-partition handling in ``erasure.erase_keys``. Without
-    this, re-applying a corrected store batch that now produces zero
-    rows would silently leave the stale partition in place. (Callers
-    that want "empty recompute keeps the old partition" — the CDC
-    feed's replay guard — must skip the call, as that caller does.)
+    A listed value that stages nothing REPLACES with nothing (ADVICE r9):
+    its old partition is deleted, so a corrected batch that now yields
+    zero rows cannot leave stale ones. ``df=None`` stages nothing at all,
+    which makes the call a delete of every listed partition. A caller
+    that wants "empty recompute keeps the old partition" (the CDC feed's
+    replay guard) skips the call.
 
-    Stage 1 fully consumes any snapshot reads of the live partitions
-    before stage 2 touches them; rename is atomic on HDFS-like stores, so
-    the non-atomic window is one partition's delete→rename instant.
-    Failure safety: Hadoop rename reports most failures by RETURNING
-    FALSE, not raising — a failed or crashed swap raises and PRESERVES the
-    staging directory (it holds the only copy of that partition's merged
-    data, including pre-existing rows); the error names the path for
-    manual recovery or a re-run."""
-    staging_dir = f"{target_dir}/.staging-{uuid.uuid4().hex}"
-    df.write.mode("overwrite").partitionBy(
-        part_col, *extra_partition_cols
-    ).parquet(staging_dir)
-
+    Crash rule: a staging dir without ``_complete=`` is deleted by the
+    next writer, which recomputes from an untouched table; one with it
+    is finished by the next writer, because step 4 may already have
+    deleted partitions whose rows live only in staging. Every Hadoop
+    step that reports failure by RETURNING FALSE raises here, leaving the
+    staging dir for that next writer."""
+    finish_swaps(spark, target_dir)
+    staging = f"{target_dir}/{SWAP_STAGING}{uuid.uuid4().hex}"
     fs, path_cls = hadoop_fs(spark, target_dir)
-    fs.mkdirs(path_cls(target_dir))
-    for d in dates:
-        part = f"{part_col}={d}"
-        src = path_cls(f"{staging_dir}/{part}")
+    if df is not None:
+        df.write.mode("overwrite").partitionBy(
+            part_col, *extra_partition_cols
+        ).parquet(staging)
+        # Another writer's finish_swaps deletes an incomplete staging dir;
+        # swapping in what is left would turn this replace into a delete.
+        if not fs.exists(path_cls(f"{staging}/_SUCCESS")):
+            raise IOError(f"partition swap: {staging} vanished; one writer per dir")
+    staged = set(partition_values(spark, staging, part_col))
+    for v in dict.fromkeys(str(d) for d in dates):
+        _mkdir(fs, path_cls, f"{staging}/{'_swap' if v in staged else '_drop'}={v}")
+    _mkdir(fs, path_cls, f"{staging}/_complete={part_col}")
+    _finish(fs, path_cls, target_dir, staging)
+
+
+def finish_swaps(spark: SparkSession, target_dir: str) -> None:
+    """The one crash rule for ``target_dir``: finish every complete
+    ``.staging-swap-*`` a crashed ``replace_partitions`` left and delete
+    every incomplete one. Idempotent, so a crash inside it is finished by
+    the next call. A plain ``.staging-<uuid>`` comes from earlier
+    versions, whose swap deleted a partition before renaming its staged
+    copy in: one whose write completed (``_SUCCESS``) and that holds a
+    partition missing from the table REFUSES, because that is the only
+    copy; any other is deleted. ``replace_partitions`` runs it on entry;
+    a caller that READS the table and rewrites it runs it before building
+    that read, so the read never sees a half-swapped table."""
+    fs, path_cls = hadoop_fs(spark, target_dir)
+    for name in _dir_names(spark, target_dir):
+        if name.startswith(STAGING_PREFIX):
+            _finish(fs, path_cls, target_dir, f"{target_dir}/{name}")
+
+
+def _mkdir(fs, path_cls, path: str) -> None:
+    if not fs.mkdirs(path_cls(path)):
+        raise IOError(f"partition swap failed: mkdirs {path} returned false")
+
+
+def _finish(fs, path_cls, target_dir: str, staging: str) -> None:
+    """Carry out the plan recorded in ``staging`` (nothing when it has no
+    ``_complete=`` mark), then remove it. Every step is skipped when
+    already done: a staged partition no longer in staging was renamed,
+    and a drop-only partition never comes back."""
+    names = [st.getPath().getName() for st in fs.listStatus(path_cls(staging))]
+    legacy = not staging.rsplit("/", 1)[1].startswith(SWAP_STAGING)
+    for part in names if legacy and "_SUCCESS" in names else []:
+        live = path_cls(f"{target_dir}/{part}")
+        if "=" in part and not part.startswith(("_", ".")) and not fs.exists(live):
+            raise IOError(
+                f"{staging} (left by an earlier version's crashed swap) holds "
+                f"the only copy of {part}: rename {staging}/{part} to {live}, "
+                "delete the staging dir and re-run"
+            )
+    complete = [n.split("=", 1)[1] for n in names if n.startswith("_complete=")]
+    for name in names if complete else []:
+        step, _, v = name.partition("=")
+        part = f"{complete[0]}={v}"
         dst = path_cls(f"{target_dir}/{part}")
-        if fs.exists(src):
+        if step == "_swap" and part in names:
             if fs.exists(dst) and not fs.delete(dst, True):
                 raise IOError(
-                    f"partition swap failed: delete {dst} returned false; "
-                    f"staged data preserved under {staging_dir}"
+                    f"partition swap failed: delete {dst} returned false; the "
+                    f"next writer of {target_dir} finishes {staging}"
                 )
-            if not fs.rename(src, dst):
+            if not fs.rename(path_cls(f"{staging}/{part}"), dst):
                 raise IOError(
-                    f"partition swap failed: rename {src} -> {dst} returned false; "
-                    f"staged data preserved under {staging_dir}"
+                    f"partition swap failed: rename {staging}/{part} -> {dst} "
+                    f"returned false; the next writer of {target_dir} finishes it"
                 )
-        elif fs.exists(dst):
-            # df staged nothing for this listed date: its new content is
-            # empty — replace means delete, not keep (ADVICE r9). Hadoop
-            # FS reports most failures by RETURNING FALSE, not raising —
-            # a swallowed false here would keep serving the stale rows
-            # this branch exists to remove (review r10).
-            if not fs.delete(dst, True):
-                raise IOError(
-                    f"empty-partition replace failed: delete {dst} returned false"
-                )
-    # All swaps succeeded — only now discard staging. (On failure the
-    # staging dir is deliberately left in place; it is dot-prefixed, so
-    # readers never see it.)
-    fs.delete(path_cls(staging_dir), True)
+        elif step == "_drop" and fs.exists(dst) and not fs.delete(dst, True):
+            raise IOError(f"partition swap failed: delete {dst} returned false")
+    if not fs.delete(path_cls(staging), True):
+        raise IOError(f"partition swap failed: delete {staging} returned false")
 
 
 def refuse_stranded_fold(
     spark: SparkSession, path: str, op_name: str, part_key: str, base_key: str
 ) -> None:
-    """Refuse to run over a ``.compact-staging`` left by a crashed
-    ``fold_swap``: it holds the only complete copy of the folded base,
-    and recompacting the partly-dropped partitions would lose rows."""
+    """Legacy guard: refuse to run over a ``.compact-staging`` left by a
+    crash of the fold swap this package used before every fold went
+    through ``replace_partitions``. It holds the only complete copy of
+    the folded base, and recompacting the partly-dropped partitions
+    would lose rows. Nothing writes ``.compact-staging`` any more."""
     staging = f"{path}/{FOLD_STAGING}"
     fs, path_cls = hadoop_fs(spark, path)
     if fs.exists(path_cls(staging)):
@@ -220,57 +271,4 @@ def refuse_stranded_fold(
             "holds the full pre-crash base; remove any leftover folded "
             f"{part_key}=* dirs under {path} and rename it to "
             f"{part_key}={base_key}"
-        )
-
-
-def fold_swap(
-    spark: SparkSession,
-    path: str,
-    fold: list[str],
-    base: DataFrame | None,
-    *,
-    op_name: str,
-    part_key: str,
-    base_key: str,
-    partition_by: list[str] | tuple[str, ...] = (),
-) -> None:
-    """Replace the ``<part_key>=`` partitions named in ``fold`` (the old
-    base among them, if any) with one base partition
-    ``<part_key>=<base_key>`` holding ``base``: stage ``base`` in
-    ``.compact-staging``, delete the folded partitions, rename staging
-    to the base. ``base=None`` only deletes (the folded dirs held no
-    rows). Every moment has a complete copy on disk; a crash between the
-    deletes and the rename leaves staging as that copy, and the next run
-    refuses (``refuse_stranded_fold``) until it is moved into place."""
-    # Checked again here, not only by the caller: the staging write
-    # below overwrites, and a stranded staging is the only copy.
-    refuse_stranded_fold(spark, path, op_name, part_key, base_key)
-    fs, path_cls = hadoop_fs(spark, path)
-    staging = f"{path}/{FOLD_STAGING}"
-    target = f"{part_key}={base_key}"
-    if base is not None:
-        writer = base.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(staging)
-    for v in fold:
-        full = path_cls(f"{path}/{part_key}={v}")
-        if fs.exists(full) and not fs.delete(full, True):
-            raise IOError(
-                f"{op_name}: delete of {full} returned false; "
-                + (
-                    f"full compacted base preserved at {staging} — finish "
-                    f"by removing remaining folded {part_key}=* dirs and "
-                    f"renaming it to {target}"
-                    if base is not None
-                    else "the folded dirs were empty; remove manually"
-                )
-            )
-    if base is not None and not fs.rename(
-        path_cls(staging), path_cls(f"{path}/{target}")
-    ):
-        raise IOError(
-            f"{op_name}: rename {staging} -> {target} returned false; the "
-            "compacted base is intact in staging — rename it manually to "
-            "finish"
         )

@@ -44,8 +44,8 @@ file-index build grow with directory count, so
 ``compact_postings_index`` folds every date partition strictly before a
 ``keep_from`` horizon into the reserved base partition
 ``date=0000-00-00`` (the feature store's crash-guarded base-fold:
-``_horizon=`` marker recorded BEFORE staging, stranded-staging refusal,
-stage→drop→rename through the Hadoop FS API). The fold is exact by the
+``_horizon=`` marker recorded BEFORE staging, then the one staged
+partition swap, whose crashes the next run finishes). The fold is exact by the
 one-batch-per-doc contract: postings/doclen rows are DISJOINT across
 dates (plain concatenation), stats rows are additive (one summed row) —
 so post-compaction search is row-equal to pre-compaction search, pinned
@@ -252,11 +252,10 @@ def compact_postings_index(
     Crash-safety is the feature store's ledger discipline, per
     sub-table: the ``_horizon=`` marker is advanced FIRST (a too-high
     horizon after a crash only refuses applies it could have accepted,
-    never double-counts one); each sub-table then stages its full
-    merged base in a dot-prefixed dir, drops its folded ``date=`` dirs,
-    and renames staging into place — a stranded staging dir makes the
-    next run REFUSE with the recovery path rather than recompact a
-    partial table. A crash between sub-tables leaves the finished ones
+    never double-counts one); each sub-table then swaps its full merged
+    base in through the one staged partition swap, and the next run
+    finishes a swap a crash interrupted before it reads the sub-table,
+    so it never recompacts a partial table. A crash between sub-tables leaves the finished ones
     folded and the rest still date-keyed; a re-run folds the remainder
     (the fold set always includes the existing base). ``keep_from`` is
     an ISO date for a CLI-keyed index or a ``b<id>`` key for a streamed

@@ -71,6 +71,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_lambda_spark.operators.layout import (
+    finish_swaps,
     hadoop_fs,
     ledger_keying,
     partition_values,
@@ -292,6 +293,7 @@ def _recompute_postings_stats(
     property update_postings' additive-stats contract rests on)."""
     survived = set(partition_values(spark, f"{index_dir}/doclen", part_key))
     todo = [v for v in affected if v in survived]
+    stats = None
     if todo:
         stats = (
             read_partitions(spark, f"{index_dir}/doclen", part_key, todo)
@@ -302,21 +304,11 @@ def _recompute_postings_stats(
                 F.sum("dl").cast("long").alias("t_tokens"),
             )
         )
-    else:
-        stats = None
     # fully-erased doclen partitions get their stats partition deleted
-    # (stats staged for them is empty -> replace deletes); partly-erased
-    # ones get the recomputed scalar row
+    # (nothing staged for them -> replace deletes); partly-erased ones
+    # get the recomputed scalar row
     replace_partitions(
-        spark,
-        f"{index_dir}/stats",
-        stats
-        if stats is not None
-        else spark.createDataFrame(
-            [], f"{part_key} string, n_docs long, t_tokens long"
-        ),
-        affected,
-        part_col=part_key,
+        spark, f"{index_dir}/stats", stats, affected, part_col=part_key
     )
 
 
@@ -358,6 +350,7 @@ def erase_store(
     doclen_part_key = "date"
     for s in spec.subs:
         sub_dir = f"{index_dir}/{s.sub}" if s.sub else index_dir
+        finish_swaps(spark, sub_dir)
         part_key = ledger_keying(spark, sub_dir, "date")
         if s.sub == "doclen":
             doclen_part_key = part_key
@@ -369,6 +362,9 @@ def erase_store(
         for k in ("rows_erased", "partitions_rewritten", "partitions_deleted"):
             report[k] += sub_report[k]
     if spec.derived == "postings_stats":
+        # finished even when nothing is touched: a re-run after a crash
+        # inside the stats swap erases nothing, and never reaches it
+        finish_swaps(spark, f"{index_dir}/stats")
         touched = report["subs"].get("doclen", {}).get("affected") or []
         if touched:
             _recompute_postings_stats(

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from data_ingestion_lambda_spark.operators.layout import (
     PARTITION_COL,
+    finish_swaps,
     partition_values,
     replace_partitions,
 )
@@ -149,6 +150,9 @@ def _merge_and_swap(
     dates, read the stored rows of those dates aligned to the batch's
     schema, merge, run ``before_swap(existing, merged)`` if given, then
     swap the merged partitions in. Returns the dates written."""
+    # A swap a crashed run left must be finished before the read below:
+    # its deleted partitions' rows, stored ones included, are in staging.
+    finish_swaps(spark, target_dir)
     batch = batch.cache()
     held = [batch]
     try:
@@ -207,11 +211,13 @@ def upsert_into_parquet(
     each touched date partition is swapped in with a delete+rename. The
     full-job failure mode (crash during the merge write) therefore leaves
     the target untouched; the remaining non-atomic window is the instant
-    between one partition's delete and its rename. A crash exactly there
-    leaves that date's rows, stored ones included, only in the stranded
-    ``.staging-<uuid>/date=D``, which a re-run never reads: recover by
-    moving that directory back to ``date=D``. Per-file, the reference has
-    the same shape via DB transactions (src/db_operations.py:29)."""
+    between one partition's delete and its rename. A crash there leaves
+    that date's rows, stored ones included, in the complete
+    ``.staging-swap-<uuid>``, and the next writer of the table (a re-run
+    included) finishes that swap before it reads the table, so the
+    re-run converges to the state of a run that did not crash. Per-file,
+    the reference has the same shape via DB transactions
+    (src/db_operations.py:29)."""
     return _merge_and_swap(spark, target_dir, batch, keys, order_cols)
 
 

@@ -48,9 +48,10 @@ from pyspark.sql.types import (
 
 from data_ingestion_lambda_spark.operators.layout import (
     committed_front,
-    fold_swap,
+    finish_swaps,
     partition_values,
     refuse_stranded_fold,
+    replace_partitions,
 )
 from data_ingestion_lambda_spark.streaming.driver import drain, paced_reader
 
@@ -554,12 +555,13 @@ def _compact_batch_ledger(
     lexicographically), so there is no orderable partial horizon — the
     offline fold between triggers is the correct maintenance op,
     exactly like operators/compact.py. Read equality before/after is
-    pinned by test. The swap is the one fold swap
-    (operators/layout.py::fold_swap): the full fold is staged FIRST, so
-    a crash between the part-drop and the final rename leaves staging
-    as the complete copy, and the next entry REFUSES loudly with the
-    recovery path instead of recompacting a partial table."""
+    pinned by test. The swap is the one staged partition swap
+    (operators/layout.py::replace_partitions): the full fold is staged
+    as ``ingest_batch=-1`` FIRST, and a crash inside the swap is
+    finished by the next writer, this entry included, before it lists
+    or reads the ledger."""
     refuse_stranded_fold(spark, target_dir, op_name, "ingest_batch", "-1")
+    finish_swaps(spark, target_dir)
     keys = partition_values(spark, target_dir, "ingest_batch")
     ids = sorted(int(v) for v in keys if v != "-1")
     if checkpoint_dir is not None:
@@ -570,14 +572,13 @@ def _compact_batch_ledger(
     if not fold_ids:
         return 0
     fold = [str(i) for i in fold_ids] + (["-1"] if "-1" in keys else [])
-    fold_swap(
+    base = fold_df([f"{target_dir}/ingest_batch={v}" for v in fold])
+    replace_partitions(
         spark,
         target_dir,
-        fold,
-        fold_df([f"{target_dir}/ingest_batch={v}" for v in fold]),
-        op_name=op_name,
-        part_key="ingest_batch",
-        base_key="-1",
+        base.withColumn("ingest_batch", F.lit("-1")),
+        fold + ["-1"],
+        part_col="ingest_batch",
     )
     return len(fold_ids)
 

@@ -35,9 +35,10 @@ CASES = {
 
 # Outcomes in CASES order. dedup-gate used to start its session before
 # checking anything, so every row read `session` there; its refusals now
-# run first, like every other store's.
+# run first, like every other store's, and --stream-source with --batch
+# refuses there as in the other streamed stores.
 EXPECTED = {
-    "dedup-gate": (REFUSE, REFUSE, REFUSE, SESSION, REFUSE, SESSION),
+    "dedup-gate": (REFUSE, REFUSE, REFUSE, REFUSE, REFUSE, SESSION),
     "vocab": (REFUSE, REFUSE, REFUSE, REFUSE, REFUSE, SESSION),
     "ann-index": (REFUSE, REFUSE, REFUSE, REFUSE, REFUSE, SESSION),
     "search-index": (REFUSE, REFUSE, REFUSE, REFUSE, REFUSE, SESSION),
@@ -81,6 +82,24 @@ def test_store_argument_rules(store, monkeypatch, capsys):
     monkeypatch.setattr(cli, "get_spark", _no_session)
     got = {name: _outcome(store, case) for name, case in CASES.items()}
     assert got == dict(zip(CASES, EXPECTED[store]))
+
+
+# Store-specific refusals that read only arguments, so they must come
+# before the session: nothing may land before the command is refused.
+OWN_REFUSALS = [
+    ("feature-store", ["--decayed-out", "d.parquet"]),
+    ("feature-store", ["--as-of", "2025-01-01", "--compact-before", "2025-01-01"]),
+    (
+        "feature-store",
+        ["--batch", "b.parquet", "--date", "2025-01-01", "--decayed-out", "d.parquet"],
+    ),
+]
+
+
+@pytest.mark.parametrize("store,case", OWN_REFUSALS)
+def test_store_refuses_before_the_session(store, case, monkeypatch):
+    monkeypatch.setattr(cli, "get_spark", _no_session)
+    assert _outcome(store, case) == REFUSE
 
 
 def test_shared_store_flags_are_defined_once():

@@ -208,6 +208,36 @@ def test_cli_stream_fronts(spark, tmp_path, capsys):
     assert read_sessions(spark, sess_idx).count() > 0
 
 
+def test_cli_vocab_stream_then_fold(spark, tmp_path, capsys):
+    """A streamed vocab invocation with --compact-keep-from drains first
+    and then folds, as the daily form does; the model reads the same."""
+    import json
+
+    from data_ingestion_lambda_spark.cli import main
+    from data_ingestion_lambda_spark.operators.layout import partition_values
+    from data_ingestion_lambda_spark.operators.vocab import _batch_counts, read_vocab
+
+    docs = _docs(spark)
+    src = str(tmp_path / "docs_src")
+    _two_drops(docs, src, F.col("doc_id") % 2 == 0)()
+    vocab = str(tmp_path / "vocab")
+    rc = main(
+        [
+            "vocab", "--vocab", vocab,
+            "--stream-source", src, "--checkpoint", str(tmp_path / "vckpt"),
+            "--max-files-per-trigger", "1", "--compact-keep-from", "b000000001",
+        ]
+    )
+    assert rc == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert len(rep["batches"]) >= 2
+    assert rep["compaction"]["folded"] == {"": 1}
+    assert partition_values(spark, vocab, "_horizon") == ["b000000001"]
+    assert sorted(map(tuple, read_vocab(spark, vocab).collect())) == sorted(
+        map(tuple, _batch_counts(docs).collect())
+    )
+
+
 def test_session_stream_normalizes_ns_long_ts(spark, tmp_path):
     """Review r8: raw generator drops carry ts as epoch-ns longs under
     the session factory's nanosAsLong conf; the session front must
