@@ -72,6 +72,13 @@ def partition_values(spark: SparkSession, path: str, key: str) -> list[str]:
     return sorted(n[len(prefix):] for n in _dir_names(spark, path) if n.startswith(prefix))
 
 
+def has_partition(spark: SparkSession, path: str, key: str, value) -> bool:
+    """Does ``path`` hold the ``<key>=<value>`` directory? One existence
+    check, no listing."""
+    fs, path_cls = hadoop_fs(spark, path)
+    return fs.exists(path_cls(f"{path}/{key}={value}"))
+
+
 def read_partitions(
     spark: SparkSession, path: str, key: str, values: list[str]
 ) -> DataFrame:

@@ -201,31 +201,20 @@ def _match_join(
     return t.join(k.alias("__e"), cond, how)
 
 
-def _erase_sub(
+def _affected_rows(
     spark: SparkSession,
     sub_dir: str,
     keyset: DataFrame,
     key_col: str,
     part_key: str,
-    inner_parts: tuple[str, ...],
-    base_keys: tuple[str, ...],
-    match_cols: tuple[str, ...] = (),
-) -> dict:
-    """Two-pass partition-pruned anti-join rewrite of one sub-table.
-    Base partitions (fold outputs, possibly schema-widened by the fold)
-    rewrite in their own pass so a base-only column never bleeds a NULL
-    twin into the live partitions' files."""
-    match_cols = match_cols or (key_col,)
-    out: dict = {
-        "rows_erased": 0,
-        "partitions_rewritten": 0,
-        "partitions_deleted": 0,
-        "affected": [],
-    }
+    match_cols: tuple[str, ...],
+) -> dict[str, int]:
+    """Pass 1 over one sub-table: ``{partition value: subject rows}`` for
+    every partition holding a subject row, from one key+partition-column
+    scan semi-joined against the (broadcast) request."""
     live = partition_values(spark, sub_dir, part_key)
     if not live:
-        return out
-    # pass 1: affected partitions from a key+partition-only scan
+        return {}
     table = read_partitions(spark, sub_dir, part_key, live)
     missing_cols = [c for c in match_cols if c not in table.columns]
     if missing_cols:
@@ -233,53 +222,58 @@ def _erase_sub(
             f"erase: sub-table {sub_dir} has no column(s) {missing_cols} "
             f"(columns: {table.columns})"
         )
-    affected = sorted(
-        str(r[part_key])
+    return {
+        str(r[part_key]): r["n"]
         for r in _match_join(
             table.select(*match_cols, part_key), keyset, key_col, match_cols, "semi"
         )
-        .select(part_key)
-        .distinct()
+        .groupBy(part_key)
+        .agg(F.count("*").alias("n"))
         .collect()
-    )
-    out["affected"] = affected
-    if not affected:
-        return out
-    # pass 2: rewrite, base partitions separately from live ones
+    }
+
+
+def _rewrite_sub(
+    spark: SparkSession,
+    sub_dir: str,
+    keyset: DataFrame,
+    key_col: str,
+    part_key: str,
+    inner_parts: tuple[str, ...],
+    base_keys: tuple[str, ...],
+    match_cols: tuple[str, ...],
+    affected: list[str],
+) -> tuple[int, int]:
+    """Pass 2 over one sub-table: anti-join-rewrite the ``affected``
+    partitions through the staged swap. Base partitions (fold outputs,
+    possibly schema-widened by the fold) rewrite in their own pass so a
+    base-only column never bleeds a NULL twin into the live partitions'
+    files. Returns (partitions rewritten, partitions deleted)."""
+    rewritten = deleted = 0
     for group in (
         [v for v in affected if v not in base_keys],
         [v for v in affected if v in base_keys],
     ):
         if not group:
             continue
-        # persisted: the erased-row count and the staged rewrite would
-        # otherwise each re-read and re-broadcast-join the whole group
-        # (review r13 — two scans per group on the erasure hot path)
         slice_ = read_partitions(spark, sub_dir, part_key, group).withColumn(
             part_key, F.col(part_key).cast("string")
-        ).persist()
-        try:
-            out["rows_erased"] += _match_join(
-                slice_, keyset, key_col, match_cols, "semi"
-            ).count()
-            kept = _match_join(slice_, keyset, key_col, match_cols, "anti")
-            # replace_partitions stages everything first, then swaps; a
-            # group value for which `kept` stages nothing is DELETED
-            # (fully-erased partition), mirroring erasure.erase_keys
-            replace_partitions(
-                spark,
-                sub_dir,
-                kept,
-                group,
-                extra_partition_cols=inner_parts,
-                part_col=part_key,
-            )
-        finally:
-            slice_.unpersist()
+        )
+        # replace_partitions stages everything first, then swaps; a
+        # group value for which the survivors stage nothing is DELETED
+        # (fully-erased partition), mirroring erasure.erase_keys
+        replace_partitions(
+            spark,
+            sub_dir,
+            _match_join(slice_, keyset, key_col, match_cols, "anti"),
+            group,
+            extra_partition_cols=inner_parts,
+            part_col=part_key,
+        )
         survived = set(partition_values(spark, sub_dir, part_key))
-        out["partitions_rewritten"] += sum(1 for v in group if v in survived)
-        out["partitions_deleted"] += sum(1 for v in group if v not in survived)
-    return out
+        rewritten += sum(1 for v in group if v in survived)
+        deleted += sum(1 for v in group if v not in survived)
+    return rewritten, deleted
 
 
 def _recompute_postings_stats(
@@ -325,7 +319,8 @@ def erase_store(
     name — see STORE_SPECS); unlearnable sketch stores refuse with the
     rebuild-or-rotate remedy. Idempotent: a replay finds no affected
     partitions and rewrites nothing. Lands a tombstone partition under
-    ``<index_dir>/_tombstones`` keyed by ``request_id``."""
+    ``<index_dir>/_tombstones`` keyed by ``request_id``, before the first
+    swap."""
     if not request_id:
         raise ValueError("erase_store: request_id is required (audit key)")
     if store in UNLEARNABLE:
@@ -348,19 +343,38 @@ def erase_store(
         "subs": {},
     }
     doclen_part_key = "date"
+    # Pass 1 over every sub-table before the first swap, so the tombstone
+    # lands with the whole request's count before anything is erased.
+    plans = []
     for s in spec.subs:
         sub_dir = f"{index_dir}/{s.sub}" if s.sub else index_dir
         finish_swaps(spark, sub_dir)
         part_key = ledger_keying(spark, sub_dir, "date")
         if s.sub == "doclen":
             doclen_part_key = part_key
-        sub_report = _erase_sub(
-            spark, sub_dir, keyset, key_col, part_key,
-            s.inner_parts, spec.base_keys, match_cols=s.key_cols,
-        )
+        match_cols = s.key_cols or (key_col,)
+        rows = _affected_rows(spark, sub_dir, keyset, key_col, part_key, match_cols)
+        sub_report = {
+            "rows_erased": sum(rows.values()),
+            "partitions_rewritten": 0,
+            "partitions_deleted": 0,
+            "affected": sorted(rows),
+        }
         report["subs"][s.sub or "."] = sub_report
-        for k in ("rows_erased", "partitions_rewritten", "partitions_deleted"):
-            report[k] += sub_report[k]
+        report["rows_erased"] += sub_report["rows_erased"]
+        plans.append((s, sub_dir, part_key, match_cols, sub_report))
+    _land_store_tombstones(keyset, key_col, index_dir, request_id, report)
+    for s, sub_dir, part_key, match_cols, sub_report in plans:
+        if not sub_report["affected"]:
+            continue
+        rewritten, deleted = _rewrite_sub(
+            spark, sub_dir, keyset, key_col, part_key, s.inner_parts,
+            spec.base_keys, match_cols, sub_report["affected"],
+        )
+        sub_report["partitions_rewritten"] = rewritten
+        sub_report["partitions_deleted"] = deleted
+        report["partitions_rewritten"] += rewritten
+        report["partitions_deleted"] += deleted
     if spec.derived == "postings_stats":
         # finished even when nothing is touched: a re-run after a crash
         # inside the stats swap erases nothing, and never reaches it
@@ -370,7 +384,6 @@ def erase_store(
             _recompute_postings_stats(
                 spark, index_dir, doclen_part_key, touched
             )
-    _land_store_tombstones(keyset, key_col, index_dir, request_id, report)
     return report
 
 
@@ -381,14 +394,17 @@ def _land_store_tombstones(
     request_id: str,
     report: dict,
 ) -> None:
-    """Audit record under the store root — same replay discipline as
-    ``erasure._land_tombstones``: a replay of an already-served request
-    (rows_erased == 0, record exists) keeps the original evidence."""
+    """Audit record under the store root, landed before the first swap
+    with the whole request's ``rows_erased``. An existing record is kept:
+    a re-run of the request, after a crash between two sub-table swaps
+    or after success, counts only what is left, so its count would
+    understate the request (``erasure._land_tombstones`` keeps the record
+    of a run that erased nothing, for the same reason)."""
     spark = keyset.sparkSession
     tomb = f"{index_dir}/_tombstones"
     target = f"{tomb}/request_id={request_id}"
     fs, path_cls = hadoop_fs(spark, tomb)
-    if report["rows_erased"] == 0 and fs.exists(path_cls(target)):
+    if fs.exists(path_cls(f"{target}/_SUCCESS")):
         return
     (
         keyset.select(

@@ -145,19 +145,23 @@ def _merge_and_swap(
     keys: list[str],
     order_cols: list[str] | None,
     before_swap: Callable[[DataFrame | None, DataFrame], None] | None = None,
+    dates: list | None = None,
 ) -> list:
-    """The merge core of both public upserts: cache ``batch``, collect its
-    dates, read the stored rows of those dates aligned to the batch's
+    """The merge core of both public upserts: take the batch's ``dates``
+    (collected here, over a cached ``batch``, when the caller passes
+    None), read the stored rows of those dates aligned to the batch's
     schema, merge, run ``before_swap(existing, merged)`` if given, then
     swap the merged partitions in. Returns the dates written."""
     # A swap a crashed run left must be finished before the read below:
     # its deleted partitions' rows, stored ones included, are in staging.
     finish_swaps(spark, target_dir)
-    batch = batch.cache()
-    held = [batch]
+    held = []
     try:
-        batch_dates = [r[0] for r in batch.select(PARTITION_COL).distinct().collect()]
-        if not batch_dates:
+        if dates is None:
+            batch = batch.cache()
+            held.append(batch)
+            dates = [r[0] for r in batch.select(PARTITION_COL).distinct().collect()]
+        if not dates:
             return []
 
         # Partition listing through the Hadoop FS API so the same code
@@ -174,7 +178,7 @@ def _merge_and_swap(
             existing = (
                 spark.read.option("mergeSchema", "true")
                 .parquet(target_dir)
-                .filter(F.col(PARTITION_COL).isin(batch_dates))
+                .filter(F.col(PARTITION_COL).isin(dates))
             )
             existing, batch = _align_schemas(existing, batch)
 
@@ -188,8 +192,8 @@ def _merge_and_swap(
             merged = merged.persist()
             held.append(merged)
             before_swap(existing, merged)
-        replace_partitions(spark, target_dir, merged, batch_dates)
-        return batch_dates
+        replace_partitions(spark, target_dir, merged, dates)
+        return dates
     finally:
         for df in held:
             df.unpersist()
@@ -201,10 +205,16 @@ def upsert_into_parquet(
     batch: DataFrame,
     keys: list[str] = UPSERT_KEYS,
     order_cols: list[str] | None = None,
+    *,
+    dates: list | None = None,
 ) -> list:
     """MERGE ``batch`` into the date-partitioned parquet table at
     ``target_dir``, rewriting only the partitions present in the batch.
     Returns the list of date values written (empty for an empty batch).
+    ``dates`` are the batch's distinct date values when the caller
+    already has them (the streaming ingest observes them in its one pass
+    over the micro-batch); None makes the merge collect them, at the cost
+    of caching ``batch`` and a distinct job.
 
     Commit protocol: the merged result is fully materialized into a hidden
     staging directory first (dot-prefixed → invisible to readers), then
@@ -218,7 +228,7 @@ def upsert_into_parquet(
     re-run converges to the state of a run that did not crash. Per-file,
     the reference has the same shape via DB transactions
     (src/db_operations.py:29)."""
-    return _merge_and_swap(spark, target_dir, batch, keys, order_cols)
+    return _merge_and_swap(spark, target_dir, batch, keys, order_cols, dates=dates)
 
 
 _NULL_DIGEST = "-" * 32  # fixed-width, not hex: unreachable by md5
@@ -255,6 +265,8 @@ def upsert_into_parquet_with_cdc(
     keys: list[str] = UPSERT_KEYS,
     order_cols: list[str] | None = None,
     ignore_cols: tuple = (),
+    *,
+    dates: list | None = None,
 ) -> dict:
     """MERGE like ``upsert_into_parquet`` and ALSO persist the batch's
     CHANGE FEED: one row per key the merge actually touched, labeled
@@ -280,7 +292,7 @@ def upsert_into_parquet_with_cdc(
     only difference is a refreshed ingest timestamp is a no-op, not an
     update; the documented cost is that the apply-feed-to-pre
     equivalence then holds up to those columns on unchanged-payload
-    rows.
+    rows. ``dates`` is ``upsert_into_parquet``'s.
 
     Plan cost over the plain upsert: the merged result is persisted and
     compared against the pre-merge rows of the touched partitions with
@@ -351,9 +363,11 @@ def upsert_into_parquet_with_cdc(
         finally:
             feed.unpersist()
 
-    dates = _merge_and_swap(spark, target_dir, batch, keys, order_cols, write_feed)
+    written = _merge_and_swap(
+        spark, target_dir, batch, keys, order_cols, write_feed, dates=dates
+    )
     return {
-        "dates": dates,
+        "dates": written,
         "inserts": counts.get("insert", 0),
         "updates": counts.get("update", 0),
         "changes_dir": feed_dir,

@@ -5,6 +5,11 @@ Design notes (100 TB target, tested on local[N]):
   broadcast decisions survive a 100x scale-up without re-tuning.
 - `spark.sql.shuffle.partitions` defaults to the local core count; on a
   real cluster AQE's coalescing makes the initial number mostly a ceiling.
+- Listing tasks equal task slots: a file listing over more than 32
+  directories (the drop tree, a table's partitions) runs as a Spark job
+  whose task count is capped at the same core count. Spark's default cap
+  (10000) gives one task per directory; past the slot count those tasks
+  add scheduling and Hadoop-conf serialization, not parallelism.
 - Session timezone pinned to UTC so results are comparable with external
   engines (DuckDB oracle) and stable across deploy regions.
 - Arrow enabled for any pandas interchange (vectorized UDF paths).
@@ -58,6 +63,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cores))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

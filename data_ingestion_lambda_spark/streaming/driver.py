@@ -15,7 +15,8 @@ output.
 
 Empty batches are the bodies' business, not the driver's: a
 ``batch.isEmpty()`` here would cost every micro-batch one more Spark job,
-and the consumption ingest already learns emptiness from its sink.
+and the consumption ingest already learns its row counts from its one
+observed pass over the batch.
 """
 
 from __future__ import annotations

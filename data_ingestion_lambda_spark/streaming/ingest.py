@@ -37,8 +37,12 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from data_ingestion_lambda_spark.functions.normalize import normalize_consumption
-from data_ingestion_lambda_spark.operators.layout import replace_partitions
+from data_ingestion_lambda_spark.functions.normalize import (
+    normalize_consumption,
+    stage_consumption,
+    staged_summary,
+)
+from data_ingestion_lambda_spark.operators.layout import has_partition, replace_partitions
 from data_ingestion_lambda_spark.operators.upsert import (
     merge_last_writer_wins,
     upsert_into_parquet,
@@ -58,13 +62,16 @@ QUARANTINE_PART_COL = "_batch_id"
 # (monotonic within a split) breaks ties inside one split.
 ORDER_COLS = ["_source_file", "_block_start", "_ingest_seq"]
 
-# Merges one micro-batch's good rows; returns what it merged (falsy when
-# there were no rows).
-Sink = Callable[[DataFrame, int], Any]
+# Merges one micro-batch's good rows, given their distinct dates; returns
+# what it merged. Called only for a batch with good rows.
+Sink = Callable[[DataFrame, int, list], Any]
 
 
 def _write_quarantine(
-    spark: SparkSession, quarantine_dir: str, quarantined: DataFrame, batch_id: int
+    spark: SparkSession,
+    quarantine_dir: str,
+    quarantined: DataFrame | None,
+    batch_id: int,
 ) -> None:
     """Persist the batch's bad rows under their own ``_batch_id=<id>``
     partition via the staged swap, so an at-least-once REPLAY of an
@@ -72,13 +79,18 @@ def _write_quarantine(
     appending a duplicate copy (ADVICE r13 — the old ``mode('append')``
     write duplicated quarantine rows on every replay). The underscore
     partition name stays reader-visible: Spark's file index exempts
-    ``_name=value`` partition dirs from its hidden-path filter."""
+    ``_name=value`` partition dirs from its hidden-path filter.
+
+    ``quarantined=None`` is a batch without bad rows: it writes nothing,
+    unless ``_batch_id=<id>`` already exists, which the swap then deletes
+    without a Spark job."""
+    if quarantined is None:
+        if not has_partition(spark, quarantine_dir, QUARANTINE_PART_COL, batch_id):
+            return
+    else:
+        quarantined = quarantined.withColumn(QUARANTINE_PART_COL, F.lit(batch_id))
     replace_partitions(
-        spark,
-        quarantine_dir,
-        quarantined.withColumn(QUARANTINE_PART_COL, F.lit(batch_id)),
-        [batch_id],
-        part_col=QUARANTINE_PART_COL,
+        spark, quarantine_dir, quarantined, [batch_id], part_col=QUARANTINE_PART_COL
     )
 
 
@@ -87,8 +99,8 @@ class IngestPaths:
     source_dir: str  # root of date-partitioned CSV drops
     target_dir: str  # parquet consumptions table (partitioned by date)
     checkpoint_dir: str  # streaming offset/commit log
-    # bad rows, one _batch_id=<id> partition per micro-batch (a replay
-    # replaces its own partition)
+    # bad rows, one _batch_id=<id> partition per micro-batch with bad
+    # rows (a replay replaces its own partition)
     quarantine_dir: str | None = None
     log_dir: str | None = None  # ingestion log (audit twin)
     # change feed (upsert_into_parquet_with_cdc): each micro-batch's
@@ -108,44 +120,48 @@ def _process_batch(
 ) -> Any:
     """The micro-batch body of every sink: order the rows, normalize them,
     merge the good ones through ``sink``, keep the bad ones, log. Returns
-    what the sink merged, or None when it merged nothing."""
+    what the sink merged, or None when it merged nothing.
+
+    One pass: a single Spark job scans the batch's CSV, normalizes every
+    row into one persisted frame and observes, through the Observation
+    API, what the rest of the body needs to know (the good rows' dates,
+    count and max date, the bad-row count). The merge, the quarantine
+    write and the log then read that frame or those figures, so the CSV
+    is scanned once and nothing is collected twice."""
     batch = batch.withColumn("_ingest_seq", F.monotonically_increasing_id())
-    good, quarantined = normalize_consumption(batch)
-    # Audit counts ride the upsert's own jobs via the Observation API —
-    # metrics accumulate while the MERGE materializes `good`, so the log
-    # costs zero extra passes (the previous good.agg() re-ran the whole
-    # normalize pipeline per batch: its plan differed from the upsert's
-    # cached one, so the cache never hit).
-    obs = Observation(f"ingest_batch_{batch_id}")
-    if log_dir is not None:
-        good = good.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows_upserted"),
-            F.max("date").alias("max_date"),
-        )
-    merged = sink(good, batch_id)
-    # Merge first, quarantine second. The order carries no safety: both
-    # writes run before the checkpoint commits this batch, so a crash
-    # between or after them replays the whole batch, and both converge
-    # under replay (the merge on its key, the quarantine write on its
-    # _batch_id partition).
-    if quarantine_dir is not None:
-        _write_quarantine(spark, quarantine_dir, quarantined, batch_id)
-    if log_dir is not None:
-        # The audit twin (src/s3_processor.py:147-154) as an append-only
-        # table, from the observed metrics. An empty batch short-circuits
-        # the upsert before any job touches the observed plan (metrics
-        # never materialize — obs.get would raise), and the sink merged
-        # nothing exactly in that case: log the explicit zero row instead.
-        m = obs.get if merged else {"rows_upserted": 0, "max_date": None}
-        log = spark.range(1).select(
-            F.lit(batch_id).alias("batch_id"),
-            F.lit(m["rows_upserted"]).cast("long").alias("rows_upserted"),
-            F.lit(m["max_date"]).cast("date").alias("max_date"),
-            F.current_timestamp().alias("logged_at"),
-        )
-        log.write.mode("append").parquet(log_dir)
-    return merged or None
+    staged = stage_consumption(batch).persist()
+    try:
+        obs = Observation(f"ingest_batch_{batch_id}")
+        staged.observe(obs, *staged_summary()).write.format("noop").mode("overwrite").save()
+        m = obs.get
+        good, quarantined = normalize_consumption(staged)
+        merged = sink(good, batch_id, m["dates"]) if m["rows_upserted"] else None
+        # Merge first, quarantine second. The order carries no safety:
+        # both writes run before the checkpoint commits this batch, so a
+        # crash between or after them replays the whole batch, and both
+        # converge under replay (the merge on its key, the quarantine
+        # write on its _batch_id partition).
+        if quarantine_dir is not None:
+            _write_quarantine(
+                spark,
+                quarantine_dir,
+                quarantined if m["rows_quarantined"] else None,
+                batch_id,
+            )
+        if log_dir is not None:
+            # The audit twin (src/s3_processor.py:147-154) as an
+            # append-only table; a batch without good rows logs its zero
+            # row (max_date NULL).
+            log = spark.range(1).select(
+                F.lit(batch_id).alias("batch_id"),
+                F.lit(m["rows_upserted"]).cast("long").alias("rows_upserted"),
+                F.lit(m["max_date"]).cast("date").alias("max_date"),
+                F.current_timestamp().alias("logged_at"),
+            )
+            log.write.mode("append").parquet(log_dir)
+        return merged or None
+    finally:
+        staged.unpersist()
 
 
 def run_ingest_to_jdbc_available_now(
@@ -186,9 +202,7 @@ def run_ingest_to_jdbc_available_now(
         upsert_via_jdbc,
     )
 
-    def merge(good: DataFrame, batch_id: int) -> bool:
-        if good.isEmpty():
-            return False
+    def merge(good: DataFrame, batch_id: int, dates: list) -> bool:
         # The parquet sink's reduction with no stored side: one winner per
         # key, created_at stamped from the batch's updated_at. The default
         # column lists of upsert_via_jdbc then update the payload and
@@ -231,10 +245,10 @@ def run_ingest_available_now(
     monotonic date checkpoint. This is the semantic fix for SURVEY §1.4.2/6.
     """
 
-    def merge(good: DataFrame, batch_id: int) -> list:
+    def merge(good: DataFrame, batch_id: int, dates: list) -> list:
         if paths.changes_dir is None:
             return upsert_into_parquet(
-                spark, paths.target_dir, good, order_cols=ORDER_COLS
+                spark, paths.target_dir, good, order_cols=ORDER_COLS, dates=dates
             )
         return upsert_into_parquet_with_cdc(
             spark,
@@ -246,6 +260,7 @@ def run_ingest_available_now(
             # audit timestamps refresh on every winning re-send; the
             # feed should capture PAYLOAD changes, not ingest-time churn
             ignore_cols=("updated_at", "created_at"),
+            dates=dates,
         )["dates"]
 
     written = drain(

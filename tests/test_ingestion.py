@@ -279,6 +279,98 @@ class TestStreamingIngest:
         )
         assert spark.read.parquet(qdir).count() == 3
 
+    def test_clean_batch_quarantine_write(self, spark, tmp_path):
+        """A batch without bad rows writes nothing, except that a replay
+        deletes the partition an earlier attempt of that batch left."""
+        from data_ingestion_lambda_spark.streaming.ingest import _write_quarantine
+
+        qdir = str(tmp_path / "quarantine")
+        _write_quarantine(spark, qdir, None, 3)
+        assert not os.path.exists(qdir)
+        bad = spark.createDataFrame([("not-a-date", "CLI009")], "date string, client_id string")
+        _write_quarantine(spark, qdir, bad, 7)
+        _write_quarantine(spark, qdir, bad, 8)
+        _write_quarantine(spark, qdir, None, 7)
+        assert sorted(os.listdir(qdir)) == ["_batch_id=8"]
+
+    def test_one_pass_per_micro_batch(self, spark, tmp_path):
+        """Each micro-batch scans its CSV once and runs at most 5 Spark
+        jobs: one pass normalizes and persists the rows and observes the
+        dates and counts, and the merge, the quarantine write and the log
+        read that. A batch without bad rows writes no quarantine
+        partition, and still logs its row. Fewer than 32 drop dirs, so
+        no file listing runs as a Spark job."""
+        import threading
+
+        from pyspark.sql.streaming import StreamingQueryListener
+
+        class Progress(StreamingQueryListener):
+            def __init__(self):
+                self.run_ids: list[str] = []
+                self.input_rows: dict[str, int] = {}
+                self.batches: dict[str, int] = {}
+                self.done = threading.Condition()
+                self.terminated: set[str] = set()
+
+            def onQueryStarted(self, event):
+                with self.done:
+                    self.run_ids.append(str(event.runId))
+                    self.done.notify_all()
+
+            def onQueryProgress(self, event):
+                p = event.progress
+                run = str(p.runId)
+                self.input_rows[run] = self.input_rows.get(run, 0) + p.numInputRows
+                self.batches[run] = self.batches.get(run, 0) + (p.numInputRows > 0)
+
+            def onQueryIdle(self, event):
+                pass
+
+            def onQueryTerminated(self, event):
+                with self.done:
+                    self.terminated.add(str(event.runId))
+                    self.done.notify_all()
+
+        paths = self._paths(tmp_path)
+        waves = [
+            {  # batch 0: one bad row among the good ones
+                "2025_05_01": ["2025-05-01,CLI001,A,API,1", "2025-05-01,CLI002,B,API,2"],
+                "2025_05_02": ["2025-05-02,CLI001,A,API,3", "bad-date,CLI003,C,API,4"],
+            },
+            {  # batch 1: clean
+                "2025_05_03": ["2025-05-03,CLI001,A,API,5"],
+                "2025_05_04": ["2025-05-04,CLI002,B,API,6", "2025-05-04,CLI003,C,API,7"],
+            },
+        ]
+        listener = Progress()
+        spark.streams.addListener(listener)
+        try:
+            for i, wave in enumerate(waves):
+                for d, rows in wave.items():
+                    write_csv(drop_dir(paths.source_dir, d), f"consumption_{d}.csv", rows)
+                written = run_ingest_available_now(spark, paths)
+                assert written == sorted(d.replace("_", "-") for d in wave)
+                with listener.done:
+                    assert listener.done.wait_for(lambda: len(listener.run_ids) > i, 30)
+                    run = listener.run_ids[i]
+                    assert listener.done.wait_for(lambda: run in listener.terminated, 30)
+                landed = sum(len(rows) for rows in wave.values())
+                assert listener.input_rows[run] == landed, "the CSV was scanned more than once"
+                jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(run)
+                assert listener.batches[run] == 1
+                assert len(jobs) <= 5, f"{len(jobs)} Spark jobs for one micro-batch"
+        finally:
+            spark.streams.removeListener(listener)
+
+        parts = [n for n in os.listdir(paths.quarantine_dir) if n.startswith("_batch_id=")]
+        assert parts == ["_batch_id=0"]
+        assert spark.read.parquet(paths.quarantine_dir).count() == 1
+        log = sorted(
+            (r.batch_id, r.rows_upserted, str(r.max_date))
+            for r in spark.read.parquet(paths.log_dir).collect()
+        )
+        assert log == [(0, 3, "2025-05-02"), (1, 3, "2025-05-04")]
+
     def test_empty_header_only_file(self, spark, tmp_path):
         paths = self._paths(tmp_path)
         write_csv(drop_dir(paths.source_dir, "2025_05_01"), "consumption_2025_05_01.csv", [])

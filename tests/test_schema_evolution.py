@@ -121,3 +121,40 @@ def test_type_change_is_rejected_loudly(spark, tmp_path, upsert):
             _mk(spark, [("2025-06-01", "A", "one", "2025-06-01 01:00:00")], bad),
             keys=KEYS,
         )
+
+
+@each_upsert
+def test_new_dates_keep_the_whole_table_schema(spark, tmp_path, upsert):
+    """A batch whose dates are all new still meets the stored schema of
+    the whole table, not only that of the dates it touches: a type change
+    on a shared column is rejected, and a column the producer stopped
+    sending is written, as NULL, into the new date's own files. A merge
+    that reads only the touched partitions must keep both."""
+    target = str(tmp_path / "t")
+    upsert(
+        spark, target, _mk(spark, [("2025-06-01", "A", 1, "2025-06-01 00:00:00")], _BASE),
+        keys=KEYS,
+    )
+    upsert(
+        spark,
+        target,
+        _mk(spark, [("2025-06-02", "B", 2, "eu", "2025-06-02 00:00:00")], _WIDE),
+        keys=KEYS,
+    )
+    bad = "date string, client_code string, total_consumed_tokens string, updated_at string"
+    with pytest.raises(ValueError, match="incompatible schema evolution"):
+        upsert(
+            spark,
+            target,
+            _mk(spark, [("2025-06-03", "C", "three", "2025-06-03 00:00:00")], bad),
+            keys=KEYS,
+        )
+    assert not (tmp_path / "t" / "date=2025-06-03").exists()
+
+    upsert(
+        spark, target, _mk(spark, [("2025-06-04", "D", 4, "2025-06-04 00:00:00")], _BASE),
+        keys=KEYS,
+    )
+    own = spark.read.parquet(f"{target}/date=2025-06-04")
+    assert "region" in own.columns
+    assert [(r.client_code, r.region) for r in own.collect()] == [("D", None)]

@@ -337,7 +337,9 @@ def test_store_erasure_finishes_a_crashed_stats_swap(spark, tmp_path, faults):
     """The search index's BM25 ``stats`` partitions are rewritten last,
     from the erased ``doclen``; the last three mutating calls all fall
     inside that swap. A re-run after a crash there erases nothing, so it
-    must finish the stats swap without reaching the rewrite."""
+    must finish the stats swap without reaching the rewrite. At every
+    crash point the tombstone keeps the whole request's count: it lands
+    before the first swap, and a re-run keeps it."""
     from data_ingestion_lambda_spark.operators.postings import update_postings
     from data_ingestion_lambda_spark.operators.store_erasure import erase_store
 
@@ -349,16 +351,23 @@ def test_store_erasure_finishes_a_crashed_stats_swap(spark, tmp_path, faults):
     def op(root):
         erase_store(spark, "search-index", root, keys, "req-1")
 
+    def rows_erased(root):
+        tomb = spark.read.parquet(str(root / "_tombstones" / "request_id=req-1"))
+        return sorted(r.rows_erased for r in tomb.collect())
+
     ref = tmp_path / "uncrashed"
     shutil.copytree(seed, ref)
     n = _run(faults, op, ref)
-    for k in range(n - 2, n + 1):
+    assert rows_erased(ref) == [7, 7]  # one tombstone row per subject key
+    for k in range(1, n + 1):
         root = tmp_path / f"crash-{k}"
         shutil.copytree(seed, root)
         with pytest.raises(_Crash):
             _run(faults, op, root, fail_at=k)
         _run(faults, op, root)
-        assert _state(root / "stats") == _state(ref / "stats"), f"crash at {k} of {n}"
+        if k > n - 3:
+            assert _state(root / "stats") == _state(ref / "stats"), f"crash at {k} of {n}"
+        assert rows_erased(root) == rows_erased(ref), f"crash at {k} of {n}"
 
 
 def test_gate_apply_after_a_crashed_fold_flags_folded_duplicates(spark, tmp_path, faults):
