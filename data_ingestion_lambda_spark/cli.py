@@ -45,33 +45,23 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+from functools import partial
 
 from data_ingestion_lambda_spark.operators.compact import (
     cluster_partitions,
     compact_partitions,
     expire_partitions,
 )
+from data_ingestion_lambda_spark.operators.store_record import (
+    STORE_MODULES,
+    read_batch,
+    store_record,
+)
 from data_ingestion_lambda_spark.session import get_spark
 from data_ingestion_lambda_spark.streaming.ingest import (
     IngestPaths,
     run_ingest_available_now,
 )
-
-
-def _read_event_batch(spark, path: str):
-    """Read an event-batch parquet with the same ts normalization as
-    ``sources.catalog.load_table`` (``normalize_event_ts``). The
-    drift/feature/session stores' unix_micros / day-boundary expressions
-    need a regular (UTC) TIMESTAMP — without this, the same data that
-    works through the registered lanes fails the CLI apply with an
-    analysis error."""
-    from data_ingestion_lambda_spark.sources.catalog import normalize_event_ts
-
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    except Exception:
-        pass
-    return normalize_event_ts(spark.read.parquet(path))
 
 
 def _add_stream_args(sub_parser, noun: str) -> None:
@@ -182,45 +172,68 @@ def _stream_checkpoint(args) -> str | None:
     return args.checkpoint
 
 
-def _auto_compact_step(
-    spark,
-    args,
-    report: dict,
-    ledger_dir: str,
-    compact,
-    *,
-    count_dir: str | None = None,
-    part_key: str | None = None,
-    base_key: str | None = None,
-) -> None:
-    """Shared ``--auto-compact-max-dirs`` step (the policy half of the
-    compaction story: every store HAS a fold; this decides WHEN) —
-    a thin arg-unpacking shim over the ONE implementation,
-    ``operators/base_fold.py::auto_compact_epilogue``, which does
-    nothing when the flag is unset. ``compact`` is the store's
-    ``compact_*(spark, ledger_dir, keep_from)``.
-    For a streamed invocation (--stream-source) the fold key is capped
-    at the checkpoint's committed front, so a landed-but-uncommitted
-    batch is never folded; the manual --compact-keep-from form leaves
-    that precondition to the operator. The fold result (if one fires)
-    nests under ``report["auto_compact"]["compaction"]`` so a manual
-    fold's ``report["compaction"]`` is never clobbered (ADVICE r12)."""
-    from data_ingestion_lambda_spark.operators.base_fold import (
-        auto_compact_epilogue,
-    )
+def _auto_compact_step(spark, args, store, index_dir: str) -> dict | None:
+    """The ``--auto-compact-max-dirs`` step (every store HAS a fold; this
+    decides WHEN), None when the flag is unset; the store's ``auto_fold``
+    hook takes it over when it returns a report. A streamed invocation
+    caps the fold key at the checkpoint's committed front, so an
+    uncommitted batch is never folded; the manual fold leaves that to the
+    operator."""
+    policy = store.auto_fold(spark, args, index_dir) if store.auto_fold else None
+    if policy is None:
+        policy = store.auto_compact(
+            spark, index_dir, args.auto_compact_max_dirs, _stream_checkpoint(args)
+        )
+    return policy
 
-    policy = auto_compact_epilogue(
-        spark,
-        ledger_dir,
-        max_dirs=args.auto_compact_max_dirs,
-        compact_fn=lambda keep_from: compact(spark, ledger_dir, keep_from),
-        checkpoint_dir=_stream_checkpoint(args),
-        count_dir=count_dir,
-        part_key=part_key,
-        base_key=base_key,
-    )
+
+def _run_store(args) -> int:
+    """The one handler of the 14 store subcommands, in one order over the
+    store's record (operators/store_record.py): the argument refusals
+    (before any session), the session, the ``prepare`` hook, the stream,
+    ``--batch``, the manual fold (a refusal exits as ``<cmd>: <reason>``),
+    the read actions, auto-compaction and the JSON report."""
+    store = store_record(args.cmd)
+    _check_store_args(args, store.needs, paired=store.paired, exclusive=store.exclusive)
+    refusal = store.check(args) if store.check else None
+    if refusal is not None:
+        raise SystemExit(f"{args.cmd}: {refusal}")
+    metastore = getattr(args, "metastore_dir", None)
+    spark = get_spark("data-ingestion-cli", metastore_dir=metastore)
+    index_dir, opts, report = getattr(args, store.dir_flag), store.opts(args), {}
+    if store.prepare and store.prepare(spark, args, report):
+        print(json.dumps({"statusCode": 200, **report}))
+        return 0
+    if getattr(args, "stream_source", None) is not None:
+        from data_ingestion_lambda_spark.streaming.index_streams import (
+            run_store_available_now,
+        )
+
+        stream = store.stream or partial(run_store_available_now, store)
+        report[store.stream_report] = stream(
+            spark, args.stream_source, index_dir, args.checkpoint,
+            max_files_per_trigger=args.max_files_per_trigger, **opts,
+        )
+    if args.batch is not None and store.batch:
+        report.update(store.batch(spark, index_dir, args, **opts))
+    elif args.batch is not None:
+        batch = read_batch(spark, args.batch, store)
+        report.update(store.apply(spark, index_dir, batch, args.date, **opts))
+    keep_from = getattr(args, store.fold_flag)
+    if keep_from is not None:
+        try:
+            folded = store.compact(spark, index_dir, keep_from)
+        except (ValueError, RuntimeError) as exc:
+            raise SystemExit(f"{args.cmd}: {exc}") from exc
+        report.update({store.fold_report: folded} if store.fold_report else folded)
+    for action in store.actions:
+        if action.flag is None or getattr(args, action.flag) not in (None, False):
+            report.update(action.run(spark, index_dir, args))
+    policy = _auto_compact_step(spark, args, store, index_dir)
     if policy is not None:
         report["auto_compact"] = policy
+    print(json.dumps({"statusCode": 200, **report}))
+    return 0
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -1074,950 +1087,8 @@ def main(argv: list[str] | None = None) -> int:
                 print(json.dumps(row.asDict(recursive=True), default=str))
         return 0
 
-    if args.cmd == "dedup-gate":
-        # registry-free import path, same rationale as `query`
-        from data_ingestion_lambda_spark.operators.dedup_gate import (
-            MODE_INPUT_COL,
-            apply_batch,
-            compact_gate_index,
-            probe_batch,
-        )
-        from pyspark.sql import functions as F
-
-        if args.bucketed_table is not None:
-            if args.mode != "minhash":
-                raise SystemExit("dedup-gate: --bucketed-table is minhash-only")
-            if args.stream_source is not None:
-                raise SystemExit(
-                    "dedup-gate: --bucketed-table takes --batch/--date; use the "
-                    "directory index (--index) for --stream-source"
-                )
-            if args.batch is None or args.date is None:
-                raise SystemExit("dedup-gate: --bucketed-table needs --batch and --date")
-        elif args.index is None:
-            raise SystemExit("dedup-gate: --index is required without --bucketed-table")
-        else:
-            # a run without a batch only compacts
-            _check_store_args(
-                args,
-                ("batch", "stream_source", "compact_keep_from", "auto_compact_max_dirs"),
-                paired=False,
-            )
-            if args.batch is not None and args.date is None:
-                raise SystemExit("dedup-gate: --batch requires --date")
-        spark = get_spark("data-ingestion-cli", metastore_dir=args.metastore_dir)
-        if args.bucketed_table is not None:
-            from data_ingestion_lambda_spark.operators.dedup_gate import (
-                apply_batch_bucketed,
-                probe_batch_bucketed,
-            )
-
-            batch = spark.read.parquet(args.batch).select("doc_id", "text")
-            if args.probe_only:
-                m = probe_batch_bucketed(
-                    spark, args.bucketed_table, batch, exclude_date=args.date
-                )
-                report = {
-                    "date": args.date,
-                    "batch_docs": batch.count(),
-                    "dup_pairs": m.count(),
-                    "flagged_docs": m.select("new_doc").distinct().count(),
-                    "probe_only": True,
-                }
-            else:
-                report = apply_batch_bucketed(
-                    spark,
-                    args.bucketed_table,
-                    batch,
-                    args.date,
-                    matches_dir=args.matches_out,
-                )
-            print(json.dumps({"statusCode": 200, **report}))
-            return 0
-
-        def _gate_compaction(report: dict) -> None:
-            if args.compact_keep_from is not None:
-                try:
-                    report["compaction"] = compact_gate_index(
-                        spark, args.index, args.compact_keep_from
-                    )
-                except (ValueError, RuntimeError) as exc:
-                    raise SystemExit(f"dedup-gate: {exc}") from exc
-            _auto_compact_step(spark, args, report, args.index, compact_gate_index)
-
-        if args.stream_source is not None:
-            from data_ingestion_lambda_spark.streaming.dedup_stream import (
-                run_dedup_gate_available_now,
-            )
-
-            reports = run_dedup_gate_available_now(
-                spark,
-                args.stream_source,
-                args.index,
-                args.checkpoint,
-                matches_dir=args.matches_out,
-                mode=args.mode,
-                max_files_per_trigger=args.max_files_per_trigger,
-            )
-            report = {"batches": reports}
-            _gate_compaction(report)
-            print(json.dumps({"statusCode": 200, **report}))
-            return 0
-        if args.batch is None:
-            report = {}
-            _gate_compaction(report)
-            print(json.dumps({"statusCode": 200, **report}))
-            return 0
-        raw = spark.read.parquet(args.batch)
-        # Embedding batches are typically vec_id-keyed (the embeddings
-        # table's own key); accept either key name.
-        key = "doc_id" if "doc_id" in raw.columns else "vec_id"
-        batch = raw.select(
-            F.col(key).alias("doc_id"), MODE_INPUT_COL[args.mode]
-        )
-        if args.probe_only:
-            m = probe_batch(spark, args.index, batch, mode=args.mode)
-            report = {
-                "date": args.date,
-                "batch_docs": batch.count(),
-                "dup_pairs": m.count(),
-                "flagged_docs": m.select("new_doc").distinct().count(),
-                "probe_only": True,
-            }
-        else:
-            report = apply_batch(
-                spark,
-                args.index,
-                batch,
-                args.date,
-                matches_dir=args.matches_out,
-                mode=args.mode,
-            )
-            _gate_compaction(report)
-        print(json.dumps({"statusCode": 200, **report}))
-        return 0
-
-    if args.cmd == "vocab":
-        from data_ingestion_lambda_spark.operators.vocab import (
-            compact_vocab,
-            score_batch,
-            update_vocab,
-        )
-
-        _check_store_args(
-            args, ("batch", "stream_source", "compact_keep_from"), paired=False
-        )
-        if args.stream_source is not None and (args.score_only or args.score_out):
-            raise SystemExit(
-                "vocab: --stream-source only extends the model; scoring "
-                "runs against the persisted counts via --batch --score-only"
-            )
-        if args.batch is not None and not args.score_only and args.date is None:
-            raise SystemExit("vocab: --date is required unless --score-only")
-        spark = get_spark("data-ingestion-cli")
-        report: dict = {}
-        if args.stream_source is not None:
-            from data_ingestion_lambda_spark.streaming.index_streams import (
-                run_vocab_update_available_now,
-            )
-
-            report["batches"] = run_vocab_update_available_now(
-                spark,
-                args.stream_source,
-                args.vocab,
-                args.checkpoint,
-                max_files_per_trigger=args.max_files_per_trigger,
-                order=args.order,
-            )
-        if args.batch is not None:
-            batch = spark.read.parquet(args.batch).select("doc_id", "text")
-            report["batch_docs"] = batch.count()
-            # Score FIRST, against the model excluding this batch's own
-            # partition — a replayed (batch, date) scores exactly what the
-            # first run scored, never its own earlier write (the dedup gate's
-            # own-partition exclusion).
-            try:
-                scored = score_batch(
-                    spark, args.vocab, batch, exclude_date=args.date, order=args.order
-                )
-                if args.score_out is not None:
-                    scored.write.mode("overwrite").parquet(args.score_out)
-                    report["score_out"] = args.score_out
-                report["scored_docs"] = scored.count()
-            except ValueError as e:
-                # ONLY the empty-model case is benign (first batch: nothing to
-                # score against yet). An order-mismatch refusal must surface —
-                # swallowing it would report success while silently masking
-                # the guard against cross-order scoring.
-                if "no (remaining) partitions" not in str(e):
-                    raise
-                report["scored_docs"] = None  # first batch: no model yet
-            if not args.score_only:
-                report.update(
-                    update_vocab(spark, args.vocab, batch, args.date, order=args.order)
-                )
-        if args.compact_keep_from is not None:
-            report["compaction"] = compact_vocab(
-                spark, args.vocab, args.compact_keep_from
-            )
-        _auto_compact_step(spark, args, report, args.vocab, compact_vocab)
-        print(json.dumps({"statusCode": 200, **report}))
-        return 0
-
-    if args.cmd == "drift-monitor":
-        from data_ingestion_lambda_spark.operators.drift_monitor import (
-            apply_histogram_batch,
-            compact_drift_monitor,
-            read_drift,
-        )
-
-        _check_store_args(args)
-        spark = get_spark("data-ingestion-cli")
-        report: dict = {}
-        if args.batch is not None:
-            batch = _read_event_batch(spark, args.batch)
-            report.update(apply_histogram_batch(spark, args.index, batch, args.date))
-        if args.compact_keep_from is not None:
-            report["compaction"] = compact_drift_monitor(
-                spark, args.index, args.compact_keep_from
-            )
-        drift = read_drift(spark, args.index)
-        if args.report_out is not None:
-            drift.write.mode("overwrite").parquet(args.report_out)
-            report["report_out"] = args.report_out
-            report["drift_rows"] = spark.read.parquet(args.report_out).count()
-        else:
-            rows = drift.orderBy("event_type", "day").collect()
-            report["drift_rows"] = len(rows)
-            report["max_l1_drift"] = max((r.l1_drift for r in rows), default=None)
-        _auto_compact_step(spark, args, report, args.index, compact_drift_monitor)
-        print(json.dumps({"statusCode": 200, **report}))
-        return 0
-
-    if args.cmd == "hh-store":
-        from pyspark.sql import functions as F
-
-        from data_ingestion_lambda_spark.operators.hh_store import (
-            apply_hh_batch,
-            compact_hh_store,
-            read_heavy_hitters,
-        )
-
-        _check_store_args(args)
-        spark = get_spark("data-ingestion-cli")
-        report: dict = {}
-        if args.batch is not None:
-            batch = spark.read.parquet(args.batch).select("item")
-            report.update(apply_hh_batch(spark, args.index, batch, args.date))
-        if args.compact_keep_from is not None:
-            report["compaction"] = compact_hh_store(
-                spark, args.index, args.compact_keep_from
-            )
-        hh = read_heavy_hitters(spark, args.index)
-        if args.report_out is not None:
-            hh.write.mode("overwrite").parquet(args.report_out)
-            report["report_out"] = args.report_out
-            report["heavy_hitters"] = spark.read.parquet(args.report_out).count()
-        else:
-            rows = hh.orderBy(F.desc("count_lower"), "item").collect()
-            report["heavy_hitters"] = len(rows)
-            report["top"] = [
-                {"item": r.item, "count_lower": r.count_lower} for r in rows[:5]
-            ]
-            if rows:
-                report["n_total"] = rows[0].n_total
-                report["undercount_bound"] = rows[0].undercount_bound
-        _auto_compact_step(spark, args, report, args.index, compact_hh_store)
-        print(json.dumps({"statusCode": 200, **report}))
-        return 0
-
-    if args.cmd == "attribution-store":
-        from pyspark.sql import functions as F
-
-        from data_ingestion_lambda_spark.operators.attribution_store import (
-            LEDGER_BASE_KEY,
-            apply_attribution_batch,
-            compact_attribution_ledger,
-            expire_attribution,
-            read_attribution,
-            read_attribution_linear,
-            read_attribution_linear_stream,
-            read_attribution_position,
-            read_attribution_position_stream,
-            read_attribution_stream,
-        )
-
-        # the calendar ledger and the any-split stream ledger live side by
-        # side under one index, so --stream-source and --batch combine
-        _check_store_args(
-            args,
-            (
-                "batch",
-                "out",
-                "expire_keep_days",
-                "stream_source",
-                "stream_out",
-                "compact_keep_from_key",
-            ),
-            exclusive=False,
-        )
-        if args.checkpoint is not None and args.stream_source is None:
-            raise SystemExit("attribution-store: --checkpoint needs --stream-source")
-        if (args.expire_keep_days is None) != (args.expire_as_of is None):
-            raise SystemExit(
-                "attribution-store: --expire-keep-days and --expire-as-of "
-                "go together"
-            )
-        spark = get_spark("data-ingestion-cli")
-        report: dict = {}
-        if args.stream_source is not None:
-            from data_ingestion_lambda_spark.streaming.index_streams import (
-                run_attribution_update_available_now,
-            )
-
-            report["batches"] = run_attribution_update_available_now(
-                spark,
-                args.stream_source,
-                args.index,
-                args.checkpoint,
-                max_files_per_trigger=args.max_files_per_trigger,
-            )
-        if args.compact_keep_from_key is not None:
-            try:
-                report.update(
-                    compact_attribution_ledger(
-                        spark, args.index, args.compact_keep_from_key
-                    )
-                )
-            except (ValueError, RuntimeError) as exc:
-                raise SystemExit(f"attribution-store: {exc}") from exc
-        if args.stream_out is not None:
-            reader = {
-                "last_touch": read_attribution_stream,
-                "linear": read_attribution_linear_stream,
-                "position": read_attribution_position_stream,
-            }[args.read_mode]
-            attr = reader(spark, args.index)
-            attr.write.mode("overwrite").parquet(args.stream_out)
-            report["stream_out"] = args.stream_out
-            report["stream_read_mode"] = args.read_mode
-            report["stream_purchases"] = spark.read.parquet(args.stream_out).count()
-        if args.batch is not None:
-            batch = _read_event_batch(spark, args.batch)
-            report.update(
-                apply_attribution_batch(spark, args.index, batch, args.date)
-            )
-        if args.expire_keep_days is not None:
-            try:
-                report.update(
-                    expire_attribution(
-                        spark,
-                        args.index,
-                        as_of=args.expire_as_of,
-                        keep_days=args.expire_keep_days,
-                    )
-                )
-            except ValueError as exc:
-                raise SystemExit(f"attribution-store: {exc}") from exc
-        if args.out is not None:
-            reader = {
-                "last_touch": read_attribution,
-                "linear": read_attribution_linear,
-                "position": read_attribution_position,
-            }[args.read_mode]
-            attr = reader(spark, args.index)
-            attr.write.mode("overwrite").parquet(args.out)
-            report["out"] = args.out
-            report["read_mode"] = args.read_mode
-            persisted = spark.read.parquet(args.out)
-            report["purchases"] = persisted.count()
-            report["attributed"] = persisted.filter(F.col("attributed")).count()
-        _auto_compact_step(
-            spark, args, report, args.index, compact_attribution_ledger,
-            count_dir=f"{args.index}/stream_purchases",
-            part_key="ingest_batch",
-            base_key=LEDGER_BASE_KEY,
-        )
-        print(json.dumps({"statusCode": 200, **report}))
-        return 0
-
-    if args.cmd == "cms-store":
-        from pyspark.sql import functions as F
-
-        from data_ingestion_lambda_spark.operators.cms_store import (
-            apply_cms_batch,
-            compact_cms_store,
-            estimate_items,
-        )
-
-        _check_store_args(
-            args, ("batch", "stream_source", "query", "compact_keep_from")
-        )
-        spark = get_spark("data-ingestion-cli")
-        report: dict = {}
-        if args.stream_source is not None:
-            from data_ingestion_lambda_spark.streaming.index_streams import (
-                run_cms_update_available_now,
-            )
-
-            report["batches"] = run_cms_update_available_now(
-                spark,
-                args.stream_source,
-                args.index,
-                args.checkpoint,
-                max_files_per_trigger=args.max_files_per_trigger,
-            )
-        if args.batch is not None:
-            batch = spark.read.parquet(args.batch).select("item")
-            report.update(apply_cms_batch(spark, args.index, batch, args.date))
-        if args.compact_keep_from is not None:
-            report["compaction"] = compact_cms_store(
-                spark, args.index, args.compact_keep_from
-            )
-        if args.query is not None:
-            est = estimate_items(
-                spark, args.index, spark.read.parquet(args.query).select("item")
-            )
-            if args.estimates_out is not None:
-                est.write.mode("overwrite").parquet(args.estimates_out)
-                report["estimates_out"] = args.estimates_out
-                report["estimated_items"] = spark.read.parquet(
-                    args.estimates_out
-                ).count()
-            else:
-                rows = est.orderBy(F.desc("est"), "item").collect()
-                report["estimated_items"] = len(rows)
-                report["top"] = [{"item": r.item, "est": r.est} for r in rows[:5]]
-        _auto_compact_step(spark, args, report, args.index, compact_cms_store)
-        print(json.dumps({"statusCode": 200, **report}))
-        return 0
-
-    if args.cmd == "bloom-store":
-        from pyspark.sql import functions as F
-
-        from data_ingestion_lambda_spark.operators.bloom_store import (
-            apply_bloom_batch,
-            compact_bloom_store,
-            screen_docs,
-        )
-
-        _check_store_args(
-            args, ("batch", "stream_source", "screen", "compact_keep_from")
-        )
-        spark = get_spark("data-ingestion-cli")
-        report = {}
-        if args.stream_source is not None:
-            from data_ingestion_lambda_spark.streaming.index_streams import (
-                run_bloom_update_available_now,
-            )
-
-            report["batches"] = run_bloom_update_available_now(
-                spark,
-                args.stream_source,
-                args.index,
-                args.checkpoint,
-                max_files_per_trigger=args.max_files_per_trigger,
-                m=args.bloom_m,
-                k=args.bloom_k,
-            )
-        if args.batch is not None:
-            from data_ingestion_lambda_spark.plans.llm_ops import (
-                _BLOOM_K,
-                _BLOOM_M,
-            )
-
-            batch = spark.read.parquet(args.batch)
-            report.update(
-                apply_bloom_batch(
-                    spark,
-                    args.index,
-                    batch,
-                    args.date,
-                    m=args.bloom_m if args.bloom_m is not None else _BLOOM_M,
-                    k=args.bloom_k if args.bloom_k is not None else _BLOOM_K,
-                )
-            )
-        if args.compact_keep_from is not None:
-            report["compaction"] = compact_bloom_store(
-                spark, args.index, args.compact_keep_from
-            )
-        if args.screen is not None:
-            verdicts = screen_docs(
-                spark,
-                args.index,
-                spark.read.parquet(args.screen).select("doc_id", "text"),
-            )
-            if args.verdicts_out is not None:
-                verdicts.write.mode("overwrite").parquet(args.verdicts_out)
-                report["verdicts_out"] = args.verdicts_out
-                verdicts = spark.read.parquet(args.verdicts_out)
-            report["screened"] = verdicts.count()
-            report["hits"] = verdicts.filter(F.col("bloom_hit")).count()
-        _auto_compact_step(spark, args, report, args.index, compact_bloom_store)
-        print(json.dumps({"statusCode": 200, **report}))
-        return 0
-
-    if args.cmd == "dsir-store":
-        from pyspark.sql import functions as F
-
-        from data_ingestion_lambda_spark.operators.dsir_store import (
-            apply_dsir_batch,
-            compact_dsir_store,
-            score_docs,
-        )
-
-        _check_store_args(
-            args, ("batch", "stream_source", "score", "compact_keep_from")
-        )
-        spark = get_spark("data-ingestion-cli")
-        report = {}
-        if args.stream_source is not None:
-            from data_ingestion_lambda_spark.streaming.index_streams import (
-                run_dsir_update_available_now,
-            )
-
-            report["batches"] = run_dsir_update_available_now(
-                spark,
-                args.stream_source,
-                args.index,
-                args.checkpoint,
-                max_files_per_trigger=args.max_files_per_trigger,
-                target_lang=args.target_lang,
-            )
-        if args.batch is not None:
-            batch = spark.read.parquet(args.batch).select("doc_id", "lang", "text")
-            report.update(
-                apply_dsir_batch(
-                    spark, args.index, batch, args.date, target_lang=args.target_lang
-                )
-            )
-        if args.compact_keep_from is not None:
-            report["compaction"] = compact_dsir_store(
-                spark, args.index, args.compact_keep_from
-            )
-        if args.score is not None:
-            scores = score_docs(
-                spark,
-                args.index,
-                spark.read.parquet(args.score).select("doc_id", "lang", "text"),
-                target_lang=args.target_lang,
-            )
-            if args.scores_out is not None:
-                scores.write.mode("overwrite").parquet(args.scores_out)
-                report["scores_out"] = args.scores_out
-                scores = spark.read.parquet(args.scores_out)
-            report["scored"] = scores.count()
-            report["target_like"] = scores.filter(F.col("logw_bits") > 0).count()
-        _auto_compact_step(spark, args, report, args.index, compact_dsir_store)
-        print(json.dumps({"statusCode": 200, **report}))
-        return 0
-
-    if args.cmd == "touch-store":
-        from data_ingestion_lambda_spark.operators.touch_store import (
-            apply_touch_batch,
-            compact_touch_store,
-            read_attribution_shapley,
-        )
-
-        _check_store_args(
-            args, ("batch", "stream_source", "shapley", "compact_keep_from")
-        )
-        spark = get_spark("data-ingestion-cli")
-        report = {}
-        if args.stream_source is not None:
-            from data_ingestion_lambda_spark.streaming.index_streams import (
-                run_touch_update_available_now,
-            )
-
-            report["batches"] = run_touch_update_available_now(
-                spark,
-                args.stream_source,
-                args.index,
-                args.checkpoint,
-                max_files_per_trigger=args.max_files_per_trigger,
-            )
-        if args.batch is not None:
-            batch = spark.read.parquet(args.batch)
-            report.update(apply_touch_batch(spark, args.index, batch, args.date))
-        if args.compact_keep_from is not None:
-            report["compaction"] = compact_touch_store(
-                spark, args.index, args.compact_keep_from
-            )
-        if args.shapley:
-            report["shapley"] = [
-                r.asDict() for r in read_attribution_shapley(spark, args.index)
-                .orderBy("channel")
-                .collect()
-            ]
-        _auto_compact_step(spark, args, report, args.index, compact_touch_store)
-        print(json.dumps({"statusCode": 200, **report}))
-        return 0
-
-    if args.cmd == "markov-store":
-        from data_ingestion_lambda_spark.operators.markov_store import (
-            apply_markov_batch,
-            compact_markov_store,
-            read_attribution_markov,
-        )
-
-        _check_store_args(args, ("batch", "credit", "compact_keep_from"))
-        spark = get_spark("data-ingestion-cli")
-        report = {}
-        if args.batch is not None:
-            batch = spark.read.parquet(args.batch)
-            report.update(apply_markov_batch(spark, args.index, batch, args.date))
-        if args.compact_keep_from is not None:
-            report["compaction"] = compact_markov_store(
-                spark, args.index, args.compact_keep_from
-            )
-        if args.credit:
-            report["credit"] = [
-                r.asDict() for r in read_attribution_markov(spark, args.index)
-                .orderBy("channel")
-                .collect()
-            ]
-        _auto_compact_step(spark, args, report, args.index, compact_markov_store)
-        print(json.dumps({"statusCode": 200, **report}))
-        return 0
-
-    if args.cmd == "session-store":
-        from data_ingestion_lambda_spark.operators.session_store import (
-            apply_session_batch,
-            compact_session_store,
-            read_sessions,
-            read_user_session_stats,
-        )
-
-        _check_store_args(
-            args,
-            ("batch", "stream_source", "sessions_out", "stats_out", "compact_keep_from"),
-        )
-        spark = get_spark("data-ingestion-cli")
-        report: dict = {}
-        if args.stream_source is not None:
-            from data_ingestion_lambda_spark.streaming.index_streams import (
-                run_session_update_available_now,
-            )
-
-            report["batches"] = run_session_update_available_now(
-                spark,
-                args.stream_source,
-                args.index,
-                args.checkpoint,
-                max_files_per_trigger=args.max_files_per_trigger,
-            )
-        if args.batch is not None:
-            batch = _read_event_batch(spark, args.batch)
-            report.update(apply_session_batch(spark, args.index, batch, args.date))
-        if args.compact_keep_from is not None:
-            report["compaction"] = compact_session_store(
-                spark, args.index, args.compact_keep_from
-            )
-        if args.sessions_out is not None:
-            read_sessions(spark, args.index).write.mode("overwrite").parquet(
-                args.sessions_out
-            )
-            report["sessions_out"] = args.sessions_out
-            report["sessions"] = spark.read.parquet(args.sessions_out).count()
-        if args.stats_out is not None:
-            read_user_session_stats(spark, args.index).write.mode(
-                "overwrite"
-            ).parquet(args.stats_out)
-            report["stats_out"] = args.stats_out
-            report["users"] = spark.read.parquet(args.stats_out).count()
-        _auto_compact_step(spark, args, report, args.index, compact_session_store)
-        print(json.dumps({"statusCode": 200, **report}))
-        return 0
-
-    if args.cmd == "feature-store":
-        from data_ingestion_lambda_spark.operators.feature_store import (
-            apply_feature_batch,
-            compact_feature_ledger,
-            read_user_features,
-            read_user_features_asof,
-        )
-
-        _check_store_args(
-            args,
-            ("batch", "stream_source", "vectors_out", "decayed_out", "compact_before"),
-        )
-        if args.decayed_out is not None and args.as_of is None:
-            raise SystemExit("feature-store: --decayed-out needs --as-of")
-        if args.as_of is not None and args.vectors_out is None and args.decayed_out is None:
-            raise SystemExit(
-                "feature-store: --as-of needs --vectors-out or --decayed-out"
-            )
-        spark = get_spark("data-ingestion-cli")
-        report: dict = {}
-        # layout detection: a stream-driven ledger holds ingest_batch=
-        # partitions, the daily form date= partitions — never both
-        # (ledger_keying refuses a mix); reads route accordingly.
-        from data_ingestion_lambda_spark.operators.layout import (
-            hadoop_fs,
-            ledger_keying,
-        )
-
-        def _index_exists() -> bool:
-            fs, path_cls = hadoop_fs(spark, args.index)
-            return fs.exists(path_cls(args.index))
-
-        def _is_stream_ledger() -> bool:
-            if not _index_exists():
-                return args.stream_source is not None
-            try:
-                return ledger_keying(spark, args.index) == "ingest_batch"
-            except ValueError as e:
-                raise SystemExit(f"feature-store: {e}") from None
-        if args.stream_source is not None:
-            if _index_exists() and not _is_stream_ledger():
-                raise SystemExit(
-                    f"feature-store: {args.index} is a date-keyed daily "
-                    "store; point --stream-source at its own ledger dir"
-                )
-            from data_ingestion_lambda_spark.streaming.events import (
-                run_feature_store_available_now,
-            )
-
-            report["stream_batches"] = run_feature_store_available_now(
-                spark,
-                args.stream_source,
-                args.index,
-                args.checkpoint,
-                max_files_per_trigger=args.max_files_per_trigger,
-            )
-        if args.batch is not None:
-            if _is_stream_ledger():
-                raise SystemExit(
-                    f"feature-store: {args.index} is a stream-driven "
-                    "ledger; daily --batch applies need their own dir"
-                )
-            batch = _read_event_batch(spark, args.batch)
-            report.update(apply_feature_batch(spark, args.index, batch, args.date))
-        if args.compact_before is not None:
-            if _is_stream_ledger():
-                raise SystemExit(
-                    "feature-store: --compact-before folds date= partitions; "
-                    "a stream ledger has batch-id keys (no calendar horizon)"
-                )
-            report["folded_partitions"] = compact_feature_ledger(
-                spark, args.index, args.compact_before
-            )
-        if args.decayed_out is not None:
-            if _is_stream_ledger():
-                raise SystemExit(
-                    "feature-store: --decayed-out needs the date-keyed "
-                    "daily store (decay weights come from date keys)"
-                )
-            from data_ingestion_lambda_spark.operators.feature_store import (
-                read_user_decayed_activity,
-            )
-
-            read_user_decayed_activity(
-                spark, args.index, args.as_of
-            ).write.mode("overwrite").parquet(args.decayed_out)
-            report["decayed_out"] = args.decayed_out
-        if args.vectors_out is not None:
-            if _is_stream_ledger():
-                if args.as_of is not None:
-                    raise SystemExit(
-                        "feature-store: --as-of needs the date-keyed daily "
-                        "store (a stream ledger is keyed by batch id)"
-                    )
-                from data_ingestion_lambda_spark.streaming.events import (
-                    features_from_moment_ledger,
-                )
-
-                vectors = features_from_moment_ledger(spark, args.index)
-            else:
-                vectors = (
-                    read_user_features(spark, args.index)
-                    if args.as_of is None
-                    else read_user_features_asof(spark, args.index, args.as_of)
-                )
-            vectors.write.mode("overwrite").parquet(args.vectors_out)
-            report["vectors_out"] = args.vectors_out
-            report["users"] = spark.read.parquet(args.vectors_out).count()
-        if args.auto_compact_max_dirs is not None and _is_stream_ledger():
-            # batch-id keys have no date horizon: the stream ledger folds
-            # every committed batch at once (streaming/events.py), under
-            # the same {max_dirs, due, compaction} report as the policy
-            from data_ingestion_lambda_spark.streaming.events import (
-                batch_ledger_fold_due,
-                compact_moment_ledger,
-            )
-
-            policy = report["auto_compact"] = {
-                "max_dirs": args.auto_compact_max_dirs,
-                "due": batch_ledger_fold_due(
-                    spark, args.index, args.auto_compact_max_dirs
-                ),
-            }
-            if policy["due"]:
-                policy["compaction"] = compact_moment_ledger(
-                    spark, args.index, _stream_checkpoint(args)
-                )
-        else:
-            _auto_compact_step(spark, args, report, args.index, compact_feature_ledger)
-        print(json.dumps({"statusCode": 200, **report}))
-        return 0
-
-    if args.cmd == "search-index":
-        from data_ingestion_lambda_spark.operators.postings import (
-            compact_postings_index,
-            search_topk,
-            update_postings,
-        )
-        from pyspark.sql import functions as F
-
-        _check_store_args(
-            args,
-            ("batch", "stream_source", "compact_keep_from", "query"),
-            paired=False,
-        )
-        if args.batch is not None and args.date is None:
-            raise SystemExit("search-index: --batch requires --date")
-        spark = get_spark("data-ingestion-cli")
-        report: dict = {}
-        if args.stream_source is not None:
-            from data_ingestion_lambda_spark.streaming.index_streams import (
-                run_postings_update_available_now,
-            )
-
-            report["batches"] = run_postings_update_available_now(
-                spark,
-                args.stream_source,
-                args.index,
-                args.checkpoint,
-                max_files_per_trigger=args.max_files_per_trigger,
-            )
-        if args.batch is not None:
-            batch = spark.read.parquet(args.batch).select("doc_id", "text")
-            report.update(update_postings(spark, args.index, batch, args.date))
-        if args.compact_keep_from is not None:
-            try:
-                report.update(
-                    compact_postings_index(
-                        spark, args.index, args.compact_keep_from
-                    )
-                )
-            except (ValueError, RuntimeError) as exc:
-                raise SystemExit(f"search-index: {exc}") from exc
-        if args.query is not None:
-            raw = spark.read.parquet(args.query)
-            key = "query_id" if "query_id" in raw.columns else "doc_id"
-            queries = raw.select(F.col(key).alias("query_id"), "text")
-            kwargs = {} if args.k is None else {"k": args.k}
-            topk = search_topk(spark, args.index, queries, **kwargs)
-            if args.out is not None:
-                topk.write.mode("overwrite").parquet(args.out)
-                report["out"] = args.out
-            report["result_rows"] = topk.count()
-        _auto_compact_step(
-            spark, args, report, args.index, compact_postings_index,
-            count_dir=f"{args.index}/doclen",
-        )
-        print(json.dumps({"statusCode": 200, **report}))
-        return 0
-
-    if args.cmd == "ann-index":
-        from data_ingestion_lambda_spark.operators.ann_index import (
-            append_batch,
-            compact_index_cells,
-            probe_topk,
-            train_index,
-        )
-        from pyspark.sql import functions as F
-
-        # ALL argument validation before ANY mutation: a fold spends
-        # replay keys irreversibly, so a flag typo must not leave the
-        # store changed by a command that then reports failure.
-        _check_store_args(
-            args,
-            (
-                "train",
-                "batch",
-                "stream_source",
-                "retrain_to",
-                "query",
-                "compact_keep_from",
-                "auto_compact_max_dirs",
-            ),
-            paired=False,
-        )
-        if args.batch is not None and args.date is None:
-            raise SystemExit("ann-index: --batch requires --date")
-        if args.retrain_to is not None and (
-            args.n_cells is None or args.date is None
-        ):
-            raise SystemExit("ann-index: --retrain-to requires --n-cells and --date")
-        if args.ceiling is not None and not args.hard_negatives:
-            raise SystemExit("ann-index: --ceiling only applies with --hard-negatives")
-        if args.hard_negatives and args.query is None:
-            raise SystemExit(
-                "ann-index: --hard-negatives mines against --query vectors; "
-                "pass --query (the flag does nothing for train/append)"
-            )
-        spark = get_spark("data-ingestion-cli")
-        report: dict = {}
-        if args.train is not None:
-            vecs = spark.read.parquet(args.train).select("vec_id", "embedding")
-            kw = {} if args.n_cells is None else {"n_cells": args.n_cells}
-            report.update(train_index(spark, args.index, vecs, **kw))
-        if args.retrain_to is not None:
-            from data_ingestion_lambda_spark.operators.ann_index import (
-                retrain_index,
-            )
-
-            report["retrain"] = retrain_index(
-                spark, args.index, args.retrain_to, args.n_cells, args.date
-            )
-        if args.stream_source is not None:
-            from data_ingestion_lambda_spark.streaming.index_streams import (
-                run_ann_append_available_now,
-            )
-
-            report["batches"] = run_ann_append_available_now(
-                spark,
-                args.stream_source,
-                args.index,
-                args.checkpoint,
-                max_files_per_trigger=args.max_files_per_trigger,
-            )
-        if args.batch is not None:
-            batch = spark.read.parquet(args.batch).select("vec_id", "embedding")
-            report.update(append_batch(spark, args.index, batch, args.date))
-        if args.compact_keep_from is not None:
-            try:
-                report["compaction"] = compact_index_cells(
-                    spark, args.index, args.compact_keep_from
-                )
-            except (ValueError, RuntimeError) as exc:
-                raise SystemExit(f"ann-index: {exc}") from exc
-        _auto_compact_step(
-            spark, args, report, args.index, compact_index_cells,
-            count_dir=f"{args.index}/cells",
-        )
-        if args.query is not None:
-            raw = spark.read.parquet(args.query)
-            key = "query_id" if "query_id" in raw.columns else "vec_id"
-            queries = raw.select(F.col(key).alias("query_id"), "embedding")
-            kwargs = {} if args.k is None else {"k": args.k}
-            if args.hard_negatives:
-                from data_ingestion_lambda_spark.operators.ann_index import (
-                    probe_hard_negatives,
-                )
-
-                if args.ceiling is not None:
-                    kwargs["ceiling"] = args.ceiling
-                topk = probe_hard_negatives(spark, args.index, queries, **kwargs)
-            else:
-                topk = probe_topk(spark, args.index, queries, **kwargs)
-            if args.out is not None:
-                topk.write.mode("overwrite").parquet(args.out)
-                report["out"] = args.out
-            report["result_rows"] = topk.count()
-        print(json.dumps({"statusCode": 200, **report}))
-        return 0
+    if args.cmd in STORE_MODULES:
+        return _run_store(args)
 
     spark = get_spark("data-ingestion-cli")
 

@@ -56,6 +56,13 @@ from data_ingestion_lambda_spark.operators.layout import (
     partition_values,
     replace_partitions,
 )
+from data_ingestion_lambda_spark.operators.store_record import (
+    Action,
+    StoreRecord,
+    StoreSpec,
+    SubSpec,
+    report_rows,
+)
 from data_ingestion_lambda_spark.plans.similarity import (
     TOP_K,
     _HARD_NEG_CEIL,
@@ -505,3 +512,68 @@ def retrain_index(
         "recall_old": index_recall(spark, old_dir, queries, k=k, n_probe=n_probe),
         "recall_new": index_recall(spark, new_dir, queries, k=k, n_probe=n_probe),
     }
+
+
+def _check(args) -> str | None:
+    """Every argument rule before any mutation: a fold spends replay keys
+    irreversibly, so a flag typo must not leave the store changed by a
+    command that then reports failure."""
+    if args.batch is not None and args.date is None:
+        return "--batch requires --date"
+    if args.retrain_to is not None and (args.n_cells is None or args.date is None):
+        return "--retrain-to requires --n-cells and --date"
+    if args.ceiling is not None and not args.hard_negatives:
+        return "--ceiling only applies with --hard-negatives"
+    if args.hard_negatives and args.query is None:
+        return (
+            "--hard-negatives mines against --query vectors; pass --query (the "
+            "flag does nothing for train/append)"
+        )
+    return None
+
+
+def _train(spark: SparkSession, args, report: dict) -> bool:
+    if args.train is not None:
+        vecs = spark.read.parquet(args.train).select("vec_id", "embedding")
+        kw = {} if args.n_cells is None else {"n_cells": args.n_cells}
+        report.update(train_index(spark, args.index, vecs, **kw))
+    if args.retrain_to is not None:
+        report["retrain"] = retrain_index(
+            spark, args.index, args.retrain_to, args.n_cells, args.date
+        )
+    return False
+
+
+def _check_trained(spark: SparkSession, index_dir: str) -> None:
+    """A stream needs the frozen quantizer ``train_index`` writes."""
+    fs, path_cls = hadoop_fs(spark, index_dir)
+    if not fs.exists(path_cls(f"{index_dir}/centroids")):
+        raise ValueError(
+            f"run_ann_append_available_now: {index_dir}/centroids does not "
+            "exist — train_index must freeze the quantizer before any "
+            "streamed append (a mid-stream retrain would assign batches "
+            "against different models)"
+        )
+
+
+def _query(spark: SparkSession, index_dir: str, args) -> dict:
+    raw = spark.read.parquet(args.query)
+    key = "query_id" if "query_id" in raw.columns else "vec_id"
+    queries = raw.select(F.col(key).alias("query_id"), "embedding")
+    kwargs = {} if args.k is None else {"k": args.k}
+    if args.hard_negatives and args.ceiling is not None:
+        kwargs["ceiling"] = args.ceiling
+    probe = probe_hard_negatives if args.hard_negatives else probe_topk
+    topk = probe(spark, index_dir, queries, **kwargs)
+    return report_rows(topk, "out", args.out, result_rows=None)
+
+
+STORE = StoreRecord(
+    "ann-index", append_batch, compact_index_cells,
+    StoreSpec(key_col="vec_id", subs=(SubSpec("cells", inner_parts=("cell",)),)),
+    columns=("vec_id", "embedding"), stream_schema="vec_id bigint, embedding array<float>",
+    pre_stream=_check_trained, count_dir="cells", actions=(Action("query", _query),),
+    needs=("train", "batch", "stream_source", "retrain_to", "query",
+           "compact_keep_from", "auto_compact_max_dirs"),
+    paired=False, check=_check, prepare=_train,
+)

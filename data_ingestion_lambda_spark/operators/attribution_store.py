@@ -77,6 +77,13 @@ from data_ingestion_lambda_spark.operators.layout import (
     partition_values,
     replace_partitions,
 )
+from data_ingestion_lambda_spark.operators.store_record import (
+    Action,
+    StoreRecord,
+    StoreSpec,
+    SubSpec,
+    report_rows,
+)
 from data_ingestion_lambda_spark.plans.events_queries import (
     _ATTR_WINDOW_US,
     _DAY_US,
@@ -952,3 +959,67 @@ def compact_attribution_ledger(
         base_key=LEDGER_BASE_KEY,
         subtables={sub: _merge(merge_cols[sub]) for sub in _LEDGER_SUBTABLES},
     )
+
+
+def _check(args) -> str | None:
+    if args.checkpoint is not None and args.stream_source is None:
+        return "--checkpoint needs --stream-source"
+    if (args.expire_keep_days is None) != (args.expire_as_of is None):
+        return "--expire-keep-days and --expire-as-of go together"
+    return None
+
+
+# --read-mode -> (calendar ledger read, any-split stream ledger read)
+_READERS = {
+    "last_touch": (read_attribution, read_attribution_stream),
+    "linear": (read_attribution_linear, read_attribution_linear_stream),
+    "position": (read_attribution_position, read_attribution_position_stream),
+}
+
+
+def _stream_out(spark: SparkSession, index_dir: str, args) -> dict:
+    attr = _READERS[args.read_mode][1](spark, index_dir)
+    report = report_rows(attr, "stream_out", args.stream_out, stream_purchases=None)
+    return {**report, "stream_read_mode": args.read_mode}
+
+
+def _expire(spark: SparkSession, index_dir: str, args) -> dict:
+    try:
+        return expire_attribution(
+            spark, index_dir, as_of=args.expire_as_of, keep_days=args.expire_keep_days
+        )
+    except ValueError as exc:
+        raise SystemExit(f"attribution-store: {exc}") from exc
+
+
+def _out(spark: SparkSession, index_dir: str, args) -> dict:
+    attr = _READERS[args.read_mode][0](spark, index_dir)
+    report = report_rows(
+        attr, "out", args.out, purchases=None, attributed=F.col("attributed")
+    )
+    return {**report, "read_mode": args.read_mode}
+
+
+# The calendar ledger (day-pure --batch applies) and the any-split stream
+# ledger live side by side under one index, so --stream-source and
+# --batch combine; the manual and automatic folds fold the stream ledger.
+STORE = StoreRecord(
+    "attribution-store", apply_attribution_batch, compact_attribution_ledger,
+    StoreSpec(
+        key_col="user_id",
+        subs=(SubSpec("purchases"), SubSpec("last_clicks"), SubSpec("clicks")),
+    ),
+    events=True,
+    stream_schema="event_id bigint, user_id bigint, ts timestamp, "
+    "event_type string, value double",
+    land=land_attribution_batch,
+    count_dir="stream_purchases", part_key="ingest_batch", base_key=LEDGER_BASE_KEY,
+    actions=(
+        Action("stream_out", _stream_out),
+        Action("expire_keep_days", _expire),
+        Action("out", _out),
+    ),
+    needs=("batch", "out", "expire_keep_days", "stream_source", "stream_out",
+           "compact_keep_from_key"),
+    exclusive=False, fold_flag="compact_keep_from_key", fold_report=None, check=_check,
+)

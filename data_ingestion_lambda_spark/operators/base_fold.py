@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from data_ingestion_lambda_spark.operators.layout import (
+    batch_key,
     committed_front,
     dir_has_parquet,
     finish_swaps,
@@ -108,7 +109,7 @@ def streaming_committed_front_key(
     ``check_not_below_horizon`` refusal would otherwise wedge the stream
     permanently). None when the checkpoint has no commits yet."""
     front = committed_front(spark, checkpoint_dir)
-    return None if front is None else f"b{front + 1:09d}"
+    return None if front is None else batch_key(front + 1)
 
 
 def auto_keep_from(

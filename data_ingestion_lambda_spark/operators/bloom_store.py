@@ -27,8 +27,6 @@ on the day it lands, and screening never re-reads member text.
 
 from __future__ import annotations
 
-import datetime as _dt
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,9 +39,16 @@ from data_ingestion_lambda_spark.operators.cms_store import check_keying_marker
 from data_ingestion_lambda_spark.operators.layout import (
     KEYINGS,
     hadoop_fs,
+    key_column,
     ledger_keying,
     partition_values,
     replace_partitions,
+)
+from data_ingestion_lambda_spark.operators.store_record import (
+    Action,
+    StoreRecord,
+    iso_date_only,
+    report_rows,
 )
 from data_ingestion_lambda_spark.plans.llm_ops import (
     _BLOOM_K,
@@ -104,26 +109,35 @@ def read_sizing(spark: SparkSession, index_dir: str) -> tuple[int, int]:
     return _BLOOM_M, _BLOOM_K
 
 
+def _sized(spark: SparkSession, index_dir: str, keying: str, m, k) -> tuple[int, int]:
+    """The refusals every bloom land runs first, and the (m, k) it lands
+    under (None picks the lane's default)."""
+    m, k = _BLOOM_M if m is None else m, _BLOOM_K if k is None else k
+    bloom_check_sizing(m, k)
+    check_keying_marker(spark, index_dir, keying)
+    _check_sizing_marker(spark, index_dir, m, k)
+    return m, k
+
+
 def apply_bloom_batch(
     spark: SparkSession,
     index_dir: str,
     members: DataFrame,
-    batch_date: str,
-    m: int = _BLOOM_M,
-    k: int = _BLOOM_K,
+    batch_key: str,
+    m: int | None = None,
+    k: int | None = None,
 ) -> dict:
     """Hash one member batch's texts into filter words and land them
-    under ``date=<batch_date>``. Idempotent per (batch, date); refuses
-    an index keyed by the streaming front's ``ingest_batch=`` and an
-    index sized differently from (m, k) — one directory, one sizing."""
-    _dt.date.fromisoformat(batch_date)
-    bloom_check_sizing(m, k)
-    check_keying_marker(spark, index_dir, "date")
-    _check_sizing_marker(spark, index_dir, m, k)
-    check_not_below_horizon(spark, index_dir, batch_date, "apply_bloom_batch")
-    words = bloom_words(_fps(members), m, k).withColumn("date", F.lit(batch_date))
-    replace_partitions(spark, index_dir, words, [batch_date])
-    return {"index": index_dir, "date": batch_date, "m": m, "k": k}
+    under its key (``date=`` for an ISO date, ``ingest_batch=`` for a
+    streamed ``b<id>``). Idempotent per (batch, key); refuses an index
+    keyed the other way and an index sized differently from (m, k) —
+    one directory, one sizing."""
+    col = key_column(batch_key)
+    m, k = _sized(spark, index_dir, col, m, k)
+    check_not_below_horizon(spark, index_dir, batch_key, "apply_bloom_batch")
+    words = bloom_words(_fps(members), m, k).withColumn(col, F.lit(batch_key))
+    replace_partitions(spark, index_dir, words, [batch_key], part_col=col)
+    return {"index": index_dir, col: batch_key, "m": m, "k": k}
 
 
 def compact_bloom_store(
@@ -176,3 +190,24 @@ def screen_docs(
     m, k = read_sizing(spark, index_dir)
     probes = docs.select("doc_id", polyhash(F.col("text")).alias("fp"))
     return bloom_screen(probes, read_bloom(spark, index_dir), m, k)
+
+
+def _screen(spark: SparkSession, index_dir: str, args) -> dict:
+    docs = spark.read.parquet(args.screen).select("doc_id", "text")
+    verdicts = screen_docs(spark, index_dir, docs)
+    hits = F.col("bloom_hit")
+    return report_rows(verdicts, "verdicts_out", args.verdicts_out, screened=None, hits=hits)
+
+
+STORE = StoreRecord(
+    "bloom-store", apply_bloom_batch, compact_bloom_store,
+    "a Bloom filter is a bit_or word grid — set bits are shared by members "
+    "and cannot be cleared for one",
+    stream_schema="doc_id bigint, text string",
+    pre_stream=lambda spark, index_dir, m=None, k=None: _sized(
+        spark, index_dir, "ingest_batch", m, k
+    ),
+    actions=(Action("screen", _screen),), check=iso_date_only,
+    needs=("batch", "stream_source", "screen", "compact_keep_from"),
+    opts=lambda args: {"m": args.bloom_m, "k": args.bloom_k},
+)

@@ -29,8 +29,6 @@ exactly once, on the day it arrives.
 
 from __future__ import annotations
 
-import datetime as _dt
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,8 +40,15 @@ from data_ingestion_lambda_spark.operators.base_fold import (
 from data_ingestion_lambda_spark.operators.layout import (
     KEYINGS,
     hadoop_fs,
+    key_column,
     ledger_keying,
     replace_partitions,
+)
+from data_ingestion_lambda_spark.operators.store_record import (
+    Action,
+    StoreRecord,
+    iso_date_only,
+    report_rows,
 )
 from data_ingestion_lambda_spark.plans.profiling import cms_counters, cms_estimate
 
@@ -75,17 +80,24 @@ def check_keying_marker(spark: SparkSession, index_dir: str, keying: str) -> Non
 
 
 def apply_cms_batch(
-    spark: SparkSession, index_dir: str, items: DataFrame, batch_date: str
+    spark: SparkSession, index_dir: str, items: DataFrame, batch_key: str
 ) -> dict:
-    """Land one batch's CMS grid under ``date=<batch_date>``. Idempotent
-    per (batch, date). Refuses an index the streaming front keys by
-    ``ingest_batch=`` (marker check above)."""
-    _dt.date.fromisoformat(batch_date)
-    check_keying_marker(spark, index_dir, "date")
-    check_not_below_horizon(spark, index_dir, batch_date, "apply_cms_batch")
-    grid = cms_counters(items).withColumn("date", F.lit(batch_date))
-    replace_partitions(spark, index_dir, grid, [batch_date])
-    return {"index": index_dir, "date": batch_date}
+    """Land one batch's CMS grid under its key: ``date=<ISO date>`` for a
+    CLI apply, ``ingest_batch=b<id>`` for a streamed micro-batch
+    (``layout.key_column``). Idempotent per (batch, key); refuses an index
+    keyed the other way (marker check above)."""
+    col = key_column(batch_key)
+    check_keying_marker(spark, index_dir, col)
+    check_not_below_horizon(spark, index_dir, batch_key, "apply_cms_batch")
+    grid = cms_counters(items).withColumn(col, F.lit(batch_key))
+    replace_partitions(spark, index_dir, grid, [batch_key], part_col=col)
+    return {"index": index_dir, col: batch_key}
+
+
+def check_stream_keying(spark: SparkSession, index_dir: str, **_) -> None:
+    """The sketch stores' refusal before a stream starts: the index must
+    not be keyed by ``date=``."""
+    check_keying_marker(spark, index_dir, "ingest_batch")
 
 
 def compact_cms_store(spark: SparkSession, index_dir: str, keep_from: str) -> dict:
@@ -133,3 +145,22 @@ def estimate_items(
     the summed grid's cells — never an undercount of the item's true
     total across every applied batch."""
     return cms_estimate(items, read_cms(spark, index_dir))
+
+
+def _estimates(spark, index_dir, args) -> dict:
+    est = estimate_items(spark, index_dir, spark.read.parquet(args.query).select("item"))
+    if args.estimates_out is not None:
+        return report_rows(est, "estimates_out", args.estimates_out, estimated_items=None)
+    rows = est.orderBy(F.desc("est"), "item").collect()
+    top = [{"item": r.item, "est": r.est} for r in rows[:5]]
+    return {"estimated_items": len(rows), "top": top}
+
+
+STORE = StoreRecord(
+    "cms-store", apply_cms_batch, compact_cms_store,
+    "a Count-Min grid is a cell-wise SUM over hashed items — one item's "
+    "contribution is not recoverable from the cells",
+    columns=("item",), stream_schema="item string", pre_stream=check_stream_keying,
+    actions=(Action("query", _estimates),), check=iso_date_only,
+    needs=("batch", "stream_source", "query", "compact_keep_from"),
+)

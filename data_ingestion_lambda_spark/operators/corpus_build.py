@@ -357,9 +357,9 @@ def run_corpus_build_available_now(
     Returns the per-batch gate reports; a no-op drain returns []."""
     from data_ingestion_lambda_spark.operators.base_fold import auto_compact_epilogue
     from data_ingestion_lambda_spark.operators.dedup_gate import compact_gate_index
-    from data_ingestion_lambda_spark.streaming.index_streams import _drain
+    from data_ingestion_lambda_spark.streaming.index_streams import drain_files
 
-    reports = _drain(
+    reports = drain_files(
         spark,
         source_dir,
         checkpoint_dir,

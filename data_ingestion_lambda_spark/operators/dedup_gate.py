@@ -60,6 +60,11 @@ from data_ingestion_lambda_spark.operators.layout import (
     partition_values,
     replace_partitions,
 )
+from data_ingestion_lambda_spark.operators.store_record import (
+    StoreRecord,
+    StoreSpec,
+    batch_requires_date,
+)
 from data_ingestion_lambda_spark.plans.llm_ops import (
     NUM_BANDS,
     NUM_HASHES,
@@ -583,3 +588,75 @@ def apply_batch_bucketed(
         "dup_pairs": n_pairs,
         "flagged_docs": n_flagged,
     }
+
+
+def _check(args) -> str | None:
+    if args.bucketed_table is None:
+        if args.index is None:
+            return "--index is required without --bucketed-table"
+        return batch_requires_date(args)
+    if args.mode != "minhash":
+        return "--bucketed-table is minhash-only"
+    if args.stream_source is not None:
+        return (
+            "--bucketed-table takes --batch/--date; use the directory index "
+            "(--index) for --stream-source"
+        )
+    if args.batch is None or args.date is None:
+        return "--bucketed-table needs --batch and --date"
+    return None
+
+
+def _read_gate_batch(spark: SparkSession, args) -> DataFrame:
+    """(doc_id, the mode's input); embedding batches may be vec_id-keyed."""
+    raw = spark.read.parquet(args.batch)
+    key = "doc_id" if "doc_id" in raw.columns else "vec_id"
+    return raw.select(F.col(key).alias("doc_id"), MODE_INPUT_COL[args.mode])
+
+
+def _prepare(spark: SparkSession, args, report: dict) -> bool:
+    """The gate runs that neither append to the directory index nor fold
+    it: the bucketed catalog table, and ``--probe-only``."""
+    table = args.bucketed_table
+    if table is None and not (args.probe_only and args.batch is not None):
+        return False
+    if table is None:
+        batch = _read_gate_batch(spark, args)
+        matches = probe_batch(spark, args.index, batch, mode=args.mode)
+    else:
+        batch = spark.read.parquet(args.batch).select("doc_id", "text")
+        if not args.probe_only:
+            report.update(apply_batch_bucketed(
+                spark, table, batch, args.date, matches_dir=args.matches_out
+            ))
+            return True
+        matches = probe_batch_bucketed(spark, table, batch, exclude_date=args.date)
+    report.update({
+        "date": args.date,
+        "batch_docs": batch.count(),
+        "dup_pairs": matches.count(),
+        "flagged_docs": matches.select("new_doc").distinct().count(),
+        "probe_only": True,
+    })
+    return True
+
+
+def _stream(spark: SparkSession, *args, **kwargs) -> list[dict]:
+    from data_ingestion_lambda_spark.streaming.dedup_stream import (
+        run_dedup_gate_available_now,
+    )
+
+    return run_dedup_gate_available_now(spark, *args, **kwargs)
+
+
+STORE = StoreRecord(
+    "dedup-gate", apply_batch, compact_gate_index, StoreSpec(key_col="doc_id"),
+    stream_schema="doc_id bigint, text string",
+    needs=("batch", "stream_source", "compact_keep_from", "auto_compact_max_dirs"),
+    paired=False,
+    opts=lambda args: {"matches_dir": args.matches_out, "mode": args.mode},
+    check=_check, prepare=_prepare, stream=_stream,
+    batch=lambda spark, index_dir, args, **opts: apply_batch(
+        spark, index_dir, _read_gate_batch(spark, args), args.date, **opts
+    ),
+)

@@ -46,6 +46,11 @@ from data_ingestion_lambda_spark.operators.layout import (
     PARTITION_COL,
     replace_partitions,
 )
+from data_ingestion_lambda_spark.operators.store_record import (
+    Action,
+    StoreRecord,
+    report_rows,
+)
 from data_ingestion_lambda_spark.plans.events_queries import (
     drift_from_histograms,
     value_bucket,
@@ -158,3 +163,19 @@ def read_drift(spark: SparkSession, index_dir: str) -> DataFrame:
         "cnt",
     )
     return drift_from_histograms(h)
+
+
+def _report(spark: SparkSession, index_dir: str, args) -> dict:
+    drift = read_drift(spark, index_dir)
+    if args.report_out is not None:
+        return report_rows(drift, "report_out", args.report_out, drift_rows=None)
+    rows = drift.orderBy("event_type", "day").collect()
+    l1 = max((r.l1_drift for r in rows), default=None)
+    return {"drift_rows": len(rows), "max_l1_drift": l1}
+
+
+STORE = StoreRecord(
+    "drift-monitor", apply_histogram_batch, compact_drift_monitor,
+    "the histograms are per-day value-bucket counts with no per-subject provenance",
+    events=True, actions=(Action(None, _report),),
+)

@@ -27,8 +27,6 @@ fold, without ever re-reading prior batches' text.
 
 from __future__ import annotations
 
-import datetime as _dt
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -40,9 +38,16 @@ from data_ingestion_lambda_spark.operators.base_fold import (
 from data_ingestion_lambda_spark.operators.cms_store import check_keying_marker
 from data_ingestion_lambda_spark.operators.layout import (
     hadoop_fs,
+    key_column,
     ledger_keying,
     partition_values,
     replace_partitions,
+)
+from data_ingestion_lambda_spark.operators.store_record import (
+    Action,
+    StoreRecord,
+    iso_date_only,
+    report_rows,
 )
 from data_ingestion_lambda_spark.plans.llm_ops import (
     dsir_bits,
@@ -78,25 +83,33 @@ def _check_target_marker(
     fs.mkdirs(path_cls(f"{index_dir}/_target={target_lang}"))
 
 
+def _check_stream(
+    spark: SparkSession, index_dir: str, target_lang: str = "en"
+) -> None:
+    check_keying_marker(spark, index_dir, "ingest_batch")
+    _check_target_marker(spark, index_dir, target_lang)
+
+
 def apply_dsir_batch(
     spark: SparkSession,
     index_dir: str,
     docs: DataFrame,
-    batch_date: str,
+    batch_key: str,
     target_lang: str = "en",
 ) -> dict:
-    """Land one batch's bucket counts under ``date=<batch_date>``.
-    Idempotent per (batch, date); refuses an ``ingest_batch=``-keyed
-    index (marker check shared with the CMS store)."""
-    _dt.date.fromisoformat(batch_date)
-    check_keying_marker(spark, index_dir, "date")
+    """Land one batch's bucket counts under its key (``date=`` for an ISO
+    date, ``ingest_batch=`` for a streamed ``b<id>``). Idempotent per
+    (batch, key); refuses an index keyed the other way (marker check
+    shared with the CMS store)."""
+    col = key_column(batch_key)
+    check_keying_marker(spark, index_dir, col)
     _check_target_marker(spark, index_dir, target_lang)
-    check_not_below_horizon(spark, index_dir, batch_date, "apply_dsir_batch")
+    check_not_below_horizon(spark, index_dir, batch_key, "apply_dsir_batch")
     stats = dsir_stats(dsir_features(_with_is_t(docs, target_lang))).withColumn(
-        "date", F.lit(batch_date)
+        col, F.lit(batch_key)
     )
-    replace_partitions(spark, index_dir, stats, [batch_date])
-    return {"index": index_dir, "date": batch_date}
+    replace_partitions(spark, index_dir, stats, [batch_key], part_col=col)
+    return {"index": index_dir, col: batch_key}
 
 
 def compact_dsir_store(
@@ -175,3 +188,23 @@ def score_docs(
         dsir_features(_with_is_t(docs, target_lang)),
         dsir_bits(dense, n_s, n_t),
     )
+
+
+def _score(spark: SparkSession, index_dir: str, args) -> dict:
+    docs = spark.read.parquet(args.score).select("doc_id", "lang", "text")
+    scores = score_docs(spark, index_dir, docs, target_lang=args.target_lang)
+    like = F.col("logw_bits") > 0
+    return report_rows(scores, "scores_out", args.scores_out, scored=None, target_like=like)
+
+
+STORE = StoreRecord(
+    "dsir-store", apply_dsir_batch, compact_dsir_store,
+    "the DSIR models are 1024-bucket hashed count grids with no "
+    "per-document provenance",
+    columns=("doc_id", "lang", "text"),
+    stream_schema="doc_id bigint, lang string, text string",
+    pre_stream=_check_stream, check=iso_date_only,
+    actions=(Action("score", _score),),
+    needs=("batch", "stream_source", "score", "compact_keep_from"),
+    opts=lambda args: {"target_lang": args.target_lang},
+)

@@ -49,9 +49,17 @@ from pyspark.sql import functions as F
 from data_ingestion_lambda_spark.operators.base_fold import base_fold, fold_horizon
 from data_ingestion_lambda_spark.operators.layout import (
     finish_swaps,
+    hadoop_fs,
+    ledger_keying,
     partition_values,
     refuse_stranded_fold,
     replace_partitions,
+)
+from data_ingestion_lambda_spark.operators.store_record import (
+    Action,
+    StoreRecord,
+    StoreSpec,
+    report_rows,
 )
 
 DEC38 = "decimal(38,0)"
@@ -473,3 +481,114 @@ def read_user_decayed_activity(
         .cast("long")
         .alias("events_last_week"),
     )
+
+
+# The CLI drives one of two ledgers in --index: the daily one keyed by
+# date=, or the stream's moment ledger keyed by ingest_batch=
+# (streaming/events.py); ledger_keying refuses a dir holding both. The
+# hooks route each step to its ledger, and refuse what it cannot take.
+_DAILY_ONLY = {
+    "batch": "{index} is a stream-driven ledger; daily --batch applies need "
+    "their own dir",
+    "compact_before": "--compact-before folds date= partitions; a stream "
+    "ledger has batch-id keys (no calendar horizon)",
+    "decayed_out": "--decayed-out needs the date-keyed daily store (decay "
+    "weights come from date keys)",
+    "as_of": "--as-of needs the date-keyed daily store (a stream ledger is "
+    "keyed by batch id)",
+}
+
+
+def _check(args) -> str | None:
+    if args.decayed_out is not None and args.as_of is None:
+        return "--decayed-out needs --as-of"
+    if args.as_of is not None and args.vectors_out is None and args.decayed_out is None:
+        return "--as-of needs --vectors-out or --decayed-out"
+    streamed = args.stream_source is not None  # leaves a stream ledger
+    flags = ("compact_before", "decayed_out", "as_of") if streamed else ()
+    return next((_DAILY_ONLY[f] for f in flags if getattr(args, f) is not None), None)
+
+
+def _stream_ledger(spark: SparkSession, index_dir: str, streamed: bool) -> bool:
+    """Is ``index_dir`` the stream's ledger? A new one is when this run streams."""
+    fs, path_cls = hadoop_fs(spark, index_dir)
+    if not fs.exists(path_cls(index_dir)):
+        return streamed
+    try:
+        return ledger_keying(spark, index_dir) == "ingest_batch"
+    except ValueError as e:
+        raise SystemExit(f"feature-store: {e}") from None
+
+
+def _daily(spark: SparkSession, index_dir: str, flag: str) -> None:
+    if _stream_ledger(spark, index_dir, False):
+        raise SystemExit("feature-store: " + _DAILY_ONLY[flag].format(index=index_dir))
+
+
+def _stream(spark: SparkSession, source_dir: str, index_dir: str, *args, **kw) -> int:
+    from data_ingestion_lambda_spark.streaming.events import run_feature_store_available_now
+
+    if not _stream_ledger(spark, index_dir, True):
+        raise SystemExit(
+            f"feature-store: {index_dir} is a date-keyed daily store; point "
+            "--stream-source at its own ledger dir"
+        )
+    return run_feature_store_available_now(spark, source_dir, index_dir, *args, **kw)
+
+
+def _apply(spark: SparkSession, index_dir: str, batch: DataFrame, key: str) -> dict:
+    _daily(spark, index_dir, "batch")
+    return apply_feature_batch(spark, index_dir, batch, key)
+
+
+def _compact(spark: SparkSession, index_dir: str, keep_from: str) -> int:
+    _daily(spark, index_dir, "compact_before")
+    return compact_feature_ledger(spark, index_dir, keep_from)
+
+
+def _decayed(spark: SparkSession, index_dir: str, args) -> dict:
+    _daily(spark, index_dir, "decayed_out")
+    decayed = read_user_decayed_activity(spark, index_dir, args.as_of)
+    return report_rows(decayed, "decayed_out", args.decayed_out)
+
+
+def _vectors(spark: SparkSession, index_dir: str, args) -> dict:
+    from data_ingestion_lambda_spark.streaming.events import features_from_moment_ledger
+
+    if _stream_ledger(spark, index_dir, args.stream_source is not None):
+        if args.as_of is not None:
+            raise SystemExit(f"feature-store: {_DAILY_ONLY['as_of']}")
+        vectors = features_from_moment_ledger(spark, index_dir)
+    elif args.as_of is None:
+        vectors = read_user_features(spark, index_dir)
+    else:
+        vectors = read_user_features_asof(spark, index_dir, args.as_of)
+    return report_rows(vectors, "vectors_out", args.vectors_out, users=None)
+
+
+def _auto_fold(spark: SparkSession, args, index_dir: str) -> dict | None:
+    """A stream ledger's batch-id keys have no date horizon: it folds every
+    committed batch at once (streaming/events.py), under the policy's
+    report shape. None leaves a daily ledger to the shared policy."""
+    from data_ingestion_lambda_spark.streaming.events import (
+        batch_ledger_fold_due,
+        compact_moment_ledger,
+    )
+
+    max_dirs, streamed = args.auto_compact_max_dirs, args.stream_source is not None
+    if max_dirs is None or not _stream_ledger(spark, index_dir, streamed):
+        return None
+    policy = {"max_dirs": max_dirs, "due": batch_ledger_fold_due(spark, index_dir, max_dirs)}
+    if policy["due"]:
+        checkpoint = args.checkpoint if streamed else None
+        policy["compaction"] = compact_moment_ledger(spark, index_dir, checkpoint)
+    return policy
+
+
+STORE = StoreRecord(
+    "feature-store", _apply, _compact, StoreSpec(key_col="user_id"), events=True,
+    actions=(Action("decayed_out", _decayed), Action("vectors_out", _vectors)),
+    needs=("batch", "stream_source", "vectors_out", "decayed_out", "compact_before"),
+    fold_flag="compact_before", fold_report="folded_partitions",
+    stream_report="stream_batches", check=_check, stream=_stream, auto_fold=_auto_fold,
+)

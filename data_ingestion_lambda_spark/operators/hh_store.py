@@ -43,6 +43,12 @@ from data_ingestion_lambda_spark.operators.layout import (
     ledger_keying,
     replace_partitions,
 )
+from data_ingestion_lambda_spark.operators.store_record import (
+    Action,
+    StoreRecord,
+    StoreSpec,
+    report_rows,
+)
 from data_ingestion_lambda_spark.plans.profiling import _HH_K, mg_sketch
 
 N_ROW = "__n__"  # reserved item carrying the batch's total count
@@ -135,3 +141,22 @@ def read_heavy_hitters(spark: SparkSession, index_dir: str) -> DataFrame:
             .alias("undercount_bound"),
         )
     )
+
+
+def _report(spark: SparkSession, index_dir: str, args) -> dict:
+    hh = read_heavy_hitters(spark, index_dir)
+    if args.report_out is not None:
+        return report_rows(hh, "report_out", args.report_out, heavy_hitters=None)
+    rows = hh.orderBy(F.desc("count_lower"), "item").collect()
+    top = [{"item": r.item, "count_lower": r.count_lower} for r in rows[:5]]
+    report = {"heavy_hitters": len(rows), "top": top}
+    if rows:
+        report["n_total"] = rows[0].n_total
+        report["undercount_bound"] = rows[0].undercount_bound
+    return report
+
+
+STORE = StoreRecord(
+    "hh-store", apply_hh_batch, compact_hh_store, StoreSpec(key_col="item"),
+    columns=("item",), actions=(Action(None, _report),),
+)

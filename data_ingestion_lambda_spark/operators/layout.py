@@ -4,7 +4,9 @@ Every table and store here keeps its state in directory names, the way
 the reference keeps its progress in S3 keys (src/s3_processor.py:113-210):
 
 - data partitions ``<key>=<value>`` — ``date=``, ``ingest_batch=`` and
-  the quarantine's ``_batch_id=``;
+  the ingest quarantine's and log's ``_batch_id=``; a streamed batch's
+  key is ``batch_key`` (``b`` and nine digits), and ``key_column`` reads
+  a ledger's partition column off the form of its key;
 - marker directories ``_<name>=<value>`` — ``_horizon=``, ``_sizing=``,
   ``_target=``, ``_keyed_by=`` and ``_order=``; empty dirs, because a
   mkdir is atomic on every Hadoop FS and the underscore hides them from
@@ -32,6 +34,8 @@ store; this module owns only the listing, parsing and swap mechanics.
 
 from __future__ import annotations
 
+import datetime as _dt
+import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -41,6 +45,22 @@ KEYINGS = ("date", "ingest_batch")  # the two ledger partition columns
 STAGING_PREFIX = ".staging-"  # every swap dir, this version's and legacy
 SWAP_STAGING = ".staging-swap-"  # the ones replace_partitions writes
 FOLD_STAGING = ".compact-staging"  # legacy: see refuse_stranded_fold
+
+
+def batch_key(batch_id: int) -> str:
+    """The ledger key of streamed micro-batch ``batch_id``: ``b`` and nine
+    digits, so keys sort in batch order and above every ISO date."""
+    return f"b{batch_id:09d}"
+
+
+def key_column(key: str) -> str:
+    """The ledger partition column a key lands under, read from its form:
+    ``ingest_batch`` for a ``batch_key``, ``date`` for an ISO date. Any
+    other key is refused (``ValueError``)."""
+    if re.fullmatch(r"b\d{9}", key):
+        return "ingest_batch"
+    _dt.date.fromisoformat(key)
+    return "date"
 
 
 def hadoop_fs(spark: SparkSession, path: str):

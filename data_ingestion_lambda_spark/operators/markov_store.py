@@ -51,6 +51,11 @@ from data_ingestion_lambda_spark.operators.base_fold import (
 )
 from data_ingestion_lambda_spark.operators.cms_store import check_keying_marker
 from data_ingestion_lambda_spark.operators.layout import replace_partitions
+from data_ingestion_lambda_spark.operators.store_record import (
+    Action,
+    StoreRecord,
+    StoreSpec,
+)
 
 _TOUCH_STATE = (
     "CASE event_type WHEN 'view' THEN 1 WHEN 'click' THEN 2 ELSE 3 END"
@@ -262,3 +267,15 @@ def read_attribution_markov(spark: SparkSession, index_dir: str) -> DataFrame:
     return markov_from_transition_counts(
         spark, read_transition_counts(spark, index_dir).collect()
     )
+
+
+def _credit(spark: SparkSession, index_dir: str, args) -> dict:
+    credit = read_attribution_markov(spark, index_dir).orderBy("channel")
+    return {"credit": [r.asDict() for r in credit.collect()]}
+
+
+STORE = StoreRecord(
+    "markov-store", apply_markov_batch, compact_markov_store,
+    StoreSpec(key_col="user_id"), actions=(Action("credit", _credit),),
+    needs=("batch", "credit", "compact_keep_from"),
+)

@@ -57,7 +57,6 @@ replay would double-count instead of overwriting itself).
 
 from __future__ import annotations
 
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -66,6 +65,14 @@ from data_ingestion_lambda_spark.operators.layout import (
     PARTITION_COL,
     hadoop_fs,
     replace_partitions,
+)
+from data_ingestion_lambda_spark.operators.store_record import (
+    Action,
+    StoreRecord,
+    StoreSpec,
+    SubSpec,
+    batch_requires_date,
+    report_rows,
 )
 from data_ingestion_lambda_spark.plans.llm_ops import tokens
 from data_ingestion_lambda_spark.plans.retrieval import (
@@ -290,3 +297,26 @@ def compact_postings_index(
             ),
         },
     )
+
+
+def _query(spark: SparkSession, index_dir: str, args) -> dict:
+    raw = spark.read.parquet(args.query)
+    key = "query_id" if "query_id" in raw.columns else "doc_id"
+    queries = raw.select(F.col(key).alias("query_id"), "text")
+    kwargs = {} if args.k is None else {"k": args.k}
+    topk = search_topk(spark, index_dir, queries, **kwargs)
+    return report_rows(topk, "out", args.out, result_rows=None)
+
+
+STORE = StoreRecord(
+    "search-index", update_postings, compact_postings_index,
+    StoreSpec(
+        key_col="doc_id",
+        subs=(SubSpec("postings", inner_parts=("bucket",)), SubSpec("doclen")),
+        derived="postings_stats",
+    ),
+    columns=("doc_id", "text"), stream_schema="doc_id bigint, text string",
+    count_dir="doclen", actions=(Action("query", _query),),
+    needs=("batch", "stream_source", "compact_keep_from", "query"),
+    paired=False, fold_report=None, check=batch_requires_date,
+)

@@ -52,6 +52,12 @@ from data_ingestion_lambda_spark.operators.base_fold import (
     check_not_below_horizon,
 )
 from data_ingestion_lambda_spark.operators.layout import replace_partitions
+from data_ingestion_lambda_spark.operators.store_record import (
+    Action,
+    StoreRecord,
+    StoreSpec,
+    report_rows,
+)
 
 GAP_US = 30 * 60 * 1_000_000  # the events_sessionize threshold
 
@@ -111,7 +117,7 @@ def apply_session_batch(
 
 def land_session_batch(
     spark: SparkSession, index_dir: str, batch_events: DataFrame, key: str
-) -> None:
+) -> dict:
     """Land one micro-batch's partial sessions under ``date=<key>`` with
     NO day-purity requirement — the streaming front's landing: the
     batch-id key owns exactly its batch's events by construction, and
@@ -123,6 +129,7 @@ def land_session_batch(
     replace_partitions(
         spark, index_dir, part.withColumn("date", F.lit(key)), [key]
     )
+    return {"key": key}
 
 
 def compact_session_store(
@@ -243,3 +250,25 @@ def read_user_session_stats(spark: SparkSession, index_dir: str) -> DataFrame:
             "max_session_sec"
         ),
     )
+
+
+def _sessions(spark: SparkSession, index_dir: str, args) -> dict:
+    sessions = read_sessions(spark, index_dir)
+    return report_rows(sessions, "sessions_out", args.sessions_out, sessions=None)
+
+
+def _stats(spark: SparkSession, index_dir: str, args) -> dict:
+    stats = read_user_session_stats(spark, index_dir)
+    return report_rows(stats, "stats_out", args.stats_out, users=None)
+
+
+STORE = StoreRecord(
+    "session-store", apply_session_batch, compact_session_store,
+    StoreSpec(key_col="user_id"), events=True,
+    # raw generator drops carry parquet TIMESTAMP(NANOS), a LONG under the
+    # session's nanosAsLong conf: stream them with schema "... ts bigint"
+    stream_schema="event_id bigint, user_id bigint, ts timestamp",
+    land=land_session_batch,
+    actions=(Action("sessions_out", _sessions), Action("stats_out", _stats)),
+    needs=("batch", "stream_source", "sessions_out", "stats_out", "compact_keep_from"),
+)

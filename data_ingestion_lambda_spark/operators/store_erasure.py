@@ -65,8 +65,6 @@ what a data-subject request forces onto any maintained derivative of it.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -78,97 +76,53 @@ from data_ingestion_lambda_spark.operators.layout import (
     read_partitions,
     replace_partitions,
 )
+from data_ingestion_lambda_spark.operators.store_record import (
+    STORE_MODULES,
+    StoreSpec,
+    SubSpec,
+    store_record,
+)
 
 
-@dataclass(frozen=True)
-class SubSpec:
-    """One keyed sub-table of a store: where it lives relative to the
-    store root ("" = the root itself), and the Hive partition levels
-    UNDER the ledger key that a rewrite must preserve (the postings
-    table's ``bucket``, the ANN index's ``cell``). ``key_cols`` overrides
-    the store's key column for MATCHING: a row is the subject's if ANY of
-    these columns holds a requested key (a pair table references the
-    subject from either side); empty means the store key_col itself."""
-
-    sub: str = ""
-    inner_parts: tuple[str, ...] = ()
-    key_cols: tuple[str, ...] = ()
-
-
-@dataclass(frozen=True)
-class StoreSpec:
-    key_col: str
-    subs: tuple[SubSpec, ...] = (SubSpec(),)
-    # reserved base-partition values that may differ in schema from the
-    # live partitions (day-preserving folds add a ``day`` data column),
-    # so they are rewritten in their own pass with their own schema
-    base_keys: tuple[str, ...] = ("0000-00-00", "0000-base")
-    derived: str | None = None  # name of a post-rewrite recompute hook
-
-
-# The erasable stores. Key columns are the stores' own subject keys:
-# user-keyed behavioral stores, doc-keyed text indexes, vec-keyed ANN,
-# item-keyed heavy hitters.
+# The erasable stores and the unlearnable sketch stores (with why each
+# cannot subtract a member) are read from the store records; two
+# artifacts that are not CLI stores are added here. Key columns are the
+# stores' own subject keys: user-keyed behavioral stores, doc-keyed text
+# indexes, vec-keyed ANN, item-keyed heavy hitters.
+_RECORDS = {name: store_record(name) for name in STORE_MODULES}
 STORE_SPECS: dict[str, StoreSpec] = {
-    "feature-store": StoreSpec(key_col="user_id"),
-    "session-store": StoreSpec(key_col="user_id"),
-    "touch-store": StoreSpec(key_col="user_id"),
-    "markov-store": StoreSpec(key_col="user_id"),
-    "attribution-store": StoreSpec(
-        key_col="user_id",
-        subs=(SubSpec("purchases"), SubSpec("last_clicks"), SubSpec("clicks")),
-    ),
-    "attribution-ledger": StoreSpec(
-        key_col="user_id",
-        subs=(
-            SubSpec("stream_purchases", inner_parts=("date",)),
-            SubSpec("stream_clicks", inner_parts=("date",)),
-        ),
-    ),
-    "dedup-gate": StoreSpec(key_col="doc_id"),
-    "search-index": StoreSpec(
-        key_col="doc_id",
-        subs=(SubSpec("postings", inner_parts=("bucket",)), SubSpec("doclen")),
-        derived="postings_stats",
-    ),
-    "ann-index": StoreSpec(
-        key_col="vec_id", subs=(SubSpec("cells", inner_parts=("cell",)),)
-    ),
-    "hh-store": StoreSpec(key_col="item"),
-    # The corpus-build workflow's work dir (operators/corpus_build.py):
-    # both gate indexes, the three per-day ledgers, and the two flag
-    # tables — pair rows reference the subject from EITHER side, so they
-    # match on both columns. Erase-then-finalize equals a build that
-    # never ingested the subject (pinned in tests/test_corpus_build.py):
-    # clusters, contamination and the cap all recompute from the
-    # surviving rows at finalize time.
-    "corpus-build": StoreSpec(
-        key_col="doc_id",
-        subs=(
-            SubSpec("docs"),
-            SubSpec("verdicts"),
-            SubSpec("grams"),
-            SubSpec("exact_index"),
-            SubSpec("minhash_index"),
-            SubSpec("pairs", key_cols=("new_doc", "dup_of")),
-            SubSpec("exact_matches", key_cols=("new_doc", "dup_of")),
-        ),
-    ),
+    name: r.erase for name, r in _RECORDS.items() if isinstance(r.erase, StoreSpec)
 }
-
-# The unlearnable sketch stores and why each cannot subtract a member.
 UNLEARNABLE: dict[str, str] = {
-    "bloom-store": "a Bloom filter is a bit_or word grid — set bits are "
-    "shared by members and cannot be cleared for one",
-    "cms-store": "a Count-Min grid is a cell-wise SUM over hashed items — "
-    "one item's contribution is not recoverable from the cells",
-    "vocab": "the n-gram model stores (token, count) totals with no "
-    "per-document provenance",
-    "dsir-store": "the DSIR models are 1024-bucket hashed count grids "
-    "with no per-document provenance",
-    "drift-monitor": "the histograms are per-day value-bucket counts "
-    "with no per-subject provenance",
+    name: r.erase for name, r in _RECORDS.items() if isinstance(r.erase, str)
 }
+# The attribution store's any-split stream ledger.
+STORE_SPECS["attribution-ledger"] = StoreSpec(
+    key_col="user_id",
+    subs=(
+        SubSpec("stream_purchases", inner_parts=("date",)),
+        SubSpec("stream_clicks", inner_parts=("date",)),
+    ),
+)
+# The corpus-build workflow's work dir (operators/corpus_build.py): both
+# gate indexes, the three per-day ledgers, and the two flag tables —
+# pair rows reference the subject from EITHER side, so they match on
+# both columns. Erase-then-finalize equals a build that never ingested
+# the subject (pinned in tests/test_corpus_build.py): clusters,
+# contamination and the cap all recompute from the surviving rows at
+# finalize time.
+STORE_SPECS["corpus-build"] = StoreSpec(
+    key_col="doc_id",
+    subs=(
+        SubSpec("docs"),
+        SubSpec("verdicts"),
+        SubSpec("grams"),
+        SubSpec("exact_index"),
+        SubSpec("minhash_index"),
+        SubSpec("pairs", key_cols=("new_doc", "dup_of")),
+        SubSpec("exact_matches", key_cols=("new_doc", "dup_of")),
+    ),
+)
 
 
 def _rebuild_remedy(store: str) -> str:

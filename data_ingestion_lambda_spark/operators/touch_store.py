@@ -22,8 +22,6 @@ not the events, are what the ledger carries.
 
 from __future__ import annotations
 
-import datetime as _dt
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,10 +30,20 @@ from data_ingestion_lambda_spark.operators.base_fold import (
     base_fold,
     check_not_below_horizon,
 )
-from data_ingestion_lambda_spark.operators.cms_store import check_keying_marker
+from data_ingestion_lambda_spark.operators.cms_store import (
+    check_keying_marker,
+    check_stream_keying,
+)
 from data_ingestion_lambda_spark.operators.layout import (
+    key_column,
     ledger_keying,
     replace_partitions,
+)
+from data_ingestion_lambda_spark.operators.store_record import (
+    Action,
+    StoreRecord,
+    StoreSpec,
+    iso_date_only,
 )
 
 _PPB = 10**9
@@ -54,17 +62,18 @@ def _user_state(events: DataFrame) -> DataFrame:
 
 
 def apply_touch_batch(
-    spark: SparkSession, index_dir: str, events: DataFrame, batch_date: str
+    spark: SparkSession, index_dir: str, events: DataFrame, batch_key: str
 ) -> dict:
-    """Land one batch's per-user (mask, conv) under ``date=<batch>``.
-    Idempotent per (batch, date); any event split is fine — the fold is
-    idempotent OR, so even re-delivered events cannot overcount."""
-    _dt.date.fromisoformat(batch_date)
-    check_keying_marker(spark, index_dir, "date")
-    check_not_below_horizon(spark, index_dir, batch_date, "apply_touch_batch")
-    state = _user_state(events).withColumn("date", F.lit(batch_date))
-    replace_partitions(spark, index_dir, state, [batch_date])
-    return {"index": index_dir, "date": batch_date}
+    """Land one batch's per-user (mask, conv) under its key (``date=`` for
+    an ISO date, ``ingest_batch=`` for a streamed ``b<id>``). Idempotent
+    per (batch, key); any event split is fine — the fold is idempotent
+    OR, so even re-delivered events cannot overcount."""
+    col = key_column(batch_key)
+    check_keying_marker(spark, index_dir, col)
+    check_not_below_horizon(spark, index_dir, batch_key, "apply_touch_batch")
+    state = _user_state(events).withColumn(col, F.lit(batch_key))
+    replace_partitions(spark, index_dir, state, [batch_key], part_col=col)
+    return {"index": index_dir, col: batch_key}
 
 
 def compact_touch_store(
@@ -122,3 +131,17 @@ def read_attribution_shapley(spark: SparkSession, index_dir: str) -> DataFrame:
         "conv", "converted"
     )
     return shapley_from_user_state(spark, state)
+
+
+def _shapley(spark: SparkSession, index_dir: str, args) -> dict:
+    credit = read_attribution_shapley(spark, index_dir).orderBy("channel")
+    return {"shapley": [r.asDict() for r in credit.collect()]}
+
+
+STORE = StoreRecord(
+    "touch-store", apply_touch_batch, compact_touch_store, StoreSpec(key_col="user_id"),
+    stream_schema="event_id bigint, user_id bigint, event_type string",
+    pre_stream=check_stream_keying, check=iso_date_only,
+    actions=(Action("shapley", _shapley),),
+    needs=("batch", "stream_source", "shapley", "compact_keep_from"),
+)

@@ -58,6 +58,7 @@ from data_ingestion_lambda_spark.operators.layout import (
     partition_values,
     replace_partitions,
 )
+from data_ingestion_lambda_spark.operators.store_record import StoreRecord, report_rows
 from data_ingestion_lambda_spark.plans.llm_ops import tokens
 
 
@@ -239,3 +240,43 @@ def score_batch(
             ),
         )
     )
+
+
+def _check(args) -> str | None:
+    if args.stream_source is not None and (args.score_only or args.score_out):
+        return (
+            "--stream-source only extends the model; scoring runs against the "
+            "persisted counts via --batch --score-only"
+        )
+    if args.batch is not None and not args.score_only and args.date is None:
+        return "--date is required unless --score-only"
+    return None
+
+
+def _batch(spark: SparkSession, vocab_dir: str, args, order: int = 1) -> dict:
+    """Score the batch first, against the model without its own partition,
+    so a replayed (batch, date) scores what the first run scored; then
+    extend the model unless --score-only."""
+    batch = spark.read.parquet(args.batch).select("doc_id", "text")
+    report: dict = {"batch_docs": batch.count()}
+    try:
+        scored = score_batch(spark, vocab_dir, batch, exclude_date=args.date, order=order)
+        report.update(report_rows(scored, "score_out", args.score_out, scored_docs=None))
+    except ValueError as e:
+        # only an empty model (the first batch) is benign; an order
+        # mismatch must surface, not be reported as success
+        if "no (remaining) partitions" not in str(e):
+            raise
+        report["scored_docs"] = None
+    if not args.score_only:
+        report.update(update_vocab(spark, vocab_dir, batch, args.date, order=order))
+    return report
+
+
+STORE = StoreRecord(
+    "vocab", update_vocab, compact_vocab,
+    "the n-gram model stores (token, count) totals with no per-document provenance",
+    columns=("doc_id", "text"), stream_schema="doc_id bigint, text string",
+    needs=("batch", "stream_source", "compact_keep_from"), paired=False,
+    dir_flag="vocab", opts=lambda args: {"order": args.order}, check=_check, batch=_batch,
+)

@@ -1,6 +1,7 @@
 """Streaming front end for the maintained dedup gate — the composition
 of the two halves of this repo's daily-loop story: Structured
-Streaming's file discovery/checkpointing (streaming/driver.py) DRIVES
+Streaming's file discovery/checkpointing (streaming/index_streams.py::
+run_store_available_now, over the gate's store record) DRIVES
 the persisted-index gate (operators/dedup_gate.py), so "a new document
 drop landed" → "it was probed against everything already accepted and
 its signatures joined the index" is one unattended invocation.
@@ -34,8 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-from data_ingestion_lambda_spark.operators.dedup_gate import apply_batch
-from data_ingestion_lambda_spark.streaming.index_streams import _drain
+from data_ingestion_lambda_spark.operators.dedup_gate import STORE
+from data_ingestion_lambda_spark.streaming.index_streams import run_store_available_now
 
 _MODE_SCHEMA = {
     "minhash": "doc_id bigint, text string",
@@ -59,13 +60,14 @@ def run_dedup_gate_available_now(
     per-batch gate reports in processing order; a no-op run (nothing
     new) returns []. Re-running later picks up only files that landed
     since — the checkpoint, not a date convention, defines "new"."""
-    return _drain(
+    return run_store_available_now(
+        STORE,
         spark,
         source_dir,
+        index_dir,
         checkpoint_dir,
-        _MODE_SCHEMA[mode],
-        lambda batch, key: apply_batch(
-            spark, index_dir, batch, key, matches_dir=matches_dir, mode=mode
-        ),
         max_files_per_trigger,
+        schema=_MODE_SCHEMA[mode],
+        matches_dir=matches_dir,
+        mode=mode,
     )

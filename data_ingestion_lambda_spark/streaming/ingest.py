@@ -16,7 +16,7 @@ What each reference mechanism becomes:
       invocation drains everything new then stops — same operational
       shape, real checkpointing
 - JSON audit twin (src/s3_processor.py:147-154)
-    → an append-only parquet ingestion log written per batch
+    → a parquet ingestion log, one ``_batch_id=<id>`` row per batch
 
 The parquet and JDBC sinks share the source, the micro-batch body
 (``_process_batch``) and the last-writer-wins reduction
@@ -42,7 +42,11 @@ from data_ingestion_lambda_spark.functions.normalize import (
     stage_consumption,
     staged_summary,
 )
-from data_ingestion_lambda_spark.operators.layout import has_partition, replace_partitions
+from data_ingestion_lambda_spark.operators.layout import (
+    batch_key,
+    has_partition,
+    replace_partitions,
+)
 from data_ingestion_lambda_spark.operators.upsert import (
     merge_last_writer_wins,
     upsert_into_parquet,
@@ -51,7 +55,7 @@ from data_ingestion_lambda_spark.operators.upsert import (
 from data_ingestion_lambda_spark.sources.csv_source import consumption_csv
 from data_ingestion_lambda_spark.streaming.driver import drain, paced_reader
 
-QUARANTINE_PART_COL = "_batch_id"
+BATCH_PART_COL = "_batch_id"  # the quarantine and log partitions
 
 # Last-writer-wins order: the reference processes files sequentially in
 # date order (src/s3_processor.py:78), and date-partitioned drop paths
@@ -67,31 +71,26 @@ ORDER_COLS = ["_source_file", "_block_start", "_ingest_seq"]
 Sink = Callable[[DataFrame, int, list], Any]
 
 
-def _write_quarantine(
-    spark: SparkSession,
-    quarantine_dir: str,
-    quarantined: DataFrame | None,
-    batch_id: int,
+def _write_batch_partition(
+    spark: SparkSession, out_dir: str, rows: DataFrame | None, batch_id: int
 ) -> None:
-    """Persist the batch's bad rows under their own ``_batch_id=<id>``
-    partition via the staged swap, so an at-least-once REPLAY of an
-    uncommitted micro-batch overwrites its own evidence instead of
-    appending a duplicate copy (ADVICE r13 — the old ``mode('append')``
-    write duplicated quarantine rows on every replay). The underscore
-    partition name stays reader-visible: Spark's file index exempts
-    ``_name=value`` partition dirs from its hidden-path filter.
+    """Write a micro-batch's rows under its own ``_batch_id=<id>``
+    partition of ``out_dir`` through the staged swap, so an at-least-once
+    REPLAY of an uncommitted micro-batch overwrites what its earlier
+    attempt wrote instead of appending a duplicate copy. Both per-batch
+    side writes go through it: the quarantined rows and the log row. The
+    underscore partition name stays reader-visible: Spark's file index
+    exempts ``_name=value`` partition dirs from its hidden-path filter.
 
-    ``quarantined=None`` is a batch without bad rows: it writes nothing,
-    unless ``_batch_id=<id>`` already exists, which the swap then deletes
+    ``rows=None`` (a batch without bad rows) writes nothing, unless
+    ``_batch_id=<id>`` already exists, which the swap then deletes
     without a Spark job."""
-    if quarantined is None:
-        if not has_partition(spark, quarantine_dir, QUARANTINE_PART_COL, batch_id):
+    if rows is None:
+        if not has_partition(spark, out_dir, BATCH_PART_COL, batch_id):
             return
     else:
-        quarantined = quarantined.withColumn(QUARANTINE_PART_COL, F.lit(batch_id))
-    replace_partitions(
-        spark, quarantine_dir, quarantined, [batch_id], part_col=QUARANTINE_PART_COL
-    )
+        rows = rows.withColumn(BATCH_PART_COL, F.lit(batch_id))
+    replace_partitions(spark, out_dir, rows, [batch_id], part_col=BATCH_PART_COL)
 
 
 @dataclass
@@ -142,23 +141,23 @@ def _process_batch(
         # converge under replay (the merge on its key, the quarantine
         # write on its _batch_id partition).
         if quarantine_dir is not None:
-            _write_quarantine(
+            _write_batch_partition(
                 spark,
                 quarantine_dir,
                 quarantined if m["rows_quarantined"] else None,
                 batch_id,
             )
         if log_dir is not None:
-            # The audit twin (src/s3_processor.py:147-154) as an
-            # append-only table; a batch without good rows logs its zero
-            # row (max_date NULL).
+            # The audit twin (src/s3_processor.py:147-154), one row per
+            # batch; a batch without good rows logs its zero row
+            # (max_date NULL).
             log = spark.range(1).select(
                 F.lit(batch_id).alias("batch_id"),
                 F.lit(m["rows_upserted"]).cast("long").alias("rows_upserted"),
                 F.lit(m["max_date"]).cast("date").alias("max_date"),
                 F.current_timestamp().alias("logged_at"),
             )
-            log.write.mode("append").parquet(log_dir)
+            _write_batch_partition(spark, log_dir, log, batch_id)
         return merged or None
     finally:
         staged.unpersist()
@@ -254,7 +253,7 @@ def run_ingest_available_now(
             spark,
             paths.target_dir,
             good,
-            change_key=f"b{batch_id:09d}",
+            change_key=batch_key(batch_id),
             changes_dir=paths.changes_dir,
             order_cols=ORDER_COLS,
             # audit timestamps refresh on every winning re-send; the

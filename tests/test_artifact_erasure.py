@@ -254,10 +254,10 @@ def test_cdc_feed_erase(spark, tmp_path):
 
 
 def test_quarantine_erase_by_batch_partition(spark, tmp_path):
-    from data_ingestion_lambda_spark.streaming.ingest import _write_quarantine
+    from data_ingestion_lambda_spark.streaming.ingest import _write_batch_partition
 
     qdir = str(tmp_path / "quarantine")
-    _write_quarantine(
+    _write_batch_partition(
         spark,
         qdir,
         spark.createDataFrame(
@@ -265,7 +265,7 @@ def test_quarantine_erase_by_batch_partition(spark, tmp_path):
         ),
         3,
     )
-    _write_quarantine(
+    _write_batch_partition(
         spark,
         qdir,
         spark.createDataFrame([("bad-3", "A")], "date string, client_id string"),
@@ -316,10 +316,10 @@ def test_cli_erase_scd2_roundtrip(spark, tmp_path, capsys):
 
 def test_cli_erase_quarantine_roundtrip(spark, tmp_path, capsys):
     from data_ingestion_lambda_spark.cli import main
-    from data_ingestion_lambda_spark.streaming.ingest import _write_quarantine
+    from data_ingestion_lambda_spark.streaming.ingest import _write_batch_partition
 
     qdir = str(tmp_path / "q")
-    _write_quarantine(
+    _write_batch_partition(
         spark,
         qdir,
         spark.createDataFrame(

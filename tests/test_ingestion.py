@@ -258,21 +258,21 @@ class TestStreamingIngest:
         quarantine partition, never append a duplicate copy of the
         evidence (ADVICE r13: _batch_id was only a column, not an
         overwrite key)."""
-        from data_ingestion_lambda_spark.streaming.ingest import _write_quarantine
+        from data_ingestion_lambda_spark.streaming.ingest import _write_batch_partition
 
         qdir = str(tmp_path / "quarantine")
         bad = spark.createDataFrame(
             [("not-a-date", "CLI009"), ("also-bad", "CLI010")],
             "date string, client_id string",
         )
-        _write_quarantine(spark, qdir, bad, 7)
+        _write_batch_partition(spark, qdir, bad, 7)
         assert spark.read.parquet(qdir).count() == 2
-        _write_quarantine(spark, qdir, bad, 7)  # the replay
+        _write_batch_partition(spark, qdir, bad, 7)  # the replay
         q = spark.read.parquet(qdir)
         assert q.count() == 2
         assert {r["_batch_id"] for r in q.select("_batch_id").collect()} == {7}
         # a different batch's evidence lands alongside, untouched
-        _write_quarantine(
+        _write_batch_partition(
             spark, qdir,
             spark.createDataFrame([("x", "CLI011")], "date string, client_id string"),
             8,
@@ -282,15 +282,15 @@ class TestStreamingIngest:
     def test_clean_batch_quarantine_write(self, spark, tmp_path):
         """A batch without bad rows writes nothing, except that a replay
         deletes the partition an earlier attempt of that batch left."""
-        from data_ingestion_lambda_spark.streaming.ingest import _write_quarantine
+        from data_ingestion_lambda_spark.streaming.ingest import _write_batch_partition
 
         qdir = str(tmp_path / "quarantine")
-        _write_quarantine(spark, qdir, None, 3)
+        _write_batch_partition(spark, qdir, None, 3)
         assert not os.path.exists(qdir)
         bad = spark.createDataFrame([("not-a-date", "CLI009")], "date string, client_id string")
-        _write_quarantine(spark, qdir, bad, 7)
-        _write_quarantine(spark, qdir, bad, 8)
-        _write_quarantine(spark, qdir, None, 7)
+        _write_batch_partition(spark, qdir, bad, 7)
+        _write_batch_partition(spark, qdir, bad, 8)
+        _write_batch_partition(spark, qdir, None, 7)
         assert sorted(os.listdir(qdir)) == ["_batch_id=8"]
 
     def test_one_pass_per_micro_batch(self, spark, tmp_path):
@@ -370,6 +370,33 @@ class TestStreamingIngest:
             for r in spark.read.parquet(paths.log_dir).collect()
         )
         assert log == [(0, 3, "2025-05-02"), (1, 3, "2025-05-04")]
+
+    def test_log_replay_keeps_one_row_per_batch(self, spark, tmp_path, monkeypatch):
+        """A crash after a batch's body and before its checkpoint commit
+        replays the batch. Its log row is rewritten under its own
+        ``_batch_id=`` partition, as its quarantine rows are, instead of
+        being appended a second time."""
+        from data_ingestion_lambda_spark.streaming import ingest
+
+        paths = self._paths(tmp_path)
+        write_csv(drop_dir(paths.source_dir, "2025_05_01"), "consumption_2025_05_01.csv",
+                  ["2025-05-01,CLI001,A,API,1", "bad-date,CLI002,B,API,2"])
+        body = ingest._process_batch
+
+        def crash_after_body(*args, **kwargs):
+            body(*args, **kwargs)
+            raise RuntimeError("crash before the checkpoint commit")
+
+        monkeypatch.setattr(ingest, "_process_batch", crash_after_body)
+        with pytest.raises(Exception, match="crash before the checkpoint commit"):
+            run_ingest_available_now(spark, paths)
+        monkeypatch.setattr(ingest, "_process_batch", body)
+        assert run_ingest_available_now(spark, paths) == ["2025-05-01"]
+
+        log = [(r.batch_id, r.rows_upserted) for r in spark.read.parquet(paths.log_dir).collect()]
+        assert log == [(0, 1)]
+        assert spark.read.parquet(paths.target_dir).count() == 1
+        assert spark.read.parquet(paths.quarantine_dir).count() == 1
 
     def test_empty_header_only_file(self, spark, tmp_path):
         paths = self._paths(tmp_path)

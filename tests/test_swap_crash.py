@@ -176,16 +176,16 @@ def test_cdc_upsert_converges(spark, tmp_path, faults):
 
 
 def test_quarantine_write_converges(spark, tmp_path, faults):
-    from data_ingestion_lambda_spark.streaming.ingest import _write_quarantine
+    from data_ingestion_lambda_spark.streaming.ingest import _write_batch_partition
 
     def bad(tag):
         return spark.createDataFrame([(f"{tag}-row", "bad date")], "raw string, error string")
 
     seed = tmp_path / "seed"
-    _write_quarantine(spark, str(seed), bad("first"), 1)
-    _write_quarantine(spark, str(seed), bad("stale"), 3)
+    _write_batch_partition(spark, str(seed), bad("first"), 1)
+    _write_batch_partition(spark, str(seed), bad("stale"), 3)
     want = _every_crash_converges(
-        faults, seed, tmp_path, lambda root: _write_quarantine(spark, root, bad("replay"), 3)
+        faults, seed, tmp_path, lambda root: _write_batch_partition(spark, root, bad("replay"), 3)
     )
     assert [dict(r)["raw"] for r in want["_batch_id=3"]] == ["'replay-row'"]
 
